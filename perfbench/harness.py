@@ -180,8 +180,13 @@ class PlanCollector:
     def onFailure(self, func_name, qe, exception):  # noqa: N802
         pass  # a failed pass is counted by the caller
 
-    def drain(self) -> list:
+    def count(self) -> int:
+        """Executions caught so far, once the listener bus is idle."""
         self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(self.executions)
+
+    def drain(self) -> list:
+        self.count()
         out, self.executions = self.executions, []
         return out
 
@@ -227,17 +232,18 @@ PLAN_KEYS = (
     "spark.python.init_ms", "spark.python.udf_ms",
     "spark.python.bytes_in", "spark.python.bytes_out",
     "spark.python.map_in_arrow_nodes", "spark.python.map_in_pandas_nodes",
+    "catalog.commit_ms", "catalog.bytes_written", "catalog.files_written",
 )
 
 
 def plan_rollup(executions: list) -> tuple[dict[str, float], list[dict]]:
     """Sum SQL metrics over the final physical plans of ``executions``.
     Spark timings are task-summed. Also returns one record per Python UDF
-    node: its name, its rank among the Python nodes of its plan (0 = the
-    top-most) and its Python time."""
+    node: its name, the index of its execution, its rank among the Python
+    nodes of its plan (0 = the top-most) and its Python time."""
     r = dict.fromkeys(PLAN_KEYS, 0.0)
     py_nodes = []
-    for qe in executions:
+    for i, qe in enumerate(executions):
         rank = 0
         for n in _nodes(qe.executedPlan()):
             name, m = n.nodeName(), _metrics(n)
@@ -250,6 +256,13 @@ def plan_rollup(executions: list) -> tuple[dict[str, float], list[dict]]:
                 r["spark.shuffle.write_bytes"] += m.get("shuffleBytesWritten", 0)
                 r["spark.shuffle.write_ms"] += m.get("shuffleWriteTime", 0) / 1e6
                 r["spark.shuffle.fetch_wait_ms"] += m.get("fetchWaitTime", 0)
+            elif name == "Execute InsertIntoHadoopFsRelationCommand":
+                # the catalog's parquet write: its commit time and output
+                # (the write tasks also run the plan below, so their time
+                # is not the catalog's)
+                r["catalog.commit_ms"] += m.get("taskCommitTime", 0) + m.get("jobCommitTime", 0)
+                r["catalog.bytes_written"] += m.get("numOutputBytes", 0)
+                r["catalog.files_written"] += m.get("numFiles", 0)
             elif name == "Sort":
                 r["spark.sort.ms"] += m.get("sortTime", 0)
                 r["spark.sort.spill_bytes"] += m.get("spillSize", 0)
@@ -263,7 +276,8 @@ def plan_rollup(executions: list) -> tuple[dict[str, float], list[dict]]:
                 r["spark.python.udf_ms"] += m["pythonTotalTime"]
                 r["spark.python.bytes_in"] += m.get("pythonDataSent", 0)
                 r["spark.python.bytes_out"] += m.get("pythonDataReceived", 0)
-                py_nodes.append({"name": name, "rank": rank, "udf_ms": m["pythonTotalTime"]})
+                py_nodes.append({"name": name, "exec": i, "rank": rank,
+                                 "udf_ms": m["pythonTotalTime"]})
                 rank += 1
     return r, py_nodes
 
@@ -273,17 +287,25 @@ def plan_rollup(executions: list) -> tuple[dict[str, float], list[dict]]:
 
 
 class TimedKv(KvStore):
-    """Counts and times the calls the fetcher makes into a ``KvStore``."""
+    """Counts and times the calls the fetcher makes into a ``KvStore``, and
+    counts the rows the uploads write through it."""
 
     def __init__(self, inner: KvStore, tracer: Tracer):
         self.inner = inner
         self.tracer = tracer
-        self.c = dict.fromkeys(("get_calls", "scan_calls", "entries_read", "bytes_read"), 0)
+        self.c = dict.fromkeys(("get_calls", "scan_calls", "entries_read", "bytes_read",
+                                "rows_written"), 0)
         self.get_ms = 0.0
         self.scan_ms = 0.0
 
     def put(self, dataset: str, key: bytes, value: bytes) -> None:
         self.inner.put(dataset, key, value)
+        self.c["rows_written"] += 1
+
+    def write_rows(self, df, encode_fn) -> int:
+        n = self.inner.write_rows(df, encode_fn)  # the inner store's own sink
+        self.c["rows_written"] += n
+        return n
 
     def get(self, dataset: str, key: bytes) -> Optional[bytes]:
         t0 = time.perf_counter()

@@ -30,36 +30,44 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-END_TO_END = {"setup_s": "s", "wall_s": "s", "rate_per_s": "1/s"}  # name -> unit
+END_TO_END = {"setup_s": "s", "wall_s": "s", "cpu_s": "s"}  # name -> unit
 SPAN_NAMES = (
-    "plans.backfill.run", "operators.pit_join.plan", "catalog.insert",
+    "plans.backfill.run", "operators.pit_join.plan", "plans.backfill.chunk_exec",
     "approx.serve", "approx.plan", "spark.execute",
     "online.fetcher.upload_batch", "online.fetcher.upload_stream",
     "online.fetcher.fetch", "online.fetcher.fetch_batch",
     "online.kv.get", "online.kv.scan",
 )
-LAYER_UNITS = {
-    "spark.scan.ms": "ms", "spark.scan.bytes": "bytes", "spark.scan.count": "count",
-    "spark.shuffle.exchanges": "count", "spark.shuffle.write_bytes": "bytes",
-    "spark.shuffle.write_ms": "ms", "spark.shuffle.fetch_wait_ms": "ms",
-    "spark.sort.ms": "ms", "spark.sort.spill_bytes": "bytes",
-    "spark.sort.peak_mem_bytes": "bytes",
-    "spark.python.init_ms": "ms", "spark.python.udf_ms": "ms",
-    "spark.python.bytes_in": "bytes", "spark.python.bytes_out": "bytes",
-    "spark.python.map_in_arrow_nodes": "count", "spark.python.map_in_pandas_nodes": "count",
-    "approx.tile_build_py_ms": "ms", "approx.serve_py_ms": "ms",
-    "operators.pit_join.plan_ms": "ms",
-    "plans.backfill.chunks": "count", "plans.backfill.chunk_ms": "ms",
-    "catalog.insert_ms": "ms", "catalog.bytes_written": "bytes",
-    "online.kv.get_calls": "count", "online.kv.get_ms": "ms",
-    "online.kv.scan_calls": "count", "online.kv.scan_ms": "ms",
-    "online.kv.entries_read": "count", "online.kv.bytes_read": "bytes",
-    "online.kv.rows_written": "count", "online.kv.bytes_stored": "bytes",
-    "online.fetcher.fetch_self_ms": "ms", "online.fetcher.upload_batch_ms": "ms",
-    "online.fetcher.upload_stream_ms": "ms",
-    "trace.overhead_ms": "ms",
-    **{f"self.{s}_ms": "ms" for s in SPAN_NAMES},
-}
+
+
+def layer_units() -> dict[str, str]:
+    """Every per-layer metric, name -> unit."""
+    from perfbench.workloads import DriverSuite
+
+    return {
+        "spark.scan.ms": "ms", "spark.scan.bytes": "bytes", "spark.scan.count": "count",
+        "spark.shuffle.exchanges": "count", "spark.shuffle.write_bytes": "bytes",
+        "spark.shuffle.write_ms": "ms", "spark.shuffle.fetch_wait_ms": "ms",
+        "spark.sort.ms": "ms", "spark.sort.spill_bytes": "bytes",
+        "spark.sort.peak_mem_bytes": "bytes",
+        "spark.python.init_ms": "ms", "spark.python.udf_ms": "ms",
+        "spark.python.bytes_in": "bytes", "spark.python.bytes_out": "bytes",
+        "spark.python.map_in_arrow_nodes": "count", "spark.python.map_in_pandas_nodes": "count",
+        "approx.tile_build_py_ms": "ms", "approx.serve_py_ms": "ms",
+        "operators.pit_join.plan_ms": "ms",
+        "plans.backfill.chunks": "count", "plans.backfill.chunk_ms": "ms",
+        "catalog.commit_ms": "ms", "catalog.bytes_written": "bytes",
+        "catalog.files_written": "count",
+        "online.kv.get_calls": "count", "online.kv.get_ms": "ms",
+        "online.kv.scan_calls": "count", "online.kv.scan_ms": "ms",
+        "online.kv.entries_read": "count", "online.kv.bytes_read": "bytes",
+        "online.kv.rows_written": "count", "online.kv.bytes_stored": "bytes",
+        "online.fetcher.fetch_self_ms": "ms", "online.fetcher.upload_batch_ms": "ms",
+        "online.fetcher.upload_stream_ms": "ms",
+        **{f"suite.{q}_s": "s" for q in DriverSuite.QUERIES},
+        "trace.overhead_ms": "ms",
+        **{f"self.{s}_ms": "ms" for s in SPAN_NAMES},
+    }
 
 
 def _args(argv):
@@ -108,60 +116,90 @@ def _environment(work: str) -> None:
     sys.path.insert(0, ROOT)
 
 
-def _passes(wl, spark, seconds: float, record: list, failures: list, rss: list) -> None:
-    """Repeat the timed operation until ``seconds`` have passed (once at least)."""
-    from perfbench.harness import cpu_s, reference_s, rss_mb
-
+def _loop(seconds: float, one_pass, failures: list, min_passes: int = 1) -> None:
+    """Call ``one_pass(i)`` for i = 0, 1, ... while the next call, if it takes
+    as long as the last one did, still ends within ``seconds`` (and at least
+    ``min_passes`` times). An operation that raises is counted; the run goes
+    on, and stops after four failures."""
     start = time.perf_counter()
-    while not record or time.perf_counter() - start < seconds:
+    i = 0
+    while True:
+        t0 = time.perf_counter()
         try:
-            ref = reference_s()
-            c0 = cpu_s()
-            p = wl.run_pass(spark)
-            p["cpu_s"] = cpu_s() - c0
-            p["ref_s"] = ref
-            record.append(p)
-        except Exception:  # a failed operation is counted; the run goes on
+            one_pass(i)
+        except Exception:
             failures.append(traceback.format_exc(limit=3))
             if len(failures) > 3:
-                break
+                return
+        i += 1
+        now = time.perf_counter()
+        if i >= min_passes and now - start + (now - t0) > seconds:
+            return
+
+
+def _passes(wl, spark, seconds: float, record: list, failures: list, rss: list) -> None:
+    """Untraced timed passes."""
+    from perfbench.harness import cpu_s, reference_s, rss_mb
+
+    def one(_):
+        ref = reference_s()
+        c0 = cpu_s()
+        p = wl.run_pass(spark)
+        p["cpu_s"] = cpu_s() - c0
+        p["ref_s"] = ref
+        record.append(p)
         rss.append(rss_mb())
+
+    _loop(seconds, one, failures)
 
 
 def _layers(wl, spark, seconds: float, failures: list) -> tuple[dict, dict]:
-    """Untraced then traced passes; per-layer figures per traced pass."""
-    from perfbench.harness import PlanCollector, Tracer, plan_rollup, self_ms, total_ms
+    """Untraced and traced passes in pairs, the pairs in turn untraced-first
+    and traced-first (U T T U U T ...), so that a steady drift cancels out;
+    per-layer figures per traced pass, and the tracing overhead as the
+    median of (traced - untraced) over the pairs."""
+    from perfbench.harness import NoTracer, PlanCollector, Tracer, plan_rollup, self_ms, total_ms
 
-    plain: list = []
-    _passes(wl, spark, seconds / 2, plain, failures, [])
+    units = layer_units()
     tracer = Tracer()
-    wl.tracer = tracer
-    collector = PlanCollector(spark)
+    plain: list = []
     traced: list = []
     layer_runs: list = []
-    try:
-        while not traced or sum(p["wall_s"] for p in traced) < seconds / 2:
-            collector.drain()
+
+    def one(i):
+        if (i + i // 2) % 2 == 0:
+            wl.tracer = NoTracer()
+            plain.append(wl.run_pass(spark))
+            return
+        wl.tracer = tracer
+        collector = wl.collector = PlanCollector(spark)
+        try:
             before = len(tracer.spans)
-            traced.append(wl.run_pass(spark))
+            p = wl.run_pass(spark)
             plan, py_nodes = plan_rollup(collector.drain())
-            spans = tracer.spans[before:]
-            own = self_ms(spans)
-            layer = dict.fromkeys(LAYER_UNITS, 0.0)
-            layer.update(plan)
-            layer.update(wl.python_split(py_nodes))
-            layer.update(wl.layers())
-            layer["operators.pit_join.plan_ms"] = total_ms(spans, "operators.pit_join.plan")
-            layer["online.fetcher.fetch_self_ms"] = own.get("online.fetcher.fetch", 0.0)
-            for s in SPAN_NAMES:
-                layer[f"self.{s}_ms"] = own.get(s, 0.0)
-            layer_runs.append(layer)
-    finally:
-        collector.close()
-    overhead = 1000 * (statistics.median(p["wall_s"] for p in traced)
-                       - statistics.median(p["wall_s"] for p in plain))
-    layers = {k: statistics.median(r[k] for r in layer_runs) for k in LAYER_UNITS}
-    layers["trace.overhead_ms"] = overhead
+        finally:
+            collector.close()
+            wl.tracer, wl.collector = NoTracer(), None
+        traced.append(p)
+        spans = tracer.spans[before:]
+        own = self_ms(spans)
+        layer = dict.fromkeys(units, 0.0)
+        layer.update(plan)
+        layer.update(wl.python_split(py_nodes))
+        layer.update(wl.layers())
+        layer["operators.pit_join.plan_ms"] = total_ms(spans, "operators.pit_join.plan")
+        layer["online.fetcher.fetch_self_ms"] = (own.get("online.fetcher.fetch", 0.0)
+                                                 + own.get("online.fetcher.fetch_batch", 0.0))
+        for s in SPAN_NAMES:
+            layer[f"self.{s}_ms"] = own.get(s, 0.0)
+        layer_runs.append(layer)
+
+    _loop(seconds, one, failures, min_passes=2)
+    pairs = list(zip(plain, traced))
+    # "or [0.0]": every traced pass may have failed; the failures are reported
+    layers = {k: statistics.median([r[k] for r in layer_runs] or [0.0]) for k in units}
+    layers["trace.overhead_ms"] = 1000 * statistics.median(
+        [t["wall_s"] - u["wall_s"] for u, t in pairs] or [0.0])
     info = {"passes": plain + traced, "untraced_passes": len(plain),
             "traced_passes": len(traced),
             "spans": tracer.spans, "layer_runs": layer_runs}
@@ -192,10 +230,17 @@ def main(argv=None) -> int:
     try:
         t0 = time.perf_counter()
         spark = start_session(work)
+        t1 = time.perf_counter()
         wl.generate()
+        t2 = time.perf_counter()
         wl.warm(spark)
-        wl.run_pass(spark)
-        setup_s = time.perf_counter() - t0
+        # a traced run warms up once more: its first pair would otherwise
+        # fold the last of the warm-up into the tracing overhead
+        for _ in range(wl.warm_passes + args.trace):
+            wl.run_pass(spark)
+        t3 = time.perf_counter()
+        setup_s = t3 - t0
+        phases = {"session_s": t1 - t0, "generate_s": t2 - t1, "warm_s": t3 - t2}
         rss.append(rss_mb())
         if args.trace:
             layers, info = _layers(wl, spark, args.seconds, failures)
@@ -222,11 +267,12 @@ def main(argv=None) -> int:
     correct = not failures and not problems
 
     if args.trace:
-        metrics = {k: {"value": v, "unit": LAYER_UNITS[k]} for k, v in layers.items()}
+        units = layer_units()
+        metrics = {k: {"value": v, "unit": units[k]} for k, v in layers.items()}
     else:
         e2e = {"setup_s": setup_s,
-               "wall_s": statistics.median(p["wall_s"] for p in passes),
-               "rate_per_s": statistics.median(p["rate"] for p in passes)}
+               **{k: statistics.median([p[k] for p in passes] or [0.0])
+                  for k in ("wall_s", "cpu_s")}}
         metrics = {k: {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
 
     artifact = {
@@ -235,7 +281,7 @@ def main(argv=None) -> int:
         "git_sha": _git_sha(), "source_digest": _source_digest(),
         "spark_settings": conf,
         "finished_at": datetime.datetime.now(datetime.timezone.utc).isoformat(),
-        "setup_s": setup_s, "check_s": check_s, "peak_rss_mb": max(rss),
+        "setup_s": setup_s, "setup_phases": phases, "check_s": check_s, "peak_rss_mb": max(rss),
         "metrics": metrics,
         "details": wl.details(passes) if passes else None,
         "passes": passes, "failures": failures, "problems": problems[:50],

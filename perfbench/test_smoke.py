@@ -28,7 +28,8 @@ def _run(*args: str) -> dict:
 
 
 @pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]] + ["online_fetch"])
+@pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]]
+                         + ["sketch_serve", "online_fetch"])
 def test_workload_smoke(workload, trace):
     res = _run("--workload", workload, "--seed", "7", "--seconds", "1",
                "--trace", str(trace), "--size", "smoke")

@@ -3,9 +3,10 @@ points and gets its inputs from ``datagen`` under one seed.
 
 A workload has four phases: ``generate`` (inputs), ``warm`` (the timed
 operation, or the work it reads from, run once in set-up; the caller then
-runs one more untimed pass, so Python workers, imports, generated code and
-the JIT are ready), ``run_pass`` (one timed operation), and ``check``
-(outputs against an independent oracle, outside the timed region).
+runs ``warm_passes`` more untimed passes, so Python workers, imports,
+generated code and the JIT are ready), ``run_pass`` (one timed operation),
+and ``check`` (outputs against an independent oracle, outside the timed
+region).
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from __future__ import annotations
 import math
 import os
 import time
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 import numpy as np
 import pandas as pd
@@ -22,30 +23,39 @@ from zipline_chronon_spark.catalog import ParquetWarehouse
 
 from perfbench import datagen
 from perfbench.harness import (NoTracer, TimedKv, Tracer, dir_bytes, materialize,
-                               summary)
+                               summary, total_ms)
 
 MS_DAY = 86_400_000
 
 
 @contextmanager
-def _wrapped(module, attr: str, tracer: Tracer, span: str):
-    """Put a span around every call of ``module.attr`` while active."""
-    orig = getattr(module, attr)
+def _patched(owner, attr: str, value):
+    """Replace ``owner.attr`` with ``value`` while active."""
+    orig = getattr(owner, attr)
+    setattr(owner, attr, value)
+    try:
+        yield
+    finally:
+        setattr(owner, attr, orig)
+
+
+@contextmanager
+def _wrapped(owner, attr: str, tracer: Tracer, span: str):
+    """Put a span around every call of ``owner.attr`` while active."""
+    orig = getattr(owner, attr)
 
     def call(*a, **kw):
         with tracer.span(span):
             return orig(*a, **kw)
 
-    setattr(module, attr, call)
-    try:
+    with _patched(owner, attr, call):
         yield
-    finally:
-        setattr(module, attr, orig)
 
 
 class Workload:
     name = ""
     sizes: dict[str, dict] = {}
+    warm_passes = 1
 
     def __init__(self, size: str, seed: int, work: str):
         self.p = self.sizes[size]
@@ -53,6 +63,7 @@ class Workload:
         self.work = work
         self.data = os.path.join(work, "data")
         self.tracer: Tracer = NoTracer()
+        self.collector = None  # the PlanCollector of a traced pass
         self.passes = 0
 
     def pass_dir(self, kind: str) -> str:
@@ -70,8 +81,7 @@ class Workload:
 
     def run_pass(self, spark) -> dict:
         """Run the timed operation once; return its per-pass figures,
-        ``wall_s`` and ``rate`` (what ``rate_per_s`` counts, per second) at
-        least."""
+        ``wall_s`` at least."""
         raise NotImplementedError
 
     def check(self, spark) -> list[str]:
@@ -129,21 +139,21 @@ def _flagship_gb(path: str):
 class TranscriptBackfill(Workload):
     name = "transcript_backfill"
     sizes = {
-        "full": {"n_convs": 2000, "avg_turns": 20, "n_days": 14, "step_days": 7,
+        "full": {"turns": 80_000, "avg_turns": 20, "n_days": 14, "step_days": 7,
                  "sample_convs": 3, "hot_queries": 60},
-        "smoke": {"n_convs": 200, "avg_turns": 10, "n_days": 8, "step_days": 7,
+        "smoke": {"turns": 3_000, "avg_turns": 10, "n_days": 8, "step_days": 7,
                   "sample_convs": 2, "hot_queries": 20},
     }
+    # two untimed passes after the cold one: the first timed pass was still
+    # about 10% slower than the next after only one
+    warm_passes = 2
     ROW_ID = "xxhash64(conv_id, turn_idx)"
     PASSTHROUGH = {"conv_id": "conv_id", "turn_idx": "turn_idx"}
 
     def generate(self) -> None:
         p = self.p
-        pdf = datagen.transcripts(p["n_convs"], p["avg_turns"], p["n_days"], self.seed)
-        # long conversations run past the last day; cut them there, so every
-        # seed backfills the same days in the same number of chunks
+        pdf = datagen.transcripts(p["turns"], p["avg_turns"], p["n_days"], self.seed)
         days = pd.date_range(pd.Timestamp(datagen.TRANSCRIPTS_START), periods=p["n_days"])
-        pdf = pdf[pdf["ts"] < days[-1] + pd.Timedelta(days=1)].reset_index(drop=True)
         self.pdf = pdf
         self.turns = len(pdf)
         self.ds_min, self.ds_max = days[0].strftime("%Y-%m-%d"), days[-1].strftime("%Y-%m-%d")
@@ -154,7 +164,7 @@ class TranscriptBackfill(Workload):
     def _backfill(self, spark, out: str, start: str, end: str) -> dict:
         from zipline_chronon_spark.plans.backfill import GroupByBackfill
 
-        catalog = None if isinstance(self.tracer, NoTracer) else TimedWarehouse(spark, self)
+        catalog = None if isinstance(self.tracer, NoTracer) else SpannedWarehouse(spark, self)
         job = GroupByBackfill(spark, self.gb, out, self.ROW_ID,
                               passthrough=self.PASSTHROUGH, catalog=catalog)
         return job.run(start, end, step_days=self.p["step_days"])
@@ -165,7 +175,6 @@ class TranscriptBackfill(Workload):
     def run_pass(self, spark) -> dict:
         from zipline_chronon_spark.operators import pit_join
 
-        self.insert_ms = 0.0
         out = self.out = self.pass_dir("out")
         with _wrapped(pit_join, "compute_group_by_self", self.tracer, "operators.pit_join.plan"):
             t0 = time.perf_counter()
@@ -176,17 +185,15 @@ class TranscriptBackfill(Workload):
         self.last = {
             "plans.backfill.chunks": len(chunks),
             "plans.backfill.chunk_ms": 1000 * sum(c["wall_sec"] for c in chunks) / len(chunks),
-            "catalog.insert_ms": self.insert_ms,
-            "catalog.bytes_written": dir_bytes(out),
         }
-        return {"wall_s": wall, "rate": self.turns / wall}
+        return {"wall_s": wall}
 
     def layers(self) -> dict[str, float]:
         return self.last
 
     def details(self, passes: list[dict]) -> dict:
         return {**super().details(passes),
-                "turns_per_s": summary([p["rate"] for p in passes])}
+                "turns_per_s": summary([self.turns / p["wall_s"] for p in passes])}
 
     def check(self, spark) -> list[str]:
         from tests import naive_oracle
@@ -197,7 +204,7 @@ class TranscriptBackfill(Workload):
             bad.append(f"backfill rows {len(got)} != turns {self.turns}")
         rng = np.random.default_rng(self.seed)
         convs = sorted(self.pdf["conv_id"].unique())
-        sample = ["conv_000000"] + list(rng.choice(convs[1:], self.p["sample_convs"],
+        sample = [datagen.HOT_CONV] + list(rng.choice(convs[1:], self.p["sample_convs"],
                                                    replace=False))
         ev = self.pdf.assign(
             ts_ms=(self.pdf["ts"].astype("int64") // 1000).astype("int64"),
@@ -241,18 +248,20 @@ def _same(a, b) -> bool:
     return a == b
 
 
-class TimedWarehouse(ParquetWarehouse):
-    """The backfill's catalog with a span and a timer around each insert."""
+class SpannedWarehouse(ParquetWarehouse):
+    """The backfill's catalog with a span around each insert. The insert
+    writes the chunk's lazy frame, so the span covers the chunk's whole
+    Spark job (scan, PIT kernels, shuffle and parquet write), not the
+    catalog alone; the catalog's own figures come from the write node of
+    the final plan (``catalog.*``)."""
 
     def __init__(self, spark, owner: TranscriptBackfill):
         super().__init__(spark)
         self.owner = owner
 
     def insert_partitions(self, df, table, partition_col="ds"):
-        t0 = time.perf_counter()
-        with self.owner.tracer.span("catalog.insert"):
+        with self.owner.tracer.span("plans.backfill.chunk_exec"):
             super().insert_partitions(df, table, partition_col)
-        self.owner.insert_ms += (time.perf_counter() - t0) * 1000
 
 
 # ---------------------------------------------------------------------------
@@ -266,6 +275,12 @@ class _EventsWorkload(Workload):
 
 
 class SketchServe(_EventsWorkload):
+    """``q_approx_serve`` alone, on half of sf0.1's events with its 1,500
+    users. Not declared in ``BENCHMARK.json``: the same query runs inside
+    ``driver_suite``, and a third declared workload does not fit the
+    benchmark's time budget. Run it to study ``approx_engine`` on a larger
+    input."""
+
     name = "sketch_serve"
     sizes = {
         "full": {"n_events": 50_000, "n_users": 1500},
@@ -292,15 +307,10 @@ class SketchServe(_EventsWorkload):
             with self.tracer.span("spark.execute"):
                 materialize(df)
         wall = time.perf_counter() - t0
-        return {"wall_s": wall, "rate": len(self.events) / wall}
+        return {"wall_s": wall}
 
     def python_split(self, py_nodes: list[dict]) -> dict[str, float]:
-        # the serve UDF is the top-most Python node of the served plan;
-        # every other one builds tiles
-        serve = [n for n in py_nodes if n["rank"] == 0]
-        build = [n for n in py_nodes if n["rank"] > 0]
-        return {"approx.serve_py_ms": sum(n["udf_ms"] for n in serve),
-                "approx.tile_build_py_ms": sum(n["udf_ms"] for n in build)}
+        return _approx_split(py_nodes)
 
     def check(self, spark) -> list[str]:
         import duckdb
@@ -315,6 +325,13 @@ class SketchServe(_EventsWorkload):
         finally:
             con.close()
         return _frame_diff(self.served, want, "event_id")
+
+
+def _approx_split(py_nodes: list[dict]) -> dict[str, float]:
+    """Python time of ``q_approx_serve``'s plans: the serve UDF is the
+    top-most Python node of the served plan; every other one builds tiles."""
+    return {"approx.serve_py_ms": sum(n["udf_ms"] for n in py_nodes if n["rank"] == 0),
+            "approx.tile_build_py_ms": sum(n["udf_ms"] for n in py_nodes if n["rank"] > 0)}
 
 
 def _frame_diff(got: pd.DataFrame, want: pd.DataFrame, key: str) -> list[str]:
@@ -442,11 +459,12 @@ class OnlineFetch(_EventsWorkload):
                 batch.append((time.perf_counter() - t0) * 1000)
                 self.responses.extend((int(u), int(ts), r) for u, r in zip(keys, rs))
         wall = time.perf_counter() - start
-        self.last = dict(self.upload)
+        self.last = {}
         if isinstance(kv, TimedKv):
             self.last.update({f"online.kv.{k}": v for k, v in kv.c.items()})
             self.last.update({"online.kv.get_ms": kv.get_ms, "online.kv.scan_ms": kv.scan_ms})
-        return {"wall_s": wall, "rate": len(single) / (sum(single) / 1000),
+        self.last.update(self.upload)  # the writes happened in set-up
+        return {"wall_s": wall, "fetches_per_s": len(single) / (sum(single) / 1000),
                 "ops": len(single) + len(batch), "fetch_ms": single,
                 "batch_fetch_ms": batch}
 
@@ -458,7 +476,7 @@ class OnlineFetch(_EventsWorkload):
                 "upload_s": (self.upload["online.fetcher.upload_batch_ms"]
                              + self.upload["online.fetcher.upload_stream_ms"]) / 1000,
                 "fetch_ms": summary([x for p in passes for x in p["fetch_ms"]]),
-                "fetches_per_s": summary([p["rate"] for p in passes]),
+                "fetches_per_s": summary([p["fetches_per_s"] for p in passes]),
                 "batch_fetch_ms": summary([x for p in passes for x in p["batch_fetch_ms"]])}
 
     def check(self, spark) -> list[str]:
@@ -480,4 +498,145 @@ class OnlineFetch(_EventsWorkload):
         return bad
 
 
-WORKLOADS = {w.name: w for w in (TranscriptBackfill, SketchServe, OnlineFetch)}
+# ---------------------------------------------------------------------------
+
+
+class _Collected:
+    """Rows collected earlier, in the shape ``mini_driver.compare`` reads."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        self.pdf = pdf
+
+    def toPandas(self) -> pd.DataFrame:  # noqa: N802 (DataFrame interface)
+        return self.pdf
+
+
+class DriverSuite(Workload):
+    """One driver query (``__spark_entry__.queries()``) per engine module the
+    backfill leaves idle, run one after another, each sent to the noop sink:
+    ``approx_serve`` (approx_engine), ``dedup_minhash_lsh`` (dedup),
+    ``ann_cosine_topk`` (similarity), ``entities_temporal``,
+    ``join_snapshot`` (join, with a SNAPSHOT-accuracy part), ``drift_psi``
+    (plans.drift), ``staging_pricing`` (plans.staging) and ``online_fetch``
+    (online.fetcher and online.kv: batch IR upload, stream upload and
+    ``fetch_batch`` over an in-memory store). Every query costs about the
+    same whatever its input size here: a pass is mostly the fixed cost of
+    its Spark jobs, so the inputs are kept small and the check quick."""
+
+    name = "driver_suite"
+    QUERIES = ("approx_serve", "dedup_minhash_lsh", "ann_cosine_topk", "entities_temporal",
+               "join_snapshot", "drift_psi", "staging_pricing", "online_fetch")
+    TABLES = ("events", "documents", "embeddings", "lineitem")
+    warm_passes = 0  # warm() already runs every query once; a pass is long
+    approx_execs = range(0)  # executions of approx_serve in the last traced pass
+    sizes = {
+        "full": {"n_events": 5_000, "n_users": 500, "n_docs": 1000, "n_vecs": 500,
+                 "dim": 64, "n_lineitem": 20_000},
+        "smoke": {"n_events": 2_000, "n_users": 200, "n_docs": 200, "n_vecs": 100,
+                  "dim": 16, "n_lineitem": 2_000},
+    }
+
+    def generate(self) -> None:
+        p, d = self.p, self.data
+        datagen.write_parquet(datagen.events(p["n_events"], p["n_users"], self.seed),
+                              os.path.join(d, "events.parquet"), 4)
+        datagen.write_parquet(datagen.documents(p["n_docs"], self.seed),
+                              os.path.join(d, "documents.parquet"), 2)
+        datagen.write_parquet(datagen.embeddings(p["n_vecs"], p["dim"], self.seed),
+                              os.path.join(d, "embeddings.parquet"), 2)
+        datagen.write_parquet(datagen.lineitem(p["n_lineitem"], self.seed),
+                              os.path.join(d, "lineitem.parquet"), 4)
+
+    def _queries(self):
+        import __spark_entry__ as entry
+
+        qs = entry.queries()
+        return [(q, qs[q]) for q in self.QUERIES]
+
+    def warm(self, spark) -> None:
+        # collected rather than sent to the noop sink: check() compares
+        # these rows
+        self.got = {q: fn(spark, self.data).toPandas() for q, fn in self._queries()}
+
+    def run_pass(self, spark) -> dict:
+        from zipline_chronon_spark.online import fetcher, kv
+        from zipline_chronon_spark.operators import approx_engine
+
+        stores: list[TimedKv] = []
+
+        def timed_store():
+            stores.append(TimedKv(in_memory(), self.tracer))
+            return stores[-1]
+
+        in_memory = kv.InMemoryKv
+        first_span = len(self.tracer.spans)
+        times = {}
+        traced = not isinstance(self.tracer, NoTracer)
+        with ExitStack() as stack:
+            if traced:
+                stack.enter_context(_patched(kv, "InMemoryKv", timed_store))
+                for attr, span in (("upload_batch_state", "online.fetcher.upload_batch"),
+                                   ("upload_stream_events", "online.fetcher.upload_stream")):
+                    stack.enter_context(_wrapped(fetcher, attr, self.tracer, span))
+                stack.enter_context(_wrapped(fetcher.Fetcher, "fetch_batch", self.tracer,
+                                             "online.fetcher.fetch_batch"))
+                stack.enter_context(_wrapped(approx_engine, "compute_group_by_approx",
+                                             self.tracer, "approx.plan"))
+            for q, fn in self._queries():
+                split = traced and q == "approx_serve"  # tell its plans from the others'
+                first_exec = self.collector.count() if split else 0
+                t0 = time.perf_counter()
+                with self.tracer.span(f"suite.{q}"):
+                    materialize(fn(spark, self.data))
+                times[q] = time.perf_counter() - t0
+                if split:
+                    self.approx_execs = range(first_exec, self.collector.count())
+        wall = sum(times.values())
+        spans = self.tracer.spans[first_span:]
+        self.last = {f"suite.{q}_s": t for q, t in times.items()}
+        self.last["online.fetcher.upload_batch_ms"] = total_ms(spans, "online.fetcher.upload_batch")
+        self.last["online.fetcher.upload_stream_ms"] = total_ms(
+            spans, "online.fetcher.upload_stream")
+        for store in stores:
+            self.last.update({f"online.kv.{k}": v for k, v in store.c.items()})
+            self.last.update({"online.kv.get_ms": store.get_ms, "online.kv.scan_ms": store.scan_ms,
+                              "online.kv.bytes_stored": sum(
+                                  len(k) + len(v) for d in store.inner.data.values()
+                                  for k, v in d.items())})
+        return {"wall_s": wall, "suite_s": times}
+
+    def layers(self) -> dict[str, float]:
+        return self.last
+
+    def python_split(self, py_nodes: list[dict]) -> dict[str, float]:
+        return _approx_split([n for n in py_nodes if n["exec"] in self.approx_execs])
+
+    def details(self, passes: list[dict]) -> dict:
+        return {**super().details(passes),
+                **{f"suite.{q}_s": summary([p["suite_s"][q] for p in passes])
+                   for q in self.QUERIES}}
+
+    def check(self, spark) -> list[str]:
+        import duckdb
+
+        import __spark_entry__ as entry
+        from tests.mini_driver import compare
+
+        oracles = entry.oracle_sql()
+        con = duckdb.connect()
+        bad = []
+        try:
+            for t in self.TABLES:
+                glob = os.path.join(self.data, f"{t}.parquet", "*.parquet").replace("'", "''")
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')")
+            for q in self.QUERIES:
+                res = compare(_Collected(self.got[q]), con.execute(oracles[q]).fetchdf())
+                if not res["ok"]:
+                    bad.append(f"{q}: rows {res['rows']} schema_match {res['schema_match']} "
+                               f"dtype {res['dtype_mismatch']} mismatches {res['mismatches'][:2]}")
+        finally:
+            con.close()
+        return bad
+
+
+WORKLOADS = {w.name: w for w in (TranscriptBackfill, SketchServe, OnlineFetch, DriverSuite)}
