@@ -43,15 +43,21 @@ def main(argv=None) -> int:
                 [sys.executable, "perfbench/run.py", "--workload", w, "--seed", str(seed),
                  "--seconds", str(args.seconds), "--trace", "0"],
                 cwd=ROOT, capture_output=True, text=True, timeout=300)
-            res = json.loads(out.stdout.strip().splitlines()[-1])
+            lines = out.stdout.strip().splitlines()
+            res = json.loads(lines[-1])
+            got = {k: m["value"] for k, m in res["metrics"].items()}
+            # the median pass wall time, printed in the run's table (not declared)
+            got.update({"wall_s": json.loads(line.split(None, 1)[1])["median"]
+                        for line in lines if line.startswith("wall_s ")})
             print(json.dumps({"workload": w, "seed": seed, "elapsed_s": time.time() - t0,
-                              "correct": res["correct"], "failed": res["failed"],
-                              **{k: m["value"] for k, m in res["metrics"].items()}}),
+                              "correct": res["correct"], "failed": res["failed"], **got}),
                   flush=True)
-            for k, m in res["metrics"].items():
-                values.setdefault(k, []).append(m["value"])
+            for k, v in got.items():
+                values.setdefault(k, []).append(v)
         summary[w] = {}
         for k, vs in values.items():
+            if len(vs) < 2:  # quartiles need two values at least
+                continue
             q1, med, q3 = statistics.quantiles(vs, n=4)
             summary[w][k] = {"median": med, "q1": q1, "q3": q3,
                              "spread": (q3 - q1) / med, "bound": bounds.get(k)}
