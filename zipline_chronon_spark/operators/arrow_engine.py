@@ -12,9 +12,9 @@ object per row). This runner keeps the batch in Arrow end to end:
  - remaining ops (TOP_K, HISTOGRAM, percentiles, map inputs, …) fall back
    to the object-array kernels (kernels.py) for that column only.
 
-Semantics are identical to the pandas runner (same sawtooth bounds from
-sawtooth/_window_bounds math, same null rules); the full naive-oracle test
-suite runs against this path.
+Semantics are identical to the pandas runner (same sawtooth bounds as
+``pit_join._window_bounds_enc``, same null rules); the full naive-oracle
+test suite runs against this path.
 """
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 
 Each kernel answers Q trailing-window queries over one group's events in
 one shot: given the group's non-null values sorted by (ts, original order)
-and per-query index bounds ``lo[i]:hi[i]`` (computed by sawtooth.py from
-the hop-aligned tail rule), produce one output per query.
+and per-query index bounds ``lo[i]:hi[i]`` (computed by
+``arrow_engine._tail_bounds`` and ``pit_join._window_bounds_enc`` from the
+hop-aligned tail rule), produce one output per query.
 
 This replaces the reference's row-at-a-time SimpleAggregator machinery
 (aggregator/src/main/scala/ai/chronon/aggregator/base/SimpleAggregators.scala,

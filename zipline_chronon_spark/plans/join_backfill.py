@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import os
 import time
-from datetime import datetime, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,7 +51,9 @@ from zipline_chronon_spark.plans.backfill import (
     MS_DAY,
     Lineage,
     _ds_to_ms,
+    chunk_record,
     date_range,
+    insert_chunk,
     spec_hash,
 )
 
@@ -160,31 +161,14 @@ class JoinBackfill:
         for chunk in GroupByBackfill._chunks(todo, step_days):
             ds_from, ds_to = chunk[0], chunk[-1]
             t0 = time.time()
-            df = compute_chunk(ds_from, ds_to)
-            self.catalog.insert_partitions(df, path, partition_col="ds")
+            rows_per_ds = insert_chunk(self.catalog, compute_chunk(ds_from, ds_to), path, chunk)
             # the chunk is on disk: release frames the part engine pinned
             # (snapshot qd / minted left) so a long resumable backfill does
             # not accumulate cached partitions for the whole job lifetime
             from zipline_chronon_spark.operators import join as join_ops
 
             join_ops.release_caches()
-            rows_per_ds = {
-                str(r["ds"]): int(r["n"])
-                for r in self.catalog.read(path)
-                .where(F.col("ds").cast("string").isin(chunk))
-                .groupBy(F.col("ds").cast("string").alias("ds"))
-                .agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            rec = {
-                "node": name,
-                "partitions": chunk,
-                "rows_per_partition": rows_per_ds,
-                "rows": int(sum(rows_per_ds.values())),
-                "wall_sec": round(time.time() - t0, 3),
-                "spec_hash": h,
-                "status": "success",
-                "finished_at": datetime.now(tz=timezone.utc).isoformat(),
-            }
+            rec = chunk_record(chunk, rows_per_ds, t0, h, node=name)
             lineage.append(rec)
             done.append(rec)
         return done

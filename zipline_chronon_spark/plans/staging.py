@@ -9,7 +9,7 @@ range accounting (which our plans/backfill.py provides generically).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,11 +100,13 @@ class StagingQueryJob:
     def run(self, start_ds: str, end_ds: str, step_days: int = 30,
             latest_date: Optional[str] = None) -> dict:
         import time
-        from datetime import datetime, timezone
 
-        from pyspark.sql import functions as F
-
-        from zipline_chronon_spark.plans.backfill import GroupByBackfill, date_range
+        from zipline_chronon_spark.plans.backfill import (
+            GroupByBackfill,
+            chunk_record,
+            date_range,
+            insert_chunk,
+        )
 
         # changed query text/setups -> archive + full recompute
         stale = [r for r in self.lineage.records()
@@ -126,24 +128,9 @@ class StagingQueryJob:
                     f"StagingQuery {self.sq.name} output lacks partition "
                     f"column '{self.partition_col}' — a resumable staging "
                     f"table must be date-partitioned (columns: {df.columns})")
-            self.catalog.insert_partitions(df, self.output_path,
-                                           partition_col=self.partition_col)
-            rows_per_ds = {
-                str(r["ds"]): int(r["n"])
-                for r in self.catalog.read(self.output_path)
-                .where(F.col(self.partition_col).cast("string").isin(chunk))
-                .groupBy(F.col(self.partition_col).cast("string").alias("ds"))
-                .agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            rec = {
-                "partitions": chunk,
-                "rows_per_partition": rows_per_ds,
-                "rows": int(sum(rows_per_ds.values())),
-                "wall_sec": round(time.time() - t0, 3),
-                "spec_hash": self.hash,
-                "status": "success",
-                "finished_at": datetime.now(tz=timezone.utc).isoformat(),
-            }
+            rows_per_ds = insert_chunk(self.catalog, df, self.output_path, chunk,
+                                       partition_col=self.partition_col)
+            rec = chunk_record(chunk, rows_per_ds, t0, self.hash)
             self.lineage.append(rec)
             done.append(rec)
         return {"computed_chunks": done, "archived": archived,
