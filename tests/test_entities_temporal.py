@@ -282,3 +282,34 @@ def test_unsupported_op_rejected(spark):
     )
     with pytest.raises(NotImplementedError, match="mutation-path"):
         compute_entities_temporal(spark, gb, None)
+
+
+def test_null_key_matches_nothing(spark, tmp_path_factory):
+    """A null key equals no key, itself included (compute_group_by gives a
+    null-key query null features): the null-key snapshot rows must not
+    feed the null-key query."""
+    base = tmp_path_factory.mktemp("tent_null")
+    day = BASE_DAY * MS_DAY
+    ds = pd.Timestamp(day - MS_DAY, unit="ms").strftime("%Y-%m-%d")
+    spark.createDataFrame(
+        [(ds, None, 5.0, day - 5000), (ds, None, 7.0, day - 4000), (ds, "a", 1.0, day - 3000)],
+        "ds string, key string, value double, ts_ms long",
+    ).write.parquet(str(base / "snap"))
+    spark.createDataFrame(
+        [("a", 2.0, day + 1000, day + 1000, False)],
+        "key string, value double, ts_ms long, mutation_ts long, is_before boolean",
+    ).write.parquet(str(base / "mut"))
+    gb = GroupBy(
+        name="nullkey",
+        sources=(EntitySource(snapshot_table=str(base / "snap"),
+                              mutation_table=str(base / "mut"),
+                              query=Query(time_column="ts_ms")),),
+        key_columns=("key",),
+        aggregations=(Aggregation("value", Operation.SUM),
+                      Aggregation("value", Operation.COUNT)),
+    )
+    q = spark.createDataFrame([(None, day + 60_000, 0), ("a", day + 60_000, 1)],
+                              "key string, qts long, __row_id long")
+    got = {r["__row_id"]: (r["value_sum"], r["value_count"]) for r in
+           compute_entities_temporal(spark, gb, q, query_time_col="qts").collect()}
+    assert got == {0: (None, None), 1: (3.0, 2)}

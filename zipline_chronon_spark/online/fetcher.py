@@ -134,13 +134,17 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
     sketch_df = None
     if sketch_parts:
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from zipline_chronon_spark.operators.arrow_engine import whole_groups
 
         schema = df.select(*keys).schema
         if tiled:
             schema = schema.add("__tile", T.LongType())
         for p in sketch_parts:
             schema = schema.add(f"{p.output_name}__sk", T.BinaryType())
+        arrow_schema = to_arrow_schema(schema)
         sp = list(sketch_parts)
         in_cols = sorted({p.input_column for p in sp})
         gcols_b = list(gcols)
@@ -152,12 +156,12 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
         # group, split segments with np.searchsorted over the group
         # boundaries, and build each segment's sketch from pre-extracted
         # (and for HLL pre-hashed) column arrays.
-        def build_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            starts = np.flatnonzero(_group_starts(pdf[gcols_b]))
-            ends = np.r_[starts[1:], len(pdf)]
-            out = {c: pdf[c].to_numpy()[starts] for c in gcols_b}
+        def build_batch(tbl: pa.Table, start: np.ndarray) -> pa.RecordBatch:
+            starts = np.flatnonzero(start)
+            ends = np.r_[starts[1:], tbl.num_rows]
+            out = tbl.select(gcols_b).take(starts).to_pandas()
             for p in sp:
-                col = pdf[p.input_column]
+                col = tbl.column(p.input_column).to_pandas()
                 vpos = np.flatnonzero(~col.isna().to_numpy())
                 arr = col.dropna().to_numpy()  # dtype as the old per-group path
                 if p.operation == Operation.APPROX_UNIQUE_COUNT:
@@ -175,53 +179,22 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
                             sk.update(arr[a:b])
                     blobs.append(sk.to_bytes())
                 out[f"{p.output_name}__sk"] = blobs
-            return pd.DataFrame(out)
+            return pa.RecordBatch.from_pandas(out, schema=arrow_schema,
+                                              preserve_index=False)
 
         nparts = base.sparkSession.sparkContext.defaultParallelism
         arranged = base.select(*gcols_b, *in_cols).repartition(
             nparts, *gcols_b).sortWithinPartitions(*gcols_b)
 
         def runner(batches):
-            carry = None
-            for pdf in batches:
-                if carry is not None:
-                    pdf = pd.concat([carry, pdf], ignore_index=True)
-                    carry = None
-                if not len(pdf):
-                    continue
-                gs = np.flatnonzero(_group_starts(pdf[gcols_b]))
-                last = int(gs[-1])
-                if last == 0:  # one group so far: may continue next batch
-                    carry = pdf
-                    continue
-                carry = pdf.iloc[last:]
-                yield build_batch(pdf.iloc[:last])
-            if carry is not None and len(carry):
-                yield build_batch(carry)
+            for tbl, start in whole_groups(batches, gcols_b):
+                yield build_batch(tbl, start)
 
-        sketch_df = arranged.mapInPandas(runner, schema=schema)
+        sketch_df = arranged.mapInArrow(runner, schema=schema)
 
     if scalar_df is not None and sketch_df is not None:
         return scalar_df.join(sketch_df, gcols, "full")
     return scalar_df if scalar_df is not None else sketch_df
-
-
-def _group_starts(keysub):
-    """Boundary mask over sorted key columns, robust to None/NaN/pd.NA
-    (factorize's NA sentinel treats every null-key row as its own group).
-    Shared by the tile builders here and the approx-engine group server."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(keysub)
-    start = np.zeros(n, dtype=bool)
-    start[0] = True
-    for c in keysub.columns:
-        codes, _ = pd.factorize(keysub[c], use_na_sentinel=True)
-        start |= codes != np.roll(codes, 1)
-        start |= codes == -1
-    start[0] = True
-    return start
 
 
 def _new_sketch(op: Operation):

@@ -57,17 +57,19 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from zipline_chronon_spark.api import GroupBy, Operation
 from zipline_chronon_spark.online import fetcher as fl
 from zipline_chronon_spark.operators import kernels, pit_join
+from zipline_chronon_spark.operators.arrow_engine import _SHIFT, whole_groups
 from zipline_chronon_spark.operators.sketches import hash64
 
 ROW_ID = pit_join.ROW_ID
 TS_COL = pit_join.TS_COL
-_SHIFT = pit_join._SHIFT  # (key_idx << 44) + (t - base) group-encoded time
 
 # union row kinds, in within-key sort order
 K_TILE, K_EVENT, K_COLLAPSED, K_QUERY = 0, 1, 2, 3
@@ -225,16 +227,13 @@ def _build_frames(
 # per-key range kernels
 # ---------------------------------------------------------------------------
 
-def _prefix(x: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(prefix sums with nan->0, prefix non-nan counts), length n+1."""
+def _prefix(x: np.ndarray, first: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(per-key prefix sums with nan->0, read with kernels.window_sums;
+    prefix non-nan counts), length n+1. ``first`` marks key starts."""
     ok = ~np.isnan(x)
-    s = np.empty(len(x) + 1)
-    s[0] = 0.0
-    np.cumsum(np.where(ok, x, 0.0), out=s[1:])
-    c = np.empty(len(x) + 1, dtype=np.int64)
-    c[0] = 0
+    c = np.zeros(len(x) + 1, dtype=np.int64)
     np.cumsum(ok, out=c[1:])
-    return s, c
+    return kernels.group_prefix(np.where(ok, x, 0.0), first), c
 
 
 def _next_valid(valid: np.ndarray) -> np.ndarray:
@@ -362,14 +361,23 @@ def _sorted_quantiles(sv: np.ndarray, qs: list[float]) -> list[float]:
     return out
 
 
-# group-boundary mask shared with the tile builder (fetcher._group_starts):
-# factorize-based, so None/NaN/pd.NA key rows are isolated — null keys match
-# nothing, and such query rows correctly get null features
-_group_starts = fl._group_starts
+class _Columns(dict):
+    """Column name -> pandas Series of an Arrow table, converted on first
+    read, so a chunk converts only the columns its parts use."""
+
+    def __init__(self, tbl: pa.Table):
+        super().__init__()
+        self.tbl = tbl
+
+    def __missing__(self, name: str) -> pd.Series:
+        s = self[name] = self.tbl.column(name).to_pandas()
+        return s
 
 
-def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
-    """serve(pdf) for one sorted batch of whole key groups.
+def _make_group_server(parts, out_schema, ir_map=None):
+    """serve(tbl, gid) for one sorted table of whole key groups, ``gid``
+    the 0-based key index per row (null keys are keys of their own, so
+    their queries get null features).
 
     Round-6 shape: additive / extreme / first-last parts are answered for
     EVERY query of EVERY key in the batch AT ONCE — tiles, head events and
@@ -395,18 +403,13 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
             hop = h if hop is None else min(hop, h)
     hop = hop or 86_400_000
 
-    def serve(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = pd.DataFrame({c: [] for c in [ROW_ID, *out_fields]},
-                             columns=[ROW_ID, *out_fields])
-        if n == 0:
-            return empty
+    def serve(tbl: pa.Table, gid: np.ndarray) -> Optional[pa.RecordBatch]:
+        n = tbl.num_rows
+        pdf = _Columns(tbl)
         kind = pdf["__kind"].to_numpy()
         t_all = pdf["__t"].to_numpy(dtype=np.int64)
-        flags = _group_starts(pdf[keys])
-        gid = np.cumsum(flags) - 1  # 0-based key index per row
         G = int(gid[-1]) + 1
-        starts = np.flatnonzero(flags)
+        starts = np.searchsorted(gid, np.arange(G))
         ends = np.r_[starts[1:], n]
         # per-key kind boundaries via one searchsorted over (gid, kind)
         ek = gid * 4 + kind
@@ -420,13 +423,15 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
         q_pos = np.flatnonzero(kind == K_QUERY)
         nq = len(q_pos)
         if nq == 0:
-            return empty
+            return None
         g_q = gid[q_pos]
         T = t_all[q_pos]
         ncoll = kind != K_COLLAPSED  # collapsed rows carry __t = 0
         base = int(t_all[ncoll].min()) if ncoll.any() else 0
         enc_tile = (gid[tile_pos] << _SHIFT) + (t_all[tile_pos] - base)
         enc_ev = (gid[ev_pos] << _SHIFT) + (t_all[ev_pos] - base)
+        t_first = kernels.group_first(gid[tile_pos])
+        e_first = kernels.group_first(gid[ev_pos])
         gq_enc = g_q << _SHIFT
         q_enc = gq_enc + (T - base)
 
@@ -460,7 +465,7 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
         def ev_prefix(col):
             """(value prefix, non-nan count prefix) over the event rows."""
             if col not in ev_pref_cache:
-                ev_pref_cache[col] = _prefix(num(f"__e_{col}")[ev_pos])
+                ev_pref_cache[col] = _prefix(num(f"__e_{col}")[ev_pos], e_first)
             return ev_pref_cache[col]
 
         def ev_count_prefix(col):
@@ -483,9 +488,10 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
         def _serve_additive(nm, op, col, ci, lo_t, hi_t, e_lo, e_hi):
             csum = chave = ccnt = None
             if op in (Operation.SUM, Operation.AVERAGE):
-                ts_, tc_ = _prefix(num(f"{nm}__sum")[tile_pos])
+                ts_, tc_ = _prefix(num(f"{nm}__sum")[tile_pos], t_first)
                 es_, ec_ = ev_prefix(col)
-                tot = (ts_[hi_t] - ts_[lo_t]) + (es_[e_hi] - es_[e_lo])
+                tot = (kernels.window_sums(ts_, t_first, lo_t, hi_t)
+                       + kernels.window_sums(es_, e_first, e_lo, e_hi))
                 have = (tc_[hi_t] - tc_[lo_t]) + (ec_[e_hi] - ec_[e_lo])
                 if ci is not None:
                     cm, cv = collapsed_add(ci, num(f"{nm}__sum"))
@@ -803,8 +809,8 @@ def _make_group_server(parts, inputs, out_fields, keys, ir_map=None):
                 data[nm] = _serve_extreme(rep, op, col, ci, lo_t, hi_t, e_lo, e_hi)
             else:  # FIRST / LAST
                 data[nm] = _serve_first_last(rep, op, col, ci, lo_t, hi_t, e_lo, e_hi)
-        return pd.DataFrame({c: data[c] for c in [ROW_ID, *out_fields]},
-                            columns=[ROW_ID, *out_fields])
+        return pa.RecordBatch.from_pandas(pd.DataFrame(data), schema=out_schema,
+                                          preserve_index=False)
 
     return serve
 
@@ -823,43 +829,26 @@ def compute_group_by_approx(
     and unbounded. Returns (row_id, feature columns…) with the SAME output
     schema AND row cardinality as the exact engine."""
     parts = fl._parts(gb)
-    inputs = sorted({p.input_column for p in parts})
     keys = list(gb.key_columns)
     union, ev, ir_cols, ir_map = _build_frames(spark, gb, queries, row_id,
                                        query_time_col)
 
-    _, part_types, out_schema = pit_join._output_schema(gb, dict(
+    _, _, out_schema = pit_join._output_schema(gb, dict(
         (f.name, f.dataType) for f in ev.schema.fields), [])
-    out_fields = [f.name for f in out_schema.fields if f.name != ROW_ID]
-
-    serve = _make_group_server(parts, inputs, out_fields, keys, ir_map)
+    serve = _make_group_server(parts, to_arrow_schema(out_schema), ir_map)
 
     # ONE shuffle keyed by the GroupBy keys; each key's rows arrive sorted
     # (tiles | events | collapsed | queries, each time-ordered) and are
-    # served whole via group-boundary rechunking with a carry (same pattern
-    # as arrow_engine.make_arrow_runner)
+    # served whole, re-chunked on key boundaries
     nparts = (num_partitions
               or union.sparkSession.sparkContext.defaultParallelism)
     arranged = union.repartition(nparts, *keys).sortWithinPartitions(
         *keys, "__kind", "__t")
 
     def runner(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            n = len(pdf)
-            if n == 0:
-                continue
-            gs = np.flatnonzero(_group_starts(pdf[keys]))
-            last_start = int(gs[-1])
-            if last_start == 0:  # one group so far: may continue next batch
-                carry = pdf
-                continue
-            carry = pdf.iloc[last_start:]
-            yield serve(pdf.iloc[:last_start])
-        if carry is not None and len(carry):
-            yield serve(carry)
+        for tbl, start in whole_groups(batches, keys):
+            out = serve(tbl, np.cumsum(start) - 1)
+            if out is not None:
+                yield out
 
-    return arranged.mapInPandas(runner, schema=out_schema)
+    return arranged.mapInArrow(runner, schema=out_schema)

@@ -1,8 +1,9 @@
-"""Arrow-native chunk runner — the zero-copy fast path of the PIT engine.
+"""Arrow-native chunk runner of the PIT engine, and the owner of its group
+encoding.
 
-Profiling showed the mapInPandas runner spends ~70% of wall time converting
-Arrow batches to pandas and back (every string column materializes a Python
-object per row). This runner keeps the batch in Arrow end to end:
+Sorted batches arrive through ``mapInArrow``; ``whole_groups`` re-chunks
+them on group boundaries (``group_starts``) and each chunk stays in Arrow
+end to end:
 
  - int64/float64 columns reach numpy zero-copy (fill_null + is_valid),
  - FIRST/LAST/LAST_K/FIRST_K gather via ``pa.Array.take`` with null indices
@@ -12,9 +13,11 @@ object per row). This runner keeps the batch in Arrow end to end:
  - remaining ops (TOP_K, HISTOGRAM, percentiles, map inputs, …) fall back
    to the object-array kernels (kernels.py) for that column only.
 
-Semantics are identical to the pandas runner (same sawtooth bounds as
-``pit_join._window_bounds_enc``, same null rules); the full naive-oracle
-test suite runs against this path.
+Window bounds come from ``_tail_bounds`` over the group-encoded time
+``(gid << _SHIFT) + (ts - base)``; the naive-oracle suite runs against
+this path. The other sorted-group runners (entities_temporal, the approx
+serve and the sketch tile builder) share ``group_starts`` and
+``whole_groups``.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import types as T
 from zipline_chronon_spark.api import AggregationPart, Operation
 from zipline_chronon_spark.operators import kernels, segments
 
-_SHIFT = 44
+_SHIFT = 44  # bits reserved for (ts - base); 2^44 ms ≈ 557 years
 
 _NUMERIC_PA = (pa.types.is_integer, pa.types.is_floating, pa.types.is_boolean)
 
@@ -74,14 +77,50 @@ def _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot):
     return np.minimum(lo, hi), hi
 
 
+def group_starts(tbl: pa.Table, keys: list[str]) -> np.ndarray:
+    """Group-start mask of a key-sorted table: row i starts a group when any
+    key differs from row i-1's. A null key equals nothing, so every
+    null-key row is a group of its own and matches no other row."""
+    n = tbl.num_rows
+    start = np.zeros(n, dtype=bool)
+    start[:1] = True
+    if n > 1:
+        for k in keys:
+            a = tbl.column(k)
+            same = pc.fill_null(pc.equal(a.slice(1), a.slice(0, n - 1)), False)
+            start[1:] |= ~same.to_numpy(zero_copy_only=False)
+    return start
+
+
+def whole_groups(batches: Iterator[pa.RecordBatch], keys: list[str]
+                 ) -> Iterator[tuple[pa.Table, np.ndarray]]:
+    """Re-chunk key-sorted batches into tables of whole groups, each yielded
+    with its ``group_starts`` mask. The trailing group of a batch is carried
+    into the next, so peak memory is one batch plus the largest group (hot
+    keys are split upstream by time-slice salting)."""
+    carry: Optional[pa.Table] = None
+    carry_start = np.zeros(0, dtype=bool)
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        tbl = pa.Table.from_batches([rb])
+        start = group_starts(tbl, keys)
+        if carry is not None:
+            # only the seam row needs comparing to the carried group
+            seam = pa.concat_tables([carry.slice(carry.num_rows - 1), tbl.slice(0, 1)])
+            start[0] = group_starts(seam, keys)[1]
+            tbl = pa.concat_tables([carry, tbl])
+            start = np.concatenate([carry_start, start])
+        last = int(np.flatnonzero(start)[-1])
+        carry, carry_start = tbl.slice(last), start[last:]
+        if last:
+            yield tbl.slice(0, last), start[:last]
+    if carry is not None:
+        yield carry, carry_start
+
+
 def _masked_pa(values: np.ndarray, empty: np.ndarray, pa_type: pa.DataType) -> pa.Array:
     return pa.array(values, type=pa_type, mask=empty)
-
-
-def _prefix(x: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(x) + 1, dtype=np.float64)
-    np.cumsum(x, dtype=np.float64, out=out[1:])
-    return out
 
 
 def _kop_list_array(vals_arr: pa.Array, fpos, lo, hi, k, pa_list_type, ascending):
@@ -114,9 +153,9 @@ def _take_at(vals_arr: pa.Array, fpos, idx, empty) -> pa.Array:
 
 def process_chunk_arrow(
     tbl: pa.Table,
+    start: np.ndarray,
     parts: list[AggregationPart],
     part_types: list[T.DataType],
-    keys: list[str],
     passthrough: list[str],
     out_schema: pa.Schema,
     query_range_ms: Optional[tuple[int, int]],
@@ -131,17 +170,7 @@ def process_chunk_arrow(
                    pa.array([], type=tbl.schema.field(name).type))
             for name in tbl.schema.names}
 
-    # group ids from sorted key columns (nulls only on query-only rows)
-    change = np.zeros(max(n - 1, 0), dtype=bool)
-    for k in keys:
-        a = cols[k]
-        if n > 1:
-            eq = pc.equal(a.slice(1), a.slice(0, n - 1))
-            change |= ~pc.fill_null(eq, False).to_numpy(zero_copy_only=False)
-    gid = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        np.cumsum(change, out=gid[1:])
-
+    gid = np.cumsum(start, dtype=np.int64) - 1
     ts = _np_int64(cols[ts_col])
     base = int(ts.min()) if n else 0
     enc_all = (gid << _SHIFT) + (ts - base)
@@ -231,39 +260,29 @@ def process_chunk_arrow(
                 continue
             x = _numeric_np(col)[fpos].astype(np.float64, copy=False)
             nw = (hi - lo).astype(np.float64)
+            gf = enc_f >> _SHIFT
+            first = kernels.group_first(gf)
             with np.errstate(invalid="ignore", divide="ignore"):
                 if op == Operation.SUM:
-                    pre = _prefix(x)
-                    res = pre[hi] - pre[lo]
+                    res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi)
                 elif op == Operation.AVERAGE:
-                    pre = _prefix(x)
-                    res = (pre[hi] - pre[lo]) / nw
+                    res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi) / nw
                 else:
                     # center per GROUP (every window lies inside one group,
                     # so a group-constant shift keeps the prefix algebra
                     # exact while minimizing |window mean − center|) and
-                    # accumulate the power prefixes in x86 extended
-                    # precision: batch-composition-dependent float64
-                    # rounding was observed flipping a 4-decimal-rounded
-                    # moment at an untested SF when re-chunking changed —
-                    # longdouble pushes the engine-vs-oracle gap orders
-                    # below the queries' 1e-7 rounding guard
+                    # accumulate the power prefixes per group in x86
+                    # extended precision, which keeps the engine-vs-oracle
+                    # gap orders below the queries' 1e-7 rounding guard
                     if len(x):
-                        gf = (enc_f >> _SHIFT).astype(np.int64)
                         cnt_g = np.bincount(gf)
                         sum_g = np.bincount(gf, weights=x)
                         mean_g = np.where(cnt_g > 0, sum_g / np.maximum(cnt_g, 1), 0.0)
                         c = (x - mean_g[gf]).astype(np.longdouble)
                     else:
                         c = x.astype(np.longdouble)
-
-                    def _prefl(v):
-                        out_p = np.zeros(len(v) + 1, dtype=np.longdouble)
-                        np.cumsum(v, out=out_p[1:])
-                        return out_p
-
-                    pres = [_prefl(c ** p) for p in range(1, 5)]
-                    s = [p[hi] - p[lo] for p in pres]
+                    s = [kernels.window_sums(kernels.group_prefix(c ** p, first), first, lo, hi)
+                         for p in range(1, 5)]
                     nwl = nw.astype(np.longdouble)
                     mu = s[0] / nwl
                     m2 = np.maximum(s[1] - nwl * mu ** 2, 0.0)
@@ -427,15 +446,9 @@ def _fallback_part(part, in_t, col, cols, valid, is_ev, enc_all, gid_q, q_ts, ba
             lens = np.array([len(d) for d in items], dtype=np.int64)
             enc_rep = np.repeat(enc_all[pos], lens)
             # MapArray.to_pylist yields list-of-(k,v)-tuples (np.array with
-            # dtype=object can silently turn the inner lists into ndarrays);
-            # dicts appear only from older pandas-path inputs
-            pairs = len(items) and not isinstance(items[0], dict)
-            mkeys = np.array([str(k) for d in items for k, _ in d], dtype=object) \
-                if pairs else \
-                np.array([str(k) for d in items for k in d], dtype=object)
-            raw_vals = [v for d in items for _, v in d] if pairs \
-                else [v for d in items for v in d.values()]
-            mvals = np.array(raw_vals, dtype=object)
+            # dtype=object can silently turn the inner lists into ndarrays)
+            mkeys = np.array([str(k) for d in items for k, _ in d], dtype=object)
+            mvals = np.array([v for d in items for _, v in d], dtype=object)
             vmask = np.array([v is not None for v in mvals], dtype=bool)
             enc_rep, mkeys, mvals = enc_rep[vmask], mkeys[vmask], mvals[vmask]
             for mk in dict.fromkeys(mkeys):
@@ -527,38 +540,11 @@ def make_arrow_runner(parts, part_types, keys, out_schema_spark, passthrough,
     out_schema = to_arrow_schema(out_schema_spark)
 
     def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        carry: Optional[pa.Table] = None
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl])
-                carry = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            # last group start: first row of the final key value
-            last_start = 0
-            ctbl = tbl.combine_chunks()
-            for k in keys:
-                a = ctbl.column(k).chunk(0)
-                if n > 1:
-                    eq = pc.equal(a.slice(1), a.slice(0, n - 1))
-                    ch = ~pc.fill_null(eq, False).to_numpy(zero_copy_only=False)
-                    nz = np.flatnonzero(ch)
-                    if len(nz):
-                        last_start = max(last_start, int(nz[-1]) + 1)
-            if last_start == 0:
-                carry = ctbl
-                continue
-            carry = ctbl.slice(last_start)
+        for tbl, start in whole_groups(batches, keys):
             out = process_chunk_arrow(
-                ctbl.slice(0, last_start), parts, part_types, keys, passthrough,
-                out_schema, query_range_ms, snapshot, ts_col, side_col, row_id_col)
+                tbl, start, parts, part_types, passthrough, out_schema,
+                query_range_ms, snapshot, ts_col, side_col, row_id_col)
             if out.num_rows:
                 yield out
-        if carry is not None and carry.num_rows:
-            yield process_chunk_arrow(
-                carry, parts, part_types, keys, passthrough, out_schema,
-                query_range_ms, snapshot, ts_col, side_col, row_id_col)
 
     return runner

@@ -50,15 +50,16 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zipline_chronon_spark.api import AggregationPart, EntitySource, GroupBy, Operation
 from zipline_chronon_spark.operators import kernels, pit_join
+from zipline_chronon_spark.operators.arrow_engine import _SHIFT, _tail_bounds, whole_groups
 
 MS_DAY = 86_400_000
-_SHIFT = pit_join._SHIFT
 
 KIND_SNAPSHOT = 0
 KIND_MUTATION = 1
@@ -193,8 +194,8 @@ def compute_entities_temporal(
         fields.append(pit_join.output_field(p, ev_schema[p.input_column]))
     out_schema = T.StructType(fields)
 
-    runner = _make_runner(parts, ev_schema, group_keys, fields)
-    return arranged.mapInPandas(runner, schema=out_schema)
+    runner = _make_runner(parts, ev_schema, group_keys, out_schema)
+    return arranged.mapInArrow(runner, schema=out_schema)
 
 
 def _theta(ts: np.ndarray, part: AggregationPart) -> np.ndarray:
@@ -205,8 +206,7 @@ def _theta(ts: np.ndarray, part: AggregationPart) -> np.ndarray:
     return (ts // hop + 1) * hop + part.window.millis
 
 
-def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
-    gid = pit_join._group_ids(pdf, keys)
+def _chunk(pdf: pd.DataFrame, gid: np.ndarray, parts, ev_schema) -> pd.DataFrame:
     ts = pdf[pit_join.TS_COL].to_numpy(dtype=np.int64)
     kind = pdf["__kind"].to_numpy()
     is_q = kind == KIND_QUERY
@@ -215,6 +215,7 @@ def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
     base = int(ts.min()) if len(ts) else 0
     enc = (gid << _SHIFT) + (ts - base)
     q_enc = enc[q_pos]
+    q_first = kernels.group_first(gid[q_pos])
 
     is_snap = kind == KIND_SNAPSHOT
     is_mut = kind == KIND_MUTATION
@@ -238,7 +239,8 @@ def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
 
         def deltas(rows_mask, start_excl, weights):
             """Scatter +w at first query with T > start, -w at first query
-            with T >= theta; cumsum = per-query contribution."""
+            with T >= theta, both inside the row's group; the per-group
+            prefix sum is the per-query contribution."""
             idx = np.flatnonzero(rows_mask)
             if not len(idx):
                 return np.zeros(n_q, dtype=np.float64)
@@ -251,10 +253,14 @@ def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
             # empty interval when the window exit precedes activation (e.g. a
             # before-image of a row already outside the window)
             sub_pos = np.maximum(sub_pos, add_pos)
-            d = np.zeros(n_q + 1, dtype=np.float64)
-            np.add.at(d, add_pos, weights[idx])
-            np.add.at(d, sub_pos, -weights[idx])
-            return np.cumsum(d[:-1])
+            # a delta past the group's last query reaches none of its queries
+            end = np.searchsorted(q_enc, (g + 1) << _SHIFT, side="left")
+            w = weights[idx]
+            a, b = add_pos < end, sub_pos < end
+            d = np.zeros(n_q, dtype=np.float64)
+            np.add.at(d, add_pos[a], w[a])
+            np.add.at(d, sub_pos[b], -w[b])
+            return kernels.group_prefix(d, q_first)[1:]
 
         def deletable_results(snap_mask, mut_mask):
             """SUM/COUNT/AVERAGE with full reversal support."""
@@ -297,13 +303,7 @@ def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
                 return [None] * n_q
             enc_r = enc[ridx]
             start_r = start_all[ridx]
-            if part.window is None:
-                lo = np.searchsorted(enc_r, gid[q_pos] << _SHIFT, side="left")
-            else:
-                hop = part.window.tail_hop_millis()
-                tail_abs = ((q_ts - part.window.millis) // hop) * hop
-                rel = np.maximum(tail_abs - base, 0)
-                lo = np.searchsorted(enc_r, (gid[q_pos] << _SHIFT) + rel, side="left")
+            lo, _ = _tail_bounds(enc_r, gid[q_pos], q_ts, base, part, False)
             hi = np.searchsorted(enc_r, q_enc, side="left")  # strict ts < T
             lo = np.minimum(lo, hi)
             from zipline_chronon_spark.operators import segments as _seg
@@ -344,33 +344,20 @@ def _chunk(pdf: pd.DataFrame, parts, ev_schema, keys) -> pd.DataFrame:
     return pd.DataFrame(data)
 
 
-def _make_runner(parts, ev_schema, keys, fields):
-    empty = {f.name: pd.Series(dtype=object) for f in fields}
+def _make_runner(parts, ev_schema, keys, out_schema_spark):
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            last_start = 0
-            for k in keys:
-                colv = pdf[k].to_numpy()
-                nz = np.flatnonzero(colv[1:] != colv[:-1]) + 1
-                if len(nz):
-                    last_start = max(last_start, int(nz[-1]))
-            if last_start == 0:
-                carry = pdf
-                continue
-            carry = pdf.iloc[last_start:].reset_index(drop=True)
-            out = _chunk(pdf.iloc[:last_start], parts, ev_schema, keys)
+    out_schema = to_arrow_schema(out_schema_spark)
+    reads = list(dict.fromkeys([
+        pit_join.TS_COL, pit_join.ROW_ID, "__kind", "__rev", "__mut_ts",
+        *[c for p in parts for c in (p.input_column, p.bucket) if c]]))
+
+    def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for tbl, start in whole_groups(batches, keys):
+            out = _chunk(tbl.select(reads).to_pandas(), np.cumsum(start) - 1,
+                         parts, ev_schema)
             if len(out):
-                yield out
-        if carry is not None and len(carry):
-            yield _chunk(carry, parts, ev_schema, keys)
-        else:
-            yield pd.DataFrame(empty)
+                yield pa.RecordBatch.from_pandas(out, schema=out_schema,
+                                                 preserve_index=False)
 
     return runner

@@ -3,8 +3,8 @@
 Each kernel answers Q trailing-window queries over one group's events in
 one shot: given the group's non-null values sorted by (ts, original order)
 and per-query index bounds ``lo[i]:hi[i]`` (computed by
-``arrow_engine._tail_bounds`` and ``pit_join._window_bounds_enc`` from the
-hop-aligned tail rule), produce one output per query.
+``arrow_engine._tail_bounds`` from the hop-aligned tail rule), produce one
+output per query.
 
 This replaces the reference's row-at-a-time SimpleAggregator machinery
 (aggregator/src/main/scala/ai/chronon/aggregator/base/SimpleAggregators.scala,
@@ -44,10 +44,46 @@ from zipline_chronon_spark.api import AggregationPart, Operation
 # helpers
 
 
-def _prefix(x: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(x) + 1, dtype=np.float64)
-    np.cumsum(x, dtype=np.float64, out=out[1:])
-    return out
+def group_first(gid: np.ndarray) -> np.ndarray:
+    """Group-start mask of rows sorted by group id."""
+    first = np.ones(len(gid), dtype=bool)
+    first[1:] = gid[1:] != gid[:-1]
+    return first
+
+
+def enc_first(enc: np.ndarray) -> np.ndarray:
+    """Group-start mask of a sorted group-encoded time array."""
+    from zipline_chronon_spark.operators.arrow_engine import _SHIFT  # lazy: it imports kernels
+
+    return group_first(enc >> _SHIFT)
+
+
+def group_prefix(x: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """Prefix sums that restart at every group (``first`` marks the group
+    starts): ``pre[k]`` sums x from the start of row k-1's group through
+    row k-1. A segmented Hillis-Steele scan, so each sum depends only on
+    its own group's rows — never on which other groups share the chunk,
+    which a chunk-wide cumsum's rounding does. Keeps x's float dtype."""
+    n = len(x)
+    s = np.array(x, dtype=np.result_type(x, np.float64))
+    rows = np.arange(n)
+    pos = rows - np.maximum.accumulate(np.where(first, rows, 0))
+    d, top = 1, int(pos.max()) if n else 0
+    while d <= top:
+        i = np.flatnonzero(pos >= d)
+        s[i] += s[i - d]
+        d *= 2
+    pre = np.zeros(n + 1, dtype=s.dtype)
+    pre[1:] = s
+    return pre
+
+
+def window_sums(pre: np.ndarray, first: np.ndarray, lo: np.ndarray,
+                hi: np.ndarray) -> np.ndarray:
+    """Sums over windows [lo, hi), each inside one group, from
+    ``group_prefix``; 0 for an empty window."""
+    base = np.where(np.append(first, True)[lo], 0, pre[lo])
+    return np.where(hi > lo, pre[hi] - base, 0)
 
 
 def _empty_mask(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -105,31 +141,33 @@ def _k_sum(vals, ts, lo, hi, part):
         np.cumsum(xi, out=pre[1:])
         res = pre[hi] - pre[lo]
         return [None if e else int(v) for v, e in zip(res.tolist(), _empty_mask(lo, hi))]
-    x = arr.astype(np.float64, copy=False)
-    pre = _prefix(x)
-    res = pre[hi] - pre[lo]
+    first = enc_first(ts)
+    res = window_sums(group_prefix(arr.astype(np.float64, copy=False), first), first, lo, hi)
     return _nullify(res, _empty_mask(lo, hi))
 
 
 def _k_average(vals, ts, lo, hi, part):
-    x = np.asarray(vals, dtype=np.float64)
-    pre = _prefix(x)
+    first = enc_first(ts)
+    pre = group_prefix(np.asarray(vals, dtype=np.float64), first)
     n = (hi - lo).astype(np.float64)
     with np.errstate(invalid="ignore", divide="ignore"):
-        res = (pre[hi] - pre[lo]) / n
+        res = window_sums(pre, first, lo, hi) / n
     return _nullify(res, _empty_mask(lo, hi))
 
 
-def _central_moments(vals, lo, hi, upto: int):
+def _central_moments(vals, ts, lo, hi, upto: int):
     """Windowed central moments M2..M{upto} via prefix power sums of values
-    centered on the group mean (centering keeps the power sums small ->
+    centered on their group's mean (centering keeps the power sums small ->
     numerically fine at float64 for group-local data; the reference's
     Welford/Chan formulation solves the same problem stream-wise)."""
     x = np.asarray(vals, dtype=np.float64)
-    c = x - (x.mean() if len(x) else 0.0)
+    first = enc_first(ts)
+    g = np.cumsum(first) - 1
+    mean_g = np.bincount(g, weights=x) / np.maximum(np.bincount(g), 1)
+    c = x - mean_g[g]
     n = (hi - lo).astype(np.float64)
-    pres = [_prefix(c**p) for p in range(1, upto + 1)]
-    s = [pre[hi] - pre[lo] for pre in pres]  # s[0]=S1 ... s[upto-1]=S_upto
+    # s[0]=S1 ... s[upto-1]=S_upto
+    s = [window_sums(group_prefix(c**p, first), first, lo, hi) for p in range(1, upto + 1)]
     with np.errstate(invalid="ignore", divide="ignore"):
         mu = s[0] / n
         m2 = s[1] - n * mu**2
@@ -142,14 +180,14 @@ def _central_moments(vals, lo, hi, upto: int):
 
 
 def _k_variance(vals, ts, lo, hi, part):
-    n, (m2,) = _central_moments(vals, lo, hi, 2)
+    n, (m2,) = _central_moments(vals, ts, lo, hi, 2)
     with np.errstate(invalid="ignore", divide="ignore"):
         res = np.maximum(m2, 0.0) / n
     return _nullify(res, _empty_mask(lo, hi))
 
 
 def _k_skew(vals, ts, lo, hi, part):
-    n, (m2, m3) = _central_moments(vals, lo, hi, 3)
+    n, (m2, m3) = _central_moments(vals, ts, lo, hi, 3)
     m2 = np.maximum(m2, 0.0)
     with np.errstate(invalid="ignore", divide="ignore"):
         res = np.where((n < 3) | (m2 <= 0), np.nan, np.sqrt(n) * m3 / np.power(m2, 1.5))
@@ -157,7 +195,7 @@ def _k_skew(vals, ts, lo, hi, part):
 
 
 def _k_kurtosis(vals, ts, lo, hi, part):
-    n, (m2, _m3, m4) = _central_moments(vals, lo, hi, 4)
+    n, (m2, _m3, m4) = _central_moments(vals, ts, lo, hi, 4)
     m2 = np.maximum(m2, 0.0)
     with np.errstate(invalid="ignore", divide="ignore"):
         res = np.where((n < 4) | (m2 <= 0), np.nan, n * m4 / (m2 * m2) - 3.0)

@@ -7,7 +7,7 @@ vectorized one level further than the reference:
 
     events ∪ queries --one hash shuffle--> repartition(keys)
         --JVM Tungsten sort--> sortWithinPartitions(keys, ts, tie)
-        --Arrow--> mapInPandas(chunks of MANY whole groups)
+        --Arrow--> mapInArrow(chunks of MANY whole groups, arrow_engine)
         --numpy--> cross-group vectorized kernels
 
 The reference aggregates group-at-a-time (mapPartitions over collect_list
@@ -28,15 +28,15 @@ Scale notes (100 TB design point):
  - one hash shuffle, partitioned by key; hot keys are bounded-lookback and
    can be time-slice salted (salt module);
  - Tungsten does the sort (spillable, codegen) — Python never sorts;
- - group-boundary rechunking keeps peak pandas memory at
-   O(arrow batch + largest single group);
+ - group-boundary rechunking (arrow_engine.whole_groups) keeps peak
+   memory at O(arrow batch + largest single group);
  - scans carry only keys + ts + aggregation inputs (column pruning), with
    filters pushed down (render_source is fully declarative).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -45,14 +45,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zipline_chronon_spark.api import AggregationPart, EventSource, GroupBy, Operation
-from zipline_chronon_spark.operators import kernels
+from zipline_chronon_spark.operators.arrow_engine import make_arrow_runner
 
 TS_COL = "__ts"  # epoch millis long (Constants.scala:24 — time is always epoch ms)
 SIDE_COL = "__isq"  # 0 = event, 1 = query row, 2 = both (self-enrichment)
 ROW_ID = "__row_id"
 TIE_COL = "__tie"
-
-_SHIFT = 44  # bits reserved for (ts - base); 2^44 ms ≈ 557 years
 
 _LONG_INPUTS = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.BooleanType)
 
@@ -279,213 +277,6 @@ def _as_numpy(s: pd.Series, dt: T.DataType) -> np.ndarray:
     return s.to_numpy(dtype=object)
 
 
-# ---------------------------------------------------------------------------
-# chunk engine
-
-
-def _group_ids(pdf: pd.DataFrame, keys: list[str]) -> np.ndarray:
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
-    for k in keys:
-        col = pdf[k].to_numpy()
-        change[1:] |= col[1:] != col[:-1]
-    return np.cumsum(change).astype(np.int64)
-
-
-def _window_bounds_enc(
-    enc_f: np.ndarray,
-    gid_q: np.ndarray,
-    q_ts: np.ndarray,
-    base: int,
-    part: AggregationPart,
-    snapshot: bool = False,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Sawtooth bounds over group-encoded time, all groups at once.
-
-    TEMPORAL rule (the spec — NaiveAggregator.scala:42-48,
-    SawtoothAggregator.scala:106, HopsAggregator.scala:150-158):
-        round(T - w, tailHop(w)) <= e.ts <= T
-    SNAPSHOT rule (daily; GroupByTest.scala:105-118 golden SQL,
-    GroupBy.scala:967-971 updateWindowed(partitionTs + spanMillis)): with
-    T = end-of-day(ds) - 1ms, window covers [T + 1 - w, T] — i.e. d calendar
-    days ending at eod(ds), no hop rounding (already day-aligned).
-    """
-    q_enc = (gid_q << _SHIFT) + (q_ts - base)
-    hi = np.searchsorted(enc_f, q_enc, side="right")
-    if part.window is None:
-        lo = np.searchsorted(enc_f, gid_q << _SHIFT, side="left")
-    else:
-        if snapshot:
-            tail_abs = q_ts + 1 - part.window.millis
-        else:
-            hop = part.window.tail_hop_millis()
-            tail_abs = ((q_ts - part.window.millis) // hop) * hop
-        rel = np.maximum(tail_abs - base, 0)
-        lo = np.searchsorted(enc_f, (gid_q << _SHIFT) + rel, side="left")
-    return np.minimum(lo, hi), hi
-
-
-def _chunk_results(
-    pdf: pd.DataFrame,
-    parts: list[AggregationPart],
-    part_types: list[T.DataType],
-    keys: list[str],
-    passthrough: list[str],
-    query_range_ms: Optional[tuple[int, int]] = None,
-    snapshot: bool = False,
-) -> pd.DataFrame:
-    """pdf: one chunk of whole groups, sorted by (keys, ts, tie).
-
-    query_range_ms [lo, hi): in self mode, rows outside the range still act
-    as events (window lookback across backfill chunk boundaries) but emit no
-    feature row — the chunked-backfill contract (reference analogue:
-    PartitionRange steps, GroupBy.scala:898-921)."""
-    gid = _group_ids(pdf, keys)
-    ts = pdf[TS_COL].to_numpy(dtype=np.int64)
-    base = int(ts.min()) if len(ts) else 0
-    # SIDE tri-state: 0 = event only (incl. salt replicas / lookback rows),
-    # 1 = query only (union-mode left rows), 2 = both (self-enrichment)
-    side = pdf[SIDE_COL].to_numpy()
-    is_ev = side != 1
-    is_q = side >= 1
-    if query_range_ms is not None:
-        is_q = is_q & (ts >= query_range_ms[0]) & (ts < query_range_ms[1])
-    if is_ev.all():
-        ev, gid_ev, ts_ev = pdf, gid, ts
-    else:
-        ev, gid_ev, ts_ev = pdf[is_ev], gid[is_ev], ts[is_ev]
-    if is_q.all():
-        qr, gid_q, q_ts = pdf, gid, ts
-    else:
-        qr, gid_q, q_ts = pdf[is_q], gid[is_q], ts[is_q]
-    n_q = len(qr)
-
-    data: dict = {ROW_ID: qr[ROW_ID].to_numpy(dtype=np.int64)}
-    for c in passthrough:
-        data[c] = qr[c].to_numpy()
-    enc_ev = (gid_ev << _SHIFT) + (ts_ev - base)
-
-    for part, in_t in zip(parts, part_types):
-        col = ev[part.input_column]
-        mask = col.notna().to_numpy()
-        needs_values = part.operation != Operation.COUNT
-        if isinstance(in_t, T.MapType):
-            # map input: aggregate per map key -> map<key, out> (like a
-            # bucket whose value rides along in the same cell)
-            out: list = [None] * n_q
-            if mask.any():
-                items = col[mask]
-                lens = items.map(len).to_numpy(dtype=np.int64)
-                enc_rep = np.repeat(enc_ev[mask], lens)
-                mkeys = np.array([str(k) for d in items for k in d], dtype=object)
-                mvals = pd.Series([v for d in items for v in d.values()])
-                vmask = mvals.notna().to_numpy()
-                enc_rep, mkeys = enc_rep[vmask], mkeys[vmask]
-                mvals = mvals[vmask]
-                for mk in pd.unique(mkeys):
-                    sel = mkeys == mk
-                    vs = _as_numpy(mvals[sel], in_t.valueType) if needs_values else None
-                    lo, hi = _window_bounds_enc(enc_rep[sel], gid_q, q_ts, base, part, snapshot)
-                    res = kernels.run_kernel(part, vs, enc_rep[sel], lo, hi)
-                    for i, r in enumerate(res):
-                        if r is not None:
-                            if out[i] is None:
-                                out[i] = {}
-                            out[i][mk] = r
-            data[part.output_name] = pd.Series(out, dtype=object)
-            continue
-        if part.bucket is None:
-            if not mask.any():
-                data[part.output_name] = pd.Series([None] * n_q, dtype=object)
-                continue
-            # COUNT only needs the null mask — skip materializing values
-            # (string columns would allocate a Python object per row)
-            if isinstance(in_t, T.ArrayType):
-                # vector input: explode elements, repeat the encoded time
-                lists = col[mask]
-                lens = lists.map(len).to_numpy(dtype=np.int64)
-                enc_f = np.repeat(enc_ev[mask], lens)
-                flat = pd.Series(
-                    [v for x in lists for v in x], dtype=object
-                )
-                fmask = flat.notna().to_numpy()
-                enc_f = enc_f[fmask]
-                if not len(enc_f):
-                    data[part.output_name] = pd.Series([None] * n_q, dtype=object)
-                    continue
-                vals = _as_numpy(flat[fmask], in_t.elementType) if needs_values else None
-            else:
-                vals = _as_numpy(col[mask], in_t) if needs_values else None
-                enc_f = enc_ev[mask]
-            lo, hi = _window_bounds_enc(enc_f, gid_q, q_ts, base, part, snapshot)
-            data[part.output_name] = pd.Series(
-                kernels.run_kernel(part, vals, enc_f, lo, hi), dtype=object
-            )
-        else:
-            bcol = ev[part.bucket]
-            bmask = mask & bcol.notna().to_numpy()
-            out: list = [None] * n_q
-            if bmask.any():
-                vals_all = _as_numpy(col[bmask], in_t) if needs_values else None
-                enc_all = enc_ev[bmask]
-                bvals = bcol[bmask].astype(str).to_numpy()
-                for bv in pd.unique(bvals):
-                    sel = bvals == bv
-                    lo, hi = _window_bounds_enc(enc_all[sel], gid_q, q_ts, base, part, snapshot)
-                    vs = vals_all[sel] if vals_all is not None else None
-                    res = kernels.run_kernel(part, vs, enc_all[sel], lo, hi)
-                    sbv = str(bv)
-                    for i, r in enumerate(res):
-                        if r is not None:
-                            if out[i] is None:
-                                out[i] = {}
-                            out[i][sbv] = r
-            data[part.output_name] = pd.Series(out, dtype=object)
-    return pd.DataFrame(data)
-
-
-def _make_runner(parts, part_types, keys, fields, passthrough,
-                 query_range_ms=None, snapshot=False):
-    """mapInPandas fn: re-chunk the sorted Arrow batches on group boundaries
-    so every group is processed whole, then run the vectorized chunk engine.
-    Peak memory = one Arrow batch + the largest single group (hot keys are
-    handled upstream by time-slice salting)."""
-
-    empty = {f.name: pd.Series(dtype=object) for f in fields}
-
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            # last group start = first index of the final key value
-            last_start = 0
-            n = len(pdf)
-            for k in keys:
-                col = pdf[k].to_numpy()
-                changes = np.flatnonzero(col[1:] != col[:-1]) + 1
-                if len(changes):
-                    last_start = max(last_start, int(changes[-1]))
-            if last_start == 0:
-                carry = pdf  # single (possibly incomplete) group — keep buffering
-                continue
-            carry = pdf.iloc[last_start:].reset_index(drop=True)
-            out = _chunk_results(pdf.iloc[:last_start], parts, part_types, keys,
-                                 passthrough, query_range_ms, snapshot)
-            if len(out):
-                yield out
-        if carry is not None and len(carry):
-            yield _chunk_results(carry, parts, part_types, keys, passthrough,
-                                 query_range_ms, snapshot)
-        else:
-            yield pd.DataFrame(empty)
-
-    return runner
-
-
 def _output_schema(gb: GroupBy, ev_schema: dict, passthrough_fields: list[T.StructField]):
     parts = gb.parts()
     fields = [T.StructField(ROW_ID, T.LongType(), False), *passthrough_fields]
@@ -506,7 +297,6 @@ def compute_group_by(
     query_time_col: str = "ts",
     num_partitions: Optional[int] = None,
     semi_filter: str = "semi_join",
-    engine: str = "arrow",
     time_range_ms: Optional[tuple[Optional[int], Optional[int]]] = None,
     passthrough_cols: Optional[list[str]] = None,
 ) -> DataFrame:
@@ -579,7 +369,6 @@ def compute_group_by(
     u_schema = {f.name: f.dataType for f in union.schema.fields}
     pt_fields = [T.StructField(c, u_schema[c], True) for c in passthrough_cols]
     parts, part_types, out_schema = _output_schema(gb, ev_schema, pt_fields)
-    fields = list(out_schema.fields)
 
     shuffled = union.repartition(num_partitions, *right_keys) if num_partitions else (
         union.repartition(*right_keys))
@@ -588,17 +377,9 @@ def compute_group_by(
     from zipline_chronon_spark.operators.derive import apply_derivations
 
     snap = gb.accuracy == Accuracy.SNAPSHOT
-    if engine == "arrow":
-        from zipline_chronon_spark.operators.arrow_engine import make_arrow_runner
-
-        runner = make_arrow_runner(parts, part_types, right_keys, out_schema,
-                                   passthrough_cols, None, snap, TS_COL,
-                                   SIDE_COL, ROW_ID)
-        out = arranged.mapInArrow(runner, schema=out_schema)
-    else:
-        runner = _make_runner(parts, part_types, right_keys, fields,
-                              passthrough_cols, snapshot=snap)
-        out = arranged.mapInPandas(runner, schema=out_schema)
+    runner = make_arrow_runner(parts, part_types, right_keys, out_schema,
+                               passthrough_cols, None, snap, TS_COL, SIDE_COL, ROW_ID)
+    out = arranged.mapInArrow(runner, schema=out_schema)
     return apply_derivations(out, gb.derivations,
                              always_keep=[ROW_ID, *passthrough_cols])
 
@@ -617,7 +398,6 @@ def compute_group_by_self(
     salt_slice_ms: Optional[int] = None,
     hot_keys: Optional[list] = None,
     hot_key_threshold: Optional[int] = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Self-enrichment fast path: every event row is also a query at its own
     ts (the transcript-backfill shape: each turn gets its conversation's
@@ -688,7 +468,6 @@ def compute_group_by_self(
 
     pt_fields = [T.StructField(n, ev_schema[n], True) for n in passthrough]
     parts, part_types, out_schema = _output_schema(gb, ev_schema, pt_fields)
-    fields = list(out_schema.fields)
 
     shuffled = ev.repartition(num_partitions, *group_keys) if num_partitions else (
         ev.repartition(*group_keys))
@@ -697,17 +476,10 @@ def compute_group_by_self(
     from zipline_chronon_spark.operators.derive import apply_derivations
 
     snap = gb.accuracy == Accuracy.SNAPSHOT
-    if engine == "arrow":
-        from zipline_chronon_spark.operators.arrow_engine import make_arrow_runner
-
-        runner = make_arrow_runner(parts, part_types, group_keys, out_schema,
-                                   list(passthrough), query_range_ms, snap,
-                                   TS_COL, SIDE_COL, ROW_ID)
-        out = arranged.mapInArrow(runner, schema=out_schema)
-    else:
-        runner = _make_runner(parts, part_types, group_keys, fields, list(passthrough),
-                              query_range_ms=query_range_ms, snapshot=snap)
-        out = arranged.mapInPandas(runner, schema=out_schema)
+    runner = make_arrow_runner(parts, part_types, group_keys, out_schema,
+                               list(passthrough), query_range_ms, snap,
+                               TS_COL, SIDE_COL, ROW_ID)
+    out = arranged.mapInArrow(runner, schema=out_schema)
     return apply_derivations(out, gb.derivations, always_keep=[ROW_ID, *passthrough])
 
 
