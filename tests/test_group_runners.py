@@ -35,8 +35,17 @@ def events(spark):
         "v": rng.normal(10, 3, size=n).round(3),
         "cat": [f"c{int(x)}" for x in rng.integers(0, 12, size=n)],
         "eid": np.arange(n),
+        # list and map inputs, with null rows, elements and items
+        "vl": [None if i % 9 == 0 else
+               [None if (i + j) % 5 == 0 else round(float(x) * 0.7, 3)
+                for j, x in enumerate(rng.normal(5, 2, size=i % 4))] for i in range(n)],
+        "m": [None if i % 7 == 0 else
+              {f"m{i % 3}": round(float(i) / 3, 3), "z": None if i % 4 == 0 else i * 0.1}
+              for i in range(n)],
     }).astype({"ts_ms": "int64", "eid": "int64"})
-    spark.createDataFrame(pdf).createOrReplaceTempView("gr_events")
+    spark.createDataFrame(
+        pdf, "k string, ts_ms long, v double, cat string, eid long, "
+             "vl array<double>, m map<string,double>").createOrReplaceTempView("gr_events")
     return pdf
 
 
@@ -75,6 +84,9 @@ EXACT = _gb((
     Aggregation("v", Operation.AVERAGE, windows=(Window(6, TimeUnit.HOURS),)),
     Aggregation("v", Operation.LAST_K, arg_map=(("k", "3"),), windows=(None,)),
     Aggregation("cat", Operation.HISTOGRAM, windows=(W1D,)),
+    Aggregation("vl", Operation.AVERAGE, windows=(W1D,)),
+    Aggregation("m", Operation.SUM, windows=(None,)),
+    Aggregation("v", Operation.VARIANCE, windows=(W1D,), buckets=("cat",)),
 ))
 SKETCH = _gb((
     Aggregation("v", Operation.SUM, windows=(None, W1D)),

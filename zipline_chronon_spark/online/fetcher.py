@@ -400,7 +400,7 @@ def feature_schema_hint(spark: SparkSession, gb: GroupBy,
     from zipline_chronon_spark.operators import pit_join
 
     ev = pit_join.events_df(spark, gb)
-    _, _, out_schema = pit_join._output_schema(
+    _, out_schema = pit_join._output_schema(
         gb, {f.name: f.dataType for f in ev.schema.fields}, [])
     return {(f"{prefix}_{f.name}" if prefix else f.name): f.dataType
             for f in out_schema.fields if f.name != pit_join.ROW_ID}

@@ -833,7 +833,7 @@ def compute_group_by_approx(
     union, ev, ir_cols, ir_map = _build_frames(spark, gb, queries, row_id,
                                        query_time_col)
 
-    _, _, out_schema = pit_join._output_schema(gb, dict(
+    _, out_schema = pit_join._output_schema(gb, dict(
         (f.name, f.dataType) for f in ev.schema.fields), [])
     serve = _make_group_server(parts, to_arrow_schema(out_schema), ir_map)
 

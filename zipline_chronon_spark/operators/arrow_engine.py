@@ -3,15 +3,18 @@ encoding.
 
 Sorted batches arrive through ``mapInArrow``; ``whole_groups`` re-chunks
 them on group boundaries (``group_starts``) and each chunk stays in Arrow
-end to end:
+end to end. Every part runs through one op dispatch (``_finish``); input
+shape is only a wrapper around it (``_unpack``):
 
  - int64/float64 columns reach numpy zero-copy (fill_null + is_valid),
  - FIRST/LAST/LAST_K/FIRST_K gather via ``pa.Array.take`` with null indices
    (no Python values ever created, any input type),
  - LAST_K/FIRST_K build ``ListArray.from_arrays`` with null offsets,
- - bucketed COUNT builds ``MapArray.from_arrays`` from a count matrix,
- - remaining ops (TOP_K, HISTOGRAM, percentiles, map inputs, …) fall back
-   to the object-array kernels (kernels.py) for that column only.
+ - TOP_K, HISTOGRAM, percentiles and distinct counts run the segment
+   finishes (segments.py),
+ - list inputs flatten to their elements; map inputs and bucketed parts
+   run the same finish once per map key or bucket value, and ``_map_of``
+   gathers those results into one ``MapArray``.
 
 Window bounds come from ``_tail_bounds`` over the group-encoded time
 ``(gid << _SHIFT) + (ts - base)``; the naive-oracle suite runs against
@@ -27,7 +30,6 @@ from typing import Iterator, Optional
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import types as T
 
 from zipline_chronon_spark.api import AggregationPart, Operation
 from zipline_chronon_spark.operators import kernels, segments
@@ -151,11 +153,195 @@ def _take_at(vals_arr: pa.Array, fpos, idx, empty) -> pa.Array:
     return vals_arr.take(take_idx)
 
 
+def _unpack(part: AggregationPart, cols: dict, is_ev: np.ndarray, enc_all: np.ndarray):
+    """Input shape as a wrapper around one op: returns ``(subkeys, units)``,
+    each unit ``(values, fpos, enc_f)`` with ``fpos`` the positions of the
+    valid event values in ``values`` (time order) and ``enc_f`` their
+    group-encoded times. List inputs flatten to their elements; map inputs
+    give one unit per map key, bucketed parts one per bucket value, named
+    ``str(v)`` in first-appearance order (``subkeys`` is None otherwise).
+    ColumnAggregator.scala:225-246 (VectorDispatcher, MapColumnAggregator,
+    BucketedColumnAggregator)."""
+    col = cols[part.input_column]
+    keep = _valid_np(col) & is_ev
+    sub = None if part.bucket is None else cols[part.bucket]
+    if sub is not None:
+        keep &= _valid_np(sub)
+    pos = np.flatnonzero(keep)
+    is_map = pa.types.is_map(col.type)
+    if is_map or pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+        nested = col.take(pa.array(pos, type=pa.int64()))
+        offs = _np_int64(nested.offsets)
+        rows = np.repeat(pos, np.diff(offs))
+        if is_map:  # keys/items are whole children: cut them to the rows' span
+            span = (int(offs[0]), int(offs[-1] - offs[0]))
+            values, sub = nested.items.slice(*span), nested.keys.slice(*span)
+        else:
+            values = nested.flatten()
+        fpos = np.flatnonzero(_valid_np(values))
+        sub_at = fpos if is_map else rows[fpos]
+        enc_f = enc_all[rows[fpos]]
+    else:
+        values, fpos, sub_at, enc_f = col, pos, pos, enc_all[pos]
+    if sub is None:
+        return None, [(values, fpos, enc_f)]
+    denc = pc.dictionary_encode(sub.take(pa.array(sub_at, type=pa.int64())))
+    codes = _np_int64(denc.indices)
+    order = np.argsort(codes, kind="stable")  # stable: time order per subkey
+    cuts = np.cumsum(np.bincount(codes, minlength=len(denc.dictionary)))[:-1]
+    subkeys = [str(v) for v in denc.dictionary.to_pylist()]
+    return subkeys, [(values, fpos[o], enc_f[o]) for o in np.split(order, cuts)]
+
+
+def _map_of(subkeys: list[str], results: list[pa.Array], n_q: int,
+            map_type: pa.DataType) -> pa.MapArray:
+    """One map per query row from the per-subkey results: an entry wherever
+    that subkey's result is valid, in subkey order; null for no entries."""
+    if not results:
+        return pa.nulls(n_q, map_type)
+    item_type = map_type.item_type
+    results = [r if r.type == item_type else r.cast(item_type) for r in results]
+    valid = np.stack([_valid_np(r) for r in results], axis=1)
+    q, s = np.nonzero(valid)  # row-major: by query row, then subkey
+    cnt = valid.sum(axis=1)
+    offs = np.zeros(n_q + 1, dtype=np.int32)
+    np.cumsum(cnt, out=offs[1:])
+    offsets = pa.array(offs, type=pa.int32(), mask=np.append(cnt == 0, False))
+    keys = pa.array(subkeys, type=pa.string()).take(pa.array(s, type=pa.int64()))
+    items = pa.concat_arrays(results).take(pa.array(s * n_q + q, type=pa.int64()))
+    return pa.MapArray.from_arrays(offsets, keys, items, type=map_type)
+
+
+def _finish(part: AggregationPart, values: pa.Array, fpos: np.ndarray, enc_f: np.ndarray,
+            lo: np.ndarray, hi: np.ndarray, pa_type: pa.DataType) -> pa.Array:
+    """One op over windows ``[lo, hi)`` into ``values[fpos]``: the single
+    op dispatch of the PIT engine, in Arrow and numpy (no per-row Python)."""
+    empty = hi <= lo
+    op = part.operation
+    if op == Operation.COUNT:
+        return _masked_pa((hi - lo).astype(np.int64), empty, pa_type)
+    elif op in (Operation.SUM, Operation.AVERAGE, Operation.VARIANCE,
+                Operation.SKEW, Operation.KURTOSIS):
+        if op == Operation.SUM and pa.types.is_integer(pa_type):
+            # exact long arithmetic (reference keeps JVM long; int64
+            # wrap-on-overflow matches) — float64 prefix sums would lose
+            # low-order bits past 2^53 cumulative magnitude
+            xi = _numeric_np(values)[fpos].astype(np.int64, copy=False)
+            prei = np.zeros(len(xi) + 1, dtype=np.int64)
+            np.cumsum(xi, out=prei[1:])
+            return _masked_pa(prei[hi] - prei[lo], empty, pa_type)
+        x = _numeric_np(values)[fpos].astype(np.float64, copy=False)
+        nw = (hi - lo).astype(np.float64)
+        gf = enc_f >> _SHIFT
+        first = kernels.group_first(gf)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            if op == Operation.SUM:
+                res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi)
+            elif op == Operation.AVERAGE:
+                res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi) / nw
+            else:
+                # center per GROUP (every window lies inside one group,
+                # so a group-constant shift keeps the prefix algebra
+                # exact while minimizing |window mean − center|) and
+                # accumulate the power prefixes per group in x86
+                # extended precision, which keeps the engine-vs-oracle
+                # gap orders below the queries' 1e-7 rounding guard
+                if len(x):
+                    cnt_g = np.bincount(gf)
+                    sum_g = np.bincount(gf, weights=x)
+                    mean_g = np.where(cnt_g > 0, sum_g / np.maximum(cnt_g, 1), 0.0)
+                    c = (x - mean_g[gf]).astype(np.longdouble)
+                else:
+                    c = x.astype(np.longdouble)
+                s = [kernels.window_sums(kernels.group_prefix(c ** p, first), first, lo, hi)
+                     for p in range(1, 5)]
+                nwl = nw.astype(np.longdouble)
+                mu = s[0] / nwl
+                m2 = np.maximum(s[1] - nwl * mu ** 2, 0.0)
+                if op == Operation.VARIANCE:
+                    res = (m2 / nwl).astype(np.float64)
+                elif op == Operation.SKEW:
+                    m3 = s[2] - 3 * mu * s[1] + 2 * nwl * mu ** 3
+                    res = np.where((nw < 3) | (m2 <= 0), np.nan,
+                                   (np.sqrt(nwl) * m3 / np.power(m2, 1.5))
+                                   .astype(np.float64))
+                else:
+                    m4 = s[3] - 4 * mu * s[2] + 6 * mu ** 2 * s[1] - 3 * nwl * mu ** 4
+                    res = np.where((nw < 4) | (m2 <= 0), np.nan,
+                                   (nwl * m4 / (m2 * m2) - 3.0)
+                                   .astype(np.float64))
+        return _masked_pa(res, empty, pa_type)
+    elif op in (Operation.MIN, Operation.MAX):
+        npop = np.minimum if op == Operation.MIN else np.maximum
+        if _is_numeric(values.type):
+            x = _numeric_np(values)[fpos]
+            st = kernels._SparseTable(x, npop)
+            res = st.query(np.where(empty, 0, lo), np.where(empty, 1, hi))
+            return _masked_pa(res, empty, pa_type)
+        # strings: RMQ over lexicographic rank codes, values emitted from
+        # the sorted dictionary (no per-row Python)
+        ranked, sorted_dict = segments.rank_codes(values, fpos)
+        st = kernels._SparseTable(ranked, npop)
+        res = st.query(np.where(empty, 0, lo), np.where(empty, 1, hi))
+        take = pa.array(np.where(empty, -1, res), type=pa.int64(), mask=empty)
+        return sorted_dict.take(take)
+    elif op == Operation.FIRST:
+        return _take_at(values, fpos, lo, empty)
+    elif op == Operation.LAST:
+        hi_c = np.maximum(hi, 1)
+        first_at_max = np.searchsorted(enc_f, enc_f[hi_c - 1], side="left")
+        idx = np.maximum(first_at_max, lo)
+        return _take_at(values, fpos, idx, empty)
+    elif op in (Operation.LAST_K, Operation.FIRST_K):
+        return _kop_list_array(values, fpos, lo, hi, part.k or 1, pa_type,
+                               ascending=(op == Operation.FIRST_K))
+    elif op == Operation.UNIQUE_TOP_K and pa.types.is_struct(values.type):
+        # struct{sort_key: string, unique_id: long} input shape
+        st = values.take(pa.array(fpos, type=pa.int64()))
+        uid = st.field("unique_id").to_numpy(zero_copy_only=False).astype(np.int64)
+        sk_rank, _ = segments.rank_codes(st.field("sort_key"), np.arange(len(fpos)))
+        return segments.unique_topk_struct(values, fpos, uid, sk_rank, lo, hi,
+                                           part.k or 1, pa_type)
+    elif op in (Operation.TOP_K, Operation.BOTTOM_K, Operation.UNIQUE_TOP_K):
+        if _is_numeric(values.type):
+            sort_key = _numeric_np(values)[fpos]
+        else:
+            sort_key, _ = segments.rank_codes(values, fpos)
+        k = part.k or 1
+        if op == Operation.UNIQUE_TOP_K:
+            return segments.unique_topk(values, fpos, sort_key, lo, hi, k, pa_type)
+        return segments.topk_bottomk(values, fpos, sort_key, lo, hi, k,
+                                     largest=(op == Operation.TOP_K), pa_list_type=pa_type)
+    elif op == Operation.APPROX_PERCENTILE:
+        pcts = [float(p) for p in
+                part.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
+        x = _numeric_np(values)[fpos].astype(np.float64, copy=False)
+        return segments.percentiles(x, lo, hi, pcts, pa_type)
+    elif op in (Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT):
+        codes, _ = segments.rank_codes(values, fpos)
+        prev = segments.prev_occurrence(codes)
+        if part.window is None:
+            gid_f = enc_f >> _SHIFT
+            gstart = np.searchsorted(gid_f, gid_f, side="left")
+            return segments.unique_count_unbounded(prev, gstart, lo, hi, pa_type)
+        return segments.unique_count(prev, lo, hi, pa_type)
+    elif op in (Operation.HISTOGRAM, Operation.APPROX_FREQUENT_K,
+                Operation.APPROX_HEAVY_HITTERS_K):
+        codes, sorted_dict = segments.rank_codes(values, fpos)
+        # map keys are str(value): only the small dictionary is touched
+        uniq_strs = pa.array([str(v) for v in sorted_dict.to_pylist()],
+                             type=pa.string())
+        by_count = op != Operation.HISTOGRAM
+        k = part.k if by_count is False else (part.k or 1)
+        return segments.histogram_map(codes, uniq_strs, lo, hi, k, pa_type,
+                                      order_by_count=by_count)
+    raise NotImplementedError(op)
+
+
 def process_chunk_arrow(
     tbl: pa.Table,
     start: np.ndarray,
     parts: list[AggregationPart],
-    part_types: list[T.DataType],
     passthrough: list[str],
     out_schema: pa.Schema,
     query_range_ms: Optional[tuple[int, int]],
@@ -179,7 +365,6 @@ def process_chunk_arrow(
     is_q = side >= 1
     if query_range_ms is not None:
         is_q &= (ts >= query_range_ms[0]) & (ts < query_range_ms[1])
-    ev_idx = np.flatnonzero(is_ev)
     q_idx = np.flatnonzero(is_q)
     gid_q = gid[q_idx]
     q_ts = ts[q_idx]
@@ -190,187 +375,19 @@ def process_chunk_arrow(
     for c in passthrough:
         out_arrays.append(cols[c].take(q_take))
 
-    for part, in_t in zip(parts, part_types):
-        f = out_schema.field(part.output_name)
-        col = cols[part.input_column]
-        valid = _valid_np(col)
-        use_fallback = (
-            isinstance(in_t, (T.ArrayType, T.MapType))
-            or (part.bucket is not None and part.operation != Operation.COUNT)
-        )
-        if use_fallback:
-            out_arrays.append(_fallback_part(
-                part, in_t, col, cols, valid, is_ev, enc_all, gid_q, q_ts, base,
-                snapshot, n_q, f.type))
-            continue
-
-        if part.bucket is not None:  # vectorized bucketed COUNT
-            bcol = cols[part.bucket]
-            bvalid = valid & _valid_np(bcol) & is_ev
-            fpos = np.flatnonzero(bvalid)
+    for part in parts:
+        out_type = out_schema.field(part.output_name).type
+        subkeys, units = _unpack(part, cols, is_ev, enc_all)
+        pa_type = out_type if subkeys is None else out_type.item_type
+        results = []
+        for values, fpos, enc_f in units:
             if not len(fpos):
-                out_arrays.append(pa.nulls(n_q, f.type))
+                results.append(pa.nulls(n_q, pa_type))
                 continue
-            enc_f = enc_all[fpos]
-            denc = pc.dictionary_encode(bcol.take(pa.array(fpos, type=pa.int64())))
-            codes = _np_int64(denc.indices)
-            bvals = [str(v) for v in denc.dictionary.to_pylist()]
-            n_b = len(bvals)
-            C = np.zeros((n_q, n_b), dtype=np.int64)
-            for b in range(n_b):
-                sel = codes == b
-                lo, hi = _tail_bounds(enc_f[sel], gid_q, q_ts, base, part, snapshot)
-                C[:, b] = hi - lo
-            nz = C > 0
-            cnt_q = nz.sum(axis=1).astype(np.int64)
-            offs = np.zeros(n_q + 1, dtype=np.int64)
-            np.cumsum(cnt_q, out=offs[1:])
-            flat_b = np.nonzero(nz)[1]
-            keys_arr = pa.array(bvals, type=pa.string()).take(
-                pa.array(flat_b, type=pa.int64()))
-            items_arr = pa.array(C[nz], type=pa.int64())
-            null_mask = np.zeros(n_q + 1, dtype=bool)
-            null_mask[:-1] = cnt_q == 0
-            offsets = pa.array(offs.astype(np.int32), type=pa.int32(), mask=null_mask)
-            out_arrays.append(pa.MapArray.from_arrays(offsets, keys_arr, items_arr))
-            continue
-
-        mask = valid & is_ev
-        fpos = np.flatnonzero(mask)
-        if not len(fpos):
-            out_arrays.append(pa.nulls(n_q, f.type))
-            continue
-        enc_f = enc_all[fpos]
-        lo, hi = _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot)
-        empty = hi <= lo
-        op = part.operation
-
-        if op == Operation.COUNT:
-            out_arrays.append(_masked_pa((hi - lo).astype(np.int64), empty, f.type))
-        elif op in (Operation.SUM, Operation.AVERAGE, Operation.VARIANCE,
-                    Operation.SKEW, Operation.KURTOSIS):
-            if op == Operation.SUM and pa.types.is_integer(f.type):
-                # exact long arithmetic (reference keeps JVM long; int64
-                # wrap-on-overflow matches) — float64 prefix sums would lose
-                # low-order bits past 2^53 cumulative magnitude
-                xi = _numeric_np(col)[fpos].astype(np.int64, copy=False)
-                prei = np.zeros(len(xi) + 1, dtype=np.int64)
-                np.cumsum(xi, out=prei[1:])
-                out_arrays.append(_masked_pa(prei[hi] - prei[lo], empty, f.type))
-                continue
-            x = _numeric_np(col)[fpos].astype(np.float64, copy=False)
-            nw = (hi - lo).astype(np.float64)
-            gf = enc_f >> _SHIFT
-            first = kernels.group_first(gf)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                if op == Operation.SUM:
-                    res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi)
-                elif op == Operation.AVERAGE:
-                    res = kernels.window_sums(kernels.group_prefix(x, first), first, lo, hi) / nw
-                else:
-                    # center per GROUP (every window lies inside one group,
-                    # so a group-constant shift keeps the prefix algebra
-                    # exact while minimizing |window mean − center|) and
-                    # accumulate the power prefixes per group in x86
-                    # extended precision, which keeps the engine-vs-oracle
-                    # gap orders below the queries' 1e-7 rounding guard
-                    if len(x):
-                        cnt_g = np.bincount(gf)
-                        sum_g = np.bincount(gf, weights=x)
-                        mean_g = np.where(cnt_g > 0, sum_g / np.maximum(cnt_g, 1), 0.0)
-                        c = (x - mean_g[gf]).astype(np.longdouble)
-                    else:
-                        c = x.astype(np.longdouble)
-                    s = [kernels.window_sums(kernels.group_prefix(c ** p, first), first, lo, hi)
-                         for p in range(1, 5)]
-                    nwl = nw.astype(np.longdouble)
-                    mu = s[0] / nwl
-                    m2 = np.maximum(s[1] - nwl * mu ** 2, 0.0)
-                    if op == Operation.VARIANCE:
-                        res = (m2 / nwl).astype(np.float64)
-                    elif op == Operation.SKEW:
-                        m3 = s[2] - 3 * mu * s[1] + 2 * nwl * mu ** 3
-                        res = np.where((nw < 3) | (m2 <= 0), np.nan,
-                                       (np.sqrt(nwl) * m3 / np.power(m2, 1.5))
-                                       .astype(np.float64))
-                    else:
-                        m4 = s[3] - 4 * mu * s[2] + 6 * mu ** 2 * s[1] - 3 * nwl * mu ** 4
-                        res = np.where((nw < 4) | (m2 <= 0), np.nan,
-                                       (nwl * m4 / (m2 * m2) - 3.0)
-                                       .astype(np.float64))
-            out_arrays.append(_masked_pa(res, empty, f.type))
-        elif op in (Operation.MIN, Operation.MAX):
-            npop = np.minimum if op == Operation.MIN else np.maximum
-            if _is_numeric(col.type):
-                x = _numeric_np(col)[fpos]
-                st = kernels._SparseTable(x, npop)
-                res = st.query(np.where(empty, 0, lo), np.where(empty, 1, hi))
-                out_arrays.append(_masked_pa(res, empty, f.type))
-            else:
-                # strings: RMQ over lexicographic rank codes, values emitted
-                # from the sorted dictionary (no per-row Python)
-                ranked, sorted_dict = segments.rank_codes(col, fpos)
-                st = kernels._SparseTable(ranked, npop)
-                res = st.query(np.where(empty, 0, lo), np.where(empty, 1, hi))
-                take = pa.array(np.where(empty, -1, res), type=pa.int64(), mask=empty)
-                out_arrays.append(sorted_dict.take(take))
-        elif op == Operation.FIRST:
-            out_arrays.append(_take_at(col, fpos, lo, empty))
-        elif op == Operation.LAST:
-            hi_c = np.maximum(hi, 1)
-            first_at_max = np.searchsorted(enc_f, enc_f[hi_c - 1], side="left")
-            idx = np.maximum(first_at_max, lo)
-            out_arrays.append(_take_at(col, fpos, idx, empty))
-        elif op in (Operation.LAST_K, Operation.FIRST_K):
-            out_arrays.append(_kop_list_array(
-                col, fpos, lo, hi, part.k or 1, f.type,
-                ascending=(op == Operation.FIRST_K)))
-        elif op == Operation.UNIQUE_TOP_K and pa.types.is_struct(col.type):
-            # struct{sort_key: string, unique_id: long} input shape
-            st = col.take(pa.array(fpos, type=pa.int64()))
-            uid = st.field("unique_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            sk_rank, _ = segments.rank_codes(st.field("sort_key"), np.arange(len(fpos)))
-            out_arrays.append(segments.unique_topk_struct(
-                col, fpos, uid, sk_rank, lo, hi, part.k or 1, f.type))
-        elif op in (Operation.TOP_K, Operation.BOTTOM_K, Operation.UNIQUE_TOP_K):
-            if _is_numeric(col.type):
-                sort_key = _numeric_np(col)[fpos]
-            else:
-                sort_key, _ = segments.rank_codes(col, fpos)
-            k = part.k or 1
-            if op == Operation.UNIQUE_TOP_K:
-                out_arrays.append(segments.unique_topk(col, fpos, sort_key, lo, hi, k, f.type))
-            else:
-                out_arrays.append(segments.topk_bottomk(
-                    col, fpos, sort_key, lo, hi, k,
-                    largest=(op == Operation.TOP_K), pa_list_type=f.type))
-        elif op == Operation.APPROX_PERCENTILE:
-            pcts = [float(p) for p in
-                    part.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
-            x = _numeric_np(col)[fpos].astype(np.float64, copy=False)
-            out_arrays.append(segments.percentiles(x, lo, hi, pcts, f.type))
-        elif op in (Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT):
-            codes, _ = segments.rank_codes(col, fpos)
-            prev = segments.prev_occurrence(codes)
-            if part.window is None:
-                gid_f = enc_f >> _SHIFT
-                gstart = np.searchsorted(gid_f, gid_f, side="left")
-                out_arrays.append(segments.unique_count_unbounded(
-                    prev, gstart, lo, hi, f.type))
-            else:
-                out_arrays.append(segments.unique_count(prev, lo, hi, f.type))
-        elif op in (Operation.HISTOGRAM, Operation.APPROX_FREQUENT_K,
-                    Operation.APPROX_HEAVY_HITTERS_K):
-            codes, sorted_dict = segments.rank_codes(col, fpos)
-            # map keys are str(value): only the small dictionary is touched
-            uniq_strs = pa.array([str(v) for v in sorted_dict.to_pylist()],
-                                 type=pa.string())
-            by_count = op != Operation.HISTOGRAM
-            k = part.k if by_count is False else (part.k or 1)
-            out_arrays.append(segments.histogram_map(
-                codes, uniq_strs, lo, hi, k, f.type, order_by_count=by_count))
-        else:  # pragma: no cover — routed to fallback above
-            raise NotImplementedError(op)
+            lo, hi = _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot)
+            results.append(_finish(part, values, fpos, enc_f, lo, hi, pa_type))
+        out_arrays.append(results[0] if subkeys is None else
+                          _map_of(subkeys, results, n_q, out_type))
 
     names = [row_id_col, *passthrough, *[p.output_name for p in parts]]
     arrays = [a.cast(out_schema.field(nm).type) if a.type != out_schema.field(nm).type else a
@@ -378,162 +395,7 @@ def process_chunk_arrow(
     return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
 
-def _fallback_part(part, in_t, col, cols, valid, is_ev, enc_all, gid_q, q_ts, base,
-                   snapshot, n_q, pa_type) -> pa.Array:
-    """Object-array kernels for ops without an Arrow-native fast path —
-    converts ONLY this column, and only its valid event rows."""
-    from pyspark.sql import types as ST
-
-    def to_obj(arr: pa.Array, pos: np.ndarray):
-        taken = arr.take(pa.array(pos, type=pa.int64()))
-        return np.array(taken.to_pylist(), dtype=object)
-
-    def as_vals(pos: np.ndarray, eff_t):
-        if isinstance(eff_t, (ST.LongType, ST.IntegerType, ST.ShortType, ST.ByteType,
-                              ST.BooleanType)):
-            return _numeric_np(col)[pos].astype(np.int64)
-        if isinstance(eff_t, (ST.FloatType, ST.DoubleType)):
-            return _numeric_np(col)[pos].astype(np.float64)
-        return to_obj(col, pos)
-
-    results: list
-    if isinstance(in_t, ST.MapType):
-        pos = np.flatnonzero(valid & is_ev)
-        results = [None] * n_q
-        arrow_keys = (isinstance(col, pa.MapArray)
-                      and pa.types.is_string(col.type.key_type))
-        if len(pos) and arrow_keys:
-            # Arrow-native flatten: keys/items are contiguous child arrays,
-            # so per-entry work is numpy — the old path materialized a
-            # Python tuple list per row (to_pylist) plus str(k) per entry
-            ma = col.take(pa.array(pos, type=pa.int64()))
-            offs = ma.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lens = offs[1:] - offs[:-1]
-            enc_rep = np.repeat(enc_all[pos], lens)
-            # MapArray.keys/.items are the offset-adjusted flattened children
-            keys_f, items_f = ma.keys, ma.items
-            denc = pc.dictionary_encode(keys_f)
-            kcodes = _np_int64(denc.indices)
-            # first-appearance dictionary order == the old dict.fromkeys order
-            kdict = [str(v) for v in denc.dictionary.to_pylist()]
-            it_valid = _valid_np(items_f)
-            long_vals = isinstance(
-                in_t.valueType, (ST.ByteType, ST.ShortType, ST.IntegerType,
-                                 ST.LongType, ST.BooleanType))
-            mvals_obj = None  # lazy: only for non-numeric items
-            for ci, mk in enumerate(kdict):
-                sel = (kcodes == ci) & it_valid
-                if not sel.any():
-                    continue
-                pos_f = np.flatnonzero(sel)
-                if _is_numeric(items_f.type):
-                    vs = _numeric_np(items_f)[pos_f]
-                    vs = vs.astype(np.int64 if long_vals else np.float64)
-                else:
-                    if mvals_obj is None:
-                        mvals_obj = np.array(items_f.to_pylist(), dtype=object)
-                    vs = mvals_obj[pos_f]
-                enc_sel = enc_rep[pos_f]
-                lo, hi = _tail_bounds(enc_sel, gid_q, q_ts, base, part, snapshot)
-                res = kernels.run_kernel(part, vs, enc_sel, lo, hi)
-                for i, r in enumerate(res):
-                    if r is not None:
-                        if results[i] is None:
-                            results[i] = {}
-                        results[i][mk] = r
-        elif len(pos):
-            items = to_obj(col, pos)
-            lens = np.array([len(d) for d in items], dtype=np.int64)
-            enc_rep = np.repeat(enc_all[pos], lens)
-            # MapArray.to_pylist yields list-of-(k,v)-tuples (np.array with
-            # dtype=object can silently turn the inner lists into ndarrays)
-            mkeys = np.array([str(k) for d in items for k, _ in d], dtype=object)
-            mvals = np.array([v for d in items for _, v in d], dtype=object)
-            vmask = np.array([v is not None for v in mvals], dtype=bool)
-            enc_rep, mkeys, mvals = enc_rep[vmask], mkeys[vmask], mvals[vmask]
-            for mk in dict.fromkeys(mkeys):
-                sel = mkeys == mk
-                lo, hi = _tail_bounds(enc_rep[sel], gid_q, q_ts, base, part, snapshot)
-                res = kernels.run_kernel(part, mvals[sel], enc_rep[sel], lo, hi)
-                for i, r in enumerate(res):
-                    if r is not None:
-                        if results[i] is None:
-                            results[i] = {}
-                        results[i][str(mk)] = r
-    elif part.bucket is not None:
-        bcol = cols[part.bucket]
-        pos = np.flatnonzero(valid & _valid_np(bcol) & is_ev)
-        results = [None] * n_q
-        if len(pos):
-            eff_t = in_t.elementType if isinstance(in_t, ST.ArrayType) else in_t
-            if isinstance(in_t, ST.ArrayType):
-                lists = to_obj(col, pos)
-                lens = np.array([len(x) for x in lists], dtype=np.int64)
-                enc_b = np.repeat(enc_all[pos], lens)
-                bobj = np.repeat(to_obj(bcol, pos), lens)
-                vals_b = np.array([v for x in lists for v in x], dtype=object)
-            else:
-                enc_b = enc_all[pos]
-                bobj = to_obj(bcol, pos)
-                vals_b = as_vals(pos, eff_t)
-            for bv in dict.fromkeys(bobj):
-                sel = bobj == bv
-                lo, hi = _tail_bounds(enc_b[sel], gid_q, q_ts, base, part, snapshot)
-                res = kernels.run_kernel(part, vals_b[sel], enc_b[sel], lo, hi)
-                for i, r in enumerate(res):
-                    if r is not None:
-                        if results[i] is None:
-                            results[i] = {}
-                        results[i][str(bv)] = r
-    else:
-        pos = np.flatnonzero(valid & is_ev)
-        if not len(pos):
-            return pa.nulls(n_q, pa_type)
-        if isinstance(in_t, ST.ArrayType) and isinstance(
-                col, (pa.ListArray, pa.LargeListArray)):
-            # Arrow-native explode: lengths + flatten are child-buffer
-            # operations; the old path built a Python list per row
-            la = col.take(pa.array(pos, type=pa.int64()))
-            lens = pc.list_value_length(la).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            enc_f = np.repeat(enc_all[pos], lens)
-            flat_arr = la.flatten()
-            fm = _valid_np(flat_arr)
-            enc_f = enc_f[fm]
-            if not len(enc_f):
-                return pa.nulls(n_q, pa_type)
-            if _is_numeric(flat_arr.type):
-                el_long = isinstance(
-                    in_t.elementType, (ST.ByteType, ST.ShortType,
-                                       ST.IntegerType, ST.LongType,
-                                       ST.BooleanType))
-                vals_f = _numeric_np(flat_arr)[fm].astype(
-                    np.int64 if el_long else np.float64)
-            else:
-                vals_f = np.array(flat_arr.to_pylist(), dtype=object)[fm]
-            lo, hi = _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot)
-            results = kernels.run_kernel(part, vals_f, enc_f, lo, hi)
-        elif isinstance(in_t, ST.ArrayType):
-            lists = to_obj(col, pos)
-            lens = np.array([len(x) for x in lists], dtype=np.int64)
-            enc_f = np.repeat(enc_all[pos], lens)
-            flat = np.array([v for x in lists for v in x], dtype=object)
-            fm = np.array([v is not None for v in flat], dtype=bool)
-            enc_f, flat = enc_f[fm], flat[fm]
-            if not len(enc_f):
-                return pa.nulls(n_q, pa_type)
-            lo, hi = _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot)
-            results = kernels.run_kernel(part, flat, enc_f, lo, hi)
-        else:
-            enc_f = enc_all[pos]
-            vals = as_vals(pos, in_t)
-            lo, hi = _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot)
-            results = kernels.run_kernel(part, vals, enc_f, lo, hi)
-    results = [list(r.items()) if isinstance(r, dict) else r for r in results]
-    return pa.array(results, type=pa_type)
-
-
-def make_arrow_runner(parts, part_types, keys, out_schema_spark, passthrough,
+def make_arrow_runner(parts, keys, out_schema_spark, passthrough,
                       query_range_ms, snapshot, ts_col, side_col, row_id_col):
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -542,7 +404,7 @@ def make_arrow_runner(parts, part_types, keys, out_schema_spark, passthrough,
     def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for tbl, start in whole_groups(batches, keys):
             out = process_chunk_arrow(
-                tbl, start, parts, part_types, passthrough, out_schema,
+                tbl, start, parts, passthrough, out_schema,
                 query_range_ms, snapshot, ts_col, side_col, row_id_col)
             if out.num_rows:
                 yield out

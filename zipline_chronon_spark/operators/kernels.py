@@ -1,10 +1,16 @@
-"""Vectorized per-group aggregation kernels.
+"""Vectorized per-group aggregation kernels over object arrays, plus the
+prefix-sum and RMQ helpers the Arrow engine shares.
 
 Each kernel answers Q trailing-window queries over one group's events in
 one shot: given the group's non-null values sorted by (ts, original order)
 and per-query index bounds ``lo[i]:hi[i]`` (computed by
 ``arrow_engine._tail_bounds`` from the hop-aligned tail rule), produce one
-output per query.
+output per query as a Python list.
+
+``KERNELS`` is not on the PIT engine's path (arrow_engine finishes every op
+in Arrow/numpy). Its callers are the insert-only tier of
+``entities_temporal`` and tests/test_segments.py, which checks the Arrow
+finishes (segments.py) against it.
 
 This replaces the reference's row-at-a-time SimpleAggregator machinery
 (aggregator/src/main/scala/ai/chronon/aggregator/base/SimpleAggregators.scala,
@@ -25,8 +31,8 @@ Semantics parity notes (vs reference):
    (TimedAggregators.scala Last.update uses strict ``<``). FIRST mirrors.
  - LAST_K returns values most-recent-first (OrderByLimitTimed.finalize sorts
    by the heap ordering, TimedAggregators.scala:117-183).
- - APPROX_* ops use exact fallbacks at this stage (documented); the output
-   contract (types, names) matches the reference.
+ - APPROX_* ops are exact here; the output contract (types, names)
+   matches the reference.
  - All kernels ignore nulls — callers pre-filter (ColumnAggregator.scala
    null guards :55-56,141-148).
 """

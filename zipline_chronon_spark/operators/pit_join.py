@@ -20,9 +20,10 @@ groups and vectorize ACROSS groups by encoding (group, ts) into one int64:
 
 Because chunks arrive sorted by (keys, ts, tie), ``enc`` is sorted, group
 ranges never overlap, and a single ``searchsorted`` resolves the sawtooth
-window bounds for every query of every group at once. All prefix-sum / RMQ
-kernels (kernels.py) then run on the concatenated arrays unchanged — a
-window [lo, hi) can never cross a group boundary.
+window bounds for every query of every group at once. The one op dispatch
+(arrow_engine._finish: prefix sums, RMQ, segment finishes) then runs on the
+concatenated arrays unchanged — a window [lo, hi) can never cross a group
+boundary.
 
 Scale notes (100 TB design point):
  - one hash shuffle, partitioned by key; hot keys are bounded-lookback and
@@ -280,12 +281,9 @@ def _as_numpy(s: pd.Series, dt: T.DataType) -> np.ndarray:
 def _output_schema(gb: GroupBy, ev_schema: dict, passthrough_fields: list[T.StructField]):
     parts = gb.parts()
     fields = [T.StructField(ROW_ID, T.LongType(), False), *passthrough_fields]
-    part_types: list[T.DataType] = []
     for p in parts:
-        in_t = ev_schema[p.input_column]
-        part_types.append(in_t)
-        fields.append(output_field(p, in_t))
-    return parts, part_types, T.StructType(fields)
+        fields.append(output_field(p, ev_schema[p.input_column]))
+    return parts, T.StructType(fields)
 
 
 def compute_group_by(
@@ -368,7 +366,7 @@ def compute_group_by(
 
     u_schema = {f.name: f.dataType for f in union.schema.fields}
     pt_fields = [T.StructField(c, u_schema[c], True) for c in passthrough_cols]
-    parts, part_types, out_schema = _output_schema(gb, ev_schema, pt_fields)
+    parts, out_schema = _output_schema(gb, ev_schema, pt_fields)
 
     shuffled = union.repartition(num_partitions, *right_keys) if num_partitions else (
         union.repartition(*right_keys))
@@ -377,7 +375,7 @@ def compute_group_by(
     from zipline_chronon_spark.operators.derive import apply_derivations
 
     snap = gb.accuracy == Accuracy.SNAPSHOT
-    runner = make_arrow_runner(parts, part_types, right_keys, out_schema,
+    runner = make_arrow_runner(parts, right_keys, out_schema,
                                passthrough_cols, None, snap, TS_COL, SIDE_COL, ROW_ID)
     out = arranged.mapInArrow(runner, schema=out_schema)
     return apply_derivations(out, gb.derivations,
@@ -467,7 +465,7 @@ def compute_group_by_self(
         group_keys = right_keys + [SALT_COL]
 
     pt_fields = [T.StructField(n, ev_schema[n], True) for n in passthrough]
-    parts, part_types, out_schema = _output_schema(gb, ev_schema, pt_fields)
+    parts, out_schema = _output_schema(gb, ev_schema, pt_fields)
 
     shuffled = ev.repartition(num_partitions, *group_keys) if num_partitions else (
         ev.repartition(*group_keys))
@@ -476,7 +474,7 @@ def compute_group_by_self(
     from zipline_chronon_spark.operators.derive import apply_derivations
 
     snap = gb.accuracy == Accuracy.SNAPSHOT
-    runner = make_arrow_runner(parts, part_types, group_keys, out_schema,
+    runner = make_arrow_runner(parts, group_keys, out_schema,
                                list(passthrough), query_range_ms, snap,
                                TS_COL, SIDE_COL, ROW_ID)
     out = arranged.mapInArrow(runner, schema=out_schema)

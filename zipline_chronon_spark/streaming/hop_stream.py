@@ -18,8 +18,9 @@ the batch collapsed IR at query time (SawtoothOnlineAggregator.scala
 semantics).
 
 Ops with mergeable scalar IRs are supported here (SUM, COUNT, MIN, MAX,
-AVERAGE via (sum, count), FIRST/LAST via (ts, value) argmin/argmax);
-sketch-based ops join once mergeable sketches land (kernels.py note).
+AVERAGE via (sum, count), FIRST/LAST via (ts, value) argmin/argmax), plus
+APPROX_UNIQUE_COUNT as a Spark HLL sketch per tile (merge_tile_sketches).
+The other sketch ops tile as IR bytes in lambda_merge.py.
 """
 
 from __future__ import annotations

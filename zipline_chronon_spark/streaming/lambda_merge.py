@@ -23,22 +23,17 @@ provide at the KV tier.
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zipline_chronon_spark.api import GroupBy, Operation
-from zipline_chronon_spark.operators.sketches import FreqSketch, HllSketch, KllSketch
-
-_SKETCH_OPS = {Operation.APPROX_UNIQUE_COUNT, Operation.APPROX_PERCENTILE,
-               Operation.APPROX_FREQUENT_K, Operation.APPROX_HEAVY_HITTERS_K}
+from zipline_chronon_spark.online import fetcher as fl
 
 
 def _sketch_parts(gb: GroupBy) -> list:
-    parts = [p for p in gb.parts() if p.operation in _SKETCH_OPS]
+    parts = [p for p in gb.parts() if p.operation in fl.SKETCH_OPS]
     if not parts:
         raise ValueError("GroupBy has no sketch-backed aggregations")
     return parts
@@ -48,23 +43,17 @@ def _ir_col(part) -> str:
     return f"{part.output_name}_ir"
 
 
-_FREQ_OPS = {Operation.APPROX_FREQUENT_K, Operation.APPROX_HEAVY_HITTERS_K}
-
-
-def _new_sketch(part):
-    if part.operation == Operation.APPROX_UNIQUE_COUNT:
-        return HllSketch()
-    if part.operation in _FREQ_OPS:
-        return FreqSketch()
-    return KllSketch()
-
-
-def _from_bytes(part, b: bytes):
-    if part.operation == Operation.APPROX_UNIQUE_COUNT:
-        return HllSketch.from_bytes(b)
-    if part.operation in _FREQ_OPS:
-        return FreqSketch.from_bytes(b)
-    return KllSketch.from_bytes(b)
+def _finalized_schema(df: DataFrame, keys: list, parts: list) -> T.StructType:
+    """The keys plus one finalized estimate column per sketch part."""
+    schema = df.select(*keys).schema
+    for pt in parts:
+        if pt.operation == Operation.APPROX_UNIQUE_COUNT:
+            schema = schema.add(pt.output_name, T.LongType())
+        elif pt.operation in fl._FREQ:
+            schema = schema.add(pt.output_name, T.MapType(T.StringType(), T.LongType()))
+        else:
+            schema = schema.add(pt.output_name, T.ArrayType(T.DoubleType()))
+    return schema
 
 
 def sketch_tiles(df: DataFrame, gb: GroupBy, hop_ms: int,
@@ -98,7 +87,7 @@ def sketch_tiles(df: DataFrame, gb: GroupBy, hop_ms: int,
         out["hop_start_ms"] = [pdf["hop_start_ms"].iloc[0]]
         for pt in parts:
             vals = pdf[pt.input_column].dropna().to_numpy()
-            out[_ir_col(pt)] = [_new_sketch(pt).update(vals).to_bytes()]
+            out[_ir_col(pt)] = [fl._new_sketch(pt.operation).update(vals).to_bytes()]
         return pd.DataFrame(out)
 
     return p.groupBy(*keys, "hop_start_ms").applyInPandas(build, schema=schema)
@@ -117,7 +106,7 @@ def collapse(tiles: DataFrame, gb: GroupBy) -> DataFrame:
         for pt in parts:
             sk = None
             for b in pdf[_ir_col(pt)]:
-                cur = _from_bytes(pt, bytes(b))
+                cur = fl._sketch_cls(pt.operation).from_bytes(bytes(b))
                 sk = cur if sk is None else sk.merge(cur)
             out[_ir_col(pt)] = [sk.to_bytes()]
         return pd.DataFrame(out)
@@ -126,47 +115,22 @@ def collapse(tiles: DataFrame, gb: GroupBy) -> DataFrame:
 
 
 def finalize(states: DataFrame, gb: GroupBy) -> DataFrame:
-    """IR bytes -> estimates: HLL estimate (exact in the sparse regime),
-    KLL quantiles (exact in the buffer regime)."""
+    """IR bytes -> estimates through the Fetcher's ``finalize_part``: HLL
+    estimate (exact in the sparse regime), KLL quantiles (exact in the
+    buffer regime), Misra-Gries top-k."""
     parts = _sketch_parts(gb)
     keys = list(gb.key_columns)
-    out_schema = states.select(*keys).schema
-    for pt in parts:
-        if pt.operation == Operation.APPROX_UNIQUE_COUNT:
-            out_schema = out_schema.add(pt.output_name, T.LongType())
-        elif pt.operation in _FREQ_OPS:
-            out_schema = out_schema.add(
-                pt.output_name, T.MapType(T.StringType(), T.LongType()))
-        else:
-            out_schema = out_schema.add(pt.output_name, T.ArrayType(T.DoubleType()))
-
-    pcts: dict[str, list[float]] = {
-        _ir_col(pt): [float(x) for x in
-                      pt.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
-        for pt in parts if pt.operation == Operation.APPROX_PERCENTILE
-    }
 
     def fin(pdf: pd.DataFrame) -> pd.DataFrame:
         out = {k: pdf[k] for k in keys}
         for pt in parts:
-            col = _ir_col(pt)
-            if pt.operation == Operation.APPROX_UNIQUE_COUNT:
-                out[pt.output_name] = [
-                    int(round(HllSketch.from_bytes(bytes(b)).estimate()))
-                    for b in pdf[col]]
-            elif pt.operation in _FREQ_OPS:
-                nfp = pt.operation == Operation.APPROX_HEAVY_HITTERS_K
-                out[pt.output_name] = [
-                    FreqSketch.from_bytes(bytes(b)).top_k(pt.k or 1,
-                                                          no_false_positives=nfp)
-                    for b in pdf[col]]
-            else:
-                out[pt.output_name] = [
-                    KllSketch.from_bytes(bytes(b)).quantiles(pcts[col])
-                    for b in pdf[col]]
+            sk = f"{pt.output_name}__sk"
+            out[pt.output_name] = [fl.finalize_part(pt, [{sk: b}], [])
+                                   for b in pdf[_ir_col(pt)]]
         return pd.DataFrame(out)
 
-    return states.mapInPandas(lambda it: (fin(pdf) for pdf in it), schema=out_schema)
+    return states.mapInPandas(lambda it: (fin(pdf) for pdf in it),
+                              schema=_finalized_schema(states, keys, parts))
 
 
 def lambda_finalized(batch_state: DataFrame, stream_tiles: DataFrame,
@@ -188,7 +152,6 @@ def lambda_finalized(batch_state: DataFrame, stream_tiles: DataFrame,
     """
     windowed = [p for p in _sketch_parts(gb) if p.window is not None]
     if not windowed:
-        keys = list(gb.key_columns)
         union = batch_state.unionByName(stream_tiles.drop("hop_start_ms"))
         return finalize(collapse(union.withColumn("hop_start_ms", F.lit(0)), gb), gb)
     if at_ts_ms is None:
@@ -212,10 +175,6 @@ def sawtooth_finalized(batch_tiles: DataFrame, stream_tiles: DataFrame,
     Fetcher and the batch approx engine run. Rows without ``hop_start_ms``
     (collapsed batch state) feed only unbounded parts, mirroring the
     collapsed-IR rule of the upload split."""
-    import numpy as np  # noqa: F401  (pandas binary cols arrive as objects)
-
-    from zipline_chronon_spark.online import fetcher as fl
-
     parts = _sketch_parts(gb)
     keys = list(gb.key_columns)
     b = batch_tiles
@@ -229,16 +188,6 @@ def sawtooth_finalized(batch_tiles: DataFrame, stream_tiles: DataFrame,
     # cuts exactly at ts <= T.
     union = b.unionByName(stream_tiles).where(
         F.col("hop_start_ms").isNull() | (F.col("hop_start_ms") <= F.lit(at_ts_ms)))
-
-    out_schema = union.select(*keys).schema
-    for pt in parts:
-        if pt.operation == Operation.APPROX_UNIQUE_COUNT:
-            out_schema = out_schema.add(pt.output_name, T.LongType())
-        elif pt.operation in _FREQ_OPS:
-            out_schema = out_schema.add(
-                pt.output_name, T.MapType(T.StringType(), T.LongType()))
-        else:
-            out_schema = out_schema.add(pt.output_name, T.ArrayType(T.DoubleType()))
 
     ir_cols = {pt.output_name: _ir_col(pt) for pt in parts}
     cls_by_col = {f"{pt.output_name}__sk": fl._sketch_cls(pt.operation)
@@ -267,11 +216,8 @@ def sawtooth_finalized(batch_tiles: DataFrame, stream_tiles: DataFrame,
         merged = fl.merge_state(parts, collapsed or None, tiles, [], at_ts_ms)
         out = {k: [pdf[k].iloc[0]] for k in keys}
         for pt in parts:
-            v = merged[pt.output_name]
-            if pt.operation in _FREQ_OPS and isinstance(v, list):
-                v = dict(v)
-            out[pt.output_name] = [v]
+            out[pt.output_name] = [merged[pt.output_name]]
         return pd.DataFrame(out)
 
     return union.groupBy(*keys).applyInPandas(
-        lambda _k, pdf: fin(pdf), schema=out_schema)
+        lambda _k, pdf: fin(pdf), schema=_finalized_schema(union, keys, parts))
