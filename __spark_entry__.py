@@ -598,7 +598,7 @@ def q_join_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         derivations=(
             Derivation("*", "*"),
-            Derivation("value_over_last", "value / r_rec_value_last_7d"),
+            Derivation("value_over_last", "try_divide(value, r_rec_value_last_7d)"),
         ),
         row_ids=("event_id",),
     )

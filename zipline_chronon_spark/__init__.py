@@ -2,8 +2,8 @@
 
 A from-scratch rebuild of the capabilities of sardine-ai/zipline-chronon
 (reference at /root/reference) on idiomatic PySpark: declarative DataFrame
-plans for scans/filters/merges, and Arrow-vectorized ``applyInPandas`` for
-the sorted-partition as-of (point-in-time) windowed aggregation that Spark
+plans for scans/filters/merges, and Arrow-batched ``mapInArrow`` for the
+sorted-partition as-of (point-in-time) windowed aggregation that Spark
 lacks natively.
 
 Key semantics mirrored from the reference (file:line cites in docstrings):
