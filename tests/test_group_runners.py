@@ -1,7 +1,8 @@
 """The sorted-group runners — PIT union and self-enrichment, temporal
 entities, the approx serve and the sketch tile build — re-chunk Arrow
 batches on group boundaries through ``arrow_engine.whole_groups``. Their
-output must not depend on the Arrow batch size, and their plans must cross
+output must not depend on the physical plan (Arrow batch size, shuffle
+partition count, adaptive execution), and their plans must cross
 the Python boundary as Arrow (``MapInArrow``), never as pandas."""
 
 from __future__ import annotations
@@ -137,20 +138,39 @@ def _upload(spark):
     return kv.data
 
 
-def test_output_independent_of_arrow_batch_size(spark, queries, cdc):
-    default = {n: _sorted(df) for n, df in _frames(spark, queries, cdc).items()}
-    default_kv = _upload(spark)
-    prev = spark.conf.get(BATCH_CONF)
-    spark.conf.set(BATCH_CONF, "3")
+# plan settings under which every runner must give exactly the default output
+PLANS = {
+    "max_records_per_batch_3": {BATCH_CONF: "3"},
+    "shuffle_partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "shuffle_partitions_3_no_aqe": {"spark.sql.shuffle.partitions": "3",
+                                    "spark.sql.adaptive.enabled": "false"},
+}
+
+
+def _run(spark, queries, cdc):
+    return {n: _sorted(df) for n, df in _frames(spark, queries, cdc).items()}, _upload(spark)
+
+
+@pytest.fixture(scope="module")
+def default_run(spark, queries, cdc):
+    return _run(spark, queries, cdc)
+
+
+@pytest.mark.parametrize("conf", list(PLANS.values()), ids=list(PLANS))
+def test_output_independent_of_plan(spark, queries, cdc, default_run, conf):
+    default, default_kv = default_run
+    prev = {k: spark.conf.get(k) for k in conf}
     try:
-        small = {n: _sorted(df) for n, df in _frames(spark, queries, cdc).items()}
-        small_kv = _upload(spark)
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        frames, kv = _run(spark, queries, cdc)
     finally:
-        spark.conf.set(BATCH_CONF, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     for name, pdf in default.items():
         assert len(pdf), name
-        pd.testing.assert_frame_equal(small[name], pdf, check_exact=True, obj=name)
-    assert small_kv == default_kv
+        pd.testing.assert_frame_equal(frames[name], pdf, check_exact=True, obj=name)
+    assert kv == default_kv
 
 
 def _plan(df) -> str:

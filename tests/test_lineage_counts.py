@@ -1,7 +1,8 @@
 """Lineage row counts are observed while each chunk is written: for every
 resumable job (GroupBy backfill, join backfill, staging query) a chunk's
 ``rows_per_partition`` equals the per-``ds`` row counts of the table as
-written, and a day of the chunk with no rows is left out."""
+written, and a day of the chunk with no rows is left out. Every record also
+carries the driver's JIT compilation milliseconds, ``jit_ms``."""
 
 from __future__ import annotations
 
@@ -41,6 +42,7 @@ def _assert_lineage_matches(spark, table: str, empty: str) -> None:
         assert r["rows_per_partition"] == {d: written[d] for d in r["partitions"]
                                            if d in written}
         assert r["rows"] == sum(r["rows_per_partition"].values())
+        assert isinstance(r["jit_ms"], int) and r["jit_ms"] >= 0
     empty_chunk = [r for r in recs if empty in r["partitions"]]
     assert len(empty_chunk) == 1 and empty_chunk[0]["rows"] > 0
 

@@ -12,7 +12,8 @@ Contract (north rule):
  - rerunning a killed backfill recomputes ONLY missing date partitions,
  - output is byte-identical to an uninterrupted run (deterministic engine),
  - every chunk appends a lineage record: partition range, row count, wall
-   seconds, spec hash, status — the per-partition metrics table,
+   seconds, driver JIT milliseconds, spec hash, status — the per-partition
+   metrics table,
  - a changed spec (semantic hash) invalidates all previous partitions.
 
 Windows look back across chunk boundaries: each chunk scans events from
@@ -97,26 +98,30 @@ class Lineage:
 
 
 def insert_chunk(catalog, df: DataFrame, table: str, chunk: list[str],
-                 partition_col: str = "ds") -> dict[str, int]:
-    """Write one chunk through the catalog and return its row count per
-    partition, counted by an ``Observation`` while the rows are written
-    rather than by reading the table back. Days of ``chunk`` with no rows
-    are left out."""
+                 partition_col: str = "ds") -> dict:
+    """Write one chunk through the catalog. Returns its row count per
+    partition (``rows_per_partition``), counted by an ``Observation`` while
+    the rows are written rather than by reading the table back, with days of
+    ``chunk`` that have no rows left out; and ``jit_ms``, the driver JVM's
+    JIT compilation time spent during the write."""
     pc = F.col(partition_col).cast("string")
     obs = Observation()
     df = df.observe(obs, *[F.count(F.when(pc == d, 1)).alias(d) for d in chunk])
+    jit = df.sparkSession._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    jit0 = jit.getTotalCompilationTime()
     catalog.insert_partitions(df, table, partition_col=partition_col)
-    return {d: int(n) for d, n in obs.get.items() if n}
+    return {"rows_per_partition": {d: int(n) for d, n in obs.get.items() if n},
+            "jit_ms": jit.getTotalCompilationTime() - jit0}
 
 
-def chunk_record(chunk: list[str], rows_per_ds: dict[str, int], t0: float,
-                 h: str, **extra) -> dict:
-    """The lineage record of one successfully written chunk."""
+def chunk_record(chunk: list[str], written: dict, t0: float, h: str, **extra) -> dict:
+    """The lineage record of one successfully written chunk; ``written`` is
+    what ``insert_chunk`` returned."""
     return {
         **extra,
         "partitions": chunk,
-        "rows_per_partition": rows_per_ds,
-        "rows": sum(rows_per_ds.values()),
+        **written,
+        "rows": sum(written["rows_per_partition"].values()),
         "wall_sec": round(time.time() - t0, 3),
         "spec_hash": h,
         "status": "success",
@@ -218,9 +223,9 @@ class GroupByBackfill:
         for chunk in self._chunks(todo, step_days):
             ds_from, ds_to = chunk[0], chunk[-1]
             t0 = time.time()
-            rows_per_ds = insert_chunk(self.catalog, self._compute_chunk(ds_from, ds_to),
-                                       self.output_path, chunk)
-            rec = chunk_record(chunk, rows_per_ds, t0, self.hash)
+            written = insert_chunk(self.catalog, self._compute_chunk(ds_from, ds_to),
+                                   self.output_path, chunk)
+            rec = chunk_record(chunk, written, t0, self.hash)
             self.lineage.append(rec)
             done.append(rec)
         return {"computed_chunks": done,

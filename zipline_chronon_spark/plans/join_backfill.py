@@ -161,14 +161,14 @@ class JoinBackfill:
         for chunk in GroupByBackfill._chunks(todo, step_days):
             ds_from, ds_to = chunk[0], chunk[-1]
             t0 = time.time()
-            rows_per_ds = insert_chunk(self.catalog, compute_chunk(ds_from, ds_to), path, chunk)
+            written = insert_chunk(self.catalog, compute_chunk(ds_from, ds_to), path, chunk)
             # the chunk is on disk: release frames the part engine pinned
             # (snapshot qd / minted left) so a long resumable backfill does
             # not accumulate cached partitions for the whole job lifetime
             from zipline_chronon_spark.operators import join as join_ops
 
             join_ops.release_caches()
-            rec = chunk_record(chunk, rows_per_ds, t0, h, node=name)
+            rec = chunk_record(chunk, written, t0, h, node=name)
             lineage.append(rec)
             done.append(rec)
         return done

@@ -128,9 +128,9 @@ class StagingQueryJob:
                     f"StagingQuery {self.sq.name} output lacks partition "
                     f"column '{self.partition_col}' — a resumable staging "
                     f"table must be date-partitioned (columns: {df.columns})")
-            rows_per_ds = insert_chunk(self.catalog, df, self.output_path, chunk,
-                                       partition_col=self.partition_col)
-            rec = chunk_record(chunk, rows_per_ds, t0, self.hash)
+            written = insert_chunk(self.catalog, df, self.output_path, chunk,
+                                   partition_col=self.partition_col)
+            rec = chunk_record(chunk, written, t0, self.hash)
             self.lineage.append(rec)
             done.append(rec)
         return {"computed_chunks": done, "archived": archived,

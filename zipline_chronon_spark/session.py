@@ -2,10 +2,11 @@
 
 Scale stance (100 TB / 1000-executor design point, tested on local[N]):
  - AQE on (runtime coalesce + skew-join splitting),
- - Arrow on (all custom operators are Arrow-batched pandas UDFs),
+ - Arrow on (every custom operator runs through ``mapInArrow``),
  - UTC session timezone for deterministic timestamp <-> epoch math,
  - shuffle partitions sized by env (driver sets cluster-appropriate value),
- - codegen cache sized to the engine's working set (below).
+ - codegen cache sized to the engine's working set (below),
+ - driver JIT thresholds raised (below).
 
 Codegen cache. Whole-stage codegen turns each plan into Java source that
 Janino compiles and the JVM then JIT-compiles; Spark caches the compiled
@@ -26,6 +27,27 @@ The cache size is a static conf: Spark reads it once per JVM, from the
 session that generates the first class. ``getOrCreate()`` on an
 already-running SparkContext cannot apply it, so the first session in a
 process must come from ``get_spark``.
+
+JIT thresholds. Once the codegen cache holds, most of the driver JVM's CPU
+goes to the C2 compiler: 59-70 s of a 138-171 s ``driver_suite`` benchmark
+run on a 4-core host, 35-42 s of 95-116 s in ``transcript_backfill``. It
+compiled about 4,300 times over 3,600 distinct methods at a steady
+370-650 compiles per 5 s, about a thousand of them in
+``org.apache.spark.sql``: the breadth of Spark's briefly warm planning code
+(Catalyst, AQE re-planning, the Janino front end), not a deoptimization
+loop. ``-XX:CompileThresholdScaling=JIT_THRESHOLD_SCALING`` (4) scales
+every tier's invocation and back-edge thresholds, so that code stays in C1
+or the interpreter while the executor hot loops still reach C2; the C2
+threads' CPU halves and ``driver_suite`` takes about 18% less CPU. 2 saved
+half as much; 8 saved a little more on ``driver_suite`` but slowed
+``transcript_backfill``, whose hot code then reached C2 too late. The
+price is a slower warm-up: the benchmark's set-up, which includes the cold
+first passes, takes 5-8% longer. The flag goes into
+``spark.driver.defaultJavaOptions``, which the launcher puts before
+``spark.driver.extraJavaOptions``: a caller's own ``extraJavaOptions`` add
+to it, a ``-XX:CompileThresholdScaling`` there overrides it, and ``extra``
+can replace it. Like the codegen cache it only takes effect when
+``get_spark`` launches the JVM.
 
 Python workers. Every Arrow Python task (the PIT kernels, sketch tile
 builds and serves) starts with pyspark's ``setup_spark_files`` calling
@@ -49,6 +71,7 @@ import os
 from pyspark.sql import SparkSession
 
 CODEGEN_CACHE_ENTRIES = 2048
+JIT_THRESHOLD_SCALING = 4
 
 
 def get_spark(
@@ -80,6 +103,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.driver.defaultJavaOptions",
+                f"-XX:CompileThresholdScaling={JIT_THRESHOLD_SCALING}")
     )
     if master.startswith("local"):
         b = b.config("spark.python.daemon.module", "zipline_chronon_spark.worker_daemon")
