@@ -10,19 +10,26 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from zipline_chronon_spark.api import (
     Aggregation,
     EntitySource,
+    EventSource,
     GroupBy,
     Operation,
     Query,
     TimeUnit,
     Window,
 )
+from zipline_chronon_spark.operators import entities_temporal as et
+from zipline_chronon_spark.operators.arrow_engine import group_starts
 from zipline_chronon_spark.operators.entities_temporal import compute_entities_temporal
+from zipline_chronon_spark.operators.pit_join import ROW_ID, TS_COL, compute_group_by, output_field
 
 MS_DAY = 86_400_000
 BASE_DAY = 20_500  # epoch days
@@ -148,7 +155,8 @@ def _insert_only_rows(snap_pdf, mut_pdf, key, T, window):
     """Literal rule for the insert-only tier: snapshot rows of d-1 in window
     + AFTER-image mutations with mutation_ts < T, ts in window and ts < T;
     before-images ignored (reference delete throws for non-deletable ops).
-    Returns rows sorted by ts."""
+    Returns rows sorted by ts, equal ts in arrival order (snapshot rows
+    first, then mutations by mutation_ts)."""
     day = T // MS_DAY
     prev_ds = pd.Timestamp((day - 1) * MS_DAY, unit="ms").strftime("%Y-%m-%d")
     hop = window.tail_hop_millis() if window else None
@@ -161,13 +169,16 @@ def _insert_only_rows(snap_pdf, mut_pdf, key, T, window):
                    & (mut_pdf["mutation_ts"] < T) & (mut_pdf["ts_ms"] < T)]
     if window is not None:
         muts = muts[muts["ts_ms"] >= tail]
-    rows = pd.concat([snap[["value", "ts_ms"]], muts[["value", "ts_ms"]]])
-    return rows.sort_values("ts_ms", kind="stable")
+    rows = pd.concat([snap[["value", "ts_ms"]].assign(mutation_ts=-1),
+                      muts[["value", "ts_ms", "mutation_ts"]]])
+    return rows.sort_values(["ts_ms", "mutation_ts"], kind="stable")
 
 
 def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
-    """MIN + LAST_K over mutations (VERDICT item 8's done-criterion) plus
-    HISTOGRAM with true reversals."""
+    """The insert-only ops over mutations — every ``_finish`` branch that
+    reads the per-query group encoding among them: FIRST, LAST over equal-ts
+    rows, unbounded UNIQUE_COUNT, VARIANCE, TOP_K, MAX over strings — plus
+    HISTOGRAM and a bucketed SUM with true reversals."""
     snap_pdf, mut_pdf = _gen_cdc(seed=11)
     base = tmp_path_factory.mktemp("tent2")
     spark.createDataFrame(snap_pdf).write.mode("overwrite").parquet(str(base / "snap"))
@@ -180,7 +191,8 @@ def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
             mutation_table=str(base / "mut"),
             query=Query(time_column="ts_ms",
                         selects={"key": "key", "value": "value",
-                                 "cat": "CASE WHEN value % 2 = 0 THEN 'e' ELSE 'o' END"}),
+                                 "cat": "CASE WHEN value % 2 = 0 THEN 'e' ELSE 'o' END",
+                                 "sv": "CAST(value AS STRING)"}),
         ),),
         key_columns=("key",),
         aggregations=(
@@ -188,6 +200,12 @@ def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
             Aggregation("value", Operation.LAST_K, arg_map=(("k", "2"),), windows=(None,)),
             Aggregation("value", Operation.HISTOGRAM, windows=(W1D,)),
             Aggregation("value", Operation.SUM, windows=(W1D,), buckets=("cat",)),
+            Aggregation("value", Operation.FIRST, windows=(W1D,)),
+            Aggregation("value", Operation.LAST, windows=(None,)),
+            Aggregation("value", Operation.UNIQUE_COUNT, windows=(None,)),
+            Aggregation("value", Operation.VARIANCE, windows=(W1D,)),
+            Aggregation("value", Operation.TOP_K, arg_map=(("k", "2"),), windows=(None,)),
+            Aggregation("sv", Operation.MAX, windows=(W1D,)),
         ),
     )
     rng = np.random.default_rng(3)
@@ -209,6 +227,7 @@ def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
     assert len(res) == len(q_pdf)
 
     bad = []
+    last_ties = 0
     for _, r in res.iterrows():
         qr = q_pdf[q_pdf["qid"] == r["__row_id"]].iloc[0]
         key, T = qr["key"], qr["qts"]
@@ -216,6 +235,15 @@ def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
         rows_u = _insert_only_rows(snap_pdf, mut_pdf, key, T, None)
         e_min = None if rows_w.empty else float(rows_w["value"].min())
         e_last2 = None if rows_u.empty else rows_u["value"].tolist()[::-1][:2]
+        e_first = None if rows_w.empty else float(rows_w["value"].iloc[0])
+        # LAST: the max-ts row that arrived first (strict ``<`` in Last.update)
+        at_max = rows_u[rows_u["ts_ms"] == rows_u["ts_ms"].max()]
+        last_ties += len(at_max) > 1
+        e_last = None if rows_u.empty else float(at_max["value"].iloc[0])
+        e_uniq = None if rows_u.empty else rows_u["value"].nunique()
+        e_var = None if rows_w.empty else float(np.var(rows_w["value"]))
+        e_top2 = None if rows_u.empty else sorted(rows_u["value"], reverse=True)[:2]
+        e_smax = None if rows_w.empty else max(str(v) for v in rows_w["value"])
         # histogram with reversals: signed counts, <=0 dropped
         day = T // MS_DAY
         prev_ds = pd.Timestamp((day - 1) * MS_DAY, unit="ms").strftime("%Y-%m-%d")
@@ -265,12 +293,25 @@ def test_insert_only_ops_vs_oracle(spark, tmp_path_factory):
         ok_bs = g_bs == e_bs or (
             g_bs is not None and e_bs is not None and set(g_bs) == set(e_bs)
             and all(abs(g_bs[k] - e_bs[k]) < 1e-6 for k in g_bs))
+        g_top2 = None if r["value_top2"] is None else [float(x) for x in r["value_top2"]]
+        g_var = r["value_variance_1d"]
+        ok_var = ok_scalar(g_var, e_var) and (
+            e_var is None or abs(g_var - e_var) <= 1e-9 * max(1.0, e_var))
         if not (ok_scalar(r["value_min_1d"], e_min) and ok_last
-                and g_hist == e_hist and ok_bs):
+                and g_hist == e_hist and ok_bs
+                and ok_scalar(r["value_first_1d"], e_first)
+                and ok_scalar(r["value_last"], e_last)
+                and ok_scalar(r["value_unique_count"], e_uniq) and ok_var
+                and g_top2 == e_top2 and r["sv_max_1d"] == e_smax):
             bad.append((int(r["__row_id"]),
-                        dict(min=r["value_min_1d"], last2=g_last2, hist=g_hist, bs=g_bs),
-                        dict(min=e_min, last2=e_last2, hist=e_hist, bs=e_bs)))
+                        dict(min=r["value_min_1d"], last2=g_last2, hist=g_hist, bs=g_bs,
+                             first=r["value_first_1d"], last=r["value_last"],
+                             uniq=r["value_unique_count"], var=g_var, top2=g_top2,
+                             smax=r["sv_max_1d"]),
+                        dict(min=e_min, last2=e_last2, hist=e_hist, bs=e_bs, first=e_first,
+                             last=e_last, uniq=e_uniq, var=e_var, top2=e_top2, smax=e_smax)))
     assert not bad, f"{len(bad)} mismatches, first: {bad[:2]}"
+    assert last_ties, "no query's LAST window ends on rows with equal ts"
 
 
 def test_unsupported_op_rejected(spark):
@@ -313,3 +354,125 @@ def test_null_key_matches_nothing(spark, tmp_path_factory):
     got = {r["__row_id"]: (r["value_sum"], r["value_count"]) for r in
            compute_entities_temporal(spark, gb, q, query_time_col="qts").collect()}
     assert got == {0: (None, None), 1: (3.0, 2)}
+
+
+def _entity_tables(spark, base, snap_rows, mut_rows, schema):
+    """An EntitySource over snapshot and mutation parquet tables under
+    ``base``: snapshot rows are ``(ds, *schema)``, mutation rows
+    ``(*schema, mutation_ts, is_before)``."""
+    spark.createDataFrame(snap_rows, f"ds string, {schema}").write.parquet(str(base / "snap"))
+    spark.createDataFrame(
+        mut_rows, f"{schema}, mutation_ts long, is_before boolean",
+    ).write.parquet(str(base / "mut"))
+    return EntitySource(snapshot_table=str(base / "snap"), mutation_table=str(base / "mut"),
+                        query=Query(time_column="ts_ms"))
+
+
+def test_long_sum_is_exact(spark, tmp_path_factory):
+    """Integer SUM replays in int64: 2^53 + 1 + 2 loses nothing (float64
+    deltas round it to ...994)."""
+    base = tmp_path_factory.mktemp("tent_long")
+    day = BASE_DAY * MS_DAY
+    ds = pd.Timestamp(day - MS_DAY, unit="ms").strftime("%Y-%m-%d")
+    src = _entity_tables(
+        spark, base, [(ds, "a", 2 ** 53, day - 5000), (ds, "a", 1, day - 4000)],
+        [("a", 2, day + 1000, day + 1000, False)], "key string, value long, ts_ms long")
+    gb = GroupBy(name="exact", sources=(src,), key_columns=("key",),
+                 aggregations=(Aggregation("value", Operation.SUM),))
+    q = spark.createDataFrame([("a", day + 60_000, 0)], "key string, qts long, __row_id long")
+    (row,) = compute_entities_temporal(spark, gb, q, query_time_col="qts").collect()
+    assert row["value_sum"] == 9007199254740995
+
+
+def test_integer_keys_match_pit_engine(spark, tmp_path_factory):
+    """HISTOGRAM keys and bucket names of long columns print as the PIT
+    engine prints them ('7', not '7.0'): an insert-only feed replayed as
+    entities equals the same rows aggregated as events."""
+    base = tmp_path_factory.mktemp("tent_keys")
+    day = BASE_DAY * MS_DAY
+    ds = pd.Timestamp(day - MS_DAY, unit="ms").strftime("%Y-%m-%d")
+    snap = [("a", 7, 1, day - 9000), ("a", 7, 2, day - 8000), ("a", 3, 1, day - 7000),
+            ("b", 12, 7, day - 6000)]
+    muts = [("a", 3, 2, day + 1000), ("b", 7, 7, day + 2000), ("b", 12, 10, day + 3000)]
+    schema = "key string, value long, b long, ts_ms long"
+    src = _entity_tables(spark, base, [(ds, *r) for r in snap],
+                         [(*r, r[-1], False) for r in muts], schema)
+    spark.createDataFrame(snap + muts, schema).write.parquet(str(base / "events"))
+    aggs = (Aggregation("value", Operation.HISTOGRAM),
+            Aggregation("value", Operation.SUM, buckets=("b",)),
+            Aggregation("value", Operation.MAX, buckets=("b",)))
+    q = spark.createDataFrame(
+        [("a", day + 500, 0), ("a", day + 60_000, 1), ("b", day + 2500, 2),
+         ("b", day + 60_000, 3)], "key string, qts long, __row_id long")
+    ent = compute_entities_temporal(
+        spark, GroupBy(name="keys", sources=(src,), key_columns=("key",), aggregations=aggs),
+        q, query_time_col="qts")
+    pit = compute_group_by(
+        spark, GroupBy(name="keys", key_columns=("key",), aggregations=aggs,
+                       sources=(EventSource(table=str(base / "events"),
+                                            query=Query(time_column="ts_ms")),)),
+        q, query_time_col="qts")
+
+    def rows(df):
+        return {r["__row_id"]: r.asDict() for r in df.collect()}
+
+    got, exp = rows(ent), rows(pit)
+    assert got == exp
+    assert got[3]["value_histogram"] == {"7": 1, "12": 2}
+    assert got[3]["value_sum_by_b"] == {"7": 19, "10": 12}
+
+
+def test_list_input_rejected(spark, tmp_path_factory):
+    """List and map inputs have no mutation-path support: refused when the
+    query is planned, not miscounted (COUNT of rows) or crashed in a worker."""
+    base = tmp_path_factory.mktemp("tent_list")
+    day = BASE_DAY * MS_DAY
+    ds = pd.Timestamp(day - MS_DAY, unit="ms").strftime("%Y-%m-%d")
+    src = _entity_tables(spark, base, [(ds, "a", [1, 2, 3], day - 5000)],
+                         [("a", [4], day + 1000, day + 1000, False)],
+                         "key string, value array<long>, ts_ms long")
+    q = spark.createDataFrame([("a", day + 60_000, 0)], "key string, qts long, __row_id long")
+    for op in (Operation.COUNT, Operation.SUM, Operation.MAX):
+        gb = GroupBy(name="lists", sources=(src,), key_columns=("key",),
+                     aggregations=(Aggregation("value", op),))
+        with pytest.raises(NotImplementedError, match="array<bigint> input value"):
+            compute_entities_temporal(spark, gb, q, query_time_col="qts")
+
+
+def test_query_slices_match_one_pass(monkeypatch):
+    """The insert-only tier finishes queries in slices whose ids fit above
+    the group encoding's time bits; slicing must not change any result."""
+    rng = np.random.default_rng(4)
+    n = 80
+    key = rng.integers(0, 3, n)
+    ts = rng.integers(0, 20, n) * 600_000  # equal ts are common
+    o = np.lexsort((ts, key))
+    key, ts = key[o], ts[o]
+    kind = rng.integers(0, 3, n)
+    value = np.where(kind == et.KIND_QUERY, None, rng.integers(0, 9, n))
+    tbl = pa.table({
+        "key": key, TS_COL: ts, "__kind": kind.astype(np.int32),
+        "__mut_ts": np.where(kind == et.KIND_MUTATION, ts + rng.integers(-3, 3, n) * 600_000, 0),
+        "__rev": (kind == et.KIND_MUTATION) & (rng.random(n) < 0.2),
+        ROW_ID: np.arange(n), "value": pa.array(value, pa.int64()),
+    })
+    h2 = Window(2, TimeUnit.HOURS)
+    parts = GroupBy(name="slices", sources=(), key_columns=("key",), aggregations=(
+        Aggregation("value", Operation.LAST, windows=(None, h2)),
+        Aggregation("value", Operation.FIRST, windows=(h2,)),
+        Aggregation("value", Operation.UNIQUE_COUNT, windows=(None, h2)),
+        Aggregation("value", Operation.VARIANCE, windows=(None,)),
+        Aggregation("value", Operation.TOP_K, arg_map=(("k", "2"),), windows=(h2,)),
+        Aggregation("value", Operation.LAST_K, arg_map=(("k", "3"),), windows=(None,)),
+    )).parts()
+    schema = to_arrow_schema(T.StructType(
+        [T.StructField(ROW_ID, T.LongType(), False)]
+        + [output_field(p, T.LongType()) for p in parts]))
+    start = group_starts(tbl, ["key"])
+
+    one_pass = et._chunk(tbl, start, parts, schema)
+    monkeypatch.setattr(et, "_MAX_GROUPS", 2)
+    sliced = et._chunk(tbl, start, parts, schema)
+    assert one_pass.num_rows == int((kind == et.KIND_QUERY).sum())
+    assert all(one_pass.column(p.output_name).null_count < one_pass.num_rows for p in parts)
+    assert sliced.equals(one_pass)

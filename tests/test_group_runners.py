@@ -104,10 +104,15 @@ def _frames(spark, queries, cdc):
         name="gr_ent",
         sources=(EntitySource(snapshot_table=f"{cdc}/snap", mutation_table=f"{cdc}/mut",
                               query=Query(time_column="ts_ms",
-                                          selects={"key": "key", "value": "value / 7"})),),
+                                          selects={"key": "key", "value": "value / 7",
+                                                   "b": "CAST(value AS BIGINT) % 3"})),),
         key_columns=("key",),
         aggregations=(Aggregation("value", Operation.SUM, windows=(None, W1D)),
-                      Aggregation("value", Operation.HISTOGRAM, windows=(W1D,))),
+                      Aggregation("value", Operation.HISTOGRAM, windows=(W1D,)),
+                      Aggregation("value", Operation.LAST_K, arg_map=(("k", "3"),),
+                                  windows=(None,)),
+                      Aggregation("value", Operation.MAX, windows=(W1D,), buckets=("b",)),
+                      Aggregation("value", Operation.COUNT, windows=(None,), buckets=("b",))),
     )
     rng = np.random.default_rng(22)
     ent_q = spark.createDataFrame(pd.DataFrame({
@@ -118,8 +123,8 @@ def _frames(spark, queries, cdc):
     return {
         "pit_union": compute_group_by(spark, EXACT, queries, query_time_col="ts_ms"),
         "pit_self": compute_group_by_self(spark, EXACT, "eid"),
-        "entities_temporal": compute_entities_temporal(spark, ent, ent_q,
-                                                       query_time_col="qts"),
+        "entities_temporal": compute_entities_temporal(spark, ent, ent_q, query_time_col="qts",
+                                                       allow_insert_only=True),
         "approx_serve": compute_group_by_approx(spark, SKETCH, queries,
                                                 query_time_col="ts_ms"),
         "tile_build": fl._ir_rows(fl._events(spark, SKETCH, None, BASE + 2 * DAY),

@@ -162,7 +162,7 @@ def merge_mutation_state(parts, collapsed: Optional[dict],
 def _signed_scalar(p, irs: list[dict], evs: list[dict]):
     """SUM/COUNT/AVERAGE with the sign rule AND the batch engine's null
     semantics: a feature whose live-row count is <= 0 after reversals is
-    None (entities_temporal deletable_results), not 0."""
+    None (entities_temporal's deletable tier), not 0."""
     nm, op, col = p.output_name, p.operation, p.input_column
     pairs = [(m.get("sign", 1), m[col]) for m in evs if m.get(col) is not None]
     have = [ir for ir in irs if any(k.startswith(f"{nm}__") for k in ir)]

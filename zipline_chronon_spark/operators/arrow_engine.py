@@ -20,7 +20,8 @@ Window bounds come from ``_tail_bounds`` over the group-encoded time
 ``(gid << _SHIFT) + (ts - base)``; the naive-oracle suite runs against
 this path. The other sorted-group runners (entities_temporal, the approx
 serve and the sketch tile builder) share ``group_starts`` and
-``whole_groups``.
+``whole_groups``; entities_temporal also runs its parts through
+``_unpack``, ``_finish`` and ``_map_of``.
 """
 
 from __future__ import annotations
@@ -338,6 +339,14 @@ def _finish(part: AggregationPart, values: pa.Array, fpos: np.ndarray, enc_f: np
     raise NotImplementedError(op)
 
 
+def _columns(tbl: pa.Table) -> dict[str, pa.Array]:
+    """Each column of a chunk as one contiguous array."""
+    tbl = tbl.combine_chunks()
+    return {name: (tbl.column(name).chunk(0) if tbl.column(name).num_chunks else
+                   pa.array([], type=tbl.schema.field(name).type))
+            for name in tbl.schema.names}
+
+
 def process_chunk_arrow(
     tbl: pa.Table,
     start: np.ndarray,
@@ -350,11 +359,8 @@ def process_chunk_arrow(
     side_col: str,
     row_id_col: str,
 ) -> pa.RecordBatch:
-    tbl = tbl.combine_chunks()
     n = tbl.num_rows
-    cols = {name: (tbl.column(name).chunk(0) if tbl.column(name).num_chunks else
-                   pa.array([], type=tbl.schema.field(name).type))
-            for name in tbl.schema.names}
+    cols = _columns(tbl)
 
     gid = np.cumsum(start, dtype=np.int64) - 1
     ts = _np_int64(cols[ts_col])

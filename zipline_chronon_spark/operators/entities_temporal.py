@@ -39,35 +39,40 @@ documented deletable-only, GroupBy.scala:588-591):
    Exact for append-only mutation feeds; for feeds with reversals this is
    a documented over-approximation (the reference refuses the case
    entirely, throwing in delete). Implemented as filtered segment ranges
-   (activation mask over the window range) finished by the batch kernels.
-Buckets are supported on all tiers (per-bucket-value replay).
+   (activation mask over the window range), one group per query, finished
+   by the PIT engine's op dispatch (``arrow_engine._finish``).
+Buckets are supported on all tiers (per-bucket-value replay). Chunks stay in
+Arrow end to end, as in ``arrow_engine.process_chunk_arrow``; list and map
+inputs are rejected when the query is planned.
 """
 
 from __future__ import annotations
 
-import dataclasses
 from typing import Iterator, Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zipline_chronon_spark.api import AggregationPart, EntitySource, GroupBy, Operation
-from zipline_chronon_spark.operators import kernels, pit_join
-from zipline_chronon_spark.operators.arrow_engine import _SHIFT, _tail_bounds, whole_groups
+from zipline_chronon_spark.operators import kernels, pit_join, segments
+from zipline_chronon_spark.operators.arrow_engine import (
+    _SHIFT, _columns, _finish, _map_of, _masked_pa, _np_int64, _numeric_np, _tail_bounds,
+    _unpack, whole_groups)
 
 MS_DAY = 86_400_000
+# group ids g with (g << _SHIFT) + (ts - base) inside int64
+_MAX_GROUPS = 1 << (63 - _SHIFT)
 
 KIND_SNAPSHOT = 0
 KIND_MUTATION = 1
 KIND_QUERY = 2
 
 DELETABLE = {Operation.SUM, Operation.COUNT, Operation.AVERAGE}
-# insert-only ops finished by the batch kernels over filtered ranges
-KERNEL_SAFE = {
+# insert-only ops, finished by arrow_engine._finish over filtered ranges
+INSERT_ONLY = {
     Operation.MIN, Operation.MAX, Operation.FIRST, Operation.LAST,
     Operation.LAST_K, Operation.FIRST_K, Operation.TOP_K, Operation.BOTTOM_K,
     Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT,
@@ -81,7 +86,7 @@ REVERSAL = "is_before"
 
 def _validate(gb: GroupBy) -> None:
     for p in gb.parts():
-        if p.operation not in KERNEL_SAFE and p.operation not in DELETABLE \
+        if p.operation not in INSERT_ONLY and p.operation not in DELETABLE \
                 and p.operation != Operation.HISTOGRAM:
             raise NotImplementedError(
                 f"temporal entities: no mutation-path support for {p.operation.name}")
@@ -100,11 +105,11 @@ def compute_entities_temporal(
     one EntitySource with snapshot_table + mutation_table. Returns
     (row_id, feature columns…).
 
-    ``allow_insert_only``: KERNEL_SAFE ops (MIN/MAX/FIRST/LAST/K-ops/
+    ``allow_insert_only``: INSERT_ONLY ops (MIN/MAX/FIRST/LAST/K-ops/
     distinct/percentiles) replay mutations insert-only — before-images are
     ignored. On a feed that actually CONTAINS reversals those features
     would silently include deleted/overwritten values (the reference
-    throws in BaseAggregator.delete for these ops). So when a KERNEL_SAFE
+    throws in BaseAggregator.delete for these ops). So when an INSERT_ONLY
     part is requested, this function probes the mutation feed for
     is_before rows and raises unless the caller opts in explicitly."""
     _validate(gb)
@@ -136,6 +141,18 @@ def compute_entities_temporal(
         F.lit(0).cast("long").alias(pit_join.ROW_ID),
     )
 
+    parts = gb.parts()
+    ev_schema = {f.name: f.dataType for f in snap_r.schema.fields}
+    fields = [T.StructField(pit_join.ROW_ID, T.LongType(), False)]
+    for p in parts:
+        in_t = ev_schema[p.input_column]
+        if isinstance(in_t, (T.ArrayType, T.MapType)):
+            raise NotImplementedError(
+                f"temporal entities: no mutation-path support for "
+                f"{in_t.simpleString()} input {p.input_column}")
+        fields.append(pit_join.output_field(p, in_t))
+    out_schema = T.StructType(fields)
+
     mut = pit_join._read_table(spark, src.mutation_table)
     for w in src.query.wheres:
         mut = mut.where(w)
@@ -152,16 +169,15 @@ def compute_entities_temporal(
         F.lit(0).cast("long").alias(pit_join.ROW_ID),
     )
 
-    kernel_ops = sorted({p.operation.name for p in gb.parts()
-                         if p.operation in KERNEL_SAFE})
-    if kernel_ops and not allow_insert_only:
+    insert_ops = sorted({p.operation.name for p in parts if p.operation in INSERT_ONLY})
+    if insert_ops and not allow_insert_only:
         # one bounded probe (limit 1): insert-only replay is only exact on
         # append-only feeds; fail loudly instead of silently including
         # reversed rows in non-deletable aggregates
         has_rev = bool(mut.where(F.col(REVERSAL).cast("boolean")).limit(1).count())
         if has_rev:
             raise ValueError(
-                f"mutation feed contains before-images but {kernel_ops} only "
+                f"mutation feed contains before-images but {insert_ops} only "
                 "support insert-only replay (reference BaseAggregator.delete "
                 "throws here, BaseAggregator.scala:60-61); pass "
                 "allow_insert_only=True to accept the over-approximation")
@@ -183,18 +199,12 @@ def compute_entities_temporal(
     group_keys = keys + ["__day"]
     shuffled = (union.repartition(num_partitions, *group_keys) if num_partitions
                 else union.repartition(*group_keys))
-    # queries must be ts-sorted within each (key, day) group; snapshot rows
-    # and mutations are index-accessed, their order is irrelevant
-    arranged = shuffled.sortWithinPartitions(*group_keys, pit_join.TS_COL)
+    # rows are ts-sorted within each (key, day) group; equal-ts rows in
+    # arrival order (snapshot first, then by mutation_ts), which fixes the
+    # insert-only tier's FIRST/LAST/K-op ties independently of the plan
+    arranged = shuffled.sortWithinPartitions(*group_keys, pit_join.TS_COL, "__mut_ts")
 
-    parts = gb.parts()
-    ev_schema = {f.name: f.dataType for f in snap_r.schema.fields}
-    fields = [T.StructField(pit_join.ROW_ID, T.LongType(), False)]
-    for p in parts:
-        fields.append(pit_join.output_field(p, ev_schema[p.input_column]))
-    out_schema = T.StructType(fields)
-
-    runner = _make_runner(parts, ev_schema, group_keys, out_schema)
+    runner = _make_runner(parts, group_keys, out_schema)
     return arranged.mapInArrow(runner, schema=out_schema)
 
 
@@ -206,158 +216,137 @@ def _theta(ts: np.ndarray, part: AggregationPart) -> np.ndarray:
     return (ts // hop + 1) * hop + part.window.millis
 
 
-def _chunk(pdf: pd.DataFrame, gid: np.ndarray, parts, ev_schema) -> pd.DataFrame:
-    ts = pdf[pit_join.TS_COL].to_numpy(dtype=np.int64)
-    kind = pdf["__kind"].to_numpy()
+def _group_cumsum(d: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """Inclusive prefix sums that restart at every group (``first`` marks
+    the group starts). Integer sums stay exact int64, wrapping like the
+    JVM's long; float sums use the segmented scan, so a group's sums do not
+    depend on which groups share its chunk."""
+    if d.dtype.kind == "f":
+        return kernels.group_prefix(d, first)[1:]
+    pre = np.cumsum(d)
+    s = np.flatnonzero(first)
+    return pre - np.repeat(pre[s] - d[s], np.diff(np.append(s, len(d))))
+
+
+def _chunk(tbl: pa.Table, start: np.ndarray, parts, out_schema: pa.Schema
+           ) -> Optional[pa.RecordBatch]:
+    """One output row per query row of a chunk of whole (key, day) groups;
+    None when the chunk holds no query."""
+    cols = _columns(tbl)
+    gid = np.cumsum(start, dtype=np.int64) - 1
+    ts = _np_int64(cols[pit_join.TS_COL])
+    kind = _np_int64(cols["__kind"])
     is_q = kind == KIND_QUERY
     q_pos = np.flatnonzero(is_q)
     n_q = len(q_pos)
-    base = int(ts.min()) if len(ts) else 0
+    if not n_q:
+        return None
+    base = int(ts.min())
     enc = (gid << _SHIFT) + (ts - base)
-    q_enc = enc[q_pos]
-    q_first = kernels.group_first(gid[q_pos])
+    gid_q, q_ts, q_enc = gid[q_pos], ts[q_pos], enc[q_pos]
+    q_first = kernels.group_first(gid_q)
+    rev = cols["__rev"].fill_null(False).to_numpy(zero_copy_only=False)
+    sign = np.where(rev, -1, 1)
+    # snapshot rows are active from the start of the day; mutations after
+    # max(mutation_ts, row.ts) (strict head)
+    act = np.where(kind == KIND_SNAPSHOT, base - 1,
+                   np.maximum(_np_int64(cols["__mut_ts"]), ts))
 
-    is_snap = kind == KIND_SNAPSHOT
-    is_mut = kind == KIND_MUTATION
-    sign = np.where(pdf["__rev"].to_numpy(dtype=bool), -1.0, 1.0)
-    mut_ts = pdf["__mut_ts"].to_numpy(dtype=np.int64)
+    def replay(part, rows, w):
+        """Per-query sum of ``w`` over the ``rows`` active at the query: +w
+        at the first query of the row's group with T > activation, -w at
+        the first with T >= theta, then a prefix sum per group."""
+        g = gid[rows] << _SHIFT
+        act_rel = np.clip(act[rows] - base, -1, (1 << _SHIFT) - 1)
+        th_rel = np.clip(_theta(ts[rows], part) - base, 0, (1 << _SHIFT) - 1)
+        add_pos = np.searchsorted(q_enc, g + act_rel, side="right")
+        # empty interval when the window exit precedes activation (e.g. a
+        # before-image of a row already outside the window)
+        sub_pos = np.maximum(np.searchsorted(q_enc, g + th_rel, side="left"), add_pos)
+        # a delta past the group's last query reaches none of its queries
+        end = np.searchsorted(q_enc, g + (1 << _SHIFT), side="left")
+        a, b = add_pos < end, sub_pos < end
+        d = np.zeros(n_q, dtype=w.dtype)
+        np.add.at(d, add_pos[a], w[a])
+        np.add.at(d, sub_pos[b], -w[b])
+        return _group_cumsum(d, q_first)
 
-    neg_inf = np.full(len(pdf), base - 1, dtype=np.int64)  # snapshot: always started
-    # strict head: mutations activate after max(mutation_ts, row.ts)
-    mut_start = np.maximum(mut_ts, ts)
-    start_all = np.where(is_snap, neg_inf, mut_start)
-    ones = np.ones(len(pdf), dtype=np.float64)
-    q_ts = ts[q_pos]
+    def deletable(part, values, rows, pa_type):
+        """SUM/COUNT/AVERAGE with full reversal support."""
+        cnt = replay(part, rows, sign[rows])
+        empty = cnt <= 0
+        if part.operation == Operation.COUNT:
+            return _masked_pa(cnt, empty, pa_type)
+        exact = pa.types.is_integer(pa_type)
+        x = _numeric_np(values)[rows].astype(np.int64 if exact else np.float64, copy=False)
+        s = replay(part, rows, sign[rows] * x)
+        if part.operation == Operation.AVERAGE:
+            s = s / np.maximum(cnt, 1)
+        return _masked_pa(s, empty, pa_type)
 
-    data: dict = {pit_join.ROW_ID: pdf[pit_join.ROW_ID].to_numpy(dtype=np.int64)[q_pos]}
+    def histogram(part, values, rows, pa_type):
+        """Per-value signed counts (Histogram.delete decrements,
+        SimpleAggregators.scala:324-326); entries at <= 0 drop."""
+        codes, sorted_dict = segments.rank_codes(values, rows)
+        by_value = np.split(rows[np.argsort(codes, kind="stable")],
+                            np.cumsum(np.bincount(codes))[:-1])
+        counts = [replay(part, r, sign[r]) for r in by_value]
+        return _map_of([str(v) for v in sorted_dict.to_pylist()],
+                       [_masked_pa(c, c <= 0, pa.int64()) for c in counts], n_q, pa_type)
+
+    def insert_only(part, values, rows, pa_type):
+        """Before-images ignored (the reference's delete throws for these
+        ops): each query's window, less the rows not yet active at T,
+        becomes a group of its own, which ``_finish`` reads off ``enc_f``."""
+        rows = rows[~rev[rows]]
+        enc_r = enc[rows]
+        lo, _ = _tail_bounds(enc_r, gid_q, q_ts, base, part, False)
+        hi = np.searchsorted(enc_r, q_enc, side="left")  # strict row.ts < T
+        flat, seg, cnt, _ = segments.expand(np.minimum(lo, hi), hi)
+        keep = act[rows[flat]] < np.repeat(q_ts, cnt)
+        flat, seg = flat[keep], seg[keep]
+        out = []
+        # a slice's query ids must fit above the _SHIFT bits of enc_f
+        for q0 in range(0, n_q, _MAX_GROUPS):
+            n = min(_MAX_GROUPS, n_q - q0)
+            a, b = np.searchsorted(seg, [q0, q0 + n])
+            fpos, s = rows[flat[a:b]], seg[a:b] - q0
+            if not len(fpos):
+                out.append(pa.nulls(n, pa_type))
+                continue
+            hi2 = np.cumsum(np.bincount(s, minlength=n))
+            lo2 = np.append(0, hi2[:-1])
+            enc_f = (s << _SHIFT) + (ts[fpos] - base)
+            r = _finish(part, values, fpos, enc_f, lo2, hi2, pa_type)
+            out.append(r if r.type == pa_type else r.cast(pa_type))
+        return pa.concat_arrays(out)
+
+    arrays = [cols[pit_join.ROW_ID].take(pa.array(q_pos, type=pa.int64()))]
     for part in parts:
-        col = pdf[part.input_column]
-        valid = col.notna().to_numpy()
-        snap_m = is_snap & valid
-        mut_m = is_mut & valid
-        in_t = ev_schema[part.input_column]
-
-        def deltas(rows_mask, start_excl, weights):
-            """Scatter +w at first query with T > start, -w at first query
-            with T >= theta, both inside the row's group; the per-group
-            prefix sum is the per-query contribution."""
-            idx = np.flatnonzero(rows_mask)
-            if not len(idx):
-                return np.zeros(n_q, dtype=np.float64)
-            g = gid[idx]
-            th = _theta(ts[idx], part)
-            th_rel = np.clip(th - base, 0, (1 << _SHIFT) - 1)
-            start_rel = np.clip(start_excl[idx] - base, -1, (1 << _SHIFT) - 1)
-            add_pos = np.searchsorted(q_enc, (g << _SHIFT) + start_rel, side="right")
-            sub_pos = np.searchsorted(q_enc, (g << _SHIFT) + th_rel, side="left")
-            # empty interval when the window exit precedes activation (e.g. a
-            # before-image of a row already outside the window)
-            sub_pos = np.maximum(sub_pos, add_pos)
-            # a delta past the group's last query reaches none of its queries
-            end = np.searchsorted(q_enc, (g + 1) << _SHIFT, side="left")
-            w = weights[idx]
-            a, b = add_pos < end, sub_pos < end
-            d = np.zeros(n_q, dtype=np.float64)
-            np.add.at(d, add_pos[a], w[a])
-            np.add.at(d, sub_pos[b], -w[b])
-            return kernels.group_prefix(d, q_first)[1:]
-
-        def deletable_results(snap_mask, mut_mask):
-            """SUM/COUNT/AVERAGE with full reversal support."""
-            cnt = deltas(snap_mask, neg_inf, ones) + deltas(mut_mask, mut_start, sign * ones)
-            cnt = np.round(cnt).astype(np.int64)
-            if part.operation == Operation.COUNT:
-                return [int(c) if c > 0 else None for c in cnt]
-            vals = pit_join._as_numpy(col.fillna(0), in_t).astype(np.float64, copy=False)
-            s = deltas(snap_mask, neg_inf, vals) + deltas(mut_mask, mut_start, sign * vals)
-            if part.operation == Operation.SUM:
-                out_int = isinstance(pit_join._widen(in_t), T.LongType)
-                return [None if c <= 0 else (int(round(v)) if out_int else float(v))
-                        for v, c in zip(s, cnt)]
-            return [None if c <= 0 else float(v / c) for v, c in zip(s, cnt)]
-
-        def histogram_results(snap_mask, mut_mask):
-            """Per-value difference arrays: true deletion (Histogram.delete
-            decrements, SimpleAggregators.scala:324-326); <=0 entries drop."""
-            svals = col.astype(str).to_numpy()
-            results = [None] * n_q
-            active = snap_mask | mut_mask
-            for v in pd.unique(svals[active]):
-                vm = active & (svals == v)
-                cnt = np.round(deltas(vm & snap_mask, neg_inf, ones)
-                               + deltas(vm & mut_mask, mut_start, sign * ones)).astype(np.int64)
-                for i in np.flatnonzero(cnt > 0):
-                    if results[i] is None:
-                        results[i] = {}
-                    results[i][str(v)] = int(cnt[i])
-            return results
-
-        def kernel_results(snap_mask, mut_mask):
-            """Insert-only replay: before-images ignored (the reference's
-            delete throws for these ops); window + activation filtering,
-            finished by the batch kernels."""
-            rev = pdf["__rev"].to_numpy(dtype=bool)
-            rows = snap_mask | (mut_mask & ~rev)
-            ridx = np.flatnonzero(rows)
-            if not len(ridx):
-                return [None] * n_q
-            enc_r = enc[ridx]
-            start_r = start_all[ridx]
-            lo, _ = _tail_bounds(enc_r, gid[q_pos], q_ts, base, part, False)
-            hi = np.searchsorted(enc_r, q_enc, side="left")  # strict ts < T
-            lo = np.minimum(lo, hi)
-            from zipline_chronon_spark.operators import segments as _seg
-
-            flat, seg_id, cnt0, _ = _seg.expand(lo, hi)
-            keep = start_r[flat] < np.repeat(q_ts, cnt0)
-            fidx, seg_f = flat[keep], seg_id[keep]
-            cnt2 = np.bincount(seg_f, minlength=n_q).astype(np.int64)
-            hi2 = np.cumsum(cnt2)
-            lo2 = hi2 - cnt2
-            # subset BEFORE dtype conversion: the full column holds NaN at
-            # query/other-kind positions, which int64 conversion rejects
-            vals_r = pit_join._as_numpy(col.iloc[ridx].reset_index(drop=True), in_t)
-            return kernels.run_kernel(part, vals_r[fidx], enc_r[fidx], lo2, hi2)
-
-        def run_tier(snap_mask, mut_mask):
-            if part.operation in DELETABLE:
-                return deletable_results(snap_mask, mut_mask)
-            if part.operation == Operation.HISTOGRAM:
-                return histogram_results(snap_mask, mut_mask)
-            return kernel_results(snap_mask, mut_mask)
-
-        if part.bucket is None:
-            results = run_tier(snap_m, mut_m)
-        else:
-            bvals = pdf[part.bucket].to_numpy()
-            bvalid = pd.notna(bvals)
-            results = [None] * n_q
-            for bv in pd.unique(bvals[bvalid & (snap_m | mut_m)]):
-                bm = bvalid & (bvals == bv)
-                sub = run_tier(snap_m & bm, mut_m & bm)
-                for i, r in enumerate(sub):
-                    if r is not None:
-                        if results[i] is None:
-                            results[i] = {}
-                        results[i][str(bv)] = r
-        data[part.output_name] = pd.Series(results, dtype=object)
-    return pd.DataFrame(data)
+        out_type = out_schema.field(part.output_name).type
+        subkeys, units = _unpack(part, cols, ~is_q, enc)
+        pa_type = out_type if subkeys is None else out_type.item_type
+        tier = (deletable if part.operation in DELETABLE else
+                histogram if part.operation == Operation.HISTOGRAM else insert_only)
+        # inputs are scalar (list and map inputs are rejected at planning),
+        # so each unit's fpos are row positions
+        results = [tier(part, values, fpos, pa_type) for values, fpos, _ in units]
+        arrays.append(results[0] if subkeys is None else
+                      _map_of(subkeys, results, n_q, out_type))
+    return pa.RecordBatch.from_arrays(
+        [a if a.type == f.type else a.cast(f.type) for a, f in zip(arrays, out_schema)],
+        schema=out_schema)
 
 
-def _make_runner(parts, ev_schema, keys, out_schema_spark):
+def _make_runner(parts, keys, out_schema_spark):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     out_schema = to_arrow_schema(out_schema_spark)
-    reads = list(dict.fromkeys([
-        pit_join.TS_COL, pit_join.ROW_ID, "__kind", "__rev", "__mut_ts",
-        *[c for p in parts for c in (p.input_column, p.bucket) if c]]))
 
     def runner(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for tbl, start in whole_groups(batches, keys):
-            out = _chunk(tbl.select(reads).to_pandas(), np.cumsum(start) - 1,
-                         parts, ev_schema)
-            if len(out):
-                yield pa.RecordBatch.from_pandas(out, schema=out_schema,
-                                                 preserve_index=False)
+            out = _chunk(tbl, start, parts, out_schema)
+            if out is not None:
+                yield out
 
     return runner

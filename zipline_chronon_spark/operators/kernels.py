@@ -7,10 +7,11 @@ and per-query index bounds ``lo[i]:hi[i]`` (computed by
 ``arrow_engine._tail_bounds`` from the hop-aligned tail rule), produce one
 output per query as a Python list.
 
-``KERNELS`` is not on the PIT engine's path (arrow_engine finishes every op
-in Arrow/numpy). Its callers are the insert-only tier of
-``entities_temporal`` and tests/test_segments.py, which checks the Arrow
-finishes (segments.py) against it.
+No engine module calls ``KERNELS`` or ``run_kernel``: arrow_engine
+finishes every op in Arrow/numpy, for the PIT engine and the insert-only
+tier of ``entities_temporal`` alike. Tests are the only callers;
+tests/test_segments.py checks the Arrow finishes (segments.py) against
+them.
 
 This replaces the reference's row-at-a-time SimpleAggregator machinery
 (aggregator/src/main/scala/ai/chronon/aggregator/base/SimpleAggregators.scala,

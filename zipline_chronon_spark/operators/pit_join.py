@@ -39,8 +39,6 @@ from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -268,14 +266,6 @@ def events_df(
         c = F.col(k).isNotNull()
         not_all_null = c if not_all_null is None else (not_all_null | c)
     return df.where(not_all_null).where(F.col(TS_COL).isNotNull())
-
-
-def _as_numpy(s: pd.Series, dt: T.DataType) -> np.ndarray:
-    if isinstance(dt, _LONG_INPUTS):
-        return s.to_numpy(dtype=np.int64)
-    if isinstance(dt, (T.FloatType, T.DoubleType, T.DecimalType)):
-        return s.to_numpy(dtype=np.float64)
-    return s.to_numpy(dtype=object)
 
 
 def _output_schema(gb: GroupBy, ev_schema: dict, passthrough_fields: list[T.StructField]):
