@@ -384,6 +384,33 @@ def test_long_sum_is_exact(spark, tmp_path_factory):
     assert row["value_sum"] == 9007199254740995
 
 
+def test_null_time_rows_are_dropped(spark, tmp_path_factory):
+    """Snapshot and mutation rows with a null row time are dropped, as
+    ``events_df`` drops null-time events: adding one of each changes no
+    output, unbounded or windowed."""
+    day = BASE_DAY * MS_DAY
+    ds = pd.Timestamp(day - MS_DAY, unit="ms").strftime("%Y-%m-%d")
+    snap = [(ds, "a", 5, day - 5000), (ds, "a", 7, day - 3000)]
+    muts = [("a", 2, day + 1000, day + 1000, False)]
+    aggs = (Aggregation("value", Operation.COUNT),
+            Aggregation("value", Operation.SUM, windows=(W1D,)))
+    q = spark.createDataFrame([("a", day + 500, 0), ("a", day + 60_000, 1)],
+                              "key string, qts long, __row_id long")
+
+    def run(name, snap_rows, mut_rows):
+        src = _entity_tables(spark, tmp_path_factory.mktemp(name), snap_rows, mut_rows,
+                             "key string, value long, ts_ms long")
+        gb = GroupBy(name=name, sources=(src,), key_columns=("key",), aggregations=aggs)
+        return {r["__row_id"]: (r["value_count"], r["value_sum_1d"]) for r in
+                compute_entities_temporal(spark, gb, q, query_time_col="qts").collect()}
+
+    clean = run("tent_ts", snap, muts)
+    with_nulls = run("tent_null_ts", snap + [(ds, "a", 100, None)],
+                     muts + [("a", 100, None, day + 200, False)])
+    assert clean == {0: (2, 12), 1: (3, 14)}
+    assert with_nulls == clean
+
+
 def test_integer_keys_match_pit_engine(spark, tmp_path_factory):
     """HISTOGRAM keys and bucket names of long columns print as the PIT
     engine prints them ('7', not '7.0'): an insert-only feed replayed as

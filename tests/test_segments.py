@@ -8,7 +8,8 @@ import pyarrow as pa
 import pytest
 
 from zipline_chronon_spark.api import AggregationPart, Operation, Window, TimeUnit
-from zipline_chronon_spark.operators import kernels, segments
+from zipline_chronon_spark.operators import segments
+from tests import kernel_oracle as kernels
 
 rng = np.random.default_rng(7)
 

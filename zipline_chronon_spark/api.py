@@ -189,6 +189,10 @@ class AggregationPart:
         return int(v) if v is not None else None
 
     @property
+    def percentiles(self) -> list[float]:
+        return [float(p) for p in self.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
+
+    @property
     def output_name(self) -> str:
         # Extensions.scala:263-277 outputColumnName / opSuffix:
         #   LAST_K -> last{k}, FIRST_K -> first{k}, TOP_K -> top{k},

@@ -545,6 +545,16 @@ def _sketch_bytes(raw) -> Optional[bytes]:
     return bytes(raw)  # Spark binary column
 
 
+def finalize_sketch(op: Operation, sk, k: int, nfp: bool, pcts: Optional[list[float]]):
+    """The value of a merged sketch: the HLL estimate, the Misra-Gries
+    ``top_k`` (``nfp``: no false positives) or the KLL quantiles."""
+    if op == Operation.APPROX_UNIQUE_COUNT:
+        return int(round(sk.estimate()))
+    if op in _FREQ:
+        return sk.top_k(k, no_false_positives=nfp)
+    return sk.quantiles(pcts)
+
+
 def finalize_part(p, irs: list[dict], evs: list[dict]):
     """Per-op merge + head-event update + finalize of one part."""
     nm, op, col = p.output_name, p.operation, p.input_column
@@ -562,14 +572,8 @@ def finalize_part(p, irs: list[dict], evs: list[dict]):
             sk.update(vals)
         if sk is None:
             return None
-        if op == Operation.APPROX_UNIQUE_COUNT:
-            return int(round(sk.estimate()))
-        if op in _FREQ:
-            return sk.top_k(p.k or 1,
-                            no_false_positives=op == Operation.APPROX_HEAVY_HITTERS_K)
-        pcts = [float(x) for x in
-                p.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
-        return sk.quantiles(pcts)
+        return finalize_sketch(op, sk, p.k or 1, op == Operation.APPROX_HEAVY_HITTERS_K,
+                               p.percentiles)
 
     have = [ir for ir in irs if any(k.startswith(f"{nm}__") for k in ir)]
     if not have and not vals:

@@ -13,7 +13,7 @@ merge_state/finalize_part semantics), so:
 
 for every (key, T), by construction (tested in tests/test_approx_engine.py).
 
-Scale shape (the round-5 redesign): there is NO query x tile join. Tiles,
+Scale shape: there is NO query x tile join. Tiles,
 head events and query rows are shuffled ONCE, keyed by the GroupBy keys,
 and served cogrouped: within each key, queries are answered in time order
 against the key's tile/event arrays with
@@ -26,13 +26,13 @@ against the key's tile/event arrays with
     deserialized ONCE and merged O(1) amortized times per key, instead of
     once per (query, tile) pair.
 
-Shuffle volume is therefore O(tiles + head_events + queries) — the old
-join-based plan moved O(queries x tiles_per_window) rows (a 7d/1h window =
-168x fan-out, each row carrying sketch blobs) and re-deserialized every
+Shuffle volume is therefore O(tiles + head_events + queries) — a
+query x tile join moves O(queries x tiles_per_window) rows (a 7d/1h window =
+168x fan-out, each row carrying sketch blobs) and re-deserializes every
 blob per query. Head events are pruned to the hops some query actually
 touches (a (key, hop) semi-join), so the event shuffle is bounded by the
 query head hops, not the full history. For very SPARSE query sets over
-very WIDE time spans the old join shape can move fewer event rows; the
+very WIDE time spans the join shape can move fewer event rows; the
 dense-backfill case (every event becomes a query) is what this engine is
 for, and there the cogroup shape wins by the full fan-out factor.
 
@@ -328,14 +328,6 @@ class _PrefixSketch:
         return None if self.run is None else self.run.copy()
 
 
-def _finalize_sketch(op: Operation, sk, k: int, nfp: bool, pcts):
-    if op == Operation.APPROX_UNIQUE_COUNT:
-        return int(round(sk.estimate()))
-    if op in fl._FREQ:
-        return dict(sk.top_k(k, no_false_positives=nfp))
-    return sk.quantiles(pcts)
-
-
 def _sorted_quantiles(sv: np.ndarray, qs: list[float]) -> list[float]:
     """np.quantile(vals, qs) with method='linear' over an ALREADY-SORTED
     array, computed directly (replicates numpy's _lerp: t >= 0.5 evaluates
@@ -379,18 +371,17 @@ def _make_group_server(parts, out_schema, ir_map=None):
     the 0-based key index per row (null keys are keys of their own, so
     their queries get null features).
 
-    Round-6 shape: additive / extreme / first-last parts are answered for
-    EVERY query of EVERY key in the batch AT ONCE — tiles, head events and
-    queries are flattened into per-kind arrays, window bounds come from one
+    Additive / extreme / first-last parts are answered for EVERY query of
+    EVERY key in the batch AT ONCE — tiles, head events and queries are
+    flattened into per-kind arrays, window bounds come from one
     group-encoded ``searchsorted`` per endpoint (the exact engine's
     pit_join idiom: enc = (key_idx << 44) + (t - base), so ranges can never
     cross a key boundary), and prefix sums / sparse-table RMQs /
-    prev-next-valid gathers run over the whole batch. The old serve looped
-    over keys in Python, paying ~10 numpy/pandas calls per (key, part) on
-    groups of ~tens of rows; batch-wide it is ~10 calls per (batch, part).
-    Only sketch parts keep a per-key loop (two-stack sliders are stateful
-    per key); that loop indexes precomputed numpy arrays — no per-key
-    pandas slicing anywhere."""
+    prev-next-valid gathers run over the whole batch: ~10 numpy calls per
+    (batch, part), where a Python loop over keys pays ~10 per (key, part)
+    on groups of ~tens of rows. Only sketch parts keep a per-key loop
+    (two-stack sliders are stateful per key); that loop indexes
+    precomputed numpy arrays — no per-key pandas slicing anywhere."""
 
     # each part reads its CONTENT-representative's IR columns (see _ir_plan)
     ir_map = ir_map or {}
@@ -632,8 +623,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                 if len(vp):
                     hv_all[vp] = hash64(evv[vp])
             elif op == Operation.APPROX_PERCENTILE:
-                pcts = [float(x) for x in
-                        p.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
+                pcts = p.percentiles
                 fv_all = np.full(len(evv), np.nan)
                 if len(vp):
                     fv_all[vp] = pd.to_numeric(
@@ -670,15 +660,15 @@ def _make_group_server(parts, out_schema, ir_map=None):
                 vpos = np.flatnonzero(ev_k)
                 a = np.searchsorted(vpos, e_lo[q0:q1] - e0)
                 b = np.searchsorted(vpos, e_hi[q0:q1] - e0)
-                # batched segment sweep (round-5 verdict item #2): queries
+                # batched segment sweep: queries
                 # sharing (tile window, head-slice start) — constant within
                 # one hop — are served from ONE window_agg copy; head
                 # events append incrementally (b is monotone) and finalize
                 # is read-only, so per-query cost drops from
                 # copy+merge+update to update-delta+finalize. Content is
                 # identical: within a segment a[i] is constant, so the
-                # cumulative updates [a, b_i) equal the old per-query
-                # fresh-copy updates.
+                # cumulative updates [a, b_i) equal per-query fresh-copy
+                # updates.
                 m = q1 - q0
                 lo_eff = np.zeros(m, dtype=np.int64) if unbounded else lo_k
                 seg = np.zeros(m, dtype=bool)
@@ -727,7 +717,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                                 if bi > bprev:
                                     work.update_hashes(hv_all[vpos[bprev:bi] + e0])
                                     bprev = bi
-                                out[q0 + i] = _finalize_sketch(op, work, k, nfp, pcts)
+                                out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
                             elif created:
                                 out[q0 + i] = len(sset)
                         continue
@@ -761,7 +751,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                                 if bi > bprev:
                                     work.update(fv_all[vpos[bprev:bi] + e0])
                                     bprev = bi
-                                out[q0 + i] = _finalize_sketch(op, work, k, nfp, pcts)
+                                out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
                             elif created:
                                 out[q0 + i] = _sorted_quantiles(buf, pcts)
                         continue
@@ -779,7 +769,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                                 work.update(list(evv[sel]))
                             bprev = bi
                         if work is not None:
-                            out[q0 + i] = _finalize_sketch(op, work, k, nfp, pcts)
+                            out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
             return out
 
         data = {ROW_ID: pdf[ROW_ID].to_numpy(dtype=np.int64)[q_pos]}

@@ -314,10 +314,8 @@ def _finish(part: AggregationPart, values: pa.Array, fpos: np.ndarray, enc_f: np
         return segments.topk_bottomk(values, fpos, sort_key, lo, hi, k,
                                      largest=(op == Operation.TOP_K), pa_list_type=pa_type)
     elif op == Operation.APPROX_PERCENTILE:
-        pcts = [float(p) for p in
-                part.args.get("percentiles", "[0.5]").strip("[] ").split(",")]
         x = _numeric_np(values)[fpos].astype(np.float64, copy=False)
-        return segments.percentiles(x, lo, hi, pcts, pa_type)
+        return segments.percentiles(x, lo, hi, part.percentiles, pa_type)
     elif op in (Operation.UNIQUE_COUNT, Operation.APPROX_UNIQUE_COUNT):
         codes, _ = segments.rank_codes(values, fpos)
         prev = segments.prev_occurrence(codes)

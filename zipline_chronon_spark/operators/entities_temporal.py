@@ -43,7 +43,8 @@ documented deletable-only, GroupBy.scala:588-591):
    by the PIT engine's op dispatch (``arrow_engine._finish``).
 Buckets are supported on all tiers (per-bucket-value replay). Chunks stay in
 Arrow end to end, as in ``arrow_engine.process_chunk_arrow``; list and map
-inputs are rejected when the query is planned.
+inputs are rejected when the query is planned. Snapshot and mutation rows
+with a null row time are dropped, as ``pit_join.events_df`` drops events.
 """
 
 from __future__ import annotations
@@ -139,7 +140,7 @@ def compute_entities_temporal(
         F.lit(0).cast("long").alias("__mut_ts"),
         F.lit(False).alias("__rev"),
         F.lit(0).cast("long").alias(pit_join.ROW_ID),
-    )
+    ).where(F.col(pit_join.TS_COL).isNotNull())
 
     parts = gb.parts()
     ev_schema = {f.name: f.dataType for f in snap_r.schema.fields}
@@ -167,7 +168,7 @@ def compute_entities_temporal(
         mut_ms.alias("__mut_ts"),
         F.col(REVERSAL).cast("boolean").alias("__rev"),
         F.lit(0).cast("long").alias(pit_join.ROW_ID),
-    )
+    ).where(F.col(pit_join.TS_COL).isNotNull())
 
     insert_ops = sorted({p.operation.name for p in parts if p.operation in INSERT_ONLY})
     if insert_ops and not allow_insert_only:

@@ -6,8 +6,8 @@ The PIT engine answers Q window queries per chunk as index ranges
 (prefix sums, sparse tables, boundary takes) in arrow_engine. The ops here
 (TOP_K, BOTTOM_K, UNIQUE_TOP_K, percentiles, UNIQUE_COUNT, HISTOGRAM,
 FREQUENT_K) need the *contents* of each range, so their cost floor is
-Sigma(hi-lo). Round 1 paid that cost inside a per-query Python loop
-(kernels.py); this module pays it once in numpy:
+Sigma(hi-lo). A per-query Python loop pays it in interpreted code; this
+module pays it once, in numpy:
 
   1. expand all ranges into one flat gather index + segment id
      (np.repeat/arange, zero Python),
@@ -20,11 +20,12 @@ the column and the finishes operate on *rank codes* (dictionary indices
 remapped through the sort order of the dictionary), so value comparisons
 are lexicographic without touching the strings.
 
-Semantics are pinned to kernels.py (same reference citations:
+Semantics are pinned to the row-at-a-time reference kernels in
+tests/kernel_oracle.py (same reference citations:
 aggregator/.../base/SimpleAggregators.scala 263-335 HISTOGRAM top-k trim,
 400-491 ItemsSketch-style FREQUENT_K, 768-917 UNIQUE_TOP_K) and verified
-by tests/test_segments.py comparing every finish against the loop kernels
-on randomized inputs.
+by tests/test_segments.py comparing every finish against them on
+randomized inputs.
 """
 
 from __future__ import annotations
