@@ -2,7 +2,8 @@
 resumable job (GroupBy backfill, join backfill, staging query) a chunk's
 ``rows_per_partition`` equals the per-``ds`` row counts of the table as
 written, and a day of the chunk with no rows is left out. Every record also
-carries the driver's JIT compilation milliseconds, ``jit_ms``."""
+carries the driver's JIT compilation milliseconds, ``jit_ms``, and whether
+the driver JVM runs from its class-data-sharing archive, ``cds``."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ from zipline_chronon_spark.api import Aggregation, GroupBy, Operation
 from zipline_chronon_spark.plans.backfill import GroupByBackfill, Lineage, date_range
 from zipline_chronon_spark.plans.join_backfill import JoinBackfill
 from zipline_chronon_spark.plans.staging import StagingQuery, StagingQueryJob
+from zipline_chronon_spark.session import cds_mapped
 from zipline_chronon_spark.sources.transcripts import generate_transcripts
 
 MS_DAY = 86_400_000
@@ -43,6 +45,7 @@ def _assert_lineage_matches(spark, table: str, empty: str) -> None:
                                            if d in written}
         assert r["rows"] == sum(r["rows_per_partition"].values())
         assert isinstance(r["jit_ms"], int) and r["jit_ms"] >= 0
+        assert r["cds"] is cds_mapped(spark)
     empty_chunk = [r for r in recs if empty in r["partitions"]]
     assert len(empty_chunk) == 1 and empty_chunk[0]["rows"] > 0
 

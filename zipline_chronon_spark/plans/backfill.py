@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from zipline_chronon_spark.api import GroupBy
 from zipline_chronon_spark.operators import pit_join
+from zipline_chronon_spark.session import cds_mapped
 
 MS_DAY = 86_400_000
 
@@ -102,8 +103,9 @@ def insert_chunk(catalog, df: DataFrame, table: str, chunk: list[str],
     """Write one chunk through the catalog. Returns its row count per
     partition (``rows_per_partition``), counted by an ``Observation`` while
     the rows are written rather than by reading the table back, with days of
-    ``chunk`` that have no rows left out; and ``jit_ms``, the driver JVM's
-    JIT compilation time spent during the write."""
+    ``chunk`` that have no rows left out; ``jit_ms``, the driver JVM's
+    JIT compilation time spent during the write; and ``cds``, whether the
+    driver JVM runs from its class-data-sharing archive."""
     pc = F.col(partition_col).cast("string")
     obs = Observation()
     df = df.observe(obs, *[F.count(F.when(pc == d, 1)).alias(d) for d in chunk])
@@ -111,7 +113,8 @@ def insert_chunk(catalog, df: DataFrame, table: str, chunk: list[str],
     jit0 = jit.getTotalCompilationTime()
     catalog.insert_partitions(df, table, partition_col=partition_col)
     return {"rows_per_partition": {d: int(n) for d, n in obs.get.items() if n},
-            "jit_ms": jit.getTotalCompilationTime() - jit0}
+            "jit_ms": jit.getTotalCompilationTime() - jit0,
+            "cds": cds_mapped(df.sparkSession)}
 
 
 def chunk_record(chunk: list[str], written: dict, t0: float, h: str, **extra) -> dict:
