@@ -27,7 +27,13 @@ def events(spark):
         "ts_ms": BASE + rng.integers(0, 2 * 86_400_000, size=n),
         "v": rng.normal(10, 3, size=n).round(3),
         "cat": [f"c{int(x)}" for x in rng.integers(0, 40, size=n)],
-    }).astype({"ts_ms": "int64"})
+        # integer sketch input with ~10% nulls: must hash and print as
+        # integers on every path (tiles, head events, online fetch)
+        "iv": pd.array(np.where(rng.random(n) < 0.1, None,
+                                rng.integers(0, 30, size=n)), dtype="Int64"),
+        # per-key sums pass 2^53: a long SUM must stay exact
+        "big": (1 << 50) + rng.integers(0, 1000, size=n),
+    }).astype({"ts_ms": "int64", "big": "int64"})
     spark.createDataFrame(pdf).createOrReplaceTempView("ax_events")
     return pdf
 
@@ -48,8 +54,38 @@ def _gb():
                         arg_map=(("percentiles", "[0.5, 0.9]"),), windows=(None,)),
             Aggregation("cat", Operation.APPROX_FREQUENT_K,
                         arg_map=(("k", "2"),), windows=(None,)),
+            Aggregation("iv", Operation.APPROX_UNIQUE_COUNT,
+                        windows=(None, Window(1, TimeUnit.DAYS))),
+            Aggregation("iv", Operation.APPROX_FREQUENT_K,
+                        arg_map=(("k", "3"),), windows=(None,)),
+            Aggregation("big", Operation.SUM, windows=(None, Window(1, TimeUnit.DAYS))),
+            Aggregation("cat", Operation.MAX, windows=(Window(1, TimeUnit.DAYS),)),
         ),
     )
+
+
+# columns compared for EXACT equality with both the exact engine and the
+# online Fetcher: integer sketch inputs with nulls, long sums past 2^53,
+# and a string MAX
+EXACT_COLS = ["iv_approx_unique_count", "iv_approx_unique_count_1d",
+              "big_sum", "big_sum_1d", "cat_max_1d"]
+
+
+def _rows(df, cols):
+    """Rows by __row_id as Python values (toPandas would widen a long
+    column with nulls to float64)."""
+    return [r.asDict() for r in
+            df.select("__row_id", *cols).orderBy("__row_id").collect()]
+
+
+def _same(a, b) -> bool:
+    na = a is None or (isinstance(a, float) and pd.isna(a))
+    nb = b is None or (isinstance(b, float) and pd.isna(b))
+    if na or nb:
+        return na and nb
+    if isinstance(a, (list, dict)) or isinstance(b, (list, dict)):
+        return dict(a) == dict(b)
+    return type(a) is type(b) and a == b
 
 
 def _queries(spark, events, n=120):
@@ -65,11 +101,11 @@ def _queries(spark, events, n=120):
 def test_matches_exact_engine(spark, events):
     gb = _gb()
     q = _queries(spark, events)
-    exact = (compute_group_by(spark, gb, q, row_id="__row_id", query_time_col="ts_ms")
-             .toPandas().sort_values("__row_id").reset_index(drop=True))
-    approx = (compute_group_by_approx(spark, gb, q, row_id="__row_id",
-                                      query_time_col="ts_ms")
-              .toPandas().sort_values("__row_id").reset_index(drop=True))
+    exact_df = compute_group_by(spark, gb, q, row_id="__row_id", query_time_col="ts_ms")
+    approx_df = compute_group_by_approx(spark, gb, q, row_id="__row_id",
+                                        query_time_col="ts_ms")
+    exact = exact_df.toPandas().sort_values("__row_id").reset_index(drop=True)
+    approx = approx_df.toPandas().sort_values("__row_id").reset_index(drop=True)
     assert len(exact) == len(approx) == 120
     scalar_cols = ["v_sum", "v_sum_1d", "v_count_6h", "v_min_1d", "v_last"]
     for c in scalar_cols:
@@ -94,6 +130,10 @@ def test_matches_exact_engine(spark, events):
             assert gf is None
         else:
             assert dict(ef) == dict(gf), i
+    cols = EXACT_COLS + ["iv_approx_frequent_k"]
+    for e, g in zip(_rows(exact_df, cols), _rows(approx_df, cols)):
+        for c in cols:
+            assert _same(e[c], g[c]), (c, e["__row_id"], e[c], g[c])
 
 
 def test_row_per_query_even_without_tiles_or_head(spark, events):
@@ -209,11 +249,15 @@ def test_matches_online_fetcher(spark, events):
         "ts_ms": [t1] * 5,
         "__row_id": np.arange(5, dtype=np.int64),
     }))
-    got = (compute_group_by_approx(spark, gb, q, row_id="__row_id",
-                                   query_time_col="ts_ms")
-           .toPandas().sort_values("__row_id").reset_index(drop=True))
+    got_df = compute_group_by_approx(spark, gb, q, row_id="__row_id",
+                                     query_time_col="ts_ms")
+    got = got_df.toPandas().sort_values("__row_id").reset_index(drop=True)
+    cols = EXACT_COLS + ["iv_approx_frequent_k"]
+    got_rows = _rows(got_df, cols)
     for i in range(5):
         online = f.fetch((str(i),), at_ts_ms=t1)
+        for nm in cols:
+            assert _same(got_rows[i][nm], online[nm]), (i, nm, got_rows[i][nm], online[nm])
         for nm, val in online.items():
             g = got[nm][i]
             if val is None:

@@ -16,15 +16,17 @@ for every (key, T), by construction (tested in tests/test_approx_engine.py).
 Scale shape: there is NO query x tile join. Tiles,
 head events and query rows are shuffled ONCE, keyed by the GroupBy keys,
 and served cogrouped: within each key, queries are answered in time order
-against the key's tile/event arrays with
+against the key's tile/event columns, read straight from Arrow:
 
-  - prefix-sum difference arrays for SUM / COUNT / AVERAGE,
-  - batch-wide sparse-table range queries (RMQ) for MIN / MAX,
-  - next/prev-non-null index hops for FIRST / LAST,
-  - a two-stack sliding-window merge (SWAG) for sketch parts: both window
+  - scalar parts (SUM / COUNT / AVERAGE / MIN / MAX / FIRST / LAST) run the
+    PIT engine's op dispatch (arrow_engine._finish) over the tile IR
+    column and over the head-event column, then merge the two results
+    with the key's collapsed row — one op body for both engines,
+  - sketch parts run a two-stack sliding-window merge (SWAG): both window
     endpoints are monotone in query time, so each tile sketch is
     deserialized ONCE and merged O(1) amortized times per key, instead of
-    once per (query, tile) pair.
+    once per (query, tile) pair. Head events enter as typed values
+    (sketches.sketch_input), as they do in the tile builder.
 
 Shuffle volume is therefore O(tiles + head_events + queries) — a
 query x tile join moves O(queries x tiles_per_window) rows (a 7d/1h window =
@@ -53,20 +55,24 @@ share one IR format and one finalize rule.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from zipline_chronon_spark.api import GroupBy, Operation
 from zipline_chronon_spark.online import fetcher as fl
-from zipline_chronon_spark.operators import kernels, pit_join
-from zipline_chronon_spark.operators.arrow_engine import _SHIFT, whole_groups
-from zipline_chronon_spark.operators.sketches import hash64
+from zipline_chronon_spark.operators import pit_join
+from zipline_chronon_spark.operators.arrow_engine import (_SHIFT, _columns, _finish,
+                                                          _np_int64, _valid_np,
+                                                          whole_groups)
+from zipline_chronon_spark.operators.sketches import hash64, sketch_input
 
 ROW_ID = pit_join.ROW_ID
 TS_COL = pit_join.TS_COL
@@ -99,8 +105,6 @@ def _ir_plan(gb: GroupBy):
     and the Arrow boundary. Returns (gb_ir, ir_map) where gb_ir generates
     exactly one part per class and ir_map maps each original part's
     output_name to its representative's."""
-    import dataclasses
-
     from zipline_chronon_spark.api import Aggregation, AggregationPart
 
     parts = fl._parts(gb)
@@ -178,16 +182,13 @@ def _build_frames(
     tiles = fl._ir_rows(recent, gb_ir, tile_hop=hop).join(qkeys, keys, "leftsemi")
     ir_cols = [c for c in tiles.columns if c not in keys + ["__tile"]]
 
-    def _nulls(df_schema, cols, prefix=""):
-        return [F.lit(None).cast(df_schema[c].dataType).alias(f"{prefix}{c}")
-                for c in cols]
-
     zero_l = F.lit(0).cast("long")
     neg1_l = F.lit(-1).cast("long")  # ROW_ID stays null-free int64 (2^53 rule)
-
+    # each kind carries only its own columns; the unions fill the rest
+    # with typed nulls
     t_u = tiles.select(
         *keys, F.lit(K_TILE).alias("__kind"), F.col("__tile").alias("__t"),
-        neg1_l.alias(ROW_ID), *ir_cols, *_nulls(ev.schema, inputs, "__e_"))
+        neg1_l.alias(ROW_ID), *ir_cols)
 
     # head events: only (key, hop) cells some query actually touches —
     # [head_floor(T), T] per query is exact-head territory; everything
@@ -200,15 +201,13 @@ def _build_frames(
             .join(qhops, keys + ["__hop"], "leftsemi"))
     e_u = he.select(
         *keys, F.lit(K_EVENT).alias("__kind"), F.col(TS_COL).alias("__t"),
-        neg1_l.alias(ROW_ID), *_nulls(tiles.schema, ir_cols),
-        *[F.col(c).alias(f"__e_{c}") for c in inputs])
+        neg1_l.alias(ROW_ID), *[F.col(c).alias(f"__e_{c}") for c in inputs])
 
     q_u = q.select(
-        *keys, F.lit(K_QUERY).alias("__kind"), F.col("__T").alias("__t"),
-        ROW_ID, *_nulls(tiles.schema, ir_cols),
-        *_nulls(ev.schema, inputs, "__e_"))
+        *keys, F.lit(K_QUERY).alias("__kind"), F.col("__T").alias("__t"), ROW_ID)
 
-    union = t_u.unionByName(e_u).unionByName(q_u)
+    union = (t_u.unionByName(e_u, allowMissingColumns=True)
+             .unionByName(q_u, allowMissingColumns=True))
 
     # collapsed rows only exist (and are only read) for unbounded parts;
     # every key contributes at most ONE such row TOTAL — not per query
@@ -217,36 +216,10 @@ def _build_frames(
         collapsed = fl._ir_rows(old, gb_ir).join(qkeys, keys, "leftsemi")
         c_u = collapsed.select(
             *keys, F.lit(K_COLLAPSED).alias("__kind"), zero_l.alias("__t"),
-            neg1_l.alias(ROW_ID), *ir_cols, *_nulls(ev.schema, inputs, "__e_"))
-        union = union.unionByName(c_u)
+            neg1_l.alias(ROW_ID), *ir_cols)
+        union = union.unionByName(c_u, allowMissingColumns=True)
 
     return union, ev, ir_cols, ir_map
-
-
-# ---------------------------------------------------------------------------
-# per-key range kernels
-# ---------------------------------------------------------------------------
-
-def _prefix(x: np.ndarray, first: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(per-key prefix sums with nan->0, read with kernels.window_sums;
-    prefix non-nan counts), length n+1. ``first`` marks key starts."""
-    ok = ~np.isnan(x)
-    c = np.zeros(len(x) + 1, dtype=np.int64)
-    np.cumsum(ok, out=c[1:])
-    return kernels.group_prefix(np.where(ok, x, 0.0), first), c
-
-
-def _next_valid(valid: np.ndarray) -> np.ndarray:
-    """nxt[i] = smallest j >= i with valid[j], else n."""
-    n = len(valid)
-    idx = np.where(valid, np.arange(n), n)
-    return np.minimum.accumulate(idx[::-1])[::-1]
-
-
-def _prev_valid(valid: np.ndarray) -> np.ndarray:
-    """prv[i] = largest j <= i with valid[j], else -1."""
-    idx = np.where(valid, np.arange(len(valid)), -1)
-    return np.maximum.accumulate(idx)
 
 
 class _SwagSketch:
@@ -254,7 +227,8 @@ class _SwagSketch:
     window endpoints are monotone in query time, so each tile is merged
     O(1) amortized times total (once into the back aggregate, once during
     a front flip) — NOT once per query. ``items`` entries are never
-    mutated; answers are fresh copies."""
+    mutated; answers are fresh copies. An unbounded part keeps ``lo`` at 0
+    with its collapsed seed at item 0, so it is a running merge."""
 
     __slots__ = ("items", "front", "back", "back_agg", "lo", "hi")
 
@@ -304,30 +278,6 @@ class _SwagSketch:
         return out
 
 
-class _PrefixSketch:
-    """Running (unbounded-window) merge: lo is pinned at 0, hi monotone."""
-
-    __slots__ = ("items", "run", "hi")
-
-    def __init__(self, items: list, seed=None):
-        self.items = items
-        self.run = seed.copy() if seed is not None else None
-        self.hi = 0
-
-    def advance(self, hi: int) -> None:
-        while self.hi < hi:
-            it = self.items[self.hi]
-            if it is not None:
-                if self.run is None:
-                    self.run = it.copy()
-                else:
-                    self.run.merge(it)
-            self.hi += 1
-
-    def window_agg(self):
-        return None if self.run is None else self.run.copy()
-
-
 def _sorted_quantiles(sv: np.ndarray, qs: list[float]) -> list[float]:
     """np.quantile(vals, qs) with method='linear' over an ALREADY-SORTED
     array, computed directly (replicates numpy's _lerp: t >= 0.5 evaluates
@@ -353,17 +303,13 @@ def _sorted_quantiles(sv: np.ndarray, qs: list[float]) -> list[float]:
     return out
 
 
-class _Columns(dict):
-    """Column name -> pandas Series of an Arrow table, converted on first
-    read, so a chunk converts only the columns its parts use."""
-
-    def __init__(self, tbl: pa.Table):
-        super().__init__()
-        self.tbl = tbl
-
-    def __missing__(self, name: str) -> pd.Series:
-        s = self[name] = self.tbl.column(name).to_pandas()
-        return s
+def _total(arrays: list, pa_type: pa.DataType) -> pa.Array:
+    """Element-wise sum of the non-None arrays, a null counting as 0; null
+    where every one is null."""
+    arrays = [a.cast(pa_type) for a in arrays if a is not None]
+    valid = functools.reduce(pc.or_, [a.is_valid() for a in arrays])
+    tot = functools.reduce(pc.add, [a.fill_null(0) for a in arrays])
+    return pc.if_else(valid, tot, pa.scalar(None, pa_type))
 
 
 def _make_group_server(parts, out_schema, ir_map=None):
@@ -371,22 +317,20 @@ def _make_group_server(parts, out_schema, ir_map=None):
     the 0-based key index per row (null keys are keys of their own, so
     their queries get null features).
 
-    Additive / extreme / first-last parts are answered for EVERY query of
-    EVERY key in the batch AT ONCE — tiles, head events and queries are
-    flattened into per-kind arrays, window bounds come from one
-    group-encoded ``searchsorted`` per endpoint (the exact engine's
-    pit_join idiom: enc = (key_idx << 44) + (t - base), so ranges can never
-    cross a key boundary), and prefix sums / sparse-table RMQs /
-    prev-next-valid gathers run over the whole batch: ~10 numpy calls per
-    (batch, part), where a Python loop over keys pays ~10 per (key, part)
-    on groups of ~tens of rows. Only sketch parts keep a per-key loop
-    (two-stack sliders are stateful per key); that loop indexes
-    precomputed numpy arrays — no per-key pandas slicing anywhere."""
+    Every query of every key in the batch is answered at once. Window
+    bounds come from one group-encoded ``searchsorted`` per endpoint over
+    the tile rows and over the head-event rows (the PIT engine's encoding,
+    enc = (key_idx << 44) + (t - base), so ranges never cross a key
+    boundary). A scalar part (SUM / COUNT / AVERAGE / MIN / MAX / FIRST /
+    LAST) runs the PIT engine's op dispatch, ``arrow_engine._finish``,
+    once over its tile IR column and once over its head-event column; a
+    short merge per op then adds the key's collapsed row. Only sketch
+    parts keep a per-key loop (two-stack sliders are stateful per key),
+    over the batch's blobs and its typed event values
+    (``sketches.sketch_input``)."""
 
     # each part reads its CONTENT-representative's IR columns (see _ir_plan)
     ir_map = ir_map or {}
-    keyed = [(p, p.output_name, ir_map.get(p.output_name, p.output_name),
-              p.operation, p.input_column) for p in parts]
     hop = None
     for p in parts:
         if p.window is not None:
@@ -396,9 +340,9 @@ def _make_group_server(parts, out_schema, ir_map=None):
 
     def serve(tbl: pa.Table, gid: np.ndarray) -> Optional[pa.RecordBatch]:
         n = tbl.num_rows
-        pdf = _Columns(tbl)
-        kind = pdf["__kind"].to_numpy()
-        t_all = pdf["__t"].to_numpy(dtype=np.int64)
+        cols = _columns(tbl)
+        kind = _np_int64(cols["__kind"])
+        t_all = _np_int64(cols["__t"])
         G = int(gid[-1]) + 1
         starts = np.searchsorted(gid, np.arange(G))
         ends = np.r_[starts[1:], n]
@@ -421,8 +365,6 @@ def _make_group_server(parts, out_schema, ir_map=None):
         base = int(t_all[ncoll].min()) if ncoll.any() else 0
         enc_tile = (gid[tile_pos] << _SHIFT) + (t_all[tile_pos] - base)
         enc_ev = (gid[ev_pos] << _SHIFT) + (t_all[ev_pos] - base)
-        t_first = kernels.group_first(gid[tile_pos])
-        e_first = kernels.group_first(gid[ev_pos])
         gq_enc = g_q << _SHIFT
         q_enc = gq_enc + (T - base)
 
@@ -431,211 +373,84 @@ def _make_group_server(parts, out_schema, ir_map=None):
         e_hi = np.searchsorted(enc_ev, q_enc, side="right")
         e_lo_head = np.minimum(np.searchsorted(
             enc_ev, gq_enc + np.maximum(head - base, 0)), e_hi)
-        lo_t_unb = None  # lazy: searchsorted once if any unbounded part
+        lo_t_unb = np.searchsorted(enc_tile, gq_enc)
         # collapsed row index per key (-1 when absent), gathered per query
         ci_k = np.where(b2 < b3, b2, -1)
         ci_q = ci_k[g_q]
+        ci_take = pa.array(np.maximum(ci_q, 0), type=pa.int64(), mask=ci_q < 0)
 
-        # batch-level column caches (one C-level conversion each)
-        num_cache: dict = {}
-        obj_cache: dict = {}
-        ev_pref_cache: dict = {}
-        ev_cnt_cache: dict = {}
+        def finish(part, name, pos, enc, lo, hi, pa_type):
+            """``_finish`` over the valid rows of column ``name`` among the
+            rows ``pos``, for windows ``[lo, hi)`` into ``pos``."""
+            col = cols[name]
+            ok = _valid_np(col)[pos]
+            if not ok.any():  # _finish's sparse table needs a value
+                return pa.nulls(nq, pa_type)
+            c = np.zeros(len(pos) + 1, dtype=np.int64)
+            np.cumsum(ok, out=c[1:])
+            return _finish(part, col, pos[ok], enc[ok], c[lo], c[hi], pa_type)
 
-        def num(col):
-            if col not in num_cache:
-                num_cache[col] = pd.to_numeric(pdf[col], errors="coerce")\
-                    .to_numpy(dtype=np.float64, copy=False)
-            return num_cache[col]
+        def serve_scalar(p, rep, lo_t, hi_t, e_lo, e_hi):
+            op = p.operation
+            out_t = out_schema.field(p.output_name).type
 
-        def obj(col):
-            if col not in obj_cache:
-                obj_cache[col] = pdf[col].to_numpy(dtype=object)
-            return obj_cache[col]
+            def three(suffix, tile_part, ev_part, pa_type):
+                """(tiles, head events, collapsed) results of one IR column;
+                the collapsed state feeds ONLY unbounded parts (merge_state
+                rule: windowed tails are above the split)."""
+                name = f"{rep}__{suffix}"
+                return [finish(tile_part, name, tile_pos, enc_tile, lo_t, hi_t, pa_type),
+                        finish(ev_part, f"__e_{p.input_column}", ev_pos, enc_ev,
+                               e_lo, e_hi, pa_type),
+                        cols[name].take(ci_take).cast(pa_type)
+                        if p.window is None else None]
 
-        def ev_prefix(col):
-            """(value prefix, non-nan count prefix) over the event rows."""
-            if col not in ev_pref_cache:
-                ev_pref_cache[col] = _prefix(num(f"__e_{col}")[ev_pos], e_first)
-            return ev_pref_cache[col]
+            if op in (Operation.MIN, Operation.MAX):
+                fn = pc.min_element_wise if op == Operation.MIN else pc.max_element_wise
+                return fn(*[a for a in three(op.name.lower(), p, p, out_t)
+                            if a is not None])
+            if op in (Operation.FIRST, Operation.LAST):
+                # collapsed is older than tiles, tiles than head events
+                t, e, c = three("v", p, p, out_t)
+                order = (c, t, e) if op == Operation.FIRST else (e, t, c)
+                return pc.coalesce(*[a for a in order if a is not None])
+            as_sum = dataclasses.replace(p, operation=Operation.SUM)
+            if op != Operation.COUNT:
+                s_t = out_t if op == Operation.SUM else pa.float64()
+                s = _total(three("sum", as_sum, as_sum, s_t), s_t)
+                if op == Operation.SUM:
+                    return s
+            cnt = _total(three("count", as_sum, dataclasses.replace(
+                p, operation=Operation.COUNT), pa.int64()), pa.int64())
+            cnt = pc.if_else(pc.greater(cnt, 0), cnt, pa.scalar(None, pa.int64()))
+            if op == Operation.COUNT:
+                return cnt
+            return pc.divide(s, cnt.cast(pa.float64()))
 
-        def ev_count_prefix(col):
-            """Non-null count prefix on the RAW objects (COUNT works on any
-            dtype)."""
-            if col not in ev_cnt_cache:
-                eok = ~pd.isna(obj(f"__e_{col}")[ev_pos])
-                c = np.zeros(len(eok) + 1, dtype=np.int64)
-                np.cumsum(eok, out=c[1:])
-                ev_cnt_cache[col] = c
-            return ev_cnt_cache[col]
+        # per-key offsets into the flattened tile / query arrays
+        t_ofs = np.zeros(G + 1, dtype=np.int64)
+        np.cumsum(b1 - starts, out=t_ofs[1:])
+        q_ofs = np.zeros(G + 1, dtype=np.int64)
+        np.cumsum(ends - b3, out=q_ofs[1:])
+        ev_take = pa.array(ev_pos, type=pa.int64())
 
-        def collapsed_add(ci, full_col):
-            """(mask, values) of valid collapsed contributions per query."""
-            cm = ci >= 0
-            cv = full_col[np.maximum(ci, 0)]
-            cm = cm & ~np.isnan(cv)
-            return cm, cv
-
-        def _serve_additive(nm, op, col, ci, lo_t, hi_t, e_lo, e_hi):
-            csum = chave = ccnt = None
-            if op in (Operation.SUM, Operation.AVERAGE):
-                ts_, tc_ = _prefix(num(f"{nm}__sum")[tile_pos], t_first)
-                es_, ec_ = ev_prefix(col)
-                tot = (kernels.window_sums(ts_, t_first, lo_t, hi_t)
-                       + kernels.window_sums(es_, e_first, e_lo, e_hi))
-                have = (tc_[hi_t] - tc_[lo_t]) + (ec_[e_hi] - ec_[e_lo])
-                if ci is not None:
-                    cm, cv = collapsed_add(ci, num(f"{nm}__sum"))
-                    tot[cm] += cv[cm]
-                    have = have + cm
-                csum, chave = tot, have
-            if op in (Operation.COUNT, Operation.AVERAGE):
-                tcv = num(f"{nm}__count")[tile_pos]
-                tp = np.zeros(len(tcv) + 1)
-                np.cumsum(np.where(np.isnan(tcv), 0.0, tcv), out=tp[1:])
-                ec2 = (ev_count_prefix(col) if op == Operation.COUNT
-                       else ev_prefix(col)[1])
-                cnt = (tp[hi_t] - tp[lo_t]) + (ec2[e_hi] - ec2[e_lo])
-                if ci is not None:
-                    cm, cv = collapsed_add(ci, num(f"{nm}__count"))
-                    cnt[cm] += cv[cm]
-                ccnt = cnt
-            out = np.full(nq, None, dtype=object)
-            if op == Operation.SUM:
-                m = chave > 0
-                out[m] = csum[m]
-            elif op == Operation.COUNT:
-                m = ccnt > 0
-                out[m] = ccnt[m].astype(np.int64)
-            else:  # AVERAGE
-                m = ccnt > 0
-                out[m] = csum[m] / ccnt[m]
-            return out
-
-        def _serve_extreme(nm, op, col, ci, lo_t, hi_t, e_lo, e_hi):
-            is_min = op == Operation.MIN
-            suffix = "min" if is_min else "max"
-            npop = np.minimum if is_min else np.maximum
-            t_ser = pdf[f"{nm}__{suffix}"]
-            e_ser = pdf[f"__e_{col}"]
-            if (pd.api.types.is_float_dtype(t_ser)
-                    and pd.api.types.is_float_dtype(e_ser)):
-                # native float: range-RMQ directly on the values
-                tfull, efull = num(f"{nm}__{suffix}"), num(f"__e_{col}")
-                decode = None
-            else:
-                # exact any-dtype path (ints stay exact past 2**53, strings
-                # compare lexicographically): factorize both columns into
-                # ONE sorted code space, RMQ over float codes, decode at
-                # the end — no per-row Python comparisons
-                comb = pd.concat([t_ser, e_ser], ignore_index=True)
-                codes, uniq = pd.factorize(comb, sort=True)
-                fcodes = codes.astype(np.float64)
-                fcodes[codes < 0] = np.nan
-                tfull, efull = fcodes[:n], fcodes[n:]
-                decode = np.asarray(uniq, dtype=object)
-            tvals = tfull[tile_pos]
-            evals = efull[ev_pos]
-            fill = np.inf if is_min else -np.inf
-
-            def rng(vals, lo, hi):
-                res = np.full(nq, fill)
-                has = np.zeros(nq, dtype=bool)
-                if len(vals):
-                    ok = ~np.isnan(vals)
-                    st = kernels._SparseTable(np.where(ok, vals, fill), npop)
-                    r = st.query(lo, hi)
-                    m = hi > lo
-                    res[m] = r[m]
-                    c = np.zeros(len(ok) + 1, dtype=np.int64)
-                    np.cumsum(ok, out=c[1:])
-                    has = (c[hi] - c[lo]) > 0
-                return res, has
-
-            rt, ht = rng(tvals, lo_t, hi_t)
-            re_, he = rng(evals, e_lo, e_hi)
-            res = npop(rt, re_)
-            ok = ht | he
-            if ci is not None:
-                cm, cv = collapsed_add(ci, tfull)
-                res[cm] = npop(res[cm], cv[cm])
-                ok = ok | cm
-            out = np.full(nq, None, dtype=object)
-            if decode is None:
-                out[ok] = res[ok]
-            else:
-                out[ok] = decode[res[ok].astype(np.int64)]
-            return out
-
-        def _serve_first_last(nm, op, col, ci, lo_t, hi_t, e_lo, e_hi):
-            t_ts = num(f"{nm}__ts")[tile_pos]
-            t_v = obj(f"{nm}__v")[tile_pos]
-            evv = obj(f"__e_{col}")[ev_pos]
-            t_valid = ~np.isnan(t_ts)
-            e_valid = ~pd.isna(evv)
-            nt, ne = len(t_ts), len(evv)
-            out = np.full(nq, None, dtype=object)
-            cv_mask = None
-            if ci is not None:
-                cv_mask, _ = collapsed_add(ci, num(f"{nm}__ts"))
-                cv_vals = obj(f"{nm}__v")[np.maximum(ci, 0)]
-            if op == Operation.FIRST:
-                # tiles are strictly older than head events, collapsed older
-                # still — so events first, tiles override, collapsed wins
-                nxt_e = np.r_[_next_valid(e_valid), ne]
-                ei = nxt_e[e_lo]
-                em = ei < e_hi
-                out[em] = evv[ei[em]]
-                nxt_t = np.r_[_next_valid(t_valid), nt]
-                ti = nxt_t[lo_t]
-                tm = ti < hi_t
-                out[tm] = t_v[ti[tm]]
-                if cv_mask is not None:
-                    out[cv_mask] = cv_vals[cv_mask]
-            else:  # LAST: head events newest, then tiles, then collapsed
-                if cv_mask is not None:
-                    out[cv_mask] = cv_vals[cv_mask]
-                if nt:
-                    prv_t = _prev_valid(t_valid)
-                    jt = prv_t[np.maximum(hi_t, 1) - 1]
-                    tm = (hi_t > lo_t) & (jt >= lo_t)
-                    out[tm] = t_v[jt[tm]]
-                if ne:
-                    prv_e = _prev_valid(e_valid)
-                    je = prv_e[np.maximum(e_hi, 1) - 1]
-                    em = (e_hi > e_lo) & (je >= e_lo)
-                    out[em] = evv[je[em]]
-            return out
-
-        def _serve_sketch(p, nm, op, col, lo_t, hi_t, e_lo, e_hi):
-            sk_all = obj(f"{nm}__sk")
-            blobs_t = sk_all[tile_pos]
+        def serve_sketch(p, rep, lo_t, hi_t, e_lo, e_hi):
+            op = p.operation
+            blobs = cols[f"{rep}__sk"].to_pylist()
             cls = fl._sketch_cls(op)
-            evv = obj(f"__e_{col}")[ev_pos]
-            e_valid = ~pd.isna(evv)
+            ecol = cols[f"__e_{p.input_column}"].take(ev_take)
+            vals = sketch_input(ecol)
+            # event-row bounds -> positions into the valid values
+            cv = np.zeros(len(ecol) + 1, dtype=np.int64)
+            np.cumsum(_valid_np(ecol), out=cv[1:])
+            a_all, b_all = cv[e_lo], cv[e_hi]
             k = p.k or 1
             nfp = op == Operation.APPROX_HEAVY_HITTERS_K
-            pcts = None
-            hv_all = fv_all = None
-            vp = np.flatnonzero(e_valid)
-            if op == Operation.APPROX_UNIQUE_COUNT:
-                hv_all = np.zeros(len(evv), dtype=np.uint64)
-                if len(vp):
-                    hv_all[vp] = hash64(evv[vp])
+            pcts = p.percentiles if op == Operation.APPROX_PERCENTILE else None
+            if op == Operation.APPROX_UNIQUE_COUNT and len(vals):
+                vals = hash64(vals)
             elif op == Operation.APPROX_PERCENTILE:
-                pcts = p.percentiles
-                fv_all = np.full(len(evv), np.nan)
-                if len(vp):
-                    fv_all[vp] = pd.to_numeric(
-                        pd.Series(evv[vp]), errors="coerce").to_numpy(
-                        dtype=np.float64)
-            # per-key offsets into the flattened tile/event/query arrays
-            t_ofs = np.zeros(G + 1, dtype=np.int64)
-            np.cumsum(b1 - starts, out=t_ofs[1:])
-            e_ofs = np.zeros(G + 1, dtype=np.int64)
-            np.cumsum(b2 - b1, out=e_ofs[1:])
-            q_ofs = np.zeros(G + 1, dtype=np.int64)
-            np.cumsum(ends - b3, out=q_ofs[1:])
+                vals = vals.astype(np.float64)
 
             out = np.full(nq, None, dtype=object)
             unbounded = p.window is None
@@ -644,22 +459,19 @@ def _make_group_server(parts, out_schema, ir_map=None):
                 if q0 == q1:
                     continue
                 t0 = int(t_ofs[g])
-                e0, e1 = int(e_ofs[g]), int(e_ofs[g + 1])
-                items = [None if pd.isna(bb) else cls.from_bytes(bytes(bb))
-                         for bb in blobs_t[t0:int(t_ofs[g + 1])]]
-                seed = None
-                if unbounded and ci_k[g] >= 0:
-                    cb = sk_all[ci_k[g]]
-                    if not pd.isna(cb):
-                        seed = cls.from_bytes(bytes(cb))
-                slider = (_PrefixSketch(items, seed) if unbounded
-                          else _SwagSketch(items))
-                lo_k = lo_t[q0:q1] - t0
+                items = [None if bb is None else cls.from_bytes(bb)
+                         for bb in blobs[starts[g]:b1[g]]]
+                m = q1 - q0
                 hi_k = hi_t[q0:q1] - t0
-                ev_k = e_valid[e0:e1]
-                vpos = np.flatnonzero(ev_k)
-                a = np.searchsorted(vpos, e_lo[q0:q1] - e0)
-                b = np.searchsorted(vpos, e_hi[q0:q1] - e0)
+                if unbounded:  # the collapsed seed is item 0; lo stays 0
+                    cb = blobs[ci_k[g]] if ci_k[g] >= 0 else None
+                    items.insert(0, None if cb is None else cls.from_bytes(cb))
+                    lo_k, hi_k = np.zeros(m, dtype=np.int64), hi_k + 1
+                else:
+                    lo_k = lo_t[q0:q1] - t0
+                slider = _SwagSketch(items)
+                a = a_all[q0:q1]
+                b = b_all[q0:q1]
                 # batched segment sweep: queries
                 # sharing (tile window, head-slice start) — constant within
                 # one hop — are served from ONE window_agg copy; head
@@ -669,20 +481,15 @@ def _make_group_server(parts, out_schema, ir_map=None):
                 # identical: within a segment a[i] is constant, so the
                 # cumulative updates [a, b_i) equal per-query fresh-copy
                 # updates.
-                m = q1 - q0
-                lo_eff = np.zeros(m, dtype=np.int64) if unbounded else lo_k
                 seg = np.zeros(m, dtype=bool)
                 seg[0] = True
                 if m > 1:
-                    seg[1:] = ((lo_eff[1:] != lo_eff[:-1])
+                    seg[1:] = ((lo_k[1:] != lo_k[:-1])
                                | (hi_k[1:] != hi_k[:-1]) | (a[1:] != a[:-1]))
                 sst = np.flatnonzero(seg)
                 sen = np.r_[sst[1:], m]
                 for s0, s1 in zip(sst, sen):
-                    if unbounded:
-                        slider.advance(int(hi_k[s0]))
-                    else:
-                        slider.advance(int(lo_eff[s0]), int(hi_k[s0]))
+                    slider.advance(int(lo_k[s0]), int(hi_k[s0]))
                     work = slider.window_agg()  # one fresh copy per segment
                     bprev = int(a[s0])
                     # exact-regime fast lanes — provably identical outputs
@@ -706,7 +513,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                             bi = int(b[i])
                             if work is None and bi > bprev:
                                 created = True
-                                sset.update(hv_all[vpos[bprev:bi] + e0].tolist())
+                                sset.update(vals[bprev:bi].tolist())
                                 bprev = bi
                                 if len(sset) > limit:
                                     work = fl._new_sketch(op)
@@ -715,7 +522,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                             if work is not None:
                                 bi = int(b[i])
                                 if bi > bprev:
-                                    work.update_hashes(hv_all[vpos[bprev:bi] + e0])
+                                    work.update_hashes(vals[bprev:bi])
                                     bprev = bi
                                 out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
                             elif created:
@@ -733,7 +540,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                             bi = int(b[i])
                             if work is None and bi > bprev:
                                 created = True
-                                nv = fv_all[vpos[bprev:bi] + e0]
+                                nv = vals[bprev:bi]
                                 nv = nv[~np.isnan(nv)]
                                 bprev = bi
                                 if len(nv):
@@ -749,7 +556,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
                             if work is not None:
                                 bi = int(b[i])
                                 if bi > bprev:
-                                    work.update(fv_all[vpos[bprev:bi] + e0])
+                                    work.update(vals[bprev:bi])
                                     bprev = bi
                                 out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
                             elif created:
@@ -760,26 +567,19 @@ def _make_group_server(parts, out_schema, ir_map=None):
                         if bi > bprev:
                             if work is None:
                                 work = fl._new_sketch(op)
-                            sel = vpos[bprev:bi] + e0
                             if op == Operation.APPROX_UNIQUE_COUNT:
-                                work.update_hashes(hv_all[sel])
-                            elif op == Operation.APPROX_PERCENTILE:
-                                work.update(fv_all[sel])
+                                work.update_hashes(vals[bprev:bi])
                             else:
-                                work.update(list(evv[sel]))
+                                work.update(vals[bprev:bi])
                             bprev = bi
                         if work is not None:
                             out[q0 + i] = fl.finalize_sketch(op, work, k, nfp, pcts)
-            return out
+            return pa.array(out.tolist(), type=out_schema.field(p.output_name).type)
 
-        data = {ROW_ID: pdf[ROW_ID].to_numpy(dtype=np.int64)[q_pos]}
-        for p, nm, rep, op, col in keyed:
+        arrays = [cols[ROW_ID].take(pa.array(q_pos, type=pa.int64()))]
+        for p in parts:
             if p.window is None:
-                nonlocal_lo = lo_t_unb
-                if nonlocal_lo is None:
-                    nonlocal_lo = np.searchsorted(enc_tile, gq_enc)
-                    lo_t_unb = nonlocal_lo
-                lo_t, hi_t, e_lo = nonlocal_lo, hi_t_head, e_lo_head
+                lo_t, hi_t, e_lo = lo_t_unb, hi_t_head, e_lo_head
             else:
                 w, th = p.window.millis, p.window.tail_hop_millis()
                 tail = ((T - w) // th) * th
@@ -788,19 +588,12 @@ def _make_group_server(parts, out_schema, ir_map=None):
                 e_lo = np.minimum(np.searchsorted(
                     enc_ev, gq_enc + np.maximum(np.maximum(tail, head) - base, 0)),
                     e_hi)
-            # collapsed (below-split) state feeds ONLY unbounded parts
-            # (merge_state rule: windowed tails are above the split)
-            ci = ci_q if p.window is None else None
-            if op in fl.SKETCH_OPS:
-                data[nm] = _serve_sketch(p, rep, op, col, lo_t, hi_t, e_lo, e_hi)
-            elif op in (Operation.SUM, Operation.AVERAGE, Operation.COUNT):
-                data[nm] = _serve_additive(rep, op, col, ci, lo_t, hi_t, e_lo, e_hi)
-            elif op in (Operation.MIN, Operation.MAX):
-                data[nm] = _serve_extreme(rep, op, col, ci, lo_t, hi_t, e_lo, e_hi)
-            else:  # FIRST / LAST
-                data[nm] = _serve_first_last(rep, op, col, ci, lo_t, hi_t, e_lo, e_hi)
-        return pa.RecordBatch.from_pandas(pd.DataFrame(data), schema=out_schema,
-                                          preserve_index=False)
+            rep = ir_map.get(p.output_name, p.output_name)
+            serve_part = serve_sketch if p.operation in fl.SKETCH_OPS else serve_scalar
+            arrays.append(serve_part(p, rep, lo_t, hi_t, e_lo, e_hi))
+        arrays = [a if a.type == f.type else a.cast(f.type)
+                  for a, f in zip(arrays, out_schema)]
+        return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     return serve
 

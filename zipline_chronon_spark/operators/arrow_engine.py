@@ -20,8 +20,10 @@ Window bounds come from ``_tail_bounds`` over the group-encoded time
 ``(gid << _SHIFT) + (ts - base)``; the naive-oracle suite runs against
 this path. The other sorted-group runners (entities_temporal, the approx
 serve and the sketch tile builder) share ``group_starts`` and
-``whole_groups``; entities_temporal also runs its parts through
-``_unpack``, ``_finish`` and ``_map_of``.
+``whole_groups``. ``_finish`` has two more callers: entities_temporal runs
+its parts through ``_unpack``, ``_finish`` and ``_map_of``, and the approx
+serve (approx_engine) runs each scalar part's tile IR column and head-event
+column through ``_finish`` before merging them.
 """
 
 from __future__ import annotations
@@ -327,9 +329,15 @@ def _finish(part: AggregationPart, values: pa.Array, fpos: np.ndarray, enc_f: np
     elif op in (Operation.HISTOGRAM, Operation.APPROX_FREQUENT_K,
                 Operation.APPROX_HEAVY_HITTERS_K):
         codes, sorted_dict = segments.rank_codes(values, fpos)
-        # map keys are str(value): only the small dictionary is touched
-        uniq_strs = pa.array([str(v) for v in sorted_dict.to_pylist()],
-                             type=pa.string())
+        # map keys are str(value): only the small dictionary is touched.
+        # Keys rank as the strings they print as, so count ties break the
+        # same way for every input type, as in the sketch tier's
+        # FreqSketch.top_k ('10' before '9')
+        strs = pa.array([str(v) for v in sorted_dict.to_pylist()], type=pa.string())
+        order = pc.array_sort_indices(strs).to_numpy()
+        rank = np.empty_like(order)
+        rank[order] = np.arange(len(order))
+        codes, uniq_strs = rank[codes], strs.take(pa.array(order))
         by_count = op != Operation.HISTOGRAM
         k = part.k if by_count is False else (part.k or 1)
         return segments.histogram_map(codes, uniq_strs, lo, hi, k, pa_type,

@@ -22,6 +22,13 @@ Both sketches: update (vectorized numpy), merge (associative,
 commutative), to_bytes/from_bytes (the IR that crosses tile boundaries and
 the KV tier). Hashing: splitmix64 for numeric columns (bit-exact across
 processes), pandas' fixed-key siphash for object/string columns.
+
+Every tier reads its sketch input through ``sketch_input``: the non-null
+values of an Arrow column as a typed numpy array. An integer column
+therefore hashes as integers (and prints as ``'16'`` in a frequent-items
+sketch) with or without nulls, on the tile build, the approx serve and the
+online head events alike; a pandas round trip would widen it to float64
+wherever it holds a null.
 """
 
 from __future__ import annotations
@@ -54,6 +61,14 @@ def hash64(values) -> np.ndarray:
     x *= _SPLITMIX_C2
     x ^= x >> np.uint64(31)
     return x
+
+
+def sketch_input(col) -> np.ndarray:
+    """The non-null values of an Arrow array as a typed numpy array
+    (int64 stays int64, strings become an object array)."""
+    if col.null_count:
+        col = col.drop_null()
+    return col.to_numpy(zero_copy_only=False)
 
 
 class HllSketch:

@@ -63,10 +63,6 @@ def _ds_to_ms(ds: str) -> int:
     return int(datetime.strptime(ds, "%Y-%m-%d").replace(tzinfo=timezone.utc).timestamp() * 1000)
 
 
-def _ms_to_ds(ms: int) -> str:
-    return datetime.fromtimestamp(ms / 1000, tz=timezone.utc).strftime("%Y-%m-%d")
-
-
 def date_range(start_ds: str, end_ds: str) -> list[str]:
     d0, d1 = date.fromisoformat(start_ds), date.fromisoformat(end_ds)
     return [(d0 + timedelta(days=i)).isoformat() for i in range((d1 - d0).days + 1)]

@@ -21,7 +21,6 @@ request keys).
 
 from __future__ import annotations
 
-import json
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -160,8 +159,3 @@ def consistency_report(
         "overall_match_rate": (total_m / (n * len(compared))) if n else None,
         "columns": cols_out,
     }
-
-
-def write_report(report: dict, path: str) -> None:
-    with open(path, "w") as f:
-        json.dump(report, f, indent=1, default=float)

@@ -16,12 +16,15 @@ the batch engine evaluated at the merged watermark — the parity oracle in
 tests/test_lambda_merge.py (the reference's strongest e2e shape:
 offline-join == online-fetch, FetcherTestUtil.scala:245-740).
 
-Everything runs as grouped Arrow tasks (applyInPandas); per-key state is
-O(sketch), never O(distinct) — the property the exact batch kernels cannot
-provide at the KV tier.
+Tiles come from the online upload's tile builder (one ``mapInArrow`` pass
+over key-sorted batches); collapse and finalize run as grouped Arrow
+tasks. Per-key state is O(sketch), never O(distinct) — the property the
+exact batch kernels cannot provide at the KV tier.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -60,37 +63,28 @@ def sketch_tiles(df: DataFrame, gb: GroupBy, hop_ms: int,
                  ts_col: str = "ts") -> DataFrame:
     """One row per (key, hop) with a sketch IR per approx aggregation —
     the tile granularity of the streaming half (hop_stream.py) expressed
-    as IR bytes instead of finalized values."""
+    as IR bytes instead of finalized values. Built by the online upload's
+    tile builder (``fetcher._ir_rows``), so both tiers write the same IR
+    from the same typed inputs."""
+    from zipline_chronon_spark.operators import pit_join
+
     parts = _sketch_parts(gb)
     keys = list(gb.key_columns)
     selects = {}
     for s in gb.sources:
         selects.update(s.query.selects or {})
-    from zipline_chronon_spark.operators import pit_join
-
     cols = [F.expr(selects.get(n, n)).alias(n)
             for n in dict.fromkeys([*keys, *(p.input_column for p in parts)])]
     ts_dt = df.select(F.col(ts_col).alias("t")).schema[0].dataType
     # normalize via the engine's shared rule: a long column IS epoch millis
     # (casting long->timestamp would read it as SECONDS and break hop math)
     p = df.select(*cols,
-                  pit_join._time_to_millis(F.col(ts_col), ts_dt).alias("__ts_ms"))
-    p = p.withColumn("hop_start_ms", (F.col("__ts_ms") / hop_ms).cast("long") * hop_ms)
-
-    key_fields = df.select(*[F.expr(selects.get(k, k)).alias(k) for k in keys]).schema
-    schema = key_fields.add("hop_start_ms", T.LongType())
-    for pt in parts:
-        schema = schema.add(_ir_col(pt), T.BinaryType())
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        out["hop_start_ms"] = [pdf["hop_start_ms"].iloc[0]]
-        for pt in parts:
-            vals = pdf[pt.input_column].dropna().to_numpy()
-            out[_ir_col(pt)] = [fl._new_sketch(pt.operation).update(vals).to_bytes()]
-        return pd.DataFrame(out)
-
-    return p.groupBy(*keys, "hop_start_ms").applyInPandas(build, schema=schema)
+                  pit_join._time_to_millis(F.col(ts_col), ts_dt).alias(pit_join.TS_COL))
+    gb_sk = dataclasses.replace(gb, aggregations=tuple(
+        a for a in gb.aggregations if a.operation in fl.SKETCH_OPS))
+    return fl._ir_rows(p, gb_sk, tile_hop=hop_ms).select(
+        *keys, F.col("__tile").alias("hop_start_ms"),
+        *[F.col(f"{pt.output_name}__sk").alias(_ir_col(pt)) for pt in parts])
 
 
 def collapse(tiles: DataFrame, gb: GroupBy) -> DataFrame:
