@@ -109,3 +109,31 @@ def test_spec_change_invalidates(spark, tset, tmp_path_factory):
     job2 = GroupByBackfill(spark, gb2, out, ROW_ID_EXPR)
     assert job2.hash != job1.hash
     assert job2.unfilled(ds_min, ds_max) == date_range(ds_min, ds_max)
+
+
+def test_join_source_backfill_releases_each_chunks_left(spark, tset, tmp_path_factory):
+    """A GroupBy over a JoinSource whose join mints its row ids and has a
+    TEMPORAL part: every chunk's ``compute_join`` persists its left to pin
+    the minted ids. The backfill releases it once the chunk is written, so
+    a finished run leaves no frame pinned and no persisted RDD behind."""
+    from zipline_chronon_spark.api import EventSource, Join, JoinPart, JoinSource, Query
+    from zipline_chronon_spark.operators import join as join_ops
+
+    path, ds_min, ds_max = tset
+    upstream = Join(name="up", left=EventSource(table=path, query=Query(time_column="ts")),
+                    parts=(JoinPart(_gb(path)),))
+    chained = GroupBy(
+        name="chained",
+        sources=(JoinSource(join=upstream, query=Query(time_column="ts")),),
+        key_columns=("conv_id",),
+        aggregations=(Aggregation("bf_counts_text_count_1d", Operation.MAX, windows=(None,)),),
+        tie_breaker_column="turn_idx",
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())
+    out = str(tmp_path_factory.mktemp("bf") / "out_chained")
+    res = GroupByBackfill(spark, chained, out, ROW_ID_EXPR).run(ds_min, ds_max, step_days=2)
+    assert len(res["computed_chunks"]) >= 2
+    assert join_ops._PERSISTED == [], "a chunk's persisted left outlived its write"
+    assert not set(persistent().keys()) - before, "the backfill left persisted RDDs"
+    assert spark.read.parquet(out).where("bf_counts_text_count_1d_max IS NOT NULL").count() > 0

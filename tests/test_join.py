@@ -143,3 +143,37 @@ def test_join_skew_keys_excluded(spark, setup):
     got = compute_join(spark, join).toPandas()
     assert (got["conversation_id"] != hot).all()
     assert len(got) == (q["conversation_id"] != hot).sum()
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan after a full run (AQE's final plan only)."""
+    df.write.format("noop").mode("overwrite").save()
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def test_fused_parts_run_joinless(spark, setup):
+    """Two fusable TEMPORAL parts keyed by the left's own key columns (the
+    ``join_flagship`` shape) run as ONE engine pass with the left's columns
+    passed through: one MapInArrow, and no join on the row id — the only
+    join left is the engine's semi-join prefilter of the events."""
+    import re
+
+    _, _, path, _ = setup
+    src = specs.transcripts_source(path)
+    gb_a = GroupBy(name="fa", sources=(src,), key_columns=("conv_id",),
+                   aggregations=(Aggregation("text", Operation.COUNT, windows=(specs.W1D,)),),
+                   tie_breaker_column="turn_idx")
+    gb_b = GroupBy(name="fb", sources=(src,), key_columns=("conv_id",),
+                   aggregations=(Aggregation("len_text", Operation.SUM, windows=(specs.W1D,)),),
+                   tie_breaker_column="turn_idx")
+    join = Join(name="fused", left=EventSource(table=path, query=Query(time_column="ts")),
+                parts=(JoinPart(gb_a), JoinPart(gb_b, prefix="p")),
+                row_ids=("conv_id", "turn_idx"))
+    out = compute_join(spark, join)
+    plan = _final_plan(out)
+    assert plan.count("MapInArrow") == 1, plan
+    joins = re.findall(r"\b(\w*Join)\b(.*)", plan)
+    assert joins, plan
+    for _, rest in joins:
+        assert "__row_id" not in rest and "LeftSemi" in rest, plan
+    assert {"fa_text_count_1d", "p_fb_len_text_sum_1d"} <= set(out.columns)

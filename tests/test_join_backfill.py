@@ -23,7 +23,7 @@ from zipline_chronon_spark.api import (
     TimeUnit,
     Window,
 )
-from zipline_chronon_spark.plans.backfill import date_range
+from zipline_chronon_spark.plans.backfill import date_range, fill
 from zipline_chronon_spark.plans.join_backfill import JoinBackfill
 
 MS_DAY = 86_400_000
@@ -94,12 +94,12 @@ def test_kill_resume_recomputes_only_missing(spark, jset, tmp_path_factory):
     # B: simulate a kill — part 1 fully done, part 2 half done, no merge
     job = JoinBackfill(spark, _join(path), out_b)
     days = date_range(ds_min, ds_max)
-    job._run_node("tmp", job.part_lineages["tmp"], job.part_paths["tmp"],
-                  job.part_hashes["tmp"], ds_min, ds_max, 365,
-                  lambda a_, b_: job._part_chunk(job.join.parts[0], a_, b_))
-    job._run_node("snp", job.part_lineages["snp"], job.part_paths["snp"],
-                  job.part_hashes["snp"], ds_min, days[2], 365,
-                  lambda a_, b_: job._part_chunk(job.join.parts[1], a_, b_))
+    fill(job.catalog, job.part_lineages["tmp"], job.part_paths["tmp"],
+         job.part_hashes["tmp"], ds_min, ds_max, 365,
+         lambda a_, b_: job._part_chunk(job.join.parts[0], a_, b_), node="tmp")
+    fill(job.catalog, job.part_lineages["snp"], job.part_paths["snp"],
+         job.part_hashes["snp"], ds_min, days[2], 365,
+         lambda a_, b_: job._part_chunk(job.join.parts[1], a_, b_), node="snp")
 
     # resume: full run must skip part-1 entirely and only fill snp's tail
     res = job.run(ds_min, ds_max, step_days=365)

@@ -63,6 +63,12 @@ class Window:
             return MILLIS_HOUR
         return 5 * MILLIS_MINUTE
 
+    def tail_start(self, t):
+        """Start of the sawtooth window at query time ``t`` (an int or an
+        int64 numpy array): ``t - millis`` rounded down to the tail hop."""
+        hop = self.tail_hop_millis()
+        return ((t - self.millis) // hop) * hop
+
 
 class Operation(enum.Enum):
     # thrift/api.thrift:198-230 — same enum values
@@ -87,18 +93,6 @@ class Operation(enum.Enum):
     APPROX_FREQUENT_K = 18
     APPROX_HEAVY_HITTERS_K = 19
     UNIQUE_TOP_K = 20
-
-    @property
-    def is_k_op(self) -> bool:
-        return self in (
-            Operation.LAST_K,
-            Operation.FIRST_K,
-            Operation.TOP_K,
-            Operation.BOTTOM_K,
-            Operation.UNIQUE_TOP_K,
-            Operation.APPROX_FREQUENT_K,
-            Operation.APPROX_HEAVY_HITTERS_K,
-        )
 
 
 class Accuracy(enum.Enum):

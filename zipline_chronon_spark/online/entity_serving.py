@@ -139,8 +139,7 @@ def merge_mutation_state(parts, collapsed: Optional[dict],
                 + [ir for _, ir in tiles]
             evs = [m for m in mutations if m["mts"] < T and m["ts"] < T]
         else:
-            hop = p.window.tail_hop_millis()
-            tail = ((T - p.window.millis) // hop) * hop
+            tail = p.window.tail_start(T)
             irs = [ir for hs, ir in tiles if hs >= tail]
             evs = [m for m in mutations
                    if m["mts"] < T and tail <= m["ts"] < T]

@@ -64,8 +64,7 @@ def _tile_hop(gb: GroupBy) -> Optional[int]:
 
 def _tile_floor(gb: GroupBy, batch_end_ms: int) -> Optional[int]:
     """Oldest tile needed to serve any windowed part at T >= batch_end."""
-    floors = [((batch_end_ms - p.window.millis) // p.window.tail_hop_millis())
-              * p.window.tail_hop_millis()
+    floors = [p.window.tail_start(batch_end_ms)
               for p in gb.parts() if p.window is not None]
     return min(floors) if floors else None
 
@@ -531,8 +530,7 @@ def merge_state(parts, collapsed: Optional[dict],
             irs.extend(ir for _, ir in tiles)
             evs = events
         else:
-            hop = p.window.tail_hop_millis()
-            tail = ((T - p.window.millis) // hop) * hop
+            tail = p.window.tail_start(T)
             irs.extend(ir for hs, ir in tiles if hs >= tail)
             evs = [e for e in events if e["ts"] >= tail]
         out[p.output_name] = finalize_part(p, irs, evs)

@@ -581,8 +581,7 @@ def _make_group_server(parts, out_schema, ir_map=None):
             if p.window is None:
                 lo_t, hi_t, e_lo = lo_t_unb, hi_t_head, e_lo_head
             else:
-                w, th = p.window.millis, p.window.tail_hop_millis()
-                tail = ((T - w) // th) * th
+                tail = p.window.tail_start(T)
                 lo_t = np.searchsorted(enc_tile, gq_enc + np.maximum(tail - base, 0))
                 hi_t = np.maximum(hi_t_head, lo_t)
                 e_lo = np.minimum(np.searchsorted(

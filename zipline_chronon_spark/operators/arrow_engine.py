@@ -75,8 +75,7 @@ def _tail_bounds(enc_f, gid_q, q_ts, base, part, snapshot):
         if snapshot:
             tail_abs = q_ts + 1 - part.window.millis
         else:
-            hop = part.window.tail_hop_millis()
-            tail_abs = ((q_ts - part.window.millis) // hop) * hop
+            tail_abs = part.window.tail_start(q_ts)
         rel = np.maximum(tail_abs - base, 0)
         lo = np.searchsorted(enc_f, (gid_q << _SHIFT) + rel, side="left")
     return np.minimum(lo, hi), hi

@@ -35,16 +35,17 @@ ROW_ID = pit_join.ROW_ID
 MS_DAY = 86_400_000
 
 # persisted-subtree registry (same lifecycle idiom as operators/dedup.py):
-# _snapshot_events_part pins its (key x day) query frame and compute_join
-# pins a minted-id left — both must stay cached until the join OUTPUT is
-# materialized (the persist is what makes monotonically_increasing_id stable
-# across plan branches), after which a long-lived session should call
-# release_caches(). plans/join_backfill.py does so after every chunk write.
+# compute_join pins a minted-id left when a TEMPORAL part's features join
+# back on that id; it must stay cached until the join OUTPUT is materialized
+# (the persist is what makes monotonically_increasing_id stable across plan
+# branches), after which a long-lived session should call release_caches().
+# plans.backfill.fill does so after every chunk it writes, for every
+# resumable job (a GroupBy over a JoinSource runs compute_join per chunk).
 _PERSISTED: list[DataFrame] = []
 
 
 def release_caches() -> None:
-    """Unpersist every frame pinned by compute_join/_snapshot_events_part.
+    """Unpersist every frame pinned by compute_join.
 
     Only call AFTER the join result has been materialized (written or
     collected): the persisted frames pin minted row ids, and dropping them
@@ -202,23 +203,77 @@ def compute_part(
 
 def attach_part(out: DataFrame, part_df: DataFrame, key_cols: list[str],
                 mapping: dict[str, str]) -> DataFrame:
-    """Left-join a computed part onto a frame carrying ROW_ID + TS_COL +
-    the left key columns. SNAPSHOT parts join on (mapped keys, ts-day) —
-    null-safe on keys so a null-keyed left row behaves like the TEMPORAL
-    path (features stay null via the left join)."""
+    """Left-join a computed part (or a part table) onto a frame carrying
+    ROW_ID + TS_COL + the left key columns, as coalescedJoin
+    (JoinUtils.scala:159-190): a feature column already present (from a
+    bootstrap table) keeps its value and falls back to the fresh one.
+    SNAPSHOT parts join on (mapped keys, ts-day) — null-safe on keys so a
+    null-keyed left row behaves like the TEMPORAL path (features stay null
+    via the left join)."""
+    collisions = [c for c in part_df.columns if c not in key_cols and c in out.columns]
+    for c in collisions:
+        part_df = part_df.withColumnRenamed(c, f"__fresh_{c}")
     if key_cols == [ROW_ID]:
-        return out.join(part_df, ROW_ID, "left")
-    left_col = {r: l for l, r in mapping.items()}
-    pk = {c: f"__pk_{i}" for i, c in enumerate(key_cols)}
-    for c, a in pk.items():
-        part_df = part_df.withColumnRenamed(c, a)
-    lday = (out[pit_join.TS_COL] / MS_DAY).cast("long")
-    cond = lday == part_df[pk["__day"]]
-    for r in key_cols:
-        if r == "__day":
-            continue
-        cond = cond & out[left_col.get(r, r)].eqNullSafe(part_df[pk[r]])
-    return out.join(part_df, cond, "left").drop(*pk.values())
+        out = out.join(part_df, ROW_ID, "left")
+    else:
+        left_col = {r: l for l, r in mapping.items()}
+        pk = {c: f"__pk_{i}" for i, c in enumerate(key_cols)}
+        for c, a in pk.items():
+            part_df = part_df.withColumnRenamed(c, a)
+        lday = (out[pit_join.TS_COL] / MS_DAY).cast("long")
+        cond = lday == part_df[pk["__day"]]
+        for r in key_cols:
+            if r == "__day":
+                continue
+            cond = cond & out[left_col.get(r, r)].eqNullSafe(part_df[pk[r]])
+        out = out.join(part_df, cond, "left").drop(*pk.values())
+    for c in collisions:
+        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__fresh_{c}"))).drop(f"__fresh_{c}")
+    return out
+
+
+def left_scan(spark: SparkSession, join: Join) -> DataFrame:
+    """The join's left (render_left) without its skew keys."""
+    left = render_left(spark, join.left)
+    for col, values in join.skew_keys:
+        left = left.where(skew_filter(col, values))
+    return left
+
+
+def bootstrap_tables(spark: SparkSession, join: Join) -> list[tuple]:
+    """(part, frame) for each bootstrap part: its table under its wheres."""
+    out = []
+    for bp in join.bootstrap_parts:
+        bdf = pit_join._read_table(spark, bp.table)
+        for w in bp.wheres:
+            bdf = bdf.where(w)
+        out.append((bp, bdf))
+    return out
+
+
+def uncovered(part, left: DataFrame, bootstraps: list[tuple]) -> DataFrame:
+    """Covering-set pruning (Join.scala:130-193, a NOT IN on the matched
+    keys at Join.scala:48-59): a left row matched by a bootstrap table that
+    provides ALL of this part's output columns already has its values, so
+    only the other rows reach the part engine. The output is unchanged; the
+    win is skipped compute when coverage is high."""
+    expected = {f"{part.full_prefix}_{ap.output_name}" for ap in part.group_by.parts()}
+    for bp, bdf in bootstraps:
+        if expected <= set(bdf.columns) - set(bp.key_columns):
+            left = left.join(bdf.select(*bp.key_columns), list(bp.key_columns), "left_anti")
+    return left
+
+
+def derive(out: DataFrame, join: Join, keep: tuple = ()) -> DataFrame:
+    """The join's derivations over the merged frame; TS_COL, ROW_ID,
+    ``keep`` and the left's selects survive a derivation list without "*"."""
+    if not join.derivations:
+        return out
+    from zipline_chronon_spark.operators.derive import apply_derivations
+
+    keep = [pit_join.TS_COL, ROW_ID, *keep,
+            *dict.fromkeys(n for n in (join.left.query.selects or {}) if n in out.columns)]
+    return apply_derivations(out, join.derivations, always_keep=keep)
 
 
 def compute_join(
@@ -226,24 +281,20 @@ def compute_join(
     join: Join,
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
-    left = render_left(spark, join.left)
-    for col, values in join.skew_keys:
-        left = left.where(skew_filter(col, values))
+    left = left_scan(spark, join)
 
     # row id: user-specified rowIds (api.thrift:434-436) or a minted id.
     # monotonically_increasing_id is only stable within one plan execution,
     # so we persist the left to pin it (the reference instead materializes
     # the left to a table — same idea, Spark-native). The pin is only
     # NEEDED when the minted id crosses plan branches (a TEMPORAL part's
-    # feature frame joins back on it, or bootstrap covering reuses it); a
-    # SNAPSHOT-only join merges on (keys, day), so the id never leaves this
-    # one plan and the persist+count materialization pass is skipped.
+    # feature frame joins back on it); a SNAPSHOT-only join merges on
+    # (keys, day), so the id never leaves this one plan and the
+    # persist+count materialization pass is skipped.
     minted = not join.row_ids
-    id_crosses_branches = bool(join.bootstrap_parts) or any(
-        p.group_by.accuracy != Accuracy.SNAPSHOT for p in join.parts)
     if minted:
         left = left.withColumn(ROW_ID, F.monotonically_increasing_id())
-        if id_crosses_branches:
+        if any(p.group_by.accuracy != Accuracy.SNAPSHOT for p in join.parts):
             left = left.persist()
             _PERSISTED.append(left)
             left.count()  # materialize so every branch sees identical ids
@@ -252,21 +303,12 @@ def compute_join(
         left = left.withColumn(ROW_ID, rid)
 
     # bootstrap: pre-fill feature columns from precomputed tables; joined
-    # FIRST so the coalesce below gives bootstrap values precedence
-    # (JoinBootstrapJob.scala). Each table also leaves a hit marker so the
-    # covering-set logic below can SKIP recomputing fully-covered rows
-    # (Join.scala:130-193 matched_hashes semantics).
+    # FIRST so attach_part's coalesce gives bootstrap values precedence
+    # (JoinBootstrapJob.scala)
+    bootstraps = bootstrap_tables(spark, join)
     out = left
-    bs_markers: list[tuple[str, set[str]]] = []
-    for i, bp in enumerate(join.bootstrap_parts):
-        bdf = pit_join._read_table(spark, bp.table)
-        for w in bp.wheres:
-            bdf = bdf.where(w)
-        provided = set(bdf.columns) - set(bp.key_columns)
-        marker = f"__bs_hit_{i}"
-        out = out.join(bdf.withColumn(marker, F.lit(True)),
-                       list(bp.key_columns), "left")
-        bs_markers.append((marker, provided))
+    for bp, bdf in bootstraps:
+        out = out.join(bdf, list(bp.key_columns), "left")
 
     # ---- fuse adjacent TEMPORAL parts sharing one engine pass ------------
     # N parts over the SAME sources/keys/tie rule each pay a full
@@ -295,7 +337,11 @@ def compute_join(
         else:
             runs.append((sig, [part]))
 
-    def _fused_frame(parts_run) -> Optional[DataFrame]:
+    def _fused_frame(parts_run, carry: list[str]) -> Optional[DataFrame]:
+        """One engine pass for a run of fusable parts: (ROW_ID, the
+        ``carry`` left columns passed through the engine, every part's
+        prefixed features), or None when two different aggregations share
+        an output name."""
         aggs: list = []
         for p in parts_run:
             for a in p.group_by.aggregations:
@@ -311,103 +357,41 @@ def compute_join(
         feats = pit_join.compute_group_by(
             spark, _with_skew_wheres(fused_gb, join.skew_keys, mapping), left,
             row_id=ROW_ID, key_mapping=mapping,
-            query_time_col=pit_join.TS_COL, num_partitions=num_partitions)
-        sel = [F.col(ROW_ID)]
+            query_time_col=pit_join.TS_COL, num_partitions=num_partitions,
+            passthrough_cols=carry)
+        sel = [F.col(ROW_ID)] + [F.col(c) for c in carry]
         for p in parts_run:
             for ap in p.group_by.parts():
                 sel.append(F.col(ap.output_name)
                            .alias(f"{p.full_prefix}_{ap.output_name}"))
         return feats.select(*sel)
 
-    def _passthrough_frame(parts_run) -> Optional[DataFrame]:
-        """When ONE temporal engine pass covers EVERY part (and key names
-        need no mapping), the left's columns ride through the engine as
-        passthrough and the merge join on the row id disappears — the
-        whole join is scan → one events∪left shuffle → serve."""
-        base = parts_run[0]
-        mapping = base.left_to_right()
-        if any(l != r for l, r in mapping.items()):
-            return None  # left key cols named differently: keep the join
-        aggs: list = []
-        for p in parts_run:
-            for a in p.group_by.aggregations:
-                if a not in aggs:
-                    aggs.append(a)
-        fused_gb = dataclasses.replace(base.group_by, aggregations=tuple(aggs))
-        try:
-            fused_gb.parts()
-        except ValueError:
-            return None
+    # When ONE temporal engine pass covers EVERY part (and key names need no
+    # mapping), the left's columns ride through the engine as passthrough
+    # and the merge join on the row id disappears — the whole join is scan
+    # → one events∪left shuffle → serve. The select matches the join-based
+    # layout exactly: a USING join emits the join key first, then the
+    # left's other columns, then the part columns.
+    if len(runs) == 1 and runs[0][0] is not None:
+        parts_run = runs[0][1]
         feat_names = [f"{p.full_prefix}_{ap.output_name}"
                       for p in parts_run for ap in p.group_by.parts()]
-        if (len(set(feat_names)) != len(feat_names)
-                or set(feat_names) & set(left.columns)):
-            return None
-        feats = pit_join.compute_group_by(
-            spark, _with_skew_wheres(fused_gb, join.skew_keys, mapping), left,
-            row_id=ROW_ID, key_mapping=mapping,
-            query_time_col=pit_join.TS_COL, num_partitions=num_partitions,
-            passthrough_cols=[c for c in left.columns if c != ROW_ID])
-        # match the join-based layout exactly: a USING join emits the join
-        # key first, then the left's other columns, then the part columns
-        sel = [F.col(ROW_ID)] + [F.col(c) for c in left.columns if c != ROW_ID]
-        for p in parts_run:
-            for ap in p.group_by.parts():
-                sel.append(F.col(ap.output_name)
-                           .alias(f"{p.full_prefix}_{ap.output_name}"))
-        return feats.select(*sel)
-
-    def _attach_coalesced(out, part_df, key_cols, mapping):
-        # coalescedJoin: on collision prefer the already-present (bootstrap)
-        # value, else the freshly computed one (JoinUtils.scala:159-190)
-        collisions = [c for c in part_df.columns
-                      if c not in key_cols and c in out.columns]
-        for c in collisions:
-            part_df = part_df.withColumnRenamed(c, f"__fresh_{c}")
-        out = attach_part(out, part_df, key_cols, mapping)
-        for c in collisions:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__fresh_{c}"))).drop(f"__fresh_{c}")
-        return out
-
-    if len(runs) == 1 and runs[0][0] is not None and not join.bootstrap_parts:
-        joinless = _passthrough_frame(runs[0][1])
-        if joinless is not None:
-            runs, out = [], joinless
+        if (all(l == r for l, r in parts_run[0].left_to_right().items())
+                and len(set(feat_names)) == len(feat_names)
+                and not set(feat_names) & set(left.columns)):
+            joinless = _fused_frame(parts_run, [c for c in left.columns if c != ROW_ID])
+            if joinless is not None:
+                runs, out = [], joinless
 
     for sig, parts_run in runs:
-        fused = _fused_frame(parts_run) if len(parts_run) > 1 else None
+        fused = _fused_frame(parts_run, []) if len(parts_run) > 1 else None
         if fused is not None:
-            out = _attach_coalesced(out, fused, [ROW_ID],
-                                    parts_run[0].left_to_right())
+            out = attach_part(out, fused, [ROW_ID], parts_run[0].left_to_right())
             continue
         for part in parts_run:
-            # covering-set: a left row that matched a bootstrap table
-            # providing ALL of this part's output columns already has its
-            # values — feed only the uncovered rows to the part engine
-            # (correctness is unchanged; the win is skipped compute when
-            # coverage is high)
-            expected = {f"{part.full_prefix}_{ap.output_name}"
-                        for ap in part.group_by.parts()}
-            covering = [m for m, provided in bs_markers if expected <= provided]
-            part_left = left
-            if covering:
-                uncovered = F.lit(True)
-                for m in covering:
-                    uncovered = uncovered & F.col(m).isNull()
-                part_left = (left.join(
-                    out.select(ROW_ID, *covering), ROW_ID).where(uncovered)
-                    .drop(*covering))
-            part_df, key_cols = compute_part(spark, part, part_left,
+            part_df, key_cols = compute_part(spark, part, uncovered(part, left, bootstraps),
                                              join.skew_keys, num_partitions)
-            out = _attach_coalesced(out, part_df, key_cols,
-                                    part.left_to_right())
+            out = attach_part(out, part_df, key_cols, part.left_to_right())
 
-    out = out.drop(*[m for m, _ in bs_markers])
-    if join.derivations:
-        from zipline_chronon_spark.operators.derive import apply_derivations
-
-        keep = [pit_join.TS_COL, ROW_ID,
-                *dict.fromkeys(n for n in (join.left.query.selects or {}) if n in out.columns)]
-        out = apply_derivations(out, join.derivations, always_keep=keep)
-
+    out = derive(out, join)
     return out.drop(ROW_ID, pit_join.TS_COL) if minted else out.drop(pit_join.TS_COL)

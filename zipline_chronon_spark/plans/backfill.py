@@ -8,7 +8,9 @@ parquet warehouse (Iceberg-ready: every chunk is written by
 ``insert_chunk`` through the catalog seam in catalog.py — swap in
 ``IcebergCatalog`` when an Iceberg catalog is configured).
 
-Contract (north rule):
+Contract (north rule), kept by ``fill`` for every resumable job (this
+module's GroupByBackfill, each node of plans/join_backfill.py and
+plans/staging.py's StagingQueryJob):
  - rerunning a killed backfill recomputes ONLY missing date partitions,
  - output is byte-identical to an uninterrupted run (deterministic engine),
  - every chunk appends a lineage record: partition range, row count, wall
@@ -36,6 +38,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from zipline_chronon_spark.api import GroupBy
+from zipline_chronon_spark.operators import join as join_ops
 from zipline_chronon_spark.operators import pit_join
 from zipline_chronon_spark.session import cds_mapped
 
@@ -128,6 +131,73 @@ def chunk_record(chunk: list[str], written: dict, t0: float, h: str, **extra) ->
     }
 
 
+def unfilled(catalog, lineage: Lineage, path: str, h: str,
+             start_ds: str, end_ds: str) -> list[str]:
+    """Output-vs-requested partition diff (unfilledRanges,
+    TableUtils.scala:415-499): filled = lineage says success under the
+    spec hash ``h`` AND the partition physically exists in the table
+    (robust to manual partition deletion)."""
+    want = date_range(start_ds, end_ds)
+    have = lineage.filled_partitions(h)
+    if have:
+        have &= set(catalog.partitions(path))
+    return [ds for ds in want if ds not in have]
+
+
+def _chunks(ds_list: list[str], step_days: int) -> list[list[str]]:
+    """Contiguous runs, each at most step_days long (PartitionRange.steps)."""
+    out: list[list[str]] = []
+    run: list[str] = []
+    for ds in ds_list:
+        if run and (date.fromisoformat(ds) - date.fromisoformat(run[-1])).days == 1 \
+                and len(run) < step_days:
+            run.append(ds)
+        else:
+            if run:
+                out.append(run)
+            run = [ds]
+    if run:
+        out.append(run)
+    return out
+
+
+def fill(catalog, lineage: Lineage, path: str, spec_hash: str, start_ds: str,
+         end_ds: str, step_days: int, compute_chunk, partition_col: str = "ds",
+         **record) -> dict:
+    """Fill what is missing of table ``path`` over [start_ds, end_ds]: the
+    one planner behind every resumable job (GroupBy, join part, join merge,
+    staging query).
+
+    A spec hash other than ``spec_hash`` on any successful lineage record
+    archives the table first (TableUtils autoArchive / JoinUtils.scala:293-329
+    tablesToRecompute; the lineage moves with the table directory). The
+    unfilled days are then written in contiguous chunks of at most
+    ``step_days``: ``compute_chunk(ds_from, ds_to)`` builds each chunk's
+    frame, ``insert_chunk`` writes it, the frames the join operators pinned
+    for it are released, and its lineage record (``record`` adds fields) is
+    appended. Returns the chunks' records, the archive destination and the
+    number of requested days skipped as already filled."""
+    stale = [r for r in lineage.records()
+             if r["status"] == "success" and r["spec_hash"] != spec_hash]
+    archived = catalog.archive(path, reason="spec_hash_changed") if stale else None
+    done: list[dict] = []
+    for chunk in _chunks(unfilled(catalog, lineage, path, spec_hash, start_ds, end_ds),
+                         step_days):
+        t0 = time.time()
+        written = insert_chunk(catalog, compute_chunk(chunk[0], chunk[-1]), path, chunk,
+                               partition_col=partition_col)
+        # the chunk is on disk: a long backfill must not keep every chunk's
+        # pinned minted-id join left cached for its lifetime
+        join_ops.release_caches()
+        rec = chunk_record(chunk, written, t0, spec_hash, **record)
+        lineage.append(rec)
+        done.append(rec)
+    return {"computed_chunks": done,
+            "archived": archived,
+            "skipped": len(date_range(start_ds, end_ds)) - sum(
+                len(c["partitions"]) for c in done)}
+
+
 class GroupByBackfill:
     """Chunked self-enrichment backfill of a GroupBy over a date range.
 
@@ -158,32 +228,8 @@ class GroupByBackfill:
         self.hash = spec_hash(gb)
 
     def unfilled(self, start_ds: str, end_ds: str) -> list[str]:
-        """Output-vs-requested partition diff (unfilledRanges,
-        TableUtils.scala:415-499): filled = lineage says success under the
-        current spec hash AND the partition physically exists in the table
-        (robust to manual partition deletion)."""
-        want = date_range(start_ds, end_ds)
-        have = self.lineage.filled_partitions(self.hash)
-        if have:
-            have &= set(self.catalog.partitions(self.output_path))
-        return [ds for ds in want if ds not in have]
-
-    @staticmethod
-    def _chunks(ds_list: list[str], step_days: int) -> list[list[str]]:
-        """Contiguous runs, each at most step_days long (PartitionRange.steps)."""
-        out: list[list[str]] = []
-        run: list[str] = []
-        for ds in ds_list:
-            if run and (date.fromisoformat(ds) - date.fromisoformat(run[-1])).days == 1 \
-                    and len(run) < step_days:
-                run.append(ds)
-            else:
-                if run:
-                    out.append(run)
-                run = [ds]
-        if run:
-            out.append(run)
-        return out
+        return unfilled(self.catalog, self.lineage, self.output_path, self.hash,
+                        start_ds, end_ds)
 
     def _compute_chunk(self, ds_from: str, ds_to: str) -> DataFrame:
         q_lo = _ds_to_ms(ds_from)
@@ -203,31 +249,6 @@ class GroupByBackfill:
             "ds", F.date_format(F.col("__out_ts").cast("timestamp"), "yyyy-MM-dd")
         ).drop("__out_ts")
 
-    def _archive_if_spec_changed(self) -> Optional[str]:
-        """A changed semantic hash invalidates every existing partition:
-        archive the table (TableUtils autoArchive / JoinUtils.scala:293-329
-        tablesToRecompute) and start a fresh lineage under the new hash."""
-        stale = [r for r in self.lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != self.hash]
-        if not stale:
-            return None
-        dest = self.catalog.archive(self.output_path, reason="spec_hash_changed")
-        # lineage moved with the table directory; nothing else to reset
-        return dest
-
     def run(self, start_ds: str, end_ds: str, step_days: int = 30) -> dict:
-        archived = self._archive_if_spec_changed()
-        todo = self.unfilled(start_ds, end_ds)
-        done: list[dict] = []
-        for chunk in self._chunks(todo, step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
-            written = insert_chunk(self.catalog, self._compute_chunk(ds_from, ds_to),
-                                   self.output_path, chunk)
-            rec = chunk_record(chunk, written, t0, self.hash)
-            self.lineage.append(rec)
-            done.append(rec)
-        return {"computed_chunks": done,
-                "archived": archived,
-                "skipped": len(date_range(start_ds, end_ds)) - sum(
-                    len(c["partitions"]) for c in done)}
+        return fill(self.catalog, self.lineage, self.output_path, self.hash,
+                    start_ds, end_ds, step_days, self._compute_chunk)

@@ -32,7 +32,6 @@ already-filled) part tables.
 from __future__ import annotations
 
 import os
-import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,24 +42,31 @@ from zipline_chronon_spark.operators import pit_join
 from zipline_chronon_spark.operators.join import (
     ROW_ID,
     attach_part,
+    bootstrap_tables,
     compute_part,
-    render_left,
-    skew_filter,
+    derive,
+    left_scan,
+    uncovered,
 )
 from zipline_chronon_spark.plans.backfill import (
     MS_DAY,
     Lineage,
     _ds_to_ms,
-    chunk_record,
     date_range,
-    insert_chunk,
+    fill,
     spec_hash,
 )
 
 
 class JoinBackfill:
     """Chunked, resumable backfill of a multi-part Join over a date range
-    (dates taken from the left's event time)."""
+    (dates taken from the left's event time).
+
+    Each part, then the merge, is one ``plans.backfill.fill`` node with its
+    own table, lineage and spec hash. Their chunk frames are built from
+    ``operators.join``'s own steps (``left_scan``, ``uncovered``,
+    ``compute_part``, ``attach_part``, ``derive``), so the backfill and
+    ``compute_join`` share one covering rule and one coalesced merge."""
 
     def __init__(
         self,
@@ -100,11 +106,8 @@ class JoinBackfill:
 
     def _left_chunk(self, ds_from: str, ds_to: str) -> DataFrame:
         lo, hi = _ds_to_ms(ds_from), _ds_to_ms(ds_to) + MS_DAY
-        left = render_left(self.spark, self.join.left)
-        for col, values in self.join.skew_keys:
-            left = left.where(skew_filter(col, values))
-        left = left.where((F.col(pit_join.TS_COL) >= lo)
-                          & (F.col(pit_join.TS_COL) < hi))
+        left = left_scan(self.spark, self.join).where(
+            (F.col(pit_join.TS_COL) >= lo) & (F.col(pit_join.TS_COL) < hi))
         left = left.withColumn(ROW_ID, F.xxhash64(*self.join.row_ids)).withColumn(
             "ds", F.date_format((F.col(pit_join.TS_COL) / 1000).cast("timestamp"),
                                 "yyyy-MM-dd"))
@@ -133,66 +136,11 @@ class JoinBackfill:
                 f"left source).")
         self._uniq_checked.add(rng)
 
-    # -- generic partition-diffed runner -------------------------------------
-
-    def _unfilled(self, lineage: Lineage, path: str, h: str,
-                  start_ds: str, end_ds: str) -> list[str]:
-        want = date_range(start_ds, end_ds)
-        have = lineage.filled_partitions(h)
-        if have:
-            have &= set(self.catalog.partitions(path))
-        return [ds for ds in want if ds not in have]
-
-    def _archive_if_changed(self, lineage: Lineage, path: str, h: str) -> Optional[str]:
-        stale = [r for r in lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != h]
-        if not stale:
-            return None
-        return self.catalog.archive(path, reason="spec_hash_changed")
-
-    def _run_node(self, name: str, lineage: Lineage, path: str, h: str,
-                  start_ds: str, end_ds: str, step_days: int,
-                  compute_chunk) -> list[dict]:
-        from zipline_chronon_spark.plans.backfill import GroupByBackfill
-
-        self._archive_if_changed(lineage, path, h)
-        todo = self._unfilled(lineage, path, h, start_ds, end_ds)
-        done: list[dict] = []
-        for chunk in GroupByBackfill._chunks(todo, step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
-            written = insert_chunk(self.catalog, compute_chunk(ds_from, ds_to), path, chunk)
-            # the chunk is on disk: release frames the part engine pinned
-            # (snapshot qd / minted left) so a long resumable backfill does
-            # not accumulate cached partitions for the whole job lifetime
-            from zipline_chronon_spark.operators import join as join_ops
-
-            join_ops.release_caches()
-            rec = chunk_record(chunk, written, t0, h, node=name)
-            lineage.append(rec)
-            done.append(rec)
-        return done
-
     # -- nodes ----------------------------------------------------------------
 
-    def _covering_filter(self, part, left: DataFrame) -> DataFrame:
-        """Covering-set pruning (Join.scala:130-193, same rule as
-        compute_join): left rows matched by a bootstrap table that provides
-        this part's FULL output schema never enter the part engine — the
-        merge step coalesces their values from the bootstrap table."""
-        expected = {f"{part.full_prefix}_{ap.output_name}"
-                    for ap in part.group_by.parts()}
-        for bp in self.join.bootstrap_parts:
-            bdf = pit_join._read_table(self.spark, bp.table)
-            for w in bp.wheres:
-                bdf = bdf.where(w)
-            if expected <= set(bdf.columns) - set(bp.key_columns):
-                left = left.join(bdf.select(*bp.key_columns),
-                                 list(bp.key_columns), "left_anti")
-        return left
-
     def _part_chunk(self, part, ds_from: str, ds_to: str) -> DataFrame:
-        left = self._covering_filter(part, self._left_chunk(ds_from, ds_to))
+        left = uncovered(part, self._left_chunk(ds_from, ds_to),
+                         bootstrap_tables(self.spark, self.join))
         # bound the right scan to what this chunk's windows can see
         # (GroupBy.scala:741-788); unbounded windows need all history
         max_w = part.group_by.max_window_millis()
@@ -219,52 +167,34 @@ class JoinBackfill:
 
     def _merge_chunk(self, ds_from: str, ds_to: str) -> DataFrame:
         out = self._left_chunk(ds_from, ds_to)
-        for bp in self.join.bootstrap_parts:
-            bdf = pit_join._read_table(self.spark, bp.table)
-            for w in bp.wheres:
-                bdf = bdf.where(w)
+        for bp, bdf in bootstrap_tables(self.spark, self.join):
             out = out.join(bdf, list(bp.key_columns), "left")
         chunk_ds = date_range(ds_from, ds_to)
         for part in self.join.parts:
-            p = part.full_prefix
-            pdf = (self.catalog.read(self.part_paths[p])
+            pdf = (self.catalog.read(self.part_paths[part.full_prefix])
                    .where(F.col("ds").cast("string").isin(chunk_ds))
                    .drop("ds"))
-            collisions = [c for c in pdf.columns if c != ROW_ID and c in out.columns]
-            for c in collisions:
-                pdf = pdf.withColumnRenamed(c, f"__fresh_{c}")
-            out = out.join(pdf, ROW_ID, "left")
-            for c in collisions:
-                out = out.withColumn(
-                    c, F.coalesce(F.col(c), F.col(f"__fresh_{c}"))).drop(f"__fresh_{c}")
-        if self.join.derivations:
-            from zipline_chronon_spark.operators.derive import apply_derivations
-
-            keep = [pit_join.TS_COL, ROW_ID, "ds",
-                    *dict.fromkeys(n for n in (self.join.left.query.selects or {})
-                                   if n in out.columns)]
-            out = apply_derivations(out, self.join.derivations, always_keep=keep)
-        return out.drop(ROW_ID, pit_join.TS_COL)
+            out = attach_part(out, pdf, [ROW_ID], part.left_to_right())
+        return derive(out, self.join, keep=("ds",)).drop(ROW_ID, pit_join.TS_COL)
 
     # -- driver ----------------------------------------------------------------
 
     def run(self, start_ds: str, end_ds: str, step_days: int = 30) -> dict:
         """Fill part tables (per-part diff), then merged partitions (merge
-        diff). Returns per-node computed chunks; a rerun after a kill
-        recomputes only missing partitions of unfinished nodes."""
+        diff), each through ``plans.backfill.fill`` with its lineage
+        records tagged ``node``. Returns per-node computed chunks; a rerun
+        after a kill recomputes only missing partitions of unfinished
+        nodes."""
         computed: dict[str, list[dict]] = {}
         for part in self.join.parts:
             p = part.full_prefix
-            computed[p] = self._run_node(
-                p, self.part_lineages[p], self.part_paths[p],
+            computed[p] = fill(
+                self.catalog, self.part_lineages[p], self.part_paths[p],
                 self.part_hashes[p], start_ds, end_ds, step_days,
-                lambda a, b, part=part: self._part_chunk(part, a, b))
-        computed["merge"] = self._run_node(
-            "merge", self.merge_lineage, self.merged_path, self.merge_hash,
-            start_ds, end_ds, step_days, self._merge_chunk)
-        n_requested = len(date_range(start_ds, end_ds))
-        return {
-            "computed": computed,
-            "skipped_merge_partitions": n_requested - sum(
-                len(c["partitions"]) for c in computed["merge"]),
-        }
+                lambda a, b, part=part: self._part_chunk(part, a, b), node=p,
+            )["computed_chunks"]
+        merged = fill(self.catalog, self.merge_lineage, self.merged_path,
+                      self.merge_hash, start_ds, end_ds, step_days,
+                      self._merge_chunk, node="merge")
+        computed["merge"] = merged["computed_chunks"]
+        return {"computed": computed, "skipped_merge_partitions": merged["skipped"]}

@@ -3,17 +3,20 @@
 Reference: thrift/api.thrift:69-110 (macros ``{{ start_date }}``,
 ``{{ end_date }}``, ``{{ latest_date }}``, ``{{ max_date(table=...) }}``),
 executed by spark/.../batch/StagingQueryJob.scala with fill-what's-missing
-range accounting (which our plans/backfill.py provides generically).
+range accounting (``plans.backfill.fill``, shared by every resumable job).
 """
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from zipline_chronon_spark.plans.backfill import Lineage, fill, spec_hash, unfilled
 
 _MAX_DATE = re.compile(r"\{\{\s*max_date\(table=([^)]+)\)\s*\}\}")
 
@@ -63,22 +66,21 @@ def run(
 class StagingQueryJob:
     """Fill-what's-missing StagingQuery materialization
     (StagingQueryJob.scala: compute only unfilled ranges; stepDays
-    chunking): partitions already written under the current query hash are
-    skipped, a changed query archives the table, and a killed run resumes
-    from the last good partition — the same lineage/diff machinery as
-    GroupByBackfill (plans/backfill.py), wired rather than rebuilt.
+    chunking) through ``plans.backfill.fill``, the planner every resumable
+    job shares: partitions already written under the current query hash are
+    skipped, a changed query archives the table, a killed run resumes from
+    the last good partition, and each chunk's lineage record carries its
+    per-partition row counts.
 
-    The rendered query must emit the partition column (default ``ds``);
-    each chunk renders with that chunk's start/end macros, so a query that
+    The setups run once per ``run``, before the first chunk. Each chunk
+    renders the query with that chunk's start/end macros, so a query that
     filters ``WHERE ds BETWEEN '{{ start_date }}' AND '{{ end_date }}'``
-    recomputes exactly its missing days."""
+    recomputes exactly its missing days; its output must carry the
+    partition column (default ``ds``), or the chunk raises a ValueError."""
 
     def __init__(self, spark: SparkSession, sq: StagingQuery, output_path: str,
                  partition_col: str = "ds", catalog=None):
-        import os
-
         from zipline_chronon_spark.catalog import ParquetWarehouse
-        from zipline_chronon_spark.plans.backfill import Lineage, spec_hash
 
         self.spark = spark
         self.sq = sq
@@ -89,50 +91,22 @@ class StagingQueryJob:
         self.hash = spec_hash(sq)
 
     def unfilled(self, start_ds: str, end_ds: str) -> list[str]:
-        from zipline_chronon_spark.plans.backfill import date_range
-
-        want = date_range(start_ds, end_ds)
-        have = self.lineage.filled_partitions(self.hash)
-        if have:
-            have &= set(self.catalog.partitions(self.output_path))
-        return [ds for ds in want if ds not in have]
+        return unfilled(self.catalog, self.lineage, self.output_path, self.hash,
+                        start_ds, end_ds)
 
     def run(self, start_ds: str, end_ds: str, step_days: int = 30,
             latest_date: Optional[str] = None) -> dict:
-        import time
-
-        from zipline_chronon_spark.plans.backfill import (
-            GroupByBackfill,
-            chunk_record,
-            date_range,
-            insert_chunk,
-        )
-
-        # changed query text/setups -> archive + full recompute
-        stale = [r for r in self.lineage.records()
-                 if r["status"] == "success" and r["spec_hash"] != self.hash]
-        archived = (self.catalog.archive(self.output_path,
-                                         reason="spec_hash_changed")
-                    if stale else None)
         for stmt in self.sq.setups:
             self.spark.sql(stmt)
-        done: list[dict] = []
-        for chunk in GroupByBackfill._chunks(self.unfilled(start_ds, end_ds),
-                                             step_days):
-            ds_from, ds_to = chunk[0], chunk[-1]
-            t0 = time.time()
-            df = self.spark.sql(render(self.spark, self.sq, ds_from, ds_to,
-                                       latest_date))
+
+        def chunk(ds_from: str, ds_to: str) -> DataFrame:
+            df = self.spark.sql(render(self.spark, self.sq, ds_from, ds_to, latest_date))
             if self.partition_col not in df.columns:
                 raise ValueError(
                     f"StagingQuery {self.sq.name} output lacks partition "
                     f"column '{self.partition_col}' — a resumable staging "
                     f"table must be date-partitioned (columns: {df.columns})")
-            written = insert_chunk(self.catalog, df, self.output_path, chunk,
-                                   partition_col=self.partition_col)
-            rec = chunk_record(chunk, written, t0, self.hash)
-            self.lineage.append(rec)
-            done.append(rec)
-        return {"computed_chunks": done, "archived": archived,
-                "skipped": len(date_range(start_ds, end_ds)) - sum(
-                    len(c["partitions"]) for c in done)}
+            return df
+
+        return fill(self.catalog, self.lineage, self.output_path, self.hash, start_ds,
+                    end_ds, step_days, chunk, partition_col=self.partition_col)
