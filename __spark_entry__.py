@@ -32,6 +32,7 @@ from zipline_chronon_spark.api import (
 from zipline_chronon_spark.operators import extensions
 from zipline_chronon_spark.operators.join import compute_join
 from zipline_chronon_spark.operators.pit_join import (
+    _read_table,
     compute_group_by,
     compute_group_by_self,
 )
@@ -529,7 +530,7 @@ def o_pit_vector_map() -> str:
 
 
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_table(spark, f"{sf_dir}/events.parquet")
     out = extensions.with_lag_lead(
         df, keys=["user_id"], order_by=["ts", "event_id"], columns=["value"], offsets=(1,)
     )
@@ -550,7 +551,7 @@ def o_lag_lead() -> str:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_table(spark, f"{sf_dir}/events.parquet")
     s = extensions.sessionize(
         df, keys=["user_id"], ts_col="ts", order_by=["ts", "event_id"], gap="6 hours"
     )
@@ -647,7 +648,7 @@ _SHINGLES_SQL = """
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.dedup import exact_dup_groups
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet")
     return exact_dup_groups(docs)
 
 
@@ -670,7 +671,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale path; this one is the exactness baseline."""
     from zipline_chronon_spark.operators.dedup import ngram_jaccard_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 1000")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet").where("doc_id < 1000")
     out = ngram_jaccard_pairs(docs, threshold=0.7, df_cap=0.1)
     return out.select("id_a", "id_b", "n_shared",
                       F.round(F.col("jaccard") + F.lit(ROUND_EPS), 6).alias("jaccard"))
@@ -700,7 +701,7 @@ def o_dedup_ngram_jaccard() -> str:
 def q_dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.dedup import minhash_signature
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet")
     sig = minhash_signature(docs, num_hashes=8)
     return sig.select(
         "doc_id",
@@ -728,7 +729,7 @@ def o_dedup_minhash_sig() -> str:
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.dedup import minhash_lsh_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 2000")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet").where("doc_id < 2000")
     return minhash_lsh_pairs(docs, num_hashes=16, band_size=4, max_bucket=100)
 
 
@@ -757,7 +758,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic: min doc_id per component)."""
     from zipline_chronon_spark.operators.dedup import duplicate_groups, minhash_lsh_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 2000")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet").where("doc_id < 2000")
     pairs = minhash_lsh_pairs(docs, num_hashes=16, band_size=4, max_bucket=100)
     return duplicate_groups(docs, pairs, id_col="doc_id")
 
@@ -798,7 +799,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (60-bit md5 token hash: DuckDB-replayable)."""
     from zipline_chronon_spark.operators.dedup import simhash_near_pairs
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 2000")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet").where("doc_id < 2000")
     # max_bucket (skew defense) not passed: no cell exceeds it on this data
     # and the hot-cell pre-count costs an extra pipeline pass
     return simhash_near_pairs(docs, max_hamming=12)
@@ -839,7 +840,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data, is what's under test."""
     from zipline_chronon_spark.operators.dedup import embedding_near_dup_pairs
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = embedding_near_dup_pairs(emb, threshold=0.35)
     return out.select(
         "id_a", "id_b",
@@ -886,7 +887,7 @@ def o_dedup_embedding() -> str:
 def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.text import with_text_features
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet").select("doc_id", "text")
     out = with_text_features(docs)
     return out.select(
         "doc_id", "n_chars_f", "n_tokens", "n_bpe_tokens", "n_stopwords",
@@ -931,7 +932,7 @@ def o_text_features() -> str:
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.text import fingerprint
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _read_table(spark, f"{sf_dir}/documents.parquet")
     return docs.select("doc_id", fingerprint("text", 5).alias("fp"))
 
 
@@ -951,7 +952,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sha256-derived), which the DuckDB oracle replays exactly."""
     from zipline_chronon_spark.operators.multimodal import extract_media_metadata
 
-    docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = (_read_table(spark, f"{sf_dir}/documents.parquet")
             .select("doc_id", F.encode("text", "UTF-8").alias("media")))
     out = extract_media_metadata(docs, binary_col="media")
     return out.select("doc_id", "media_bytes", "sha256", "format",
@@ -976,7 +977,7 @@ def o_multimodal_meta() -> str:
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.operators.similarity import brute_force_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = brute_force_topk(emb, k=3)
     return out.select("vec_id", "neighbor_id", "rank",
                       F.round(F.col("sim") + F.lit(ROUND_EPS), 6).alias("sim"))
@@ -1007,7 +1008,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell containing it), which is what the oracle computes directly."""
     from zipline_chronon_spark.operators.similarity import lsh_bucketed_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = lsh_bucketed_topk(emb, k=3, n_planes=4, n_bands=4)
     return out.select("vec_id", "neighbor_id", "rank",
                       F.round(F.col("sim") + F.lit(ROUND_EPS), 6).alias("sim"))
@@ -1065,7 +1066,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same caveat as the LSH queries)."""
     from zipline_chronon_spark.operators.similarity import ivf_topk
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _read_table(spark, f"{sf_dir}/embeddings.parquet")
     out = ivf_topk(emb, k=3, n_cells=16, nprobe=4)
     return out.select("vec_id", "neighbor_id", "rank",
                       F.round(F.col("sim") + F.lit(ROUND_EPS), 6).alias("sim"))
@@ -1190,7 +1191,7 @@ def q_online_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     upload_batch_state(kv, spark, gb, T0)
     upload_stream_events(kv, spark, gb, T0, T1)
     f = Fetcher(kv, gb)
-    users = sorted(r[0] for r in spark.read.parquet(f"{sf_dir}/events.parquet")
+    users = sorted(r[0] for r in _read_table(spark, f"{sf_dir}/events.parquet")
                    .where("user_id < 100").select("user_id").distinct().collect())
     # request-batched serving (one scan pass per dataset) — per-key results
     # identical to fetch(); parity pinned in tests/test_fetcher.py
@@ -1248,7 +1249,7 @@ def q_entities_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
         compute_entities_temporal,
     )
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _read_table(spark, f"{sf_dir}/events.parquet").select(
         "user_id", "value", "event_id",
         F.unix_millis(F.col("ts").cast("timestamp")).alias("its"),
     )
@@ -1368,7 +1369,7 @@ def q_entity_online_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zipline_chronon_spark.online.kv import InMemoryKv
 
     d, T1 = _ENTOL_DAY, _ENTOL_T1
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = (_read_table(spark, f"{sf_dir}/events.parquet")
           .where("user_id < 100")
           .select("user_id", "value", "event_id",
                   F.unix_millis(F.col("ts").cast("timestamp")).alias("its")))
@@ -1456,7 +1457,7 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     each day vs the previous day."""
     from zipline_chronon_spark.plans.drift import drift_series, summarize_partitions
 
-    ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = (_read_table(spark, f"{sf_dir}/events.parquet")
           .select(F.date_format("ts", "yyyy-MM-dd").alias("ds"),
                   "value", "event_type"))
     summ = summarize_partitions(spark, ev, cols=["value", "event_type"],
@@ -1605,7 +1606,7 @@ def q_approx_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                     arg_map=(("percentiles", "[0.5, 0.95]"),), windows=(W7D,)),
     ))
     left = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        _read_table(spark, f"{sf_dir}/events.parquet")
         .select("user_id", "ts", F.col("event_id").alias("__row_id"))
     )
     res = compute_group_by_approx(spark, gb, left, row_id="__row_id")

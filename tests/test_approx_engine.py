@@ -164,63 +164,159 @@ def test_row_per_query_even_without_tiles_or_head(spark, events):
     assert got["v_sum_1h"].isna().all() and got["v_count_6h"].isna().all()
 
 
-def test_no_query_tile_fanout(spark, events):
-    """The round-5 cogroup shape: each (key, tile) IR appears ONCE in the
-    serving frame no matter how many queries hit it — shuffle volume is
-    O(tiles + head_events + queries), NOT O(queries x tiles_per_window).
-    Doubling the query count must leave the tile row count unchanged."""
-    from zipline_chronon_spark.operators.approx_engine import _build_frames
+def _arranged(monkeypatch):
+    """Records the frame ``compute_group_by_approx`` sends into its one
+    ``mapInArrow``: the shuffled, sorted events ∪ queries."""
+    from zipline_chronon_spark.operators import pit_join
+
+    seen = []
+    real = pit_join.union_frame
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        seen.append(out[0])
+        return out
+
+    monkeypatch.setattr(pit_join, "union_frame", spy)
+    return seen
+
+
+def _final_nodes(df):
+    """Nodes of the executed (final adaptive) plan of ``df``."""
+    df.write.format("noop").mode("overwrite").save()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        n = stack.pop()
+        cls = n.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(n.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(n.plan())
+            continue
+        yield n
+        it = n.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+
+
+def test_one_shuffle_frame(spark, events, count_jobs):
+    """Building the serve starts no Spark job; its plan crosses into Python
+    once, and every shuffle is keyed by the GroupBy keys (the serve's own
+    and the key prefilter's ``distinct``)."""
+    import re
+
+    gb, q = _gb(), _queries(spark, events)
+    df, jobs = count_jobs(lambda: compute_group_by_approx(
+        spark, gb, q, row_id="__row_id", query_time_col="ts_ms"))
+    assert jobs == 0
+    names = [(n.nodeName(), n) for n in _final_nodes(df)]
+    assert sum(nm == "MapInArrow" for nm, _ in names) == 1
+    exchanges = [n.outputPartitioning().toString() for nm, n in names if nm == "Exchange"]
+    assert exchanges
+    for part in exchanges:
+        m = re.fullmatch(r"hashpartitioning\((.*), \d+\)", part)
+        assert m and [c.split("#")[0] for c in m.group(1).split(", ")] == ["k"], part
+
+
+# Py4J calls of one warm build of the serve on this module's inputs: 456,
+# plus 20%
+PY4J_CAP = 547
+
+
+def test_py4j_calls_of_building_the_serve(spark, events, monkeypatch):
+    """Counts the calls the build makes, not the deletes of JVM objects
+    that Python proxies garbage-collected meanwhile ("m" commands)."""
+    from py4j.clientserver import ClientServerConnection
+
+    gb, q = _gb(), _queries(spark, events)
+
+    def build():
+        return compute_group_by_approx(spark, gb, q, row_id="__row_id",
+                                       query_time_col="ts_ms")
+
+    build()  # warm: first-use JVM lookups are not the serve's
+    calls = []
+    real = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith("m\n"):
+            calls.append(1)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    build()
+    monkeypatch.undo()
+    assert 0 < len(calls) <= PY4J_CAP, len(calls)
+
+
+def test_frame_is_events_plus_queries(spark, events, monkeypatch):
+    """The shuffled frame holds one row per key-prefiltered event plus one
+    per query — no tile rows and no per-query fan-out — so doubling the
+    queries adds exactly the added query rows."""
+    from pyspark.sql import functions as F
+
+    gb = _gb()
+    seen = _arranged(monkeypatch)
+    q1 = _queries(spark, events, n=60)
+    q2 = q1.unionByName(q1.withColumn("__row_id", F.col("__row_id") + 1000))
+    for q in (q1, q2):
+        compute_group_by_approx(spark, gb, q, row_id="__row_id", query_time_col="ts_ms")
+    n1, n2 = seen[0].count(), seen[1].count()
+    qkeys = {r["k"] for r in q1.select("k").distinct().collect()}
+    n_ev = int(events["k"].isin(qkeys).sum())
+    assert n1 == n_ev + 60
+    assert n2 - n1 == 60
+
+
+def test_unbounded_sketch_over_old_history(spark, events):
+    """Queries far above every event: an unbounded sketch part runs its
+    merge over the key's whole tile history and still equals the exact
+    engine and the Fetcher."""
+    from zipline_chronon_spark.online.fetcher import Fetcher, upload_batch_state
+    from zipline_chronon_spark.online.kv import InMemoryKv
 
     gb = GroupBy(
-        name="ax_b",
+        name="ax_old",
         sources=(EventSource(table="ax_events", query=Query(time_column="ts_ms")),),
         key_columns=("k",),
         aggregations=(
-            Aggregation("v", Operation.SUM, windows=(Window(6, TimeUnit.HOURS),)),
-            Aggregation("v", Operation.COUNT, windows=(Window(1, TimeUnit.HOURS),)),
+            Aggregation("cat", Operation.APPROX_UNIQUE_COUNT, windows=(None,)),
+            Aggregation("iv", Operation.APPROX_FREQUENT_K, arg_map=(("k", "3"),),
+                        windows=(None,)),
+            Aggregation("v", Operation.APPROX_PERCENTILE,
+                        arg_map=(("percentiles", "[0.5, 0.9]"),), windows=(None,)),
+            Aggregation("big", Operation.SUM, windows=(None,)),
         ),
     )
-    from pyspark.sql import functions as F
-    q1 = _queries(spark, events, n=60)
-    # same keys and times, double the rows: span and key set identical
-    q2 = q1.unionByName(q1.withColumn("__row_id", F.col("__row_id") + 1000))
-    n1 = _build_frames(spark, gb, q1, row_id="__row_id",
-                       query_time_col="ts_ms")[0].where("__kind = 0").count()
-    n2 = _build_frames(spark, gb, q2, row_id="__row_id",
-                       query_time_col="ts_ms")[0].where("__kind = 0").count()
-    dk = (spark.table("ax_events").select("k").distinct().count())
-    span_tiles = 2 * 86_400_000 // 300_000 + 1  # 2-day data span at 5m hop
-    assert n1 == n2  # tile rows independent of query count
-    assert n2 <= dk * span_tiles  # bounded by (keys x span tiles)
-    # tiles are unique per (key, tile): no duplication anywhere
-    u = _build_frames(spark, gb, q2, row_id="__row_id",
-                      query_time_col="ts_ms")[0]
-    dup = (u.where("__kind = 0").groupBy("k", "__t").count()
-           .where("count > 1").count())
-    assert dup == 0
-
-
-def test_old_history_collapses_to_one_row_per_key(spark, events):
-    """With an unbounded part, events below the split land in ONE collapsed
-    IR row per KEY total (kind=2) — not per query — so the serving frame is
-    bounded by the query-time span, not history."""
-    from zipline_chronon_spark.operators.approx_engine import _build_frames
-
-    gb = _gb()  # has unbounded parts
-    # queries late in the range: most history is below the split
-    rng = np.random.default_rng(11)
+    far = BASE + 30 * 86_400_000
     q = spark.createDataFrame(pd.DataFrame({
-        "k": rng.choice([*map(str, range(5))], 40),
-        "ts_ms": BASE + 2 * 86_400_000 - rng.integers(0, 3_600_000, size=40),
-        "__row_id": np.arange(40, dtype=np.int64),
-    }).astype({"ts_ms": "int64"}))
-    union, _, _, _ = _build_frames(spark, gb, q, row_id="__row_id",
-                                query_time_col="ts_ms")
-    per_key = (union.where("__kind = 2").groupBy("k").count()
-               .agg({"count": "max"}).collect()[0][0])
-    total = union.where("__kind = 2").count()
-    assert per_key == 1  # exactly one collapsed row per seen key
-    assert total <= 5    # never one per query (40 queries over <=5 keys)
+        "k": [*map(str, range(5)), "unseen"],
+        "ts_ms": [far + i * 3_600_000 for i in range(6)],
+        "__row_id": np.arange(6, dtype=np.int64),
+    }))
+    cols = [p.output_name for p in gb.parts()]
+    got = _rows(compute_group_by_approx(spark, gb, q, row_id="__row_id",
+                                        query_time_col="ts_ms"), cols)
+    exact = _rows(compute_group_by(spark, gb, q, row_id="__row_id",
+                                   query_time_col="ts_ms"), cols)
+    kv = InMemoryKv()
+    upload_batch_state(kv, spark, gb, far)
+    f = Fetcher(kv, gb)
+    for g, e in zip(got, exact):
+        online = f.fetch((["0", "1", "2", "3", "4", "unseen"][g["__row_id"]],),
+                         at_ts_ms=far + g["__row_id"] * 3_600_000)
+        for c in cols:
+            if c == "v_approx_percentile":
+                if e[c] is None:
+                    assert g[c] is None and online[c] is None
+                    continue
+                np.testing.assert_allclose(g[c], e[c], atol=1e-9)
+                np.testing.assert_allclose(g[c], online[c], atol=1e-9)
+                continue
+            assert _same(g[c], e[c]), (c, g["__row_id"], g[c], e[c])
+            assert _same(g[c], online[c]), (c, g["__row_id"], g[c], online[c])
+        assert g["cat_approx_unique_count"] is None or g["cat_approx_unique_count"] > 0
 
 
 def test_no_iterrows_in_module():

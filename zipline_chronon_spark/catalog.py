@@ -14,7 +14,8 @@ engine:
    JoinUtils.scala:293-329).
  - ParquetWarehouse: the sandbox-runnable implementation over partitioned
    parquet directories (mergeSchema reads stand in for Iceberg's schema
-   registry).
+   registry; each insert leaves the table's columns in ``_schema.json``,
+   so the next insert's autoExpand opens no footer).
  - IcebergCatalog: the production implementation expressed through
    Spark's DataSourceV2 API (writeTo().overwritePartitions(), ALTER TABLE
    ADD COLUMNS) — requires an Iceberg runtime jar + configured catalog,
@@ -26,6 +27,7 @@ engine:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -35,6 +37,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class Catalog(ABC):
@@ -94,6 +97,8 @@ class ParquetWarehouse(Catalog):
                 out.append(m.group(1))
         return sorted(out)
 
+    SCHEMA_FILE = "_schema.json"  # Spark's reader skips "_" files
+
     def insert_partitions(self, df: DataFrame, table: str,
                           partition_col: str = "ds") -> None:
         if self.exists(table):
@@ -104,9 +109,21 @@ class ParquetWarehouse(Catalog):
             .partitionBy(partition_col)
             .parquet(table)
         )
+        # the table's columns after this insert (the old ones, which
+        # _auto_expand carried into df, and the new ones): the next insert
+        # reads them here instead of opening every footer of the table
+        tmp = os.path.join(table, f".{self.SCHEMA_FILE}.tmp")
+        with open(tmp, "w") as f:
+            f.write(df.schema.json())
+        os.replace(tmp, os.path.join(table, self.SCHEMA_FILE))
 
     def _auto_expand(self, df: DataFrame, table: str) -> DataFrame:
-        existing = self.read(table).schema
+        path = os.path.join(table, self.SCHEMA_FILE)
+        if os.path.exists(path):
+            with open(path) as f:
+                existing = StructType.fromJson(json.load(f))
+        else:  # written elsewhere: merge the footers' schemas
+            existing = self.read(table).schema
         have = {f.name for f in df.schema.fields}
         # table columns the incoming frame lacks -> null-filled (autoExpand
         # keeps old columns alive); new df columns simply extend the schema

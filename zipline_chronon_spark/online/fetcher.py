@@ -136,9 +136,7 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from zipline_chronon_spark.operators.arrow_engine import (_columns, _valid_np,
-                                                                  whole_groups)
-        from zipline_chronon_spark.operators.sketches import hash64, sketch_input
+        from zipline_chronon_spark.operators.arrow_engine import _columns, whole_groups
 
         schema = df.select(*keys).schema
         if tiled:
@@ -153,34 +151,15 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
         # ONE Python call per rechunked batch, not per (key, tile) group:
         # groupBy+applyInPandas costs ~0.3 ms of UDF round-trip per group —
         # at hop-tile granularity that is the dominant cost of the whole
-        # upload (measured 120 s for 234k tiles vs ~2 s batched). Groups are
-        # cut from one prefix count of each column's valid rows, and each
-        # sketch is built from that column's typed values (for HLL
-        # pre-hashed).
+        # upload (measured 120 s for 234k tiles vs ~2 s batched).
         def build_batch(tbl: pa.Table, start: np.ndarray) -> pa.RecordBatch:
             starts = np.flatnonzero(start)
             cols = _columns(tbl)
             take = pa.array(starts, type=pa.int64())
             arrays = [cols[g].take(take) for g in gcols_b]
             for p in sp:
-                col = cols[p.input_column]
-                vals = sketch_input(col)
-                c = np.zeros(len(col) + 1, dtype=np.int64)
-                np.cumsum(_valid_np(col), out=c[1:])
-                cut = c[np.r_[starts, len(col)]]
-                hll = p.operation == Operation.APPROX_UNIQUE_COUNT
-                if hll and len(vals):
-                    vals = hash64(vals)
-                blobs = []
-                for a, b in zip(cut[:-1], cut[1:]):
-                    sk = _new_sketch(p.operation)
-                    if b > a:
-                        if hll:
-                            sk.update_hashes(vals[a:b])
-                        else:
-                            sk.update(vals[a:b])
-                    blobs.append(sk.to_bytes())
-                arrays.append(pa.array(blobs, type=pa.binary()))
+                sks = group_sketches(p.operation, cols[p.input_column], starts)
+                arrays.append(pa.array([sk.to_bytes() for sk in sks], type=pa.binary()))
             return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
         nparts = base.sparkSession.sparkContext.defaultParallelism
@@ -196,6 +175,37 @@ def _ir_rows(df: DataFrame, gb: GroupBy, tile_hop: Optional[int] = None):
     if scalar_df is not None and sketch_df is not None:
         return scalar_df.join(sketch_df, gcols, "full")
     return scalar_df if scalar_df is not None else sketch_df
+
+
+def group_sketches(op: Operation, col, starts) -> list:
+    """One fresh sketch per group of ``col``'s rows, group i starting at
+    row ``starts[i]`` (ascending, the first 0) and running to the next
+    start. Each is built from the group's non-null values, typed
+    (``sketch_input``; pre-hashed for HLL). The tile builder of both the
+    upload (``_ir_rows``) and the approx serve (approx_engine), so their
+    tiles are the same sketches by construction."""
+    import numpy as np
+
+    from zipline_chronon_spark.operators.arrow_engine import _valid_np
+    from zipline_chronon_spark.operators.sketches import hash64, sketch_input
+
+    vals = sketch_input(col)
+    c = np.zeros(len(col) + 1, dtype=np.int64)
+    np.cumsum(_valid_np(col), out=c[1:])
+    cut = c[np.r_[starts, len(col)]]
+    hll = op == Operation.APPROX_UNIQUE_COUNT
+    if hll and len(vals):
+        vals = hash64(vals)
+    out = []
+    for a, b in zip(cut[:-1], cut[1:]):
+        sk = _new_sketch(op)
+        if b > a:
+            if hll:
+                sk.update_hashes(vals[a:b])
+            else:
+                sk.update(vals[a:b])
+        out.append(sk)
+    return out
 
 
 def _new_sketch(op: Operation):
@@ -518,9 +528,10 @@ def merge_state(parts, collapsed: Optional[dict],
                 T: int) -> dict:
     """The sawtooth lambda merge: collapsed IR + per-hop tiles (each tile
     fully below the head) + raw head events, per part honoring its own
-    hop-aligned window tail. Shared by the online Fetcher and the batch
-    sketch engine (operators/approx_engine.py) so offline == online is
-    true by construction."""
+    hop-aligned window tail. The batch sketch serve
+    (operators/approx_engine.py) applies the same rule to tiles built by
+    the same ``group_sketches`` and finalizes through the same
+    ``finalize_sketch``, so offline == online holds by construction."""
     out = {}
     for p in parts:
         irs = []

@@ -20,10 +20,10 @@ Window bounds come from ``_tail_bounds`` over the group-encoded time
 ``(gid << _SHIFT) + (ts - base)``; the naive-oracle suite runs against
 this path. The other sorted-group runners (entities_temporal, the approx
 serve and the sketch tile builder) share ``group_starts`` and
-``whole_groups``. ``_finish`` has two more callers: entities_temporal runs
-its parts through ``_unpack``, ``_finish`` and ``_map_of``, and the approx
-serve (approx_engine) runs each scalar part's tile IR column and head-event
-column through ``_finish`` before merging them.
+``whole_groups``. The approx serve (approx_engine) runs on the same union
+frame and answers its scalar parts through ``process_chunk_arrow`` itself;
+entities_temporal runs its parts through ``_unpack``, ``_finish`` and
+``_map_of``.
 """
 
 from __future__ import annotations

@@ -37,6 +37,8 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import os
+import weakref
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,10 +100,42 @@ def output_field(part: AggregationPart, input_type: T.DataType) -> T.StructField
     return T.StructField(part.output_name, out, True)
 
 
+# per session: local parquet path -> (its file listing, the schema Spark
+# inferred for it)
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every file under ``path``."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out.append((os.path.relpath(os.path.join(root, f), path),
+                        st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def _read_table(spark: SparkSession, table: str) -> DataFrame:
-    if "/" in table:
+    """A path reads as parquet, anything else as a catalog table. Inferring
+    a parquet schema starts a Spark job to read footers, so for a local
+    path the inferred schema is kept per session together with the path's
+    file listing, and handed back while the listing is unchanged."""
+    if "/" not in table:
+        return spark.table(table)
+    local = table[len("file:"):] if table.startswith("file:") else table
+    if "://" in table or not os.path.exists(local):
         return spark.read.parquet(table)
-    return spark.table(table)
+    listing, path = _listing(local), os.path.abspath(local)
+    known = _SCHEMAS.setdefault(spark, {})
+    if path in known and known[path][0] == listing:
+        return spark.read.schema(known[path][1]).parquet(table)
+    df = spark.read.parquet(table)
+    known[path] = (listing, df.schema)
+    return df
 
 
 def _time_to_millis(col: F.Column, dt: T.DataType) -> F.Column:
@@ -161,6 +195,35 @@ def apply_models(df: DataFrame, mt) -> DataFrame:
     return df.mapInPandas(run, schema=out_schema)
 
 
+def _join_in_range(spark: SparkSession, src, time_range_ms) -> "Join":
+    """A JoinSource's upstream join with ``time_range_ms`` applied to its
+    left, when the source's time column is the left's own time column. A
+    left row's features never depend on another left row and the right
+    sides keep their full history, so no feature changes; a chunked
+    backfill then computes only its chunk's rows of the upstream join."""
+    join = src.join
+    lq = join.left.query
+    tc = src.query.time_column
+    if (time_range_ms is None or tc != lq.time_column
+            or (lq.selects and lq.selects.get(tc) != tc)):
+        return join
+    import dataclasses
+
+    dt = _read_table(spark, join.left.table).select(F.expr(tc)).schema[0].dataType
+    if isinstance(dt, T.TimestampNTZType):
+        ms = f"unix_millis(CAST(({tc}) AS TIMESTAMP))"
+    elif isinstance(dt, T.TimestampType):
+        ms = f"unix_millis({tc})"
+    else:
+        ms = f"CAST(({tc}) AS BIGINT)"
+    lo, hi = time_range_ms
+    wheres = [*([f"{ms} >= {int(lo)}"] if lo is not None else []),
+              *([f"{ms} <= {int(hi)}"] if hi is not None else [])]
+    left = dataclasses.replace(join.left, query=dataclasses.replace(
+        lq, wheres=(*lq.wheres, *wheres)))
+    return dataclasses.replace(join, left=left)
+
+
 def render_source(
     spark: SparkSession,
     src: EventSource,
@@ -185,7 +248,7 @@ def render_source(
         # (api.thrift:186-189; streaming/JoinSourceRunner is the online twin)
         from zipline_chronon_spark.operators.join import compute_join
 
-        df = compute_join(spark, src.join)
+        df = compute_join(spark, _join_in_range(spark, src, time_range_ms))
     elif isinstance(src, ModelTransforms):
         # model-enriched source (api.thrift:606-617): underlying rows plus
         # each model's output columns, computed inline as Arrow-batched
@@ -276,7 +339,7 @@ def _output_schema(gb: GroupBy, ev_schema: dict, passthrough_fields: list[T.Stru
     return parts, T.StructType(fields)
 
 
-def compute_group_by(
+def union_frame(
     spark: SparkSession,
     gb: GroupBy,
     queries: DataFrame,
@@ -287,25 +350,13 @@ def compute_group_by(
     semi_filter: str = "semi_join",
     time_range_ms: Optional[tuple[Optional[int], Optional[int]]] = None,
     passthrough_cols: Optional[list[str]] = None,
-) -> DataFrame:
-    """Enrich each query row (keys…, ts) with gb's features as of its ts.
-
-    queries: DataFrame with the (left-named) key columns, a time column, and
-    a unique long ``row_id`` column. Returns (row_id, feature columns…).
-
-    semi_filter: prune the events scan to keys present on the left — the
-    reference's bloom/IN-list semi-join reduction (Extensions.scala:177-220,
-    JoinUtils.scala:234-285). "semi_join" = broadcast left-semi join on the
-    left's distinct keys (AQE decides the physical strategy); "in_list" =
-    small mode, literal IN pushdown into scan statistics (left must have
-    <= 5000 distinct keys); "off" = scan everything (right when the left
-    covers most keys anyway).
-
-    passthrough_cols: extra ``queries`` columns carried through the engine
-    onto the matching output row — saves the caller a join back on row_id
-    when it only needs query attributes next to the features (the snapshot
-    paths below use it; same idea as compute_group_by_self's passthrough).
-    """
+) -> tuple[DataFrame, list[AggregationPart], T.StructType]:
+    """The frame step of both union runners (``compute_group_by`` and
+    ``approx_engine.compute_group_by_approx``): the key-prefiltered events
+    (SIDE_COL 0) ∪ the queries (SIDE_COL 1), hash-partitioned on the
+    GroupBy keys and sorted on (keys, TS_COL, TIE_COL), ready for one
+    ``mapInArrow``. Returns (arranged, parts, output schema); the
+    parameters are ``compute_group_by``'s."""
     # key_mapping maps left column -> right key (api.thrift:384-386)
     key_mapping = key_mapping or {}
     passthrough_cols = passthrough_cols or []
@@ -360,12 +411,48 @@ def compute_group_by(
 
     shuffled = union.repartition(num_partitions, *right_keys) if num_partitions else (
         union.repartition(*right_keys))
-    arranged = shuffled.sortWithinPartitions(*right_keys, TS_COL, TIE_COL)
+    return shuffled.sortWithinPartitions(*right_keys, TS_COL, TIE_COL), parts, out_schema
+
+
+def compute_group_by(
+    spark: SparkSession,
+    gb: GroupBy,
+    queries: DataFrame,
+    row_id: str = ROW_ID,
+    key_mapping: Optional[dict[str, str]] = None,
+    query_time_col: str = "ts",
+    num_partitions: Optional[int] = None,
+    semi_filter: str = "semi_join",
+    time_range_ms: Optional[tuple[Optional[int], Optional[int]]] = None,
+    passthrough_cols: Optional[list[str]] = None,
+) -> DataFrame:
+    """Enrich each query row (keys…, ts) with gb's features as of its ts.
+
+    queries: DataFrame with the (left-named) key columns, a time column, and
+    a unique long ``row_id`` column. Returns (row_id, feature columns…).
+
+    semi_filter: prune the events scan to keys present on the left — the
+    reference's bloom/IN-list semi-join reduction (Extensions.scala:177-220,
+    JoinUtils.scala:234-285). "semi_join" = broadcast left-semi join on the
+    left's distinct keys (AQE decides the physical strategy); "in_list" =
+    small mode, literal IN pushdown into scan statistics (left must have
+    <= 5000 distinct keys); "off" = scan everything (right when the left
+    covers most keys anyway).
+
+    passthrough_cols: extra ``queries`` columns carried through the engine
+    onto the matching output row — saves the caller a join back on row_id
+    when it only needs query attributes next to the features (the snapshot
+    paths below use it; same idea as compute_group_by_self's passthrough).
+    """
     from zipline_chronon_spark.api import Accuracy
     from zipline_chronon_spark.operators.derive import apply_derivations
 
+    passthrough_cols = passthrough_cols or []
+    arranged, parts, out_schema = union_frame(
+        spark, gb, queries, row_id, key_mapping, query_time_col, num_partitions,
+        semi_filter, time_range_ms, passthrough_cols)
     snap = gb.accuracy == Accuracy.SNAPSHOT
-    runner = make_arrow_runner(parts, right_keys, out_schema,
+    runner = make_arrow_runner(parts, list(gb.key_columns), out_schema,
                                passthrough_cols, None, snap, TS_COL, SIDE_COL, ROW_ID)
     out = arranged.mapInArrow(runner, schema=out_schema)
     return apply_derivations(out, gb.derivations,

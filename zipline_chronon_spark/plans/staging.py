@@ -16,6 +16,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zipline_chronon_spark.operators.pit_join import _read_table
 from zipline_chronon_spark.plans.backfill import Lineage, fill, spec_hash, unfilled
 
 _MAX_DATE = re.compile(r"\{\{\s*max_date\(table=([^)]+)\)\s*\}\}")
@@ -30,7 +31,7 @@ class StagingQuery:
 
 def _max_date(spark: SparkSession, table: str, partition_col: str = "ds") -> str:
     table = table.strip().strip("'\"")
-    df = spark.read.parquet(table) if "/" in table else spark.table(table)
+    df = _read_table(spark, table)
     return str(df.agg(F.max(partition_col)).collect()[0][0])
 
 
