@@ -1193,8 +1193,9 @@ def q_online_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = Fetcher(kv, gb)
     users = sorted(r[0] for r in _read_table(spark, f"{sf_dir}/events.parquet")
                    .where("user_id < 100").select("user_id").distinct().collect())
-    # request-batched serving (one scan pass per dataset) — per-key results
-    # identical to fetch(); parity pinned in tests/test_fetcher.py
+    # request-batched serving (one get + two prefix scans per key) —
+    # per-key results identical to fetch(); parity pinned in
+    # tests/test_fetcher.py
     fetched = f.fetch_batch([(u,) for u in users], at_ts_ms=T1)
     rows = [(int(u), got["value_sum_1d"], got["value_count"],
              got["value_max_6h"]) for u, got in zip(users, fetched)]

@@ -317,3 +317,79 @@ def test_fetch_batch_parity(spark, events):
                 assert abs(a - b) < 1e-12, (kt, c)
             else:
                 assert a == b, (kt, c)
+
+
+def test_upload_batch_state_writes_through_one_sink(spark, events):
+    """Collapsed rows and tiles are one GroupByUpload table, so the batch
+    upload streams into the store through ONE write_rows call."""
+
+    class CountingKv(InMemoryKv):
+        def __init__(self):
+            super().__init__()
+            self.sinks = 0
+
+        def write_rows(self, df, encode_fn):
+            self.sinks += 1
+            return super().write_rows(df, encode_fn)
+
+    kv = CountingKv()
+    n = upload_batch_state(kv, spark, _gb(), ((BASE + 86_400_000) // HOP) * HOP)
+    assert kv.sinks == 1
+    assert n == sum(len(kv.data.get(ds, {})) for ds in ("fx__batch", "fx__tiles"))
+
+
+def test_scalar_upload_table_runs_no_python(spark, events):
+    """Scalar IRs are Spark aggregates and bulk_load encodes rows itself: the
+    upload table of a scalar-only GroupBy has no Python node in its plan."""
+    import dataclasses
+
+    from zipline_chronon_spark.online.fetcher import group_by_upload_df
+
+    gb = dataclasses.replace(_gb(), aggregations=tuple(
+        a for a in _gb().aggregations if a.operation in
+        (Operation.SUM, Operation.COUNT, Operation.AVERAGE, Operation.MIN,
+         Operation.MAX, Operation.FIRST, Operation.LAST)))
+    up = group_by_upload_df(spark, gb, ((BASE + 86_400_000) // HOP) * HOP)
+    assert up.count() > 6
+    plan = up._jdf.queryExecution().executedPlan().toString()
+    for node in ("Pandas", "Python", "MapInArrow"):
+        assert node not in plan, plan
+
+
+def test_keys_sharing_a_first_component(spark):
+    """Keys "a|b", "a" and "a|" encode to byte strings that share their first
+    ``|``-component, so an indexed prefix scan looks at all three; each
+    fetch must still read only its own key's state (== the offline engine),
+    and fetch_batch must equal per-key fetch."""
+    import dataclasses
+
+    rng = np.random.default_rng(11)
+    n = 600
+    pdf = pd.DataFrame({
+        "k": rng.choice(["a|b", "a", "a|"], size=n),
+        "ts_ms": BASE + rng.integers(0, 2 * 86_400_000, size=n),
+        "v": rng.normal(10, 3, size=n).round(3),
+        "cat": [f"c{int(x)}" for x in rng.integers(0, 25, size=n)],
+    }).astype({"ts_ms": "int64"})
+    spark.createDataFrame(pdf).createOrReplaceTempView("pipe_events")
+    gb = dataclasses.replace(_gb(), name="pipe", sources=(
+        EventSource(table="pipe_events", query=Query(time_column="ts_ms")),))
+    t0 = ((BASE + 86_400_000) // HOP) * HOP
+    t1 = t0 + 10 * 3_600_000
+    kv = InMemoryKv()
+    upload_batch_state(kv, spark, gb, t0)
+    upload_stream_events(kv, spark, gb, t0, t1)
+    f = Fetcher(kv, gb)
+    offline = (compute_key_states(spark, gb, at_ts_ms=t1)
+               .toPandas().set_index("k"))
+    keys = [("a|b",), ("a",), ("a|",), ("a|c",)]
+    batch = f.fetch_batch(keys, at_ts_ms=t1)
+    for kt, got in zip(keys, batch):
+        assert got == f.fetch(kt, at_ts_ms=t1), kt
+        if kt[0] not in offline.index:
+            assert all(v is None for v in got.values()), kt
+            continue
+        row = offline.loc[kt[0]]
+        for col in ["v_sum", "v_count", "v_min", "v_last", "v_sum_1d", "v_count_6h",
+                    "cat_approx_unique_count", "cat_approx_unique_count_1d"]:
+            assert abs(float(got[col]) - float(row[col])) < 1e-9, (kt, col)

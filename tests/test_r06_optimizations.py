@@ -28,36 +28,67 @@ def test_sorted_quantiles_matches_np_quantile_bitwise():
     assert all(np.isnan(x) for x in _sorted_quantiles(np.empty(0), [0.5, 0.9]))
 
 
-def test_ir_plan_dedupes_by_content():
-    """Windowed variants of an aggregation must share one tile-IR column
-    class; the map must point every part at its representative."""
+def test_serve_sketches_builds_one_tile_set_per_sketch_class(monkeypatch):
+    """Windows and finalize arguments never change a tile: both
+    APPROX_UNIQUE_COUNT windows of one column share one HLL tile set, and
+    APPROX_FREQUENT_K / APPROX_HEAVY_HITTERS_K of another share one
+    Misra-Gries set. Sharing must not change an answer: each part served
+    alone (building its own tiles) gives the same column."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from zipline_chronon_spark.api import (Aggregation, EventSource, GroupBy,
                                            Operation, Query, TimeUnit, Window)
-    from zipline_chronon_spark.operators.approx_engine import _ir_plan
+    from zipline_chronon_spark.online import fetcher as fl
+    from zipline_chronon_spark.operators import approx_engine, pit_join
+    from zipline_chronon_spark.operators.arrow_engine import _columns
 
-    W1, W7 = Window(1, TimeUnit.DAYS), Window(7, TimeUnit.DAYS)
     gb = GroupBy(
-        name="g",
+        name="s",
         sources=(EventSource(table="t", query=Query(time_column="ts")),),
         key_columns=("k",),
         aggregations=(
-            Aggregation("v", Operation.SUM, windows=(W1, None)),
-            Aggregation("v", Operation.AVERAGE, windows=(W7,)),
-            Aggregation("v", Operation.COUNT, windows=(W7,)),
-            Aggregation("e", Operation.APPROX_UNIQUE_COUNT, windows=(W7, None)),
-            Aggregation("v", Operation.MIN, windows=(W7,)),
+            Aggregation("e", Operation.APPROX_UNIQUE_COUNT,
+                        windows=(Window(1, TimeUnit.DAYS), None)),
+            Aggregation("c", Operation.APPROX_FREQUENT_K,
+                        arg_map=(("k", "2"),), windows=(None,)),
+            Aggregation("c", Operation.APPROX_HEAVY_HITTERS_K,
+                        arg_map=(("k", "2"),), windows=(None,)),
         ),
     )
-    gb_ir, ir_map = _ir_plan(gb)
-    reps = {p.output_name for p in gb_ir.parts()}
-    # SUM_1d / SUM / AVG_7d / COUNT_7d collapse to one sumcnt class; both
-    # AUC windows to one HLL class; MIN stays its own
-    assert len(reps) == 3
-    assert (ir_map["v_sum_1d"] == ir_map["v_sum"] == ir_map["v_average_7d"]
-            == ir_map["v_count_7d"])
-    assert ir_map["e_approx_unique_count_7d"] == ir_map["e_approx_unique_count"]
-    assert set(ir_map) == {p.output_name for p in gb.parts()}
-    assert set(ir_map.values()) == reps
+    parts = gb.parts()
+    rng = np.random.default_rng(5)
+    n_ev, n_q, base = 600, 60, 1_700_000_000_000
+    k = np.r_[rng.integers(0, 3, n_ev), rng.integers(0, 3, n_q)]
+    ts = base + rng.integers(0, 3 * 86_400_000, n_ev + n_q)
+    side = np.r_[np.zeros(n_ev, np.int64), np.ones(n_q, np.int64)]
+    e = [int(x) for x in rng.integers(0, 50, n_ev)] + [None] * n_q
+    c = [f"c{int(x)}" for x in rng.zipf(1.5, n_ev) % 20] + [None] * n_q
+    order = np.lexsort((side, ts, k))
+    tbl = pa.table({
+        "k": pa.array([str(x) for x in k[order]]),
+        pit_join.TS_COL: pa.array(ts[order], type=pa.int64()),
+        pit_join.SIDE_COL: pa.array(side[order], type=pa.int64()),
+        "e": pa.array([e[i] for i in order], type=pa.int64()),
+        "c": pa.array([c[i] for i in order], type=pa.string()),
+    })
+    gid = k[order].astype(np.int64)
+    _, out_schema = pit_join._output_schema(
+        gb, {"k": T.StringType(), "e": T.LongType(), "c": T.StringType()}, [])
+    arrow_schema = to_arrow_schema(out_schema)
+    hop = fl._tile_hop(gb)
+
+    builds = []
+    build = fl.group_sketches
+    monkeypatch.setattr(fl, "group_sketches",
+                        lambda op, col, starts: builds.append(op) or build(op, col, starts))
+    got = approx_engine._serve_sketches(_columns(tbl), gid, parts, hop, arrow_schema)
+    assert len(builds) == 2
+    assert sum(v is not None for v in got[0].to_pylist()) > 0
+    for p, col in zip(parts, got):
+        (alone,) = approx_engine._serve_sketches(_columns(tbl), gid, [p], hop, arrow_schema)
+        assert col.to_pylist() == alone.to_pylist(), p.output_name
 
 
 def test_bucket_pairs_matches_self_join(spark):

@@ -9,14 +9,17 @@ them against the batch snapshot state with the deletable-op sign rule
 non-deletable ops, BaseAggregator.scala:60-61). Without this path, entities
 served online are stale to the last batch upload.
 
-The batch state reuses the events-tier IR split EXACTLY
-(online/fetcher.py upload_batch_state): snapshot rows of partition d-1
-(the state at start-of-day d) become per-key collapsed IR + tail-hop tiles
-keyed by ROW ts — windows on entities measure against row.ts, and window
-tails are hop-aligned, so tile selection at fetch time equals the batch
-engine's exact ``row.ts >= round(T - w, tailHop)`` rule (hops nest).
-Mutations of day d stream into ``{name}__mutations`` with a deterministic
-sequence (retried uploads overwrite, not duplicate) and replay at fetch:
+The batch state is the events tier's, step for step (online/fetcher.py):
+snapshot rows of partition d-1 (the state at start-of-day d) go through
+the same split (``_upload_frame``: per-key collapsed IR + tail-hop tiles
+keyed by ROW ts) and the same writer (``bulk_load``), and EntityFetcher
+reads a key through the same ``read_state`` — windows on entities measure
+against row.ts, and window tails are hop-aligned, so tile selection at
+fetch time (``window_irs``) equals the batch engine's exact
+``row.ts >= round(T - w, tailHop)`` rule (hops nest). Mutations of day d
+stream into ``{name}__mutations`` with a deterministic sequence (retried
+uploads overwrite, not duplicate) and are read as the key's head rows,
+then replay at fetch:
 
     windowed part:  tail <= row_ts < T  and  mutation_ts < T
     unbounded part:                          mutation_ts < T
@@ -32,6 +35,7 @@ without reversals in the feed.
 from __future__ import annotations
 
 import json
+import math
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -67,8 +71,8 @@ def upload_entity_batch_state(kv: KvStore, spark: SparkSession, gb: GroupBy,
                               batch_day_ds: str) -> int:
     """Upload the snapshot partition serving day ``batch_day_ds`` (i.e.
     partition d-1: the state at start-of-day d) as collapsed IR + tail-hop
-    tiles — the same datasets and encoding as the events tier, so
-    EntityFetcher shares Fetcher's scan path."""
+    tiles through the events tier's split and ``bulk_load`` (same datasets,
+    encoding and meta rows), plus the ``batch_day_ms`` meta row."""
     from datetime import datetime, timezone
 
     (src,) = gb.sources
@@ -81,7 +85,7 @@ def upload_entity_batch_state(kv: KvStore, spark: SparkSession, gb: GroupBy,
             .where(F.expr(src.partition_column).cast("string") == prev_ds))
     snap, proj, ts_ms, _, _ = _project(snap, gb, src)
     ev = snap.select(*proj, ts_ms.alias(pit_join.TS_COL))
-    n = fl._upload_ir_split(kv, gb, ev, batch_end_ms=day_ms)
+    n = fl.bulk_load(kv, fl._upload_frame(gb, ev, day_ms), gb, day_ms)
     kv.put(f"{gb.name}__meta", b"batch_day_ms", str(day_ms).encode())
     return n
 
@@ -133,16 +137,10 @@ def merge_mutation_state(parts, collapsed: Optional[dict],
     has_rev = any(m.get("sign", 1) < 0 for m in mutations)
     out = {}
     for p in parts:
-        nm, op, col = p.output_name, p.operation, p.input_column
-        if p.window is None:
-            irs = ([collapsed] if collapsed is not None else []) \
-                + [ir for _, ir in tiles]
-            evs = [m for m in mutations if m["mts"] < T and m["ts"] < T]
-        else:
-            tail = p.window.tail_start(T)
-            irs = [ir for hs, ir in tiles if hs >= tail]
-            evs = [m for m in mutations
-                   if m["mts"] < T and tail <= m["ts"] < T]
+        nm, op = p.output_name, p.operation
+        irs = fl.window_irs(p, collapsed, tiles, T)
+        lo = p.window.tail_start(T) if p.window is not None else -math.inf
+        evs = [m for m in mutations if m["mts"] < T and lo <= m["ts"] < T]
         if op in DELETABLE:
             out[nm] = _signed_scalar(p, irs, evs)
         else:
@@ -191,6 +189,11 @@ class EntityFetcher:
         self.batch_day_ms = int(bd) if bd is not None else None
 
     def fetch(self, key_values: tuple, at_ts_ms: int) -> dict:
+        return self.fetch_batch([key_values], at_ts_ms)[0]
+
+    def fetch_batch(self, key_tuples: list[tuple], at_ts_ms: int) -> list[dict]:
+        """Many keys in one call: one ``read_state`` per key, so per-key
+        results are identical to ``fetch``."""
         # batch snapshot tiles are not bounded by T at merge time, so a
         # fetch BEFORE the uploaded batch day would silently over-count
         # snapshot rows with ts > T — same assumption as the reference
@@ -200,51 +203,8 @@ class EntityFetcher:
                 f"at_ts_ms={at_ts_ms} precedes the uploaded batch day "
                 f"({self.batch_day_ms}); time-travel before the batch "
                 f"snapshot is not servable from this state")
-        kb = key_bytes(key_values)
-        collapsed = None
-        b = self.kv.get(f"{self.gb.name}__batch", kb)
-        if b is not None:
-            collapsed = json.loads(b)
-        tiles = []
-        for k, v in self.kv.scan(f"{self.gb.name}__tiles", kb + b"|"):
-            tiles.append((int(k.rsplit(b"|", 1)[1]), json.loads(v)))
-        muts = [json.loads(v)
-                for _, v in self.kv.scan(f"{self.gb.name}__mutations", kb + b"|")]
-        return merge_mutation_state(self.parts, collapsed, tiles, muts,
-                                    at_ts_ms,
-                                    allow_insert_only=self.allow_insert_only)
-
-    def fetch_batch(self, key_tuples: list[tuple], at_ts_ms: int) -> list[dict]:
-        """Many keys in ONE pass per dataset — per-key results identical to
-        ``fetch`` (see Fetcher.fetch_batch for the scan-complexity
-        rationale)."""
-        from collections import defaultdict
-
-        if self.batch_day_ms is not None and at_ts_ms < self.batch_day_ms:
-            raise ValueError(
-                f"at_ts_ms={at_ts_ms} precedes the uploaded batch day "
-                f"({self.batch_day_ms}); time-travel before the batch "
-                f"snapshot is not servable from this state")
-        name = self.gb.name
-        kbs = [key_bytes(k) for k in key_tuples]
-        want = set(kbs)
-        collapsed: dict[bytes, dict] = {}
-        for kb in want:
-            b = self.kv.get(f"{name}__batch", kb)
-            if b is not None:
-                collapsed[kb] = json.loads(b)
-        tiles: dict[bytes, list] = defaultdict(list)
-        for k, v in self.kv.scan(f"{name}__tiles"):
-            kb = k.rsplit(b"|", 1)[0]
-            if kb in want:
-                tiles[kb].append((int(k.rsplit(b"|", 1)[1]), json.loads(v)))
-        muts: dict[bytes, list] = defaultdict(list)
-        for k, v in self.kv.scan(f"{name}__mutations"):
-            kb = k.rsplit(b"|", 2)[0]
-            if kb in want:
-                muts[kb].append(json.loads(v))
-        return [merge_mutation_state(self.parts, collapsed.get(kb),
-                                     tiles.get(kb, []), muts.get(kb, []),
-                                     at_ts_ms,
-                                     allow_insert_only=self.allow_insert_only)
-                for kb in kbs]
+        return [merge_mutation_state(
+                    self.parts,
+                    *fl.read_state(self.kv, self.gb.name, "mutations", key_bytes(k)),
+                    at_ts_ms, allow_insert_only=self.allow_insert_only)
+                for k in key_tuples]

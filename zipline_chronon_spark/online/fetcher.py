@@ -3,29 +3,37 @@
 Reference shape (GroupByUpload.scala:112-300 batch IR upload;
 SawtoothOnlineAggregator.scala:32-167 batchEndTs split into collapsed IR +
 tail hops; Fetcher merge; FetcherTestUtil.scala:245-740 asserts offline
-join == online fetch). The same decomposition here:
+join == online fetch). Each step of the batch state has one
+implementation, shared with the entity tier (online/entity_serving.py):
 
- - upload_batch_state(T0): per key, ONE collapsed IR over events too old
-   for any window tail (ts < tile_floor), plus per-(key, hop) TILE IRs
-   covering [tile_floor, T0] at the finest tail-hop granularity (hops
-   nest: a 1h tail boundary is always a 5m tile boundary).
+ - split (``_upload_frame``, returned by group_by_upload_df): the
+   GroupByUpload table. Per key, ONE collapsed row over events too old for
+   any window tail (ts < tile_floor, ``__tile`` null), plus per-(key, hop)
+   TILE rows covering [tile_floor, T0] at the finest tail-hop granularity
+   (hops nest: a 1h tail boundary is always a 5m tile boundary). Columns:
+   keys…, ``__tile``, and the typed IR columns ``{part}__sum`` /
+   ``__count`` / ``__min`` / ``__max`` / ``__v`` + ``__ts`` (FIRST/LAST
+   arg-extremes) / ``__sk`` (sketch bytes: HLL / KLL / Misra-Gries).
+ - write (``bulk_load``): the only writer of batch state. Streams the
+   table's rows into the KV seam from the executors (KvStore.write_rows;
+   the in-memory test store overrides with a documented driver-side
+   collecting adapter — same bytes either way) as ``{name}__batch`` [kb] and
+   ``{name}__tiles`` [kb|hop_start], JSON IRs, and stamps the
+   ``batch_end_ms`` / ``tile_floor`` meta rows. upload_batch_state is
+   bulk_load of group_by_upload_df.
  - upload_stream_events(T0, T1]: raw head events (the online head must be
    exact; tiles would quantize it).
- - Fetcher.fetch(key, T): per feature —
+ - read (``read_state``): one key's collapsed IR, tiles and head rows —
+   one get and two prefix scans. Fetcher.fetch(key, T) merges them per
+   feature —
      unbounded: collapsed + all tiles + head events with ts <= T
      windowed:  tiles with hop_start >= round(T - w, tailHop(w))
                 + head events with tail <= ts <= T
-   then finalize. The head rule is the BATCH rule (ts <= T inclusive) so
+   then finalizes. The head rule is the BATCH rule (ts <= T inclusive) so
    online fetch equals the offline engine exactly (the reference keeps a
    deliberate strict-< online discrepancy; we match batch for parity).
 
-IRs: scalars (sum / count / (sum,count) / min / max / (ts,value)
-arg-extremes) and sketch bytes (HLL / KLL / Misra-Gries) — all
-associative, so tile merge order never matters.
-
-Upload streams IR rows into the KV seam from the executors
-(KvStore.write_rows; the in-memory test store overrides with a documented
-driver-side collecting adapter — same bytes either way). Parity oracle
+All IRs are associative, so tile merge order never matters. Parity oracle
 (tests/test_fetcher.py): fetch at T1 == compute_key_states at T1.
 """
 
@@ -33,6 +41,7 @@ from __future__ import annotations
 
 import base64
 import json
+import math
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -198,7 +207,7 @@ def group_sketches(op: Operation, col, starts) -> list:
         vals = hash64(vals)
     out = []
     for a, b in zip(cut[:-1], cut[1:]):
-        sk = _new_sketch(op)
+        sk = _sketch_cls(op)()
         if b > a:
             if hll:
                 sk.update_hashes(vals[a:b])
@@ -206,14 +215,6 @@ def group_sketches(op: Operation, col, starts) -> list:
                 sk.update(vals[a:b])
         out.append(sk)
     return out
-
-
-def _new_sketch(op: Operation):
-    if op == Operation.APPROX_UNIQUE_COUNT:
-        return HllSketch()
-    if op in _FREQ:
-        return FreqSketch()
-    return KllSketch()
 
 
 def _sketch_cls(op: Operation):
@@ -238,134 +239,68 @@ def _encode(row: dict, parts) -> bytes:
     return json.dumps(body, sort_keys=True, default=float).encode()
 
 
-def _upload_ir_split(kv: KvStore, gb: GroupBy, ev: DataFrame,
-                     batch_end_ms: int) -> int:
-    """The collapsed-IR + tail-hop-tile split over an already-projected
-    event frame (keys + inputs + TS_COL) — shared by the events tier
-    (upload_batch_state) and the entity tier (upload_entity_batch_state,
-    which feeds snapshot rows through the same datasets/encoding)."""
+def _upload_frame(gb: GroupBy, ev: DataFrame, batch_end_ms: int) -> DataFrame:
+    """The collapsed-IR + tail-hop-tile split of an event frame (keys +
+    inputs + TS_COL) as typed IR columns: one row per key over the events
+    below the tile floor, with a null ``__tile``, ∪ one row per (key, hop)
+    over the rest. Without a windowed part every event is collapsed."""
     from zipline_chronon_spark.operators import pit_join
 
-    parts = _parts(gb)
-    hop = _tile_hop(gb)
     floor = _tile_floor(gb, batch_end_ms)
-    keys = list(gb.key_columns)
-    batch_ds, tile_ds = f"{gb.name}__batch", f"{gb.name}__tiles"
-
-    def enc_batch(d: dict) -> tuple[str, bytes, bytes]:
-        return (batch_ds, key_bytes(tuple(d[k] for k in keys)), _encode(d, parts))
-
-    def enc_tile(d: dict) -> tuple[str, bytes, bytes]:
-        key = (key_bytes(tuple(d[k] for k in keys))
-               + b"|" + str(d["__tile"]).encode())
-        return (tile_ds, key, _encode(d, parts))
-
-    if floor is None:  # unbounded-only: one collapsed row per key
-        n = kv.write_rows(_ir_rows(ev, gb), enc_batch)
-    else:
-        old = ev.where(F.col(pit_join.TS_COL) < floor)
-        recent = ev.where(F.col(pit_join.TS_COL) >= floor)
-        n = kv.write_rows(_ir_rows(old, gb), enc_batch)
-        n += kv.write_rows(_ir_rows(recent, gb, tile_hop=hop), enc_tile)
-    kv.put(f"{gb.name}__meta", b"tile_floor", str(floor if floor is not None else -1).encode())
-    return n
+    ts = F.col(pit_join.TS_COL)
+    collapsed = _ir_rows(ev if floor is None else ev.where(ts < floor), gb)
+    collapsed = collapsed.withColumn("__tile", F.lit(None).cast("long"))
+    if floor is None:
+        return collapsed
+    return collapsed.unionByName(
+        _ir_rows(ev.where(ts >= floor), gb, tile_hop=_tile_hop(gb)))
 
 
 def group_by_upload_df(spark: SparkSession, gb: GroupBy,
                        batch_end_ms: int) -> DataFrame:
-    """The GroupByUpload OUTPUT TABLE: one row per (key[, tile]) with the
-    encoded IR payload — the reference materializes exactly this shape to a
-    warehouse table that a separate bulk-load job ships into the KV store
-    (GroupByUpload.scala:112-300; here the Avro IR bytes are the JSON
-    encoding behind the same seam). Columns: keys…, __tile (null for the
-    collapsed row), __ir (binary). Write it with the catalog and bulk-load
-    later, or skip the table and stream directly via upload_batch_state."""
-    from pyspark.sql import types as T
-
-    from zipline_chronon_spark.operators import pit_join
-
-    parts = _parts(gb)
-    hop = _tile_hop(gb)
-    floor = _tile_floor(gb, batch_end_ms)
-    keys = list(gb.key_columns)
-    ev = _events(spark, gb, None, batch_end_ms)
-
-    def encode_rows(df: DataFrame, tiled: bool) -> DataFrame:
-        cols = keys + (["__tile"] if tiled else [])
-        # pandas widens nullable long columns to float64: remember which
-        # columns must encode as ints so the table round-trip is
-        # byte-identical to the direct streaming upload
-        int_cols = {f.name for f in df.schema.fields
-                    if f.dataType.typeName() in ("long", "integer", "short")}
-        schema = T.StructType(
-            [df.schema[c] for c in cols]
-            + ([] if tiled else [T.StructField("__tile", T.LongType(), True)])
-            + [T.StructField("__ir", T.BinaryType(), True)])
-
-        def enc(it):
-            import pandas as pd
-
-            def native(c, v):
-                if v is None or (isinstance(v, float) and pd.isna(v)):
-                    return None
-                if hasattr(v, "item"):
-                    v = v.item()
-                if c in int_cols and isinstance(v, float):
-                    return int(v)
-                return v
-
-            for pdf in it:
-                recs = [{c: native(c, v) for c, v in r.items()}
-                        for r in pdf.to_dict("records")]
-                out = {c: [r.get(c) for r in recs] for c in cols}
-                if not tiled:
-                    out["__tile"] = [None] * len(recs)
-                out["__ir"] = [_encode(r, parts) for r in recs]
-                yield pd.DataFrame(out)
-
-        return df.mapInPandas(enc, schema=schema)
-
-    if floor is None:
-        return encode_rows(_ir_rows(ev, gb), tiled=False)
-    old = ev.where(F.col(pit_join.TS_COL) < floor)
-    recent = ev.where(F.col(pit_join.TS_COL) >= floor)
-    return encode_rows(_ir_rows(old, gb), tiled=False).unionByName(
-        encode_rows(_ir_rows(recent, gb, tile_hop=hop), tiled=True))
+    """The GroupByUpload OUTPUT TABLE for gb's source events below
+    ``batch_end_ms``: one row per (key[, tile]) with the IR in typed columns
+    (keys…, ``__tile`` — null for the collapsed row — and the
+    ``{part}__sum/__count/__min/__max/__v/__ts/__sk`` IR columns). The
+    reference materializes this shape to a warehouse table that a separate
+    bulk-load job ships into the KV store (GroupByUpload.scala:112-300):
+    write it with the catalog and ``bulk_load`` it later, or let
+    upload_batch_state load it straight away."""
+    return _upload_frame(gb, _events(spark, gb, None, batch_end_ms), batch_end_ms)
 
 
 def bulk_load(kv: KvStore, upload_df: DataFrame, gb: GroupBy,
-              batch_end_ms: Optional[int] = None) -> int:
-    """Ship a materialized GroupByUpload table into the KV store from the
-    executors (the reference's bulk-load step). Pass ``batch_end_ms`` to
-    also stamp the serving metadata the Fetcher reads."""
+              batch_end_ms: int) -> int:
+    """Ship a GroupByUpload table (materialized or not) into the KV store
+    from the executors — the only writer of batch state. Each row is
+    encoded with ``_encode`` under ``{name}__batch`` [kb] (null ``__tile``)
+    or ``{name}__tiles`` [kb|hop_start]; the ``batch_end_ms`` and
+    ``tile_floor`` meta rows the fetchers read are stamped driver-side.
+    Returns the number of IR rows written."""
+    parts = _parts(gb)
     keys = list(gb.key_columns)
     batch_ds, tile_ds = f"{gb.name}__batch", f"{gb.name}__tiles"
 
     def enc(d: dict) -> tuple[str, bytes, bytes]:
         kb = key_bytes(tuple(d[k] for k in keys))
         if d["__tile"] is None:
-            return (batch_ds, kb, bytes(d["__ir"]))
-        return (tile_ds, kb + b"|" + str(d["__tile"]).encode(), bytes(d["__ir"]))
+            return (batch_ds, kb, _encode(d, parts))
+        return (tile_ds, kb + b"|" + str(d["__tile"]).encode(), _encode(d, parts))
 
     n = kv.write_rows(upload_df, enc)
-    if batch_end_ms is not None:
-        floor = _tile_floor(gb, batch_end_ms)
-        kv.put(f"{gb.name}__meta", b"batch_end_ms", str(batch_end_ms).encode())
-        kv.put(f"{gb.name}__meta", b"tile_floor",
-               str(floor if floor is not None else -1).encode())
+    floor = _tile_floor(gb, batch_end_ms)
+    kv.put(f"{gb.name}__meta", b"batch_end_ms", str(batch_end_ms).encode())
+    kv.put(f"{gb.name}__meta", b"tile_floor",
+           str(floor if floor is not None else -1).encode())
     return n
 
 
 def upload_batch_state(kv: KvStore, spark: SparkSession, gb: GroupBy,
                        batch_end_ms: int) -> int:
-    """GroupByUpload: collapsed IR per key (events too old for any window
-    tail) + tail-hop tiles covering [tile_floor, batch_end]. IR rows stream
-    into the KV seam from the executors (KvStore.write_rows); only the two
-    tiny meta rows are written driver-side."""
-    ev = _events(spark, gb, None, batch_end_ms)
-    n = _upload_ir_split(kv, gb, ev, batch_end_ms)
-    kv.put(f"{gb.name}__meta", b"batch_end_ms", str(batch_end_ms).encode())
-    return n
+    """GroupByUpload straight into the KV store: collapsed IR per key
+    (events too old for any window tail) + tail-hop tiles covering
+    [tile_floor, batch_end], bulk-loaded from the executors."""
+    return bulk_load(kv, group_by_upload_df(spark, gb, batch_end_ms), gb, batch_end_ms)
 
 
 def upload_stream_events(kv: KvStore, spark: SparkSession, gb: GroupBy,
@@ -437,14 +372,7 @@ class Fetcher:
         self.batch_end_ms = int(be) if be is not None else None
 
     def _spark(self):
-        from pyspark.sql import SparkSession
-
-        spark = self.spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                f"GroupBy {self.gb.name} has derivations: fetch-time "
-                f"application needs a SparkSession (pass spark= to Fetcher)")
-        return spark
+        return _derive_session(self.spark, f"GroupBy {self.gb.name}", "Fetcher")
 
     def derive_rows(self, rows: list[dict]) -> list[dict]:
         """Apply gb.derivations to many fetched feature maps in ONE job."""
@@ -462,89 +390,70 @@ class Fetcher:
 
     def fetch(self, key_values: tuple, at_ts_ms: Optional[int] = None,
               derive: bool = True) -> dict:
-        kb = key_bytes(key_values)
-        T = at_ts_ms if at_ts_ms is not None else self.batch_end_ms
-        collapsed = None
-        b = self.kv.get(f"{self.gb.name}__batch", kb)
-        if b is not None:
-            collapsed = json.loads(b)
-        tiles = []
-        for k, v in self.kv.scan(f"{self.gb.name}__tiles", kb + b"|"):
-            hop_start = int(k.rsplit(b"|", 1)[1])
-            tiles.append((hop_start, json.loads(v)))
-        events = []
-        for k, v in self.kv.scan(f"{self.gb.name}__events", kb + b"|"):
-            e = json.loads(v)
-            if e["ts"] <= T:
-                events.append(e)
-        out = merge_state(self.parts, collapsed, tiles, events, T)
-        if derive and self.gb.derivations:
-            out = self.derive_rows([out])[0]
-        return out
+        return self.fetch_batch([key_values], at_ts_ms, derive)[0]
 
     def fetch_batch(self, key_tuples: list[tuple],
                     at_ts_ms: Optional[int] = None,
                     derive: bool = True) -> list[dict]:
-        """Many keys in ONE pass per dataset (the request-batched serving
-        shape — the reference Fetcher also groups GetRequests per dataset):
-        per-key results identical to ``fetch``. Against a store whose scan
-        is O(dataset) per call (InMemoryKv), this turns U fetches from
-        O(U x dataset) into O(dataset); against an indexed store it is one
-        multi-get instead of U round-trips."""
-        from collections import defaultdict
-
+        """Many keys in one call (the request-batched serving shape — the
+        reference Fetcher also groups GetRequests): one ``read_state`` per
+        key, so per-key results are identical to ``fetch``; derivations run
+        as ONE job for the whole batch."""
         T = at_ts_ms if at_ts_ms is not None else self.batch_end_ms
-        kbs = [key_bytes(k) for k in key_tuples]
-        want = set(kbs)
-        name = self.gb.name
-        collapsed: dict[bytes, dict] = {}
-        for kb in want:
-            b = self.kv.get(f"{name}__batch", kb)
-            if b is not None:
-                collapsed[kb] = json.loads(b)
-        tiles: dict[bytes, list] = defaultdict(list)
-        # suffix components (hop / ts / seq) never contain '|', so rsplit
-        # recovers the exact key prefix regardless of key content
-        for k, v in self.kv.scan(f"{name}__tiles"):
-            kb = k.rsplit(b"|", 1)[0]
-            if kb in want:
-                tiles[kb].append((int(k.rsplit(b"|", 1)[1]), json.loads(v)))
-        events: dict[bytes, list] = defaultdict(list)
-        for k, v in self.kv.scan(f"{name}__events"):
-            kb = k.rsplit(b"|", 2)[0]
-            if kb in want:
-                e = json.loads(v)
-                if e["ts"] <= T:
-                    events[kb].append(e)
-        outs = [merge_state(self.parts, collapsed.get(kb), tiles.get(kb, []),
-                            events.get(kb, []), T) for kb in kbs]
+        outs = [merge_state(self.parts,
+                            *read_state(self.kv, self.gb.name, "events", key_bytes(k)), T)
+                for k in key_tuples]
         if derive and self.gb.derivations:
             outs = self.derive_rows(outs)
         return outs
 
 
+def _derive_session(spark, owner: str, ctor: str):
+    """``spark`` or the active session: fetch-time derivations run on one."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        raise RuntimeError(
+            f"{owner} has derivations: fetch-time application needs a "
+            f"SparkSession (pass spark= to {ctor})")
+    return spark
+
+
+def read_state(kv: KvStore, name: str, heads_ds: str, kb: bytes):
+    """One key's stored state for GroupBy ``name``: (collapsed IR or None,
+    [(hop_start, tile IR)], head rows of ``{name}__{heads_ds}``) — one get
+    and two prefix scans. The head rows are stream events (``events``) or
+    the entity tier's CDC mutations (``mutations``)."""
+    b = kv.get(f"{name}__batch", kb)
+    tiles = [(int(k.rsplit(b"|", 1)[1]), json.loads(v))
+             for k, v in kv.scan(f"{name}__tiles", kb + b"|")]
+    heads = [json.loads(v) for _, v in kv.scan(f"{name}__{heads_ds}", kb + b"|")]
+    return (json.loads(b) if b is not None else None), tiles, heads
+
+
+def window_irs(p, collapsed: Optional[dict], tiles: list[tuple[int, dict]],
+               T: int) -> list[dict]:
+    """Part ``p``'s batch IRs at T: the collapsed IR and every tile for an
+    unbounded part, else the tiles from its hop-aligned window tail (each
+    tile lies fully below the head)."""
+    if p.window is None:
+        return ([collapsed] if collapsed is not None else []) + [ir for _, ir in tiles]
+    tail = p.window.tail_start(T)
+    return [ir for hs, ir in tiles if hs >= tail]
+
+
 def merge_state(parts, collapsed: Optional[dict],
                 tiles: list[tuple[int, dict]], events: list[dict],
                 T: int) -> dict:
-    """The sawtooth lambda merge: collapsed IR + per-hop tiles (each tile
-    fully below the head) + raw head events, per part honoring its own
-    hop-aligned window tail. The batch sketch serve
-    (operators/approx_engine.py) applies the same rule to tiles built by
-    the same ``group_sketches`` and finalizes through the same
-    ``finalize_sketch``, so offline == online holds by construction."""
+    """The sawtooth lambda merge: ``window_irs`` + the raw head events with
+    tail <= ts <= T, per part honoring its own hop-aligned window tail. The
+    batch sketch serve (operators/approx_engine.py) applies the same rule
+    to tiles built by the same ``group_sketches`` and finalizes through the
+    same ``finalize_sketch``, so offline == online holds by construction."""
     out = {}
     for p in parts:
-        irs = []
-        if p.window is None:
-            if collapsed is not None:
-                irs.append(collapsed)
-            irs.extend(ir for _, ir in tiles)
-            evs = events
-        else:
-            tail = p.window.tail_start(T)
-            irs.extend(ir for hs, ir in tiles if hs >= tail)
-            evs = [e for e in events if e["ts"] >= tail]
-        out[p.output_name] = finalize_part(p, irs, evs)
+        lo = p.window.tail_start(T) if p.window is not None else -math.inf
+        evs = [e for e in events if lo <= e["ts"] <= T]
+        out[p.output_name] = finalize_part(p, window_irs(p, collapsed, tiles, T), evs)
     return out
 
 
@@ -579,7 +488,7 @@ def finalize_part(p, irs: list[dict], evs: list[dict]):
             cur = _sketch_cls(op).from_bytes(raw)
             sk = cur if sk is None else sk.merge(cur)
         if vals:
-            sk = sk or _new_sketch(op)
+            sk = sk or _sketch_cls(op)()
             sk.update(vals)
         if sk is None:
             return None
@@ -690,15 +599,9 @@ class JoinFetcher:
     def derive_rows(self, pairs: list[tuple[dict, dict]]) -> list[dict]:
         """Apply join.derivations over (left_row + features) dicts; left
         columns are kept (the offline merge's always_keep contract)."""
-        from pyspark.sql import SparkSession
-
         from zipline_chronon_spark.operators.derive import apply_derivations_rows
 
-        spark = self.spark or SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                f"Join {self.join.name} has derivations: fetch-time "
-                f"application needs a SparkSession (pass spark= to JoinFetcher)")
+        spark = _derive_session(self.spark, f"Join {self.join.name}", "JoinFetcher")
         keep = list(dict.fromkeys(c for left, _ in pairs for c in left))
         rows = [{**left, **feats} for left, feats in pairs]
         if not hasattr(self, "_hint"):

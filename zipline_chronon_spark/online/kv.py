@@ -8,7 +8,8 @@ same seam sized for this engine: datasets are named tables of
 sketch/scalar IR bytes; the fetcher merges them at query time.
 
 InMemoryKv is the sandbox implementation (a dict per dataset) — swapping
-in a real store is a constructor change, the byte contracts stay."""
+in a real store is a constructor change, the byte contracts stay. Both
+stores index prefix scans by the key's first ``|``-component."""
 
 from __future__ import annotations
 
@@ -61,8 +62,15 @@ class KvStore(ABC):
 
 
 class InMemoryKv(KvStore):
+    """A dict per dataset. Prefix scans are indexed as in DirKv: a prefix
+    containing ``|`` looks only at the keys that share its first
+    ``|``-component, in insertion order (an insertion-ordered dict of keys
+    per component), so a scan yields what an unindexed ``startswith``
+    filter over the dataset would, in the same order."""
+
     def __init__(self):
         self.data: dict[str, dict[bytes, bytes]] = {}
+        self._by_head: dict[str, dict[bytes, dict[bytes, None]]] = {}
 
     def write_rows(self, df, encode_fn) -> int:
         """TEST-ONLY collecting adapter: this store's dict lives in the
@@ -87,14 +95,18 @@ class InMemoryKv(KvStore):
 
     def put(self, dataset: str, key: bytes, value: bytes) -> None:
         self.data.setdefault(dataset, {})[key] = value
+        self._by_head.setdefault(dataset, {}).setdefault(_head(key), {})[key] = None
 
     def get(self, dataset: str, key: bytes) -> Optional[bytes]:
         return self.data.get(dataset, {}).get(key)
 
     def scan(self, dataset: str, key_prefix: bytes = b"") -> Iterable[tuple[bytes, bytes]]:
-        for k, v in self.data.get(dataset, {}).items():
+        rows = self.data.get(dataset, {})
+        keys = (self._by_head.get(dataset, {}).get(_head(key_prefix), ())
+                if b"|" in key_prefix else rows)
+        for k in keys:
             if k.startswith(key_prefix):
-                yield k, v
+                yield k, rows[k]
 
 
 class DirKv(KvStore):
@@ -117,7 +129,7 @@ class DirKv(KvStore):
 
     @staticmethod
     def _bucket(key: bytes) -> str:
-        return hashlib.sha256(key.split(b"|", 1)[0]).hexdigest()[:16]
+        return hashlib.sha256(_head(key)).hexdigest()[:16]
 
     def _path(self, dataset: str, key: bytes) -> str:
         return os.path.join(self.root, dataset, self._bucket(key),
@@ -167,6 +179,12 @@ class DirKv(KvStore):
             return
         for b in sorted(os.listdir(base)):
             yield from self._walk_bucket(os.path.join(base, b), key_prefix)
+
+
+def _head(key: bytes) -> bytes:
+    """A key's first ``|``-component: the entity-key part of ``kb|tile`` /
+    ``kb|ts|seq`` keys, which every prefix scan of one entity shares."""
+    return key.split(b"|", 1)[0]
 
 
 def key_bytes(key_values: tuple) -> bytes:

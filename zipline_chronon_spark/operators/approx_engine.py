@@ -23,9 +23,10 @@ whole key groups:
     answers;
   - sketch parts get their hop tiles built inside the task from the key's
     sorted events, by the upload's own builder (fetcher.group_sketches),
-    one build per content class (``_ir_plan``). A windowed part merges the
-    tiles from its tail up to the query's head hop plus the raw events of
-    the head hop; an unbounded part keeps a running merge of every tile
+    one build per (sketch class, input column): windows and finalize
+    arguments (k, percentiles) do not change a tile. A windowed part
+    merges the tiles from its tail up to the query's head hop plus the raw
+    events of the head hop; an unbounded part keeps a running merge of every tile
     below the head hop. Both window endpoints are monotone in query time,
     so a two-stack slider (``_SwagSketch``, the SlickDeque/SWAG idea)
     merges each tile O(1) amortized times per key, not once per query. No
@@ -50,7 +51,6 @@ share one tile builder and one finalize rule.
 
 from __future__ import annotations
 
-import dataclasses
 from typing import Optional
 
 import numpy as np
@@ -69,48 +69,6 @@ from zipline_chronon_spark.operators.sketches import hash64, sketch_input
 ROW_ID = pit_join.ROW_ID
 TS_COL = pit_join.TS_COL
 SIDE_COL = pit_join.SIDE_COL
-
-
-def _ir_plan(gb: GroupBy):
-    """Deduplicate tile IRs by CONTENT: every windowed variant of an
-    aggregation reads the same per-(key, tile) state — SUM_1d / SUM / AVG
-    share one (sum, count) pair, both APPROX_UNIQUE_COUNT windows share one
-    HLL, and sketch args (k, percentiles) only matter at finalize. The
-    serve builds each sketch class's tiles once per chunk. Returns
-    (gb_ir, ir_map) where gb_ir generates exactly one part per class and
-    ir_map maps each original part's output_name to its
-    representative's."""
-    from zipline_chronon_spark.api import Aggregation, AggregationPart
-
-    parts = fl._parts(gb)
-    has_sumcnt = {p.input_column for p in parts
-                  if p.operation in (Operation.SUM, Operation.AVERAGE)}
-    classes: dict = {}
-    ir_map: dict[str, str] = {}
-    reduced: list = []
-    for p in parts:
-        op = p.operation
-        if op in (Operation.SUM, Operation.AVERAGE) or (
-                op == Operation.COUNT and p.input_column in has_sumcnt):
-            ck = ("sumcnt", p.input_column)
-            rep_op, rep_args = Operation.AVERAGE, ()
-        elif op == Operation.COUNT:
-            ck = ("cnt", p.input_column)
-            rep_op, rep_args = Operation.COUNT, ()
-        elif op in fl.SKETCH_OPS:
-            ck = (fl._sketch_cls(op).__name__, p.input_column)
-            rep_op, rep_args = op, ()
-        else:  # MIN / MAX / FIRST / LAST
-            ck = (op.name, p.input_column)
-            rep_op, rep_args = op, ()
-        if ck not in classes:
-            rep = AggregationPart(p.input_column, rep_op, rep_args, None, None)
-            classes[ck] = rep.output_name
-            reduced.append(Aggregation(p.input_column, rep_op, rep_args,
-                                       windows=(None,)))
-        ir_map[p.output_name] = classes[ck]
-    gb_ir = dataclasses.replace(gb, aggregations=tuple(reduced))
-    return gb_ir, ir_map
 
 
 class _SwagSketch:
@@ -194,7 +152,7 @@ def _sorted_quantiles(sv: np.ndarray, qs: list[float]) -> list[float]:
     return out
 
 
-def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
+def _serve_sketches(cols: dict, gid: np.ndarray, parts, hop: int,
                     out_schema: pa.Schema) -> list[pa.Array]:
     """The sketch parts' columns for the queries (SIDE_COL 1) of one sorted
     chunk of whole key groups, ``gid`` the 0-based key index per row.
@@ -233,7 +191,7 @@ def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
     t_ofs = np.searchsorted(tile_g, np.arange(G + 1))
     q_ofs = np.searchsorted(g_q, np.arange(G + 1))
     ev_take = pa.array(ev_pos, type=pa.int64())
-    tiles: dict = {}  # content class -> one sketch per tile
+    tiles: dict = {}  # (sketch class, input column) -> one sketch per tile
 
     arrays = []
     for p in parts:
@@ -247,10 +205,10 @@ def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
                 enc_ev, gq_enc + np.maximum(np.maximum(tail, head) - base, 0)), e_hi)
         op = p.operation
         ecol = cols[p.input_column].take(ev_take)
-        rep = ir_map.get(p.output_name, p.output_name)
-        if rep not in tiles:
-            tiles[rep] = fl.group_sketches(op, ecol, t_start)
-        tile_sks = tiles[rep]
+        content = (fl._sketch_cls(op), p.input_column)
+        if content not in tiles:
+            tiles[content] = fl.group_sketches(op, ecol, t_start)
+        tile_sks = tiles[content]
         vals = sketch_input(ecol)
         # event-row bounds -> positions into the valid values
         cv = np.zeros(len(ecol) + 1, dtype=np.int64)
@@ -323,7 +281,7 @@ def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
                             sset.update(vals[bprev:bi].tolist())
                             bprev = bi
                             if len(sset) > limit:
-                                work = fl._new_sketch(op)
+                                work = fl._sketch_cls(op)()
                                 work.update_hashes(np.fromiter(
                                     sset, dtype=np.uint64, count=len(sset)))
                         if work is not None:
@@ -356,7 +314,7 @@ def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
                                 buf = np.insert(
                                     buf, np.searchsorted(buf, nv), nv)
                                 if len(buf) > cap:
-                                    work = fl._new_sketch(op)
+                                    work = fl._sketch_cls(op)()
                                     work.levels[0] = buf.copy()
                                     work.n = len(buf)
                                     work._compress()
@@ -373,7 +331,7 @@ def _serve_sketches(cols: dict, gid: np.ndarray, parts, ir_map: dict, hop: int,
                     bi = int(b[i])
                     if bi > bprev:
                         if work is None:
-                            work = fl._new_sketch(op)
+                            work = fl._sketch_cls(op)()
                         if op == Operation.APPROX_UNIQUE_COUNT:
                             work.update_hashes(vals[bprev:bi])
                         else:
@@ -415,7 +373,6 @@ def compute_group_by_approx(
     sketch = [p for p in parts if p.operation in fl.SKETCH_OPS]
     scalar_schema = pa.schema([arrow_schema.field(ROW_ID),
                                *[arrow_schema.field(p.output_name) for p in scalar]])
-    _, ir_map = _ir_plan(gb)
     hop = fl._tile_hop(gb) or 86_400_000  # unbounded-only: any fixed tiling
 
     def runner(batches):
@@ -430,7 +387,7 @@ def compute_group_by_approx(
                 served.update(zip(
                     [p.output_name for p in sketch],
                     _serve_sketches(_columns(tbl), np.cumsum(start) - 1, sketch,
-                                    ir_map, hop, arrow_schema)))
+                                    hop, arrow_schema)))
             yield pa.RecordBatch.from_arrays([served[n] for n in arrow_schema.names],
                                              schema=arrow_schema)
 
