@@ -5,6 +5,7 @@ row-count + column names + values (order-insensitive)."""
 from __future__ import annotations
 
 import math
+import re
 
 import duckdb
 import numpy as np
@@ -92,6 +93,14 @@ def compare(spark_df, oracle_pdf: pd.DataFrame) -> dict:
     return res
 
 
+def python_nodes(spark_df) -> list[str]:
+    """The Python UDF node names (``MapInArrow``, ``FlatMapGroupsInPandas``,
+    …) in ``spark_df``'s executed plan; read after the query has run, so no
+    second run is started."""
+    plan = spark_df._jdf.queryExecution().executedPlan().toString()
+    return sorted(set(re.findall(r"\b\w*In(?:Arrow|Pandas)\b", plan)))
+
+
 def run_all(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, dict]:
     import __spark_entry__ as entry_mod
 
@@ -105,7 +114,7 @@ def run_all(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, dict
         if name not in os_:
             # non-SQL-expressible op: rows-only check (driver does the same)
             results[name] = {"ok": sdf.count() >= 0, "rows_only": True}
-            continue
-        opdf = con.execute(os_[name]).fetchdf()
-        results[name] = compare(sdf, opdf)
+        else:
+            results[name] = compare(sdf, con.execute(os_[name]).fetchdf())
+        results[name]["python_nodes"] = python_nodes(sdf)
     return results

@@ -200,6 +200,8 @@ def test_time_travel_before_batch_day_raises(spark, cdc):
     upload_entity_batch_state(kv, spark, gb, ds)
     f = EntityFetcher(kv, gb)
     assert f.batch_day_ms is not None
+    # one time row: the batch day is bulk_load's batch_end_ms
+    assert sorted(kv.data[f"{gb.name}__meta"]) == [b"batch_end_ms", b"tile_floor"]
     key0 = snap_pdf["key"].iloc[0]
     key0 = key0.item() if hasattr(key0, "item") else key0
     with pytest.raises(ValueError, match="precedes the uploaded batch day"):

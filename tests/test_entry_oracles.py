@@ -27,6 +27,10 @@ def test_all_queries_match_oracles(spark):
         if not r["ok"]
     }
     assert not failures, failures
+    # one Arrow boundary: no query crosses into Python through pandas
+    pandas_nodes = {n: r["python_nodes"] for n, r in results.items()
+                    if any("InPandas" in x for x in r["python_nodes"])}
+    assert not pandas_nodes, pandas_nodes
 
 
 def test_join_flagship_zero_denominator_is_null(spark, tmp_path):

@@ -25,7 +25,10 @@ def events(spark):
     n = 3000
     pdf = pd.DataFrame({
         "k": rng.integers(0, 6, size=n).astype(str),
-        "ts_ms": BASE + rng.integers(0, 2 * 86_400_000, size=n),
+        # from a day before BASE: the batch ends at BASE + 1d, so the
+        # 1-day windows' tile floor lies near BASE and the older events
+        # become collapsed (``fx__batch``) rows
+        "ts_ms": BASE + rng.integers(-86_400_000, 2 * 86_400_000, size=n),
         "v": rng.normal(10, 3, size=n).round(3),
         "cat": [f"c{int(x)}" for x in rng.integers(0, 25, size=n)],
     }).astype({"ts_ms": "int64"})
@@ -118,6 +121,7 @@ def test_upload_table_bulk_load_parity(spark, events, tmp_path):
     loaded = InMemoryKv()
     n = bulk_load(loaded, spark.read.parquet(p), gb, batch_end_ms=t0)
     assert n > 6
+    assert direct.data.get(f"{gb.name}__batch")  # collapsed rows round-trip too
     for ds in (f"{gb.name}__batch", f"{gb.name}__tiles", f"{gb.name}__meta"):
         assert loaded.data.get(ds, {}) == direct.data.get(ds, {}), ds
 
@@ -367,7 +371,10 @@ def test_keys_sharing_a_first_component(spark):
     n = 600
     pdf = pd.DataFrame({
         "k": rng.choice(["a|b", "a", "a|"], size=n),
-        "ts_ms": BASE + rng.integers(0, 2 * 86_400_000, size=n),
+        # from a day before BASE: the batch ends at BASE + 1d, so the
+        # 1-day windows' tile floor lies near BASE and the older events
+        # become collapsed (``fx__batch``) rows
+        "ts_ms": BASE + rng.integers(-86_400_000, 2 * 86_400_000, size=n),
         "v": rng.normal(10, 3, size=n).round(3),
         "cat": [f"c{int(x)}" for x in rng.integers(0, 25, size=n)],
     }).astype({"ts_ms": "int64"})

@@ -72,7 +72,7 @@ def upload_entity_batch_state(kv: KvStore, spark: SparkSession, gb: GroupBy,
     """Upload the snapshot partition serving day ``batch_day_ds`` (i.e.
     partition d-1: the state at start-of-day d) as collapsed IR + tail-hop
     tiles through the events tier's split and ``bulk_load`` (same datasets,
-    encoding and meta rows), plus the ``batch_day_ms`` meta row."""
+    encoding and meta rows; its ``batch_end_ms`` row is the batch day)."""
     from datetime import datetime, timezone
 
     (src,) = gb.sources
@@ -85,9 +85,7 @@ def upload_entity_batch_state(kv: KvStore, spark: SparkSession, gb: GroupBy,
             .where(F.expr(src.partition_column).cast("string") == prev_ds))
     snap, proj, ts_ms, _, _ = _project(snap, gb, src)
     ev = snap.select(*proj, ts_ms.alias(pit_join.TS_COL))
-    n = fl.bulk_load(kv, fl._upload_frame(gb, ev, day_ms), gb, day_ms)
-    kv.put(f"{gb.name}__meta", b"batch_day_ms", str(day_ms).encode())
-    return n
+    return fl.bulk_load(kv, fl._upload_frame(gb, ev, day_ms), gb, day_ms)
 
 
 def upload_mutation_events(kv: KvStore, spark: SparkSession, gb: GroupBy,
@@ -185,7 +183,7 @@ class EntityFetcher:
         self.gb = gb
         self.parts = fl._parts(gb)
         self.allow_insert_only = allow_insert_only
-        bd = kv.get(f"{gb.name}__meta", b"batch_day_ms")
+        bd = kv.get(f"{gb.name}__meta", b"batch_end_ms")
         self.batch_day_ms = int(bd) if bd is not None else None
 
     def fetch(self, key_values: tuple, at_ts_ms: int) -> dict:

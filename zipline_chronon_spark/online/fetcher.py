@@ -457,12 +457,17 @@ def merge_state(parts, collapsed: Optional[dict],
     return out
 
 
-def _sketch_bytes(raw) -> Optional[bytes]:
-    if raw is None:
-        return None
-    if isinstance(raw, str):  # KV tier stores b64-in-JSON
-        return base64.b64decode(raw)
-    return bytes(raw)  # Spark binary column
+def merge_sketches(op: Operation, raws):
+    """The in-order merge of the sketch IRs ``raws`` (bytes or the KV tier's
+    base64 text; None skipped), or None when there is none."""
+    sk = None
+    for raw in raws:
+        if raw is None:
+            continue
+        cur = _sketch_cls(op).from_bytes(
+            base64.b64decode(raw) if isinstance(raw, str) else bytes(raw))
+        sk = cur if sk is None else sk.merge(cur)
+    return sk
 
 
 def finalize_sketch(op: Operation, sk, k: int, nfp: bool, pcts: Optional[list[float]]):
@@ -480,13 +485,7 @@ def finalize_part(p, irs: list[dict], evs: list[dict]):
     nm, op, col = p.output_name, p.operation, p.input_column
     vals = [e[col] for e in evs if e.get(col) is not None]
     if op in SKETCH_OPS:
-        sk = None
-        for ir in irs:
-            raw = _sketch_bytes(ir.get(f"{nm}__sk"))
-            if raw is None:
-                continue
-            cur = _sketch_cls(op).from_bytes(raw)
-            sk = cur if sk is None else sk.merge(cur)
+        sk = merge_sketches(op, [ir.get(f"{nm}__sk") for ir in irs])
         if vals:
             sk = sk or _sketch_cls(op)()
             sk.update(vals)

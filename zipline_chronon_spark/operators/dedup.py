@@ -413,30 +413,26 @@ def embedding_near_dup_pairs(
     can never emit (their normalized row scores 0 in the prefilter).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from zipline_chronon_spark.operators.similarity import (
-        _normalized_matrix, band_buckets)
+        _ids, _normalized_matrix, _stride_capped, band_buckets)
 
     cells = band_buckets(df.select(id_col, vec_col), id_col, vec_col,
                          n_bands, planes_per_band, seed)
 
-    def cand(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        if len(pdf) > max_bucket:
-            pdf = pdf.sort_values(id_col).iloc[:: (len(pdf) // max_bucket) + 1]
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        m = _normalized_matrix(pdf[vec_col])
+    def cand(tbl):  # a singleton cell yields no pair
+        tbl = _stride_capped(tbl, id_col, max_bucket)
+        ids = _ids(tbl, id_col)
+        m = _normalized_matrix(tbl[vec_col])
         sims = m @ m.T
         iu, ju = np.triu_indices(len(ids), k=1)
         keep = sims[iu, ju] >= threshold - 1e-6
         a, b = ids[iu[keep]], ids[ju[keep]]
-        return pd.DataFrame({"id_a": np.minimum(a, b),
-                             "id_b": np.maximum(a, b)})
+        return pa.table({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b)})
 
     pairs = (cells.groupBy("band", "bucket")
-             .applyInPandas(cand, schema="id_a long, id_b long")
+             .applyInArrow(cand, schema="id_a long, id_b long")
              .dropDuplicates(["id_a", "id_b"]))
 
     va, vb = F.col("__va"), F.col("__vb")

@@ -9,8 +9,9 @@ same ``bytes -> dict`` signature).
 Design for 100 TB of media:
  - binaries stay in their own column and are only read by stages that need
    them (parquet column pruning keeps metadata-only queries cheap);
- - decode/feature-extract runs in ``mapInPandas`` so each task streams
-   Arrow batches instead of materializing a partition of blobs;
+ - decode/feature-extract runs in ``mapInArrow`` so each task streams
+   Arrow batches instead of materializing a partition of blobs; the id
+   columns pass through as Arrow arrays and only the blobs reach Python;
  - ``target_batch_bytes`` guides repartitioning so one batch of decoded
    frames fits executor memory.
 """
@@ -20,7 +21,7 @@ from __future__ import annotations
 import hashlib
 from typing import Callable, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,30 +57,24 @@ def extract_media_metadata(
     target_batch_bytes: int = 256 << 20,
 ) -> DataFrame:
     """binary column -> typed metadata row per record via Arrow batches."""
-    decoder = decoder or stub_decoder
-    id_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.select(*id_cols).schema.fields
-    )
-    out_schema = f"{id_schema}, {MEDIA_META_SCHEMA}"
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    decoder = decoder or stub_decoder
+    meta_schema = _parse_datatype_string(MEDIA_META_SCHEMA)
+    out_schema = StructType(df.select(*id_cols).schema.fields + meta_schema.fields)
+    meta = to_arrow_schema(meta_schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if not b.num_rows:
                 continue
-            metas = []
-            for payload in pdf[binary_col]:
-                if payload is None:
-                    metas.append({})
-                    continue
-                m = decoder(bytes(payload))
-                m["media_bytes"] = len(payload)
-                metas.append(m)
-            meta_df = pd.DataFrame(metas)
-            out = pdf[list(id_cols)].reset_index(drop=True)
-            for name in ("media_bytes", "sha256", "format", "width", "height",
-                         "n_frames", "duration_ms"):
-                out[name] = meta_df.get(name)
-            yield out
+            metas = [{} if p is None else {**decoder(p), "media_bytes": len(p)}
+                     for p in b.column(binary_col).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c) for c in id_cols]
+                + [pa.array([m.get(f.name) for m in metas], f.type) for f in meta],
+                names=[*id_cols, *meta.names])
 
     # size partitions so one task's blobs fit comfortably in memory —
     # from parquet FOOTER metadata (column-chunk sizes), not a data scan
@@ -89,9 +84,9 @@ def extract_media_metadata(
     if total is None:
         # not a plain file scan (or non-parquet): keep the plan's own
         # partitioning rather than paying a full blob pass just to count
-        return src.mapInPandas(run, schema=out_schema)
+        return src.mapInArrow(run, schema=out_schema)
     n_parts = max(1, int(total // target_batch_bytes) + 1)
-    return src.repartition(n_parts).mapInPandas(run, schema=out_schema)
+    return src.repartition(n_parts).mapInArrow(run, schema=out_schema)
 
 
 def _blob_bytes_from_metadata(df: DataFrame, binary_col: str) -> Optional[int]:

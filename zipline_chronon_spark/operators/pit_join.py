@@ -171,7 +171,11 @@ def apply_models(df: DataFrame, mt) -> DataFrame:
     """Model enrichment over Arrow batches. Works UNCHANGED on a streaming
     DataFrame (mapInPandas is supported in Structured Streaming), so the
     online enrichment path runs the exact same callables as the batch
-    backfill — no train/serve skew by construction."""
+    backfill — no train/serve skew by construction.
+
+    The engine's one ``mapInPandas``: the public model contract is
+    ``model.transform(pandas.DataFrame)``, so a ``mapInArrow`` here would
+    only move the pandas conversion inside the call."""
     passthrough = list(mt.passthrough_fields) or list(df.columns)
     from pyspark.sql.types import _parse_datatype_string
 

@@ -24,8 +24,9 @@ driver — no toPandas/collect anywhere):
    the codebook is the only driver-side state (n_cells x dim floats —
    the classic IVF broadcast).
 
-All scoring emits are columnar (argsort/lexsort + np.repeat) — no per-row
-Python anywhere (BASELINE.json input_hint: vectorized pandas/Arrow UDFs).
+Every Python boundary is Arrow (``mapInArrow``, grouped and cogrouped
+``applyInArrow``): vectors reach numpy as one flat buffer reshaped to
+(n x dim), and every emit is columnar — no per-row Python anywhere.
 """
 
 from __future__ import annotations
@@ -34,11 +35,11 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_OUT_SCHEMA = "{id} long, neighbor_id long, rank int, sim double"
+_CAND_SCHEMA = "q long, n long, s double"
 
 
 # process-wide plane cache: the matrix is a pure function of (seed, dim,
@@ -71,15 +72,44 @@ def _md5_planes(seed: int, dim: int, total: int) -> np.ndarray:
     return vals
 
 
-def _normalized_matrix(pdf_vecs: pd.Series) -> np.ndarray:
-    m = np.stack(pdf_vecs.to_numpy()).astype(np.float64)
+def _matrix(vecs) -> np.ndarray:
+    """(n x dim) float64 matrix of a ``list<float>`` Array or ChunkedArray of
+    equal-length vectors: each chunk's ``flatten()`` (which honours a slice
+    offset, unlike ``.values``) reshaped, no Python object per vector."""
+    chunks = vecs.chunks if isinstance(vecs, pa.ChunkedArray) else [vecs]
+    flat = np.concatenate([c.flatten().to_numpy(zero_copy_only=False)
+                           for c in chunks])
+    return flat.astype(np.float64).reshape(len(vecs), -1)
+
+
+def _normalized_matrix(vecs) -> np.ndarray:
+    m = _matrix(vecs)
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
 
 
+def _stride_capped(tbl: pa.Table, id_col: str, cap: int) -> pa.Table:
+    """``tbl``, or when it holds more than ``cap`` rows a deterministic
+    stride subsample of it in id order: bounded cell cost, documented
+    recall tradeoff on pathological hot cells."""
+    if tbl.num_rows <= cap:
+        return tbl
+    order = np.argsort(tbl.column(id_col).to_numpy(), kind="stable")
+    return tbl.take(order[:: tbl.num_rows // cap + 1])
+
+
+def _ids(tbl: pa.Table, id_col: str) -> np.ndarray:
+    return tbl.column(id_col).to_numpy().astype(np.int64, copy=False)
+
+
+def _cand_table(q=(), n=(), s=()) -> pa.Table:
+    return pa.table({"q": pa.array(q, pa.int64()), "n": pa.array(n, pa.int64()),
+                     "s": pa.array(s, pa.float64())})
+
+
 def _topk_candidates(q_ids: np.ndarray, q_mat: np.ndarray,
-                     c_ids: np.ndarray, c_mat: np.ndarray, k: int) -> pd.DataFrame:
+                     c_ids: np.ndarray, c_mat: np.ndarray, k: int) -> pa.Table:
     """Columnar per-query top-k of q x c cosine sims, self excluded, ties by
     neighbor id asc. One GEMM + one flat lexsort — no per-row Python."""
     nq, nc = len(q_ids), len(c_ids)
@@ -112,11 +142,20 @@ def _topk_candidates(q_ids: np.ndarray, q_mat: np.ndarray,
     sel = order[take]
     out_sim = svals[sel]
     keep = np.isfinite(out_sim)  # drops self-only rows (nc==1 self match)
-    return pd.DataFrame({
-        "q": np.repeat(q_ids, kk)[keep],
-        "n": cand[sel][keep],
-        "s": out_sim[keep],
-    })
+    return _cand_table(np.repeat(q_ids, kk)[keep], cand[sel][keep], out_sim[keep])
+
+
+def _score_cells(k: int, id_col: str, vec_col: str, cap: int | None = None):
+    """The cogrouped scorer: (queries, corpus) Arrow tables of one cell ->
+    their top-k candidate table, the corpus side stride-capped at ``cap``."""
+    def score(qt: pa.Table, ct: pa.Table) -> pa.Table:
+        if qt.num_rows == 0 or ct.num_rows == 0:
+            return _cand_table()
+        if cap is not None:
+            ct = _stride_capped(ct, id_col, cap)
+        return _topk_candidates(_ids(qt, id_col), _normalized_matrix(qt[vec_col]),
+                                _ids(ct, id_col), _normalized_matrix(ct[vec_col]), k)
+    return score
 
 
 def brute_force_topk(
@@ -157,18 +196,9 @@ def brute_force_topk(
         "*", qch.alias("__qc"),
         F.explode(lseq(n_blocks)).alias("__blk"))
 
-    def score(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({"q": [], "n": [], "s": []}).astype(
-                {"q": "int64", "n": "int64", "s": "float64"})
-        return _topk_candidates(
-            qpdf[id_col].to_numpy(dtype=np.int64), _normalized_matrix(qpdf[vec_col]),
-            cpdf[id_col].to_numpy(dtype=np.int64), _normalized_matrix(cpdf[vec_col]),
-            k)
-
     cand = (
         queries.groupBy("__qc", "__blk").cogroup(corpus.groupBy("__qc", "__blk"))
-        .applyInPandas(score, schema="q long, n long, s double")
+        .applyInArrow(_score_cells(k, id_col, vec_col), schema=_CAND_SCHEMA)
     )
     return _global_topk(cand, id_col, k)
 
@@ -203,24 +233,25 @@ def band_buckets(
     out_schema = df.select(id_col, vec_col).schema.add(
         "__buckets", T.ArrayType(T.LongType()))
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         planes = None
         weights = (1 << np.arange(planes_per_band, dtype=np.int64))
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = _matrix(b.column(vec_col))
             if planes is None:
                 planes = _md5_planes(seed, m.shape[1], total)
-            bits = (m @ planes >= 0).reshape(len(pdf), n_bands, planes_per_band)
+            bits = (m @ planes >= 0).reshape(n, n_bands, planes_per_band)
             codes = bits @ weights  # (n, n_bands) int64 bucket codes
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                vec_col: pdf[vec_col],
-                "__buckets": list(codes),
-            })
+            offsets = np.arange(0, (n + 1) * n_bands, n_bands, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(id_col), b.column(vec_col),
+                 pa.ListArray.from_arrays(offsets, codes.reshape(-1))],
+                names=[id_col, vec_col, "__buckets"])
 
-    with_b = df.select(id_col, vec_col).mapInPandas(assign, schema=out_schema)
+    with_b = df.select(id_col, vec_col).mapInArrow(assign, schema=out_schema)
     return with_b.select(
         id_col, vec_col,
         F.posexplode("__buckets").alias("band", "bucket"))
@@ -242,21 +273,15 @@ def lsh_bucketed_topk(
     vs brute force is property-tested (tests/test_data_ops.py)."""
     cells = band_buckets(df, id_col, vec_col, n_bands, n_planes, seed)
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"q": [], "n": [], "s": []}).astype(
-                {"q": "int64", "n": "int64", "s": "float64"})
-        if len(pdf) > max_bucket:
-            # deterministic stride subsample: bounded cell cost, documented
-            # recall tradeoff on pathological hot buckets
-            pdf = pdf.sort_values(id_col).iloc[:: (len(pdf) // max_bucket) + 1]
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        m = _normalized_matrix(pdf[vec_col])
+    def score(tbl: pa.Table) -> pa.Table:
+        tbl = _stride_capped(tbl, id_col, max_bucket)
+        ids = _ids(tbl, id_col)
+        m = _normalized_matrix(tbl[vec_col])
         return _topk_candidates(ids, m, ids, m, k)
 
     cand = (
         cells.groupBy("band", "bucket")
-        .applyInPandas(score, schema="q long, n long, s double")
+        .applyInArrow(score, schema=_CAND_SCHEMA)
         .dropDuplicates(["q", "n"])  # same pair may surface in many bands
     )
     return _global_topk(cand, id_col, k)
@@ -300,9 +325,9 @@ def ivf_topk(
     base = df.select(id_col, vec_col)
     seeds = (base
              .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-             .limit(n_cells).collect())
-    cids = np.array([r[0] for r in seeds], dtype=np.int64)
-    cmat = _normalized_matrix(pd.Series([np.asarray(r[1]) for r in seeds]))
+             .limit(n_cells).toArrow())
+    cids = _ids(seeds, id_col)
+    cmat = _normalized_matrix(seeds[vec_col])
     nprobe = min(nprobe, len(cids))
 
     out_schema = T.StructType(base.schema.fields + [
@@ -310,11 +335,11 @@ def ivf_topk(
         T.StructField("crk", T.IntegerType()),
     ])
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            m = _normalized_matrix(pdf[vec_col])
+            m = _normalized_matrix(b.column(vec_col))
             # epsilon-then-round before ranking: see docstring
             sims = np.round(m @ cmat.T + 1e-7, seed_round)
             nq, nc = sims.shape
@@ -323,12 +348,11 @@ def ivf_topk(
             take = (np.arange(nq, dtype=np.int64)[:, None] * nc
                     + np.arange(nprobe, dtype=np.int64)[None, :]).reshape(-1)
             sel = order[take] % nc
-            yield pd.DataFrame({
-                id_col: np.repeat(pdf[id_col].to_numpy(), nprobe),
-                vec_col: pdf[vec_col].to_numpy().repeat(nprobe),
-                "cell": cids[sel],
-                "crk": np.tile(np.arange(nprobe, dtype=np.int32), nq),
-            })
+            rep = np.repeat(np.arange(nq, dtype=np.int64), nprobe)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(id_col).take(rep), b.column(vec_col).take(rep),
+                 pa.array(cids[sel]), pa.array(np.tile(np.arange(nprobe, dtype=np.int32), nq))],
+                names=[id_col, vec_col, "cell", "crk"])
 
     # `assigned` feeds BOTH cogroup sides below; without materialization the
     # assignment GEMM and the source scan execute twice (once per side).
@@ -336,24 +360,14 @@ def ivf_topk(
     # idiom and same cluster caveat as dedup.minhash_lsh_pairs: blocks pin
     # to executors, so at real scale write the assignment to a table instead
     # (it is a useful artifact anyway).
-    assigned = base.mapInPandas(assign, schema=out_schema).localCheckpoint(
+    assigned = base.mapInArrow(assign, schema=out_schema).localCheckpoint(
         eager=True)
     corpus = assigned.where(F.col("crk") == 0).drop("crk")
     probes = assigned.drop("crk")  # every vector queries its nprobe cells
 
-    def score(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({"q": [], "n": [], "s": []}).astype(
-                {"q": "int64", "n": "int64", "s": "float64"})
-        if len(cpdf) > max_cell:
-            cpdf = cpdf.sort_values(id_col).iloc[:: (len(cpdf) // max_cell) + 1]
-        return _topk_candidates(
-            qpdf[id_col].to_numpy(dtype=np.int64), _normalized_matrix(qpdf[vec_col]),
-            cpdf[id_col].to_numpy(dtype=np.int64), _normalized_matrix(cpdf[vec_col]),
-            k)
-
     # each corpus vector lives in exactly ONE cell, so a (q, n) pair meets
     # in at most one probed cell — no cross-cell dedup needed
     cand = (probes.groupBy("cell").cogroup(corpus.groupBy("cell"))
-            .applyInPandas(score, schema="q long, n long, s double"))
+            .applyInArrow(_score_cells(k, id_col, vec_col, max_cell),
+                          schema=_CAND_SCHEMA))
     return _global_topk(cand, id_col, k)

@@ -8,6 +8,7 @@ module is the PySpark equivalent for sketch-backed ops:
     sketch_tiles(events, gb, hop)      -> (keys, hop_start_ms, <op IR bytes>)
     collapse(tiles, gb)                -> one merged IR row per key
     finalize(states, gb)               -> per-key estimates
+    lambda_finalized(batch, stream, gb[, at_ts_ms]) -> estimates at a fetch
 
 IRs are the mergeable numpy sketches (operators/sketches.py): HLL bytes for
 APPROX_UNIQUE_COUNT, KLL bytes for APPROX_PERCENTILE. Because merge is
@@ -17,16 +18,18 @@ tests/test_lambda_merge.py (the reference's strongest e2e shape:
 offline-join == online-fetch, FetcherTestUtil.scala:245-740).
 
 Tiles come from the online upload's tile builder (one ``mapInArrow`` pass
-over key-sorted batches); collapse and finalize run as grouped Arrow
-tasks. Per-key state is O(sketch), never O(distinct) — the property the
-exact batch kernels cannot provide at the KV tier.
+over key-sorted batches). collapse, finalize and lambda_finalized share one
+grouped Arrow runner (``_per_key``, ``groupBy(keys).applyInArrow``) whose
+merges are the Fetcher's own (``fetcher.merge_sketches`` and
+``fetcher.merge_state``). Per-key state is O(sketch), never O(distinct) —
+the property the exact batch kernels cannot provide at the KV tier.
 """
 
 from __future__ import annotations
 
 import dataclasses
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -87,44 +90,78 @@ def sketch_tiles(df: DataFrame, gb: GroupBy, hop_ms: int,
         *[F.col(f"{pt.output_name}__sk").alias(_ir_col(pt)) for pt in parts])
 
 
+def _per_key(df: DataFrame, gb: GroupBy, schema: T.StructType, finish) -> DataFrame:
+    """The module's one grouped runner, ``groupBy(keys).applyInArrow``. Per
+    key, rows with a null ``hop_start_ms`` (all rows, without that column)
+    merge into one collapsed IR and the rest are tiles
+    ``[(hop_start_ms, IR)]`` in row order, IRs keyed ``{part}__sk`` as the
+    Fetcher reads them. ``finish(collapsed or None, tiles)`` gives the key's
+    output values after the keys. Null keys form one group."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    parts = _sketch_parts(gb)
+    keys = list(gb.key_columns)
+    if "hop_start_ms" not in df.columns:
+        df = df.withColumn("hop_start_ms", F.lit(None).cast("long"))
+    fields = list(to_arrow_schema(schema))[len(keys):]
+
+    def run(tbl: pa.Table) -> pa.Table:
+        hops = tbl.column("hop_start_ms").to_pylist()
+        irs = {f"{p.output_name}__sk": tbl.column(_ir_col(p)).to_pylist() for p in parts}
+        collapsed = {}
+        for p in parts:
+            sk = f"{p.output_name}__sk"
+            m = fl.merge_sketches(p.operation, [v for v, h in zip(irs[sk], hops) if h is None])
+            if m is not None:
+                collapsed[sk] = m.to_bytes()
+        tiles = [(h, {sk: v[i] for sk, v in irs.items()})
+                 for i, h in enumerate(hops) if h is not None]
+        out = tbl.select(keys).slice(0, 1)
+        for f, v in zip(fields, finish(collapsed or None, tiles)):
+            out = out.append_column(f, pa.array([v], f.type))
+        return out
+
+    return df.groupBy(*keys).applyInArrow(run, schema=schema)
+
+
 def collapse(tiles: DataFrame, gb: GroupBy) -> DataFrame:
     """Merge all tiles per key into one IR row (the batch-upload state;
     also the fetch-time merge when applied to batch-state UNION stream
     tiles — merge is associative and commutative)."""
     parts = _sketch_parts(gb)
-    keys = list(gb.key_columns)
-    schema = tiles.drop("hop_start_ms").schema
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        for pt in parts:
-            sk = None
-            for b in pdf[_ir_col(pt)]:
-                cur = fl._sketch_cls(pt.operation).from_bytes(bytes(b))
-                sk = cur if sk is None else sk.merge(cur)
-            out[_ir_col(pt)] = [sk.to_bytes()]
-        return pd.DataFrame(out)
+    def merged(collapsed, tile_irs):
+        irs = [collapsed or {}] + [ir for _, ir in tile_irs]
+        sks = [fl.merge_sketches(p.operation, [ir.get(f"{p.output_name}__sk") for ir in irs])
+               for p in parts]
+        return [sk.to_bytes() if sk is not None else None for sk in sks]
 
-    return tiles.groupBy(*keys).applyInPandas(merge_group, schema=schema)
+    schema = tiles.select(*gb.key_columns, *map(_ir_col, parts)).schema
+    return _per_key(tiles, gb, schema, merged)
+
+
+def _finalized(df: DataFrame, gb: GroupBy, at_ts_ms: int | None) -> DataFrame:
+    """Per-key estimates at ``at_ts_ms`` through the Fetcher's
+    ``merge_state`` (a windowed part reads its hop-aligned tail's tiles)."""
+    parts = _sketch_parts(gb)
+    windowed = [p.output_name for p in parts if p.window is not None]
+    if windowed and at_ts_ms is None:
+        raise ValueError(
+            f"GroupBy {gb.name} has windowed approx parts ({windowed}): pass "
+            f"at_ts_ms so their sawtooth tails can be resolved")
+
+    def fin(collapsed, tiles):
+        merged = fl.merge_state(parts, collapsed, tiles, [], at_ts_ms)
+        return [merged[p.output_name] for p in parts]
+
+    return _per_key(df, gb, _finalized_schema(df, list(gb.key_columns), parts), fin)
 
 
 def finalize(states: DataFrame, gb: GroupBy) -> DataFrame:
     """IR bytes -> estimates through the Fetcher's ``finalize_part``: HLL
     estimate (exact in the sparse regime), KLL quantiles (exact in the
-    buffer regime), Misra-Gries top-k."""
-    parts = _sketch_parts(gb)
-    keys = list(gb.key_columns)
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {k: pdf[k] for k in keys}
-        for pt in parts:
-            sk = f"{pt.output_name}__sk"
-            out[pt.output_name] = [fl.finalize_part(pt, [{sk: b}], [])
-                                   for b in pdf[_ir_col(pt)]]
-        return pd.DataFrame(out)
-
-    return states.mapInPandas(lambda it: (fin(pdf) for pdf in it),
-                              schema=_finalized_schema(states, keys, parts))
+    buffer regime), Misra-Gries top-k. Rows of one key merge first."""
+    return _finalized(states, gb, None)
 
 
 def lambda_finalized(batch_state: DataFrame, stream_tiles: DataFrame,
@@ -135,83 +172,27 @@ def lambda_finalized(batch_state: DataFrame, stream_tiles: DataFrame,
     ONE entry point for both window shapes (reference handles windowed
     directly in SawtoothOnlineAggregator.scala:86-167):
 
-    - all parts unbounded: every IR merges regardless of time; ``at_ts_ms``
-      is not needed and ``batch_state`` may be fully collapsed (no
-      ``hop_start_ms`` column).
+    - all parts unbounded: every IR merges; ``at_ts_ms`` is not needed and
+      ``batch_state`` may be fully collapsed (no ``hop_start_ms`` column).
     - any windowed part: pass ``at_ts_ms`` (the fetch time) and keep
       ``batch_state`` TILED (a collapsed row cannot serve a window tail) —
-      each part then honors its hop-aligned tail via the shared
-      online merge (online/fetcher.py merge_state), so this module agrees
-      with the Fetcher and the batch approx engine by construction.
+      each part then honors its hop-aligned tail via the shared online
+      merge (online/fetcher.py merge_state), so this module agrees with the
+      Fetcher and the batch approx engine by construction.
+
+    Given ``at_ts_ms``, tiles starting after it are dropped (a live stream
+    can run ahead of the fetch; ``merge_state`` bounds only the tail). The
+    head is quantized to the hop: the tile containing ``at_ts_ms`` is kept
+    whole — unlike the Fetcher, which cuts raw head events at ts <= T.
     """
-    windowed = [p for p in _sketch_parts(gb) if p.window is not None]
-    if not windowed:
-        union = batch_state.unionByName(stream_tiles.drop("hop_start_ms"))
-        return finalize(collapse(union.withColumn("hop_start_ms", F.lit(0)), gb), gb)
-    if at_ts_ms is None:
-        raise ValueError(
-            f"GroupBy {gb.name} has windowed approx parts "
-            f"({[p.output_name for p in windowed]}): pass at_ts_ms so their "
-            f"sawtooth tails can be resolved")
-    if "hop_start_ms" not in batch_state.columns:
+    if (any(p.window is not None for p in _sketch_parts(gb))
+            and "hop_start_ms" not in batch_state.columns):
         raise ValueError(
             "windowed lambda merge needs TILED batch state (hop_start_ms "
             "column): a collapsed batch IR cannot serve a window tail — "
             "build it with sketch_tiles(...), not collapse(...)")
-    return sawtooth_finalized(batch_state, stream_tiles, gb, at_ts_ms)
-
-
-def sawtooth_finalized(batch_tiles: DataFrame, stream_tiles: DataFrame,
-                       gb: GroupBy, at_ts_ms: int) -> DataFrame:
-    """Windowed fetch-time merge: per key, select the batch+stream tiles
-    each part's hop-aligned window tail admits at ``at_ts_ms`` and finalize
-    — routed through online/fetcher.py merge_state, the SAME code the
-    Fetcher and the batch approx engine run. Rows without ``hop_start_ms``
-    (collapsed batch state) feed only unbounded parts, mirroring the
-    collapsed-IR rule of the upload split."""
-    parts = _sketch_parts(gb)
-    keys = list(gb.key_columns)
-    b = batch_tiles
-    if "hop_start_ms" not in b.columns:
-        b = b.withColumn("hop_start_ms", F.lit(None).cast("long"))
-    # upper bound: a live stream can hold tiles at/after the fetch point;
-    # merge_state applies only the window-tail LOWER bound, so without this
-    # filter, tiles entirely AFTER the fetch point would be fully counted.
-    # The head is quantized to the hop here: the tile containing at_ts_ms
-    # is kept whole — unlike the Fetcher, which keeps raw head events and
-    # cuts exactly at ts <= T.
-    union = b.unionByName(stream_tiles).where(
-        F.col("hop_start_ms").isNull() | (F.col("hop_start_ms") <= F.lit(at_ts_ms)))
-
-    ir_cols = {pt.output_name: _ir_col(pt) for pt in parts}
-    cls_by_col = {f"{pt.output_name}__sk": fl._sketch_cls(pt.operation)
-                  for pt in parts}
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        hops = pdf["hop_start_ms"].tolist()
-        cols = {nm: pdf[c].tolist() for nm, c in ir_cols.items()}
-        tiles: list[tuple[int, dict]] = []
-        collapsed: dict = {}
-        for i, h in enumerate(hops):
-            ir = {f"{nm}__sk": bytes(cols[nm][i]) for nm in cols
-                  if cols[nm][i] is not None}
-            if h is None or (isinstance(h, float) and pd.isna(h)):
-                # collapsed batch row: merge_state reads it for unbounded
-                # parts only — merge multiple via the sketch merge itself
-                for k, v in ir.items():
-                    if k in collapsed:
-                        a = cls_by_col[k]
-                        collapsed[k] = a.from_bytes(collapsed[k]).merge(
-                            a.from_bytes(v)).to_bytes()
-                    else:
-                        collapsed[k] = v
-            else:
-                tiles.append((int(h), ir))
-        merged = fl.merge_state(parts, collapsed or None, tiles, [], at_ts_ms)
-        out = {k: [pdf[k].iloc[0]] for k in keys}
-        for pt in parts:
-            out[pt.output_name] = [merged[pt.output_name]]
-        return pd.DataFrame(out)
-
-    return union.groupBy(*keys).applyInPandas(
-        lambda _k, pdf: fin(pdf), schema=_finalized_schema(union, keys, parts))
+    union = batch_state.unionByName(stream_tiles, allowMissingColumns=True)
+    if at_ts_ms is not None:
+        union = union.where(F.col("hop_start_ms").isNull()
+                            | (F.col("hop_start_ms") <= F.lit(at_ts_ms)))
+    return _finalized(union, gb, at_ts_ms)
